@@ -145,20 +145,14 @@ def blocked_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         # base feeds FOUR consumers below (both inverted-index sides +
         # both size lookups) — persist the internally-built one so the
         # shingling HOF evaluates once per row, not four times
-        # (round-11; callers passing their own base manage its
-        # materialization themselves, e.g. q100's localCheckpoint).
+        # (callers passing their own base manage its materialization
+        # themselves, e.g. q100's localCheckpoint).
         #
-        # ``persist_base=False`` (round-12, VERDICT r11 item #1): a
-        # caller whose consumer is an ITERATIVE eager-checkpoint loop
-        # (connected_components over these pairs — q56/q59/q149/q172/
-        # q196) skips the persist. The disk-backed materialization
-        # feeding an eager localCheckpoint loop is doubly exposed to
-        # slow-disk host phases (the driver's q172 8.9 s event);
-        # interleaved same-session A/B (tools/r12_ab.py q172, two
-        # sessions): no-persist median 2.42/2.46 s vs MEMORY_AND_DISK
-        # 2.92/2.69 s with a 3.9-11.3 s slow tail the no-persist
-        # variant never shows. Flat consumers (q18 itself) keep the
-        # persist — its round-11 win (1.32→0.86 s) was re-verified.
+        # ``persist_base=False`` is for callers whose consumer is an
+        # iterative eager-checkpoint loop (connected components over
+        # these pairs): there the disk-backed base persist measured
+        # slower and slow-tailed, while flat consumers (q18) measured
+        # faster with it. Either way the pairs are identical.
         base = shingle_base(df, id_col, text_col, block_cols, k=k)
         if persist_base:
             base = register_cache(base)
@@ -446,12 +440,10 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
 
 ENTRIES_PBUCKET = "_pbucket"
 
-# Measured crossover (SCALE_r11, tools/lsh_serve_crossover.py): the flat
-# entries scan already loses to the partitioned probe at 2e7 entries
-# rows (6.4 s vs 2.9 s per trickle batch) and by 14.6x at 4e8; below
-# the crossover the layout's fixed overhead (~0.8 s at toy scale,
-# SCALE_r10) is all cost. The auto threshold sits at the low side of
-# the measured band.
+# Below this many entries rows the flat entries scan beats the
+# partitioned probe (the layout's fixed overhead is all cost); above
+# it the partitioned probe wins by a growing margin (SCALE_r11 records
+# the measured crossover band; the threshold sits at its low side).
 AUTO_PARTITION_MIN_ENTRIES = 10_000_000
 AUTO_PARTITION_TARGET_ROWS = 100_000  # aim ~this many rows/partition
 AUTO_PARTITION_MAX = 16_384
@@ -1233,104 +1225,70 @@ def hamming_banded_pairs(df: DataFrame, id_col: str, hash_col: str, *,
                 .select("id_a", "id_b", "hamming"))
 
 
+SMALL_GRAPH_EDGES = 100_000
+
+
+def _canonical_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Undirected edge list of a pair graph as long (a <= b) rows,
+    distinct and eagerly checkpointed so the pair plan runs once. Ids
+    are cast BEFORE ordering (string ids compare numerically) and pairs
+    with a NULL id are dropped (a NULL endpoint is not a node).
+    Self-loops are kept: a node seen only in (v, v) is a singleton
+    component."""
+    e = (pairs.select(F.col(id_a).cast("long").alias("x"),
+                      F.col(id_b).cast("long").alias("y"))
+              .filter(F.col("x").isNotNull() & F.col("y").isNotNull()))
+    return (e.select(F.least("x", "y").alias("a"),
+                     F.greatest("x", "y").alias("b"))
+             .distinct().localCheckpoint(eager=True))
+
+
 def connected_components(pairs: DataFrame, *, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iters: int = 50,
-                         component_col: str = "component",
-                         small_graph_edges: int = 100_000) -> DataFrame:
+                         id_b: str = "id_b", max_iters: int = 30,
+                         component_col: str = "component") -> DataFrame:
     """Near-dup GROUPS from a pair graph: (id, component) where
     component = the minimum id reachable through the undirected pair
     edges. Downstream keeps one canonical doc per component
     (``keep_canonical``) — pair lists alone can't dedupe transitive
     clusters (a~b, b~c must collapse to ONE survivor, not two).
 
-    Min-label propagation with a driver-controlled loop (the Pregel
-    pattern): each round joins neighbor labels and takes the min; stop
-    when no label changed. Rounds = graph diameter, and near-dup
-    components are small/dense (diameter rarely exceeds single digits),
-    so the loop is a handful of shuffle-join+agg rounds over a pair
-    table that is already tiny relative to the corpus. Lineage is
-    truncated each round with localCheckpoint so plans don't grow
-    unboundedly. For adversarial long-chain graphs use
-    ``connected_components_star`` (same output contract, O(log^2 n)
-    rounds regardless of diameter).
-
-    The convergence check is one count() per round on the CHANGED set —
-    bounded driver traffic (a scalar), not data collection.
-
-    SMALL-GRAPH FAST PATH: after thresholding, the pair graph is
-    usually a small fraction of the corpus (dup PAIRS, not docs). When
-    the edge list is under ``small_graph_edges`` the driver loop's
-    per-round job overhead dominates wall-clock, so the edges are
-    collected (explicitly bounded — the cap IS the memory contract)
-    and resolved with union-find in one pass; bigger graphs take the
-    distributed loop unchanged. Identical output by construction
-    (min reachable id), pinned by tests running both paths.
+    After thresholding, the pair graph is usually a small fraction of
+    the corpus (dup PAIRS, not docs). When it has at most
+    ``SMALL_GRAPH_EDGES`` undirected edges they are collected
+    (explicitly bounded — the cap IS the memory contract) and resolved
+    with union-find in one pass, avoiding the per-round job overhead of
+    a distributed loop. Bigger graphs go to the distributed
+    large-star/small-star contraction (same contract; see
+    ``connected_components_star``). The edge count is a scalar over the
+    checkpointed edge list, not data collection.
     """
-    # NULL ids (or strings that cast to NULL) would silently vanish in
-    # the distributed path's joins but crash the union-find fast path
-    # (None comparisons) — filter them up front so BOTH paths share
-    # the drop-NULLs semantics (ADVICE r5).
-    e = pairs.select(F.col(id_a).cast("long").alias("a"),
-                     F.col(id_b).cast("long").alias("b")) \
-             .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    edges = edges.distinct().localCheckpoint(eager=True)
+    edges = _canonical_edges(pairs, id_a, id_b)
+    if edges.count() > SMALL_GRAPH_EDGES:
+        return _star_components(edges, max_iters, component_col)
 
-    # edges is materialized (eager checkpoint), so the count is cheap
-    if edges.count() <= small_graph_edges:
-        parent: dict[int, int] = {}
+    parent: dict[int, int] = {}
 
-        def find(x: int) -> int:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:        # path compression
-                parent[x], x = r, parent[x]
-            return r
+    def find(x: int) -> int:
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:        # path compression
+            parent[x], x = r, parent[x]
+        return r
 
-        for row in edges.collect():
-            a, b = row.a, row.b
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN root so the representative is the
-                # minimum id — same contract as label propagation
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        out_rows = [(x, find(x)) for x in parent]
-        return pairs.sparkSession.createDataFrame(
-            out_rows or [], "id long, component long") \
-            .withColumnRenamed("component", component_col)
-
-    labels = (edges.groupBy("a").agg(F.min("b").alias("_nbr"))
-                   .select(F.col("a").alias("id"),
-                           F.least("a", "_nbr").alias("lbl"))
-                   .localCheckpoint(eager=True))
-    for _ in range(max_iters):
-        prop = (edges.join(labels, edges["b"] == labels["id"])
-                     .groupBy(F.col("a").alias("id"))
-                     .agg(F.min("lbl").alias("_min_nbr_lbl")))
-        nxt = (labels.join(prop, "id", "left")
-                     .select("id",
-                             F.least("lbl", F.coalesce("_min_nbr_lbl", "lbl"))
-                              .alias("lbl"),
-                             (F.coalesce("_min_nbr_lbl", "lbl") < F.col("lbl"))
-                              .alias("_chg"))
-                     .localCheckpoint(eager=True))
-        changed = nxt.filter("_chg").count()
-        labels = nxt.drop("_chg")
-        if changed == 0:
-            break
-    else:
-        # returning unconverged labels would silently hand WRONG
-        # components to keep_canonical (which deletes documents) —
-        # fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            f"(long-chain graph?) — raise max_iters or use "
-            f"connected_components_star")
-    return labels.select("id", F.col("lbl").alias(component_col))
+    for row in edges.collect():
+        a, b = row.a, row.b
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by MIN root so the representative is the minimum id
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    out_rows = [(x, find(x)) for x in parent]
+    return pairs.sparkSession.createDataFrame(
+        out_rows, "id long, component long") \
+        .withColumnRenamed("component", component_col)
 
 
 def keep_canonical(df: DataFrame, components: DataFrame, id_col: str,
@@ -1434,10 +1392,10 @@ def connected_components_star(pairs: DataFrame, *, id_a: str = "id_a",
                               component_col: str = "component") -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the ADVERSARIAL-GRAPH path: converges in O(log^2 n)
-    rounds regardless of diameter, where plain min-label propagation
-    (``connected_components``) needs one round per hop and dies on a
-    long chain of templated near-dups.
+    Beyond") — the distributed path ``connected_components`` takes
+    above its small-graph cap, with the same output contract. Converges
+    in O(log^2 n) rounds regardless of diameter, so a long chain of
+    templated near-dups costs a few rounds, not one per hop.
 
     Each round is two groupBy+join passes over the edge list:
     large-star hangs every neighbor larger than u onto u's
@@ -1447,10 +1405,15 @@ def connected_components_star(pairs: DataFrame, *, id_a: str = "id_a",
     the canonical edge set (one scalar aggregate per round, no data to
     the driver).
     """
-    e = (pairs.select(F.least(F.col(id_a), F.col(id_b)).cast("long").alias("a"),
-                      F.greatest(F.col(id_a), F.col(id_b)).cast("long").alias("b"))
-              .filter(F.col("a") != F.col("b"))
-              .distinct().localCheckpoint(eager=True))
+    return _star_components(_canonical_edges(pairs, id_a, id_b),
+                            max_iters, component_col)
+
+
+def _star_components(canon: DataFrame, max_iters: int,
+                     component_col: str) -> DataFrame:
+    """Star contraction over ``_canonical_edges`` output."""
+    loops = canon.filter(F.col("a") == F.col("b"))
+    e = canon.filter(F.col("a") != F.col("b"))
 
     def _sym(edges: DataFrame) -> DataFrame:
         return edges.union(edges.select(F.col("b").alias("a"),
@@ -1487,11 +1450,14 @@ def connected_components_star(pairs: DataFrame, *, id_a: str = "id_a",
             break
         digest = nxt
     else:
+        # returning unconverged labels would silently hand WRONG
+        # components to keep_canonical (which deletes documents)
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} "
+            f"connected components did not converge in {max_iters} "
             f"rounds — raise max_iters")
-    # converged to stars: every node's minimum neighbor is its root
-    labels = _min_nbr(_sym(e))
+    # converged to stars: every node's minimum neighbor is its root;
+    # self-loop nodes with no other edge label themselves
+    labels = _min_nbr(_sym(e).union(loops))
     return labels.select(F.col("a").alias("id"),
                          F.col("m").alias(component_col))
 

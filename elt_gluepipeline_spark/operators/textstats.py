@@ -174,15 +174,12 @@ def repetition_stats_linear(df, id_col: str, text_col: str, *,
                   F.sum(F.when((F.col("_k") == "u") & (F.col("_c") == 1), 1)
                          .otherwise(0)).alias("_singles")))
     # empty docs emit no gram rows — re-attach them via left join.
-    # Sizes side (round-12, VERDICT r11 item #3): this join input is a
-    # SECOND evaluation of the per-row expressions — the before-plan's
-    # node (4) rebuilt the whole zip_with bigram ARRAY per row just to
-    # take its size. One split per row instead, with the bigram count
-    # derived arithmetically from the token count: by the bigrams()
-    # contract size(bigrams(t)) == 0 for size(t) < 2 (incl. empty),
-    # NULL tok -> NULL both ways (CASE keeps NULL in the otherwise
-    # branch), else size(t) - 1. Interleaved A/B (tools/r12_ab.py q63):
-    # single-eval won all 6 paired rounds, median 0.80 vs 0.88 s.
+    # This sizes side is a SECOND evaluation of the per-row
+    # expressions, so it splits once per row and derives the bigram
+    # count arithmetically instead of rebuilding the bigram ARRAY: by
+    # the bigrams() contract size(bigrams(t)) == 0 for size(t) < 2
+    # (incl. empty), NULL tok -> NULL both ways (CASE keeps NULL in the
+    # otherwise branch), else size(t) - 1.
     sizes = df.select(F.col(id_col),
                       F.size(tokens(F.col(text_col))).alias("_n"))
     sizes = sizes.select(id_col, "_n",

@@ -34,17 +34,20 @@ class QuerySpec:
 
 # The driver's correctness gate records only the FIRST 50 registry
 # entries (insertion order), so ordering is part of the contract.
-# ROUND-11 ROTATION (VERDICT_r10 item #1): the head is the 50 stalest
-# queries — the 2 round-10 additions q203/q204 (never
-# driver-recorded), the last 2 round-5 records (q94/q96), the 3
-# round-6 records (q152-q154), and the alphabetically-first 43 of the
-# 50 round-7 records (q137-q184). Every tail query below has a driver
-# row from the round noted in its group header (the r10 rotation head
-# — q200-q202 + the q85-q99 block + the round-5-era records — was
-# certified 50/50 by CORRECTNESS_r10 and moves to the tail). Tail
+# ROTATION: the head holds every caller of the connected-components
+# and bucketed-merge operators (q56, q59, q100, q103, q149, q172, q196,
+# q201) plus 42 queries of the previous head. Every tail query below
+# has a driver row from the round noted in its group header. Tail
 # entries still run everywhere else (pytest, bench,
 # tools/check_correctness).
 _DEPRIORITIZED = (
+    # --- latest driver record: round 12 (6 queries rotated out for the operator callers above) ---
+    "q94_priority_argmax",
+    "q96_bitmap_distinct",
+    "q145_copurchase_pagerank",
+    "q144_shard_writer",
+    "q143_compressed_text",
+    "q142_gif_probe",
     # --- latest driver record: round 7 (7 queries; the alphabetically-last 7 of the r7 block — the first 43 are in the r11 head) ---
     "q185_curation_funnel",
     "q186_vocab_coverage",
@@ -104,10 +107,8 @@ _DEPRIORITIZED = (
     "q50_stream_enrich",
     "q51_order_timeline",
     "q52_status_cube",
-    # --- latest driver record: round 9 (50 queries, the r9 rotation head: q192-q199 + q53-q56 + the 38 round-4-era records) ---
-    "q100_incremental_dedupe",
+    # --- latest driver record: round 9 (46 queries, the r9 rotation head: q192-q199 + q53-q56 + the 38 round-4-era records) ---
     "q101_price_qty_regression",
-    "q103_corpus_pipeline",
     "q104_event_cooccurrence",
     "q106_stream_session_window",
     "q107_next_click",
@@ -125,14 +126,12 @@ _DEPRIORITIZED = (
     "q193_jpeg_subsampled",
     "q194_zorder_layout",
     "q195_bucketed_join",
-    "q196_star_components",
     "q197_script_mix",
     "q198_jpeg_progressive",
     "q199_incremental_lsh",
     "q53_stream_dedupe",
     "q54_stream_keep_latest",
     "q55_salted_distinct",
-    "q56_neardup_groups",
     "q58_contamination",
     "q60_token_shards",
     "q61_chunk_docs",
@@ -155,7 +154,7 @@ _DEPRIORITIZED = (
     "q82_rerank",
     "q83_salted_enrich",
     "q84_anomaly_days",
-    # --- latest driver record: round 10 (50 queries, the r10 rotation head: q200-q202 + q85-q99 block + round-5-era records) ---
+    # --- latest driver record: round 10 (48 queries, the r10 rotation head: q200-q202 + q85-q99 block + round-5-era records) ---
     "q07_loyalty_impact",
     "q08_top_locations",
     "q09_discount_effect",
@@ -185,10 +184,8 @@ _DEPRIORITIZED = (
     "q138_sequence_pack",
     "q139_greedy_pack",
     "q200_lsh_index_serve",
-    "q201_bucketed_upsert",
     "q202_index_delete",
     "q57_portable_split",
-    "q59_dedupe_corpus",
     "q63_repetition",
     "q73_incremental_agg",
     "q76_product_quantize",

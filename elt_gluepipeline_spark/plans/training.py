@@ -173,12 +173,10 @@ def _q18_pairs(spark: SparkSession, sf_dir: str, *,
                persist_base: bool = True) -> DataFrame:
     """The q18 pair graph, shared by its CC-family consumers.
 
-    ``persist_base=False`` is for callers that feed the pairs into a
-    connected-components eager-checkpoint loop (q56/q59/q149/q172/
-    q196): the internal MEMORY_AND_DISK shingle-base persist measured
-    SLOWER and slow-tailed under that consumer (round-12 interleaved
-    A/B, tools/r12_ab.py q172 — VERDICT r11 item #1), while flat
-    consumers (q18 itself) keep its round-11 win."""
+    ``persist_base=False`` is for callers that feed the pairs into
+    connected components (q56/q59/q149/q172/q196), where the internal
+    shingle-base persist is slower; flat consumers (q18 itself) keep
+    it. See ``blocked_jaccard_pairs``."""
     docs = read_table(spark, sf_dir, "documents")
     blocks = [F.col("lang"),
               F.floor(n_tokens(F.col("text")) / 10).cast("long")]
@@ -4431,7 +4429,7 @@ FROM m
 
 # --------------------------------------------------------------------------
 # Q149 — leakage-safe train/test split: near-dup components (q18's
-# pair graph → min-label propagation) define the split UNIT, so every
+# pair graph → connected components) define the split UNIT, so every
 # member of a near-dup cluster lands on the same side of the boundary
 # — the contamination mode a per-document hash split cannot prevent.
 # Singletons are their own component. Same portable md5 bucket as q57,
@@ -6008,15 +6006,12 @@ def q171_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared _Q41_LSH_KWARGS — so rows are unchanged, q171's oracle
     # certifies it).
     #
-    # The PAIR frames themselves also persist (round-12, VERDICT r11
-    # item #5): the stats block consumes `truth` twice (count + hit
-    # semi-join) and `found` twice (count + hit), so unpersisted the
-    # before-plan carried the full prefix-filter AND LSH pipelines ~2x
-    # each (326 nodes, 132 Exchange — plans/r12/q171_*_before.txt) and
-    # AQE did NOT reuse them across branches. Interleaved A/B
-    # (tools/r12_ab.py q171): persisted median 4.94 s vs 7.83 s,
-    # won 4/5 paired rounds. Two-long-column frames, bounded by the
-    # true/candidate pair count; released by every harness.
+    # The PAIR frames themselves also persist: the stats block consumes
+    # `truth` twice (count + hit semi-join) and `found` twice (count +
+    # hit), and AQE does not reuse them across branches, so unpersisted
+    # the plan would run the full prefix-filter AND LSH pipelines twice
+    # each. Two-long-column frames, bounded by the true/candidate pair
+    # count; released by every harness.
     base = shingle_base_cached(docs, "doc_id", "text", k=3)
     truth = register_cache(
         prefix_filter_jaccard_pairs(docs, "doc_id", "text",
@@ -7796,9 +7791,9 @@ GROUP BY o_orderpriority, l_returnflag
 # Q196 — connected components via alternating large-star/small-star
 # contraction (operators/dedup.connected_components_star — Kiveris et
 # al., "Connected Components in MapReduce and Beyond"): the
-# adversarial-graph scale path that converges in O(log^2 n) rounds
-# regardless of component diameter, where the q59 min-label walk needs
-# one round per hop and dies on a long chain of templated near-dups.
+# distributed path connected_components takes above its small-graph
+# cap, called directly here so the oracle certifies it at any graph
+# size; it converges in O(log^2 n) rounds regardless of diameter.
 # Same edge set as q18/q59 (blocked n-gram Jaccard); output is the
 # per-component roster (size + exact char mass), singletons included —
 # so the oracle's reachability labels must agree with star contraction
@@ -8174,7 +8169,7 @@ SPECS = [
               "of q39, same oracle)"),
     QuerySpec("q56_neardup_groups", q56_neardup_groups, Q56_SQL,
               "near-dup components over the Jaccard pair graph "
-              "(min-label propagation; recursive-CTE oracle)"),
+              "(union-find / star contraction; recursive-CTE oracle)"),
     QuerySpec("q57_portable_split", q57_portable_split, Q57_SQL,
               "deterministic hash-based train/test split (md5 bucket, "
               "stable under corpus growth)"),

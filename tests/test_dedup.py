@@ -29,19 +29,27 @@ def test_connected_components_long_chain_converges(spark):
 
 
 def test_star_contraction_matches_min_label(spark):
+    # star contraction (the distributed path) must label exactly like
+    # union-find (the small-graph path): component = min reachable id.
+    # Self-loops stay in the random edges; a node seen only in a
+    # self-loop (500) is a singleton, and a pair with a NULL id is not
+    # an edge (node 600 appears nowhere else, so it must vanish).
     import random
     from elt_gluepipeline_spark.operators.dedup import (
         connected_components, connected_components_star)
     rng = random.Random(11)
     # random graph: 60 nodes, 50 random edges → many components
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
-    edges = [(a, b) for a, b in edges if a != b]
+    assert any(a == b for a, b in edges)
+    edges += [(500, 500), (None, 600)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     star = {(r.id, r.component)
             for r in connected_components_star(pairs).collect()}
-    prop = {(r.id, r.component)
-            for r in connected_components(pairs).collect()}
-    assert star == prop and len(star) > 0
+    uf = {(r.id, r.component)
+          for r in connected_components(pairs).collect()}
+    assert star == uf and len(star) > 0
+    assert (500, 500) in star
+    assert not any(600 in row for row in star)
 
 
 def test_star_contraction_long_chain_few_rounds(spark):
@@ -172,20 +180,28 @@ def test_incremental_dedupe_real_docs_vs_bruteforce(spark, sf_dir):
     assert got == expect and len(got) > 0
 
 
-def test_connected_components_fast_path_equals_distributed(spark):
-    """The small-graph union-find fast path must produce exactly the
-    same (id, component) labeling as the distributed min-label loop."""
-    from elt_gluepipeline_spark.operators.dedup import connected_components
+def test_connected_components_fast_path_equals_distributed(spark,
+                                                            monkeypatch):
+    """The small-graph union-find path must produce exactly the same
+    (id, component) labeling as the distributed star contraction, and
+    graphs above the edge cap must be routed to the latter."""
+    from elt_gluepipeline_spark.operators import dedup
+    from elt_gluepipeline_spark.operators.dedup import (
+        connected_components, connected_components_star)
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23),
-         (5, 99), (99, 4)],
+         (5, 99), (99, 4), (7, 7)],
         "id_a long, id_b long")
     fast = connected_components(pairs).collect()
-    slow = connected_components(pairs, small_graph_edges=0).collect()
+    slow = connected_components_star(pairs).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
     comp = {r.id: r.component for r in fast}
     assert comp[3] == 1 and comp[23] == 20 and comp[5] == 4 == comp[99]
+    assert comp[7] == 7
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+    routed = connected_components(pairs).collect()
+    assert sorted(map(tuple, routed)) == sorted(map(tuple, fast))
 
 
 def test_connected_components_fast_path_empty(spark):
