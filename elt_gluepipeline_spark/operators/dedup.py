@@ -23,6 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.writers import recover_swap, swap_dir, write_atomic
 from . import ensure_min_partitions
 from ._cache import register_cache
 
@@ -573,10 +574,8 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
                     os.remove(fp)
         if mode != "append" or not os.path.isfile(meta_path):
             os.makedirs(path, exist_ok=True)
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"n_partitions": partition_entries}, fh)
-            os.replace(tmp, meta_path)
+            write_atomic(meta_path,
+                         json.dumps({"n_partitions": partition_entries}))
     else:
         index.entries.write.mode(mode).parquet(f"{path}/entries")
         # an unpartitioned overwrite REPLACES a partitioned layout:
@@ -648,41 +647,25 @@ def _stored_entries_partitions(path: str) -> int | None:
 
 
 def _recover_index_swaps(path: str) -> None:
-    """Straggler recovery for the per-table directory swap used by
-    compaction and ``repartition_entries``: a table whose live dir is
-    missing while its ``.old_`` aside exists crashed between the two
-    renames — restore the aside (tombstones are still intact, so the
-    restored table serves correctly and the rewrite simply re-runs);
-    an aside with a live twin was already superseded — drop it.
+    """``recover_swap`` each table's ``.old_`` aside (a restored table
+    still serves correctly — tombstones are intact — and the rewrite
+    simply re-runs).
 
     Also reconciles the entries-partition metadata: a
     ``repartition_entries`` that crashed after its swap but before
     updating ``entries_meta.json`` left the authoritative P inside
     the swapped directory (``entries/_pmeta.json``) — fold it into
-    the table-level file (atomic replace) and drop the in-directory
-    copy, so later rewrites that regenerate the entries dir can't
-    strand a stale inner P."""
-    import json
+    the table-level file and drop the in-directory copy, so later
+    rewrites that regenerate the entries dir can't strand a stale
+    inner P."""
     import os
-    import shutil
 
     for sub in ("entries", "sizes", "postings"):
-        src, aside = f"{path}/{sub}", f"{path}/.old_{sub}"
-        if not os.path.isdir(aside):
-            continue
-        if os.path.isdir(src):
-            shutil.rmtree(aside, ignore_errors=True)
-        else:
-            shutil.move(aside, src)
+        recover_swap(f"{path}/{sub}", f"{path}/.old_{sub}")
     inner = f"{path}/entries/_pmeta.json"
     if os.path.isfile(inner):
-        meta_path = f"{path}/entries_meta.json"
-        tmp = meta_path + ".tmp"
         with open(inner) as fh:
-            meta = json.load(fh)
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, meta_path)
+            write_atomic(f"{path}/entries_meta.json", fh.read())
         os.remove(inner)
 
 
@@ -690,9 +673,8 @@ def compact_lsh_dedup_index(spark, path: str) -> None:
     """Physically drop tombstoned docs from entries/sizes/postings and
     clear the tombstone table — after this, the stored index equals a
     fresh fit over the surviving corpus (pinned by pytest). Each table
-    is rewritten through a staging dir + two-rename swap (recovered by
-    ``_recover_index_swaps`` at every load/compact entry); a partial
-    compaction is still a CORRECT index because tombstones are cleared
+    is rewritten into a staging dir and swapped in by ``swap_dir``; a
+    partial compaction is still a CORRECT index because tombstones are cleared
     LAST — an uncompacted table's dead rows stay suppressed by the
     serve-time anti-join, and re-running the compaction is a no-op on
     already-compacted tables."""
@@ -727,11 +709,7 @@ def compact_lsh_dedup_index(spark, path: str) -> None:
             # ENTRIES_PBUCKET riding as a plain column, so the serve
             # path's partition filter still resolves)
             kept.repartition(1).write.mode("overwrite").parquet(staging)
-        aside = f"{path}/.old_{sub}"
-        shutil.rmtree(aside, ignore_errors=True)
-        shutil.move(src, aside)
-        shutil.move(staging, src)
-        shutil.rmtree(aside, ignore_errors=True)
+        swap_dir(src, staging, f"{path}/.old_{sub}")
         # the rewrite replaced files under an already-read path: drop
         # Spark's cached file listing or the next scan reads ghosts
         spark.catalog.refreshByPath(src)
@@ -745,8 +723,7 @@ def repartition_entries(spark, path: str, new_n_partitions: int) -> None:
     pruning the layout exists to provide). Works in every direction:
     unpartitioned→P, P1→P2. One staged rewrite of entries only (sizes/
     postings/tombstones are untouched — P is an entries-layout fact),
-    swapped through the same two-rename protocol compaction uses, so
-    a crash heals at the next entry point via ``_recover_index_swaps``.
+    swapped in by ``swap_dir``.
 
     Metadata atomicity: the new P is written INTO the staged directory
     as ``entries/_pmeta.json`` (hidden from Spark's listing by the
@@ -788,11 +765,7 @@ def repartition_entries(spark, path: str, new_n_partitions: int) -> None:
         cur.repartition(1).write.mode("overwrite").parquet(staging)
     with open(f"{staging}/_pmeta.json", "w") as fh:
         json.dump({"n_partitions": new_n_partitions}, fh)
-    aside = f"{path}/.old_entries"
-    shutil.rmtree(aside, ignore_errors=True)
-    shutil.move(src, aside)
-    shutil.move(staging, src)
-    shutil.rmtree(aside, ignore_errors=True)
+    swap_dir(src, staging, f"{path}/.old_entries")
     spark.catalog.refreshByPath(src)
     # fold the in-directory P into the table-level meta (same step
     # recovery would perform after a crash here)

@@ -18,6 +18,11 @@ Domain mapping (restaurant reference → TPC-H testdata):
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -35,26 +40,31 @@ class QuerySpec:
 # The driver's correctness gate records only the FIRST 50 registry
 # entries (insertion order), so ordering is part of the contract.
 # ROTATION: the head holds every caller of the connected-components
-# and bucketed-merge operators (q56, q59, q100, q103, q149, q172, q196,
-# q201) plus 42 queries of the previous head. Every tail query below
-# has a driver row from the round noted in its group header. Tail
-# entries still run everywhere else (pytest, bench,
+# and bucketed-merge operators (q56, q59, q65, q100, q103, q149, q172,
+# q196, q201), every builder writing session scratch dirs (q65, q74,
+# q141, q190, q200-q204), plus the rest of the previous head. Every
+# tail query below has a driver row from the round noted in its group
+# header. Tail entries still run everywhere else (pytest, bench,
 # tools/check_correctness).
 _DEPRIORITIZED = (
-    # --- latest driver record: round 12 (6 queries rotated out for the operator callers above) ---
+    # --- latest driver record: round 12 (11 queries rotated out for the operator callers and scratch-dir builders above) ---
+    "q137_jpeg_probe",
+    "q146_html_extract",
+    "q147_domain_cap",
+    "q148_gopher_rules",
+    "q150_variant_shred",
     "q94_priority_argmax",
     "q96_bitmap_distinct",
     "q145_copurchase_pagerank",
     "q144_shard_writer",
     "q143_compressed_text",
     "q142_gif_probe",
-    # --- latest driver record: round 7 (7 queries; the alphabetically-last 7 of the r7 block — the first 43 are in the r11 head) ---
+    # --- latest driver record: round 7 (6 queries; the alphabetically-last 7 of the r7 block less q190 — the first 43 are in the r11 head) ---
     "q185_curation_funnel",
     "q186_vocab_coverage",
     "q187_interpolate",
     "q188_source_scorecard",
     "q189_lsh_recall_sampled",
-    "q190_stream_chain",
     "q191_image_dhash_dedup",
     # --- latest driver record: round 8 (50 queries, the q01-q52-era head) ---
     "q01_line_revenue",
@@ -107,7 +117,7 @@ _DEPRIORITIZED = (
     "q50_stream_enrich",
     "q51_order_timeline",
     "q52_status_cube",
-    # --- latest driver record: round 9 (46 queries, the r9 rotation head: q192-q199 + q53-q56 + the 38 round-4-era records) ---
+    # --- latest driver record: round 9 (44 queries, the r9 rotation head: q192-q199 + q53-q56 + the 38 round-4-era records) ---
     "q101_price_qty_regression",
     "q104_event_cooccurrence",
     "q106_stream_session_window",
@@ -137,7 +147,6 @@ _DEPRIORITIZED = (
     "q61_chunk_docs",
     "q62_mixture_sample",
     "q64_embed_quantize",
-    "q65_stream_upsert",
     "q66_tfidf",
     "q67_kmeans",
     "q68_scd2",
@@ -145,7 +154,6 @@ _DEPRIORITIZED = (
     "q70_weighted_sample",
     "q71_name_editdist",
     "q72_snapshot_diff",
-    "q74_stream_incremental_agg",
     "q75_hashing_vectors",
     "q78_perplexity",
     "q79_trailing_features",
@@ -154,7 +162,7 @@ _DEPRIORITIZED = (
     "q82_rerank",
     "q83_salted_enrich",
     "q84_anomaly_days",
-    # --- latest driver record: round 10 (48 queries, the r10 rotation head: q200-q202 + q85-q99 block + round-5-era records) ---
+    # --- latest driver record: round 10 (46 queries, the r10 rotation head: q200-q202 + q85-q99 block + round-5-era records) ---
     "q07_loyalty_impact",
     "q08_top_locations",
     "q09_discount_effect",
@@ -183,8 +191,6 @@ _DEPRIORITIZED = (
     "q136_stream_hll",
     "q138_sequence_pack",
     "q139_greedy_pack",
-    "q200_lsh_index_serve",
-    "q202_index_delete",
     "q57_portable_split",
     "q63_repetition",
     "q73_incremental_agg",
@@ -204,6 +210,27 @@ _DEPRIORITIZED = (
     "q98_heavy_hitters",
     "q99_spend_percentiles",
 )
+
+
+_SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_scratch")
+_SCRATCH_CLEANUP: set[str] = set()
+
+
+def scratch_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """Path of a query builder's on-disk artifact ``tag``, private to
+    (dataset, Spark application): concurrent sessions, and sessions on
+    other datasets, never share a path, while repeat builds in one
+    session reuse it. The path is neither created nor cleared; a
+    builder that needs a fresh dir clears it. The session's whole
+    scratch tree is removed at interpreter exit."""
+    key = hashlib.md5(
+        (os.path.abspath(sf_dir) + "\x1f"
+         + spark.sparkContext.applicationId).encode()).hexdigest()[:12]
+    root = os.path.join(_SCRATCH_ROOT, key)
+    if root not in _SCRATCH_CLEANUP:
+        _SCRATCH_CLEANUP.add(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return os.path.join(root, tag)
 
 
 def registry() -> dict[str, QuerySpec]:

@@ -1045,25 +1045,27 @@ def q54_stream_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Q65 — foreachBatch CDC upsert (streaming.upsert): the change feed is
-# split into multiple files and drained with maxFilesPerTrigger=1, so
-# the merge-into-snapshot really runs ONCE PER MICRO-BATCH — each batch
-# unions the prior published snapshot with the delta and keeps the
-# latest row per key, committing a batch_id-versioned snapshot behind
-# a pointer file (idempotent under replay). The final snapshot must
-# equal batch q12's whole-history keep-latest — same oracle. This is
-# the sink-side MERGE twin of q54's state-store keep-latest: state
-# lives in the (bucketable, restart-safe) snapshot table instead of
-# the state store.
+# Q65 — foreachBatch CDC upsert (streaming.bucketed_upsert): the change
+# feed is split into multiple files and drained with maxFilesPerTrigger=1,
+# so the merge-into-snapshot really runs ONCE PER MICRO-BATCH — each
+# batch merges into the bucketed snapshot, rewriting only the buckets
+# it touches and keeping the latest row per key (idempotent under
+# replay). The final snapshot must equal batch q12's whole-history
+# keep-latest — same oracle. This is the sink-side MERGE twin of q54's
+# state-store keep-latest: state lives in the (restart-safe) snapshot
+# table instead of the state store.
 # --------------------------------------------------------------------------
 
 def q65_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+    import shutil
 
-    from ..streaming.upsert import foreach_batch_upsert, read_snapshot
+    from ..streaming.bucketed_upsert import (foreach_batch_bucketed_upsert,
+                                             read_bucketed_snapshot)
+    from . import scratch_dir
     ev = read_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q65_upsert_")
+    work = scratch_dir(spark, sf_dir, "q65_upsert")
+    shutil.rmtree(work, ignore_errors=True)
     src_dir = os.path.join(work, "src")
     # 4 files → 4 micro-batches: the cross-batch merge path is what
     # this query certifies (row placement is arbitrary; keep-latest
@@ -1074,13 +1076,16 @@ def q65_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src_dir))
     snap_dir = os.path.join(work, "snap")
-    foreach_batch_upsert(src,
-                         primary_keys=["user_id", "event_type"],
-                         order_by=[F.col("ts").desc()],
-                         tiebreak=[F.col("event_id").desc()],
-                         snapshot_dir=snap_dir,
-                         checkpoint_path=os.path.join(work, "ckpt"))
-    snap = read_snapshot(spark, snap_dir)
+    foreach_batch_bucketed_upsert(src,
+                                  primary_keys=["user_id", "event_type"],
+                                  order_by=[F.col("ts").desc()],
+                                  tiebreak=[F.col("event_id").desc()],
+                                  snapshot_dir=snap_dir,
+                                  checkpoint_path=os.path.join(work, "ckpt"),
+                                  n_buckets=8)
+    snap = read_bucketed_snapshot(spark, snap_dir)
+    if snap is None:   # empty change feed: no bucket ever written
+        snap = ev.limit(0)
     return snap.select("user_id", "event_type", "event_id",
                        F.date_format("ts", TS_FMT).alias("ts"), "value")
 
@@ -1593,12 +1598,14 @@ FROM new GROUP BY o_custkey
 
 def q74_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+    import shutil
 
     from ..streaming.upsert import (foreach_batch_incremental_agg,
                                     read_snapshot)
+    from . import scratch_dir
     ev = read_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q74_ivm_")
+    work = scratch_dir(spark, sf_dir, "q74_ivm")
+    shutil.rmtree(work, ignore_errors=True)
     src_dir = os.path.join(work, "src")
     # 4 files → 4 micro-batches: certifies the cross-batch merge path
     # (additive merges are order-insensitive, so placement is free)
@@ -3460,7 +3467,7 @@ SPECS = [
               "(hash-match vs plain oracle proves exactness)"),
     QuerySpec("q65_stream_upsert", q65_stream_upsert, Q12_SQL,
               "foreachBatch CDC upsert: per-micro-batch merge into a "
-              "versioned keyed snapshot, same oracle as batch q12"),
+              "bucketed keyed snapshot, same oracle as batch q12"),
     QuerySpec("q68_scd2", q68_scd2, Q68_SQL,
               "SCD type-2 history from the change feed (collapse-on-"
               "unchanged, lead-derived validity, one exchange)"),

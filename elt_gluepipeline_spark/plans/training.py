@@ -33,7 +33,7 @@ from ..operators.textstats import (EN_STOPWORDS, bpe_ish_tokens,
                                    langid_en_heuristic, n_tokens, tokens)
 from ..sources.readers import (ntz_micros, ntz_to_instant, read_table,
                                read_table_stream)
-from . import QuerySpec
+from . import QuerySpec, scratch_dir
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
 
@@ -1692,9 +1692,6 @@ WHERE cm.n_common / (na.n + nb.n - cm.n_common) >= 0.3
 # --------------------------------------------------------------------------
 
 def q200_lsh_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import shutil
-
     from ..operators.dedup import (fit_lsh_dedup_index, incremental_lsh_dedup,
                                    load_lsh_dedup_index,
                                    save_lsh_dedup_index)
@@ -1702,17 +1699,13 @@ def q200_lsh_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
-    dkey = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    app = spark.sparkContext.applicationId.replace("-", "_").lower()
-    path = f"spark-warehouse/sg_lsh200_{dkey}_{app}"
+    path = scratch_dir(spark, sf_dir, "lsh200")
     if not os.path.isdir(path):
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text",
                                 k=3, n_hashes=32, bands=8,
                                 pair_family=_Q41_FAMILY,
                                 band_hash=portable_band_hash), path)
-        import atexit
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
     index = load_lsh_dedup_index(spark, path)
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
@@ -1736,9 +1729,6 @@ def q200_lsh_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def q204_lsh_pruned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import shutil
-
     from ..operators.dedup import (fit_lsh_dedup_index, incremental_lsh_dedup,
                                    load_lsh_dedup_index,
                                    save_lsh_dedup_index)
@@ -1746,9 +1736,7 @@ def q204_lsh_pruned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
-    dkey = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    app = spark.sparkContext.applicationId.replace("-", "_").lower()
-    path = f"spark-warehouse/sg_lsh204_{dkey}_{app}"
+    path = scratch_dir(spark, sf_dir, "lsh204")
     if not os.path.isdir(path):
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text",
@@ -1756,8 +1744,6 @@ def q204_lsh_pruned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 pair_family=_Q41_FAMILY,
                                 band_hash=portable_band_hash), path,
             partition_entries=16)
-        import atexit
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
     index = load_lsh_dedup_index(spark, path)
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
@@ -1782,9 +1768,6 @@ def q204_lsh_pruned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def q203_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import shutil
-
     from ..operators.dedup import (delete_from_lsh_dedup_index,
                                    fit_lsh_dedup_index,
                                    incremental_lsh_dedup,
@@ -1794,9 +1777,7 @@ def q203_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
-    dkey = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    app = spark.sparkContext.applicationId.replace("-", "_").lower()
-    path = f"spark-warehouse/sg_lsh203_{dkey}_{app}"
+    path = scratch_dir(spark, sf_dir, "lsh203")
     if not os.path.isdir(path):
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text",
@@ -1806,8 +1787,6 @@ def q203_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_from_lsh_dedup_index(
             corpus.filter(F.col("doc_id") % 3 == 1).select("doc_id"),
             path)
-        import atexit
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
     index = load_lsh_dedup_index(spark, path)
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
@@ -1838,8 +1817,6 @@ if Q203_SQL == Q199_SQL:  # the anchor line moved: fail at import, loudly
 # --------------------------------------------------------------------------
 
 def q201_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
     import shutil
 
     from ..streaming.bucketed_upsert import (bucketed_merge,
@@ -1853,11 +1830,8 @@ def q201_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         F.when(F.col("o_orderkey") % 7 == 0, F.lit("D"))
          .otherwise(F.lit("U")).alias("op"))
-    dkey = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    app = spark.sparkContext.applicationId.replace("-", "_").lower()
-    snap = f"spark-warehouse/sg_upsert201_{dkey}_{app}"
+    snap = scratch_dir(spark, sf_dir, "upsert201")
     shutil.rmtree(snap, ignore_errors=True)
-    atexit.register(shutil.rmtree, snap, ignore_errors=True)
     # three merge batches, deliberately NOT seq-ordered: final state
     # must be batching-invariant (tombstones retained ⇒ newest wins);
     # op_col engages the production config — tombstone-count sidecar
@@ -3544,9 +3518,6 @@ WHERE rn <= 5
 # --------------------------------------------------------------------------
 
 def q141_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (_empty_pairs, pq_adc_topk_codes,
                                         pq_encode)
 
@@ -3555,22 +3526,9 @@ def q141_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     art = _pq_artifact(spark, sf_dir)
     if art is None:
         return _empty_pairs(q, "vec_id", "adc_dist")
-    # Path is keyed by (dataset, Spark application): the app id makes
-    # it private to this session, so two concurrent builds on the same
-    # dataset — or two users on a shared host — can't interleave the
-    # overwrite/append sequence into each other's index (ADVICE r5).
-    # The app id alone serializes concurrent builds, so repeat builds
-    # in one session overwrite in place instead of minting a fresh dir
-    # per pid; the atexit hook reclaims the one dir this session made
-    # (ADVICE r6: pid-keyed paths accumulated stale /tmp dirs forever).
-    import atexit
-    import shutil
-    key = hashlib.md5(
-        (os.path.abspath(sf_dir) + "\x1f"
-         + spark.sparkContext.applicationId).encode()).hexdigest()[:12]
-    index_path = os.path.join(tempfile.gettempdir(),
-                              f"spark_graft_pqindex_{key}")
-    atexit.register(shutil.rmtree, index_path, ignore_errors=True)
+    # session-private path: concurrent builds can't interleave the
+    # overwrite/append sequence; repeat builds overwrite in place
+    index_path = scratch_dir(spark, sf_dir, "pqindex")
     is_new = F.pmod("vec_id", F.lit(10)) == 0
     pq_encode(emb.filter(~is_new), art) \
         .write.mode("overwrite").parquet(index_path)
@@ -3598,11 +3556,6 @@ Q141_SQL = Q77_SQL  # append ≡ rebuild is exactly the claim under test
 # --------------------------------------------------------------------------
 
 def q202_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
-    import shutil
-    import tempfile
-
     from ..operators.similarity import (_empty_pairs, pq_adc_topk_codes,
                                         pq_encode)
 
@@ -3611,14 +3564,8 @@ def q202_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     art = _pq_artifact(spark, sf_dir)
     if art is None:
         return _empty_pairs(q, "vec_id", "adc_dist")
-    key = hashlib.md5(
-        (os.path.abspath(sf_dir) + "\x1f"
-         + spark.sparkContext.applicationId).encode()).hexdigest()[:12]
-    index_path = os.path.join(tempfile.gettempdir(),
-                              f"spark_graft_pqdel_{key}")
-    atexit.register(shutil.rmtree, index_path, ignore_errors=True)
-    tomb_path = index_path + "_tombs"
-    atexit.register(shutil.rmtree, tomb_path, ignore_errors=True)
+    index_path = scratch_dir(spark, sf_dir, "pqdel")
+    tomb_path = scratch_dir(spark, sf_dir, "pqdel_tombs")
     pq_encode(emb, art).write.mode("overwrite").parquet(index_path)
     (emb.filter(F.col("vec_id") % 10 == 3)
         .select(F.col("vec_id").alias("neighbor_id"))
@@ -6177,11 +6124,8 @@ _CHAIN_SEQ = None  # lazy itertools.count
 
 
 def q190_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
     import itertools
     import shutil
-    import tempfile
 
     from ..streaming.chain import run_stream_chain
 
@@ -6190,28 +6134,13 @@ def q190_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CHAIN_SEQ = itertools.count(1)
 
     li = read_table(spark, sf_dir, "lineitem")
-    # src key is (dataset, appId)-private like the run root below —
-    # keyed by dataset alone, two concurrent sessions on the same
-    # dataset would overwrite each other's source mid-drain and each
-    # would register an atexit rmtree on the other's live source
-    dkey = hashlib.md5(
-        (os.path.abspath(sf_dir) + "\x1f"
-         + spark.sparkContext.applicationId).encode()).hexdigest()[:12]
-    src = os.path.join(tempfile.gettempdir(),
-                       f"spark_graft_chainsrc_{dkey}")
+    src = scratch_dir(spark, sf_dir, "chainsrc")
     # four range-partitioned files → four micro-batches downstream
     li.repartitionByRange(4, "l_orderkey") \
       .write.mode("overwrite").parquet(src)
-    # run root is (dataset, appId, seq)-private: concurrent sessions
-    # can't interleave, repeat builds in one session re-drain fresh
-    akey = hashlib.md5(
-        (os.path.abspath(sf_dir) + "\x1f"
-         + spark.sparkContext.applicationId).encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_chain_{akey}_{next(_CHAIN_SEQ)}")
+    # one run root per build: repeat builds in one session re-drain fresh
+    root = scratch_dir(spark, sf_dir, f"chain_{next(_CHAIN_SEQ)}")
     shutil.rmtree(root, ignore_errors=True)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    atexit.register(shutil.rmtree, src, ignore_errors=True)
     final_dir = os.path.join(root, "final")
     run_stream_chain(
         spark, source_dir=src, final_dir=final_dir,

@@ -16,6 +16,8 @@ import time
 from pathlib import Path
 from typing import Any
 
+from .writers import write_atomic
+
 
 class BookmarkStore:
     """Per-table high-watermark bookmarks as JSON files."""
@@ -35,11 +37,9 @@ class BookmarkStore:
         return json.loads(p.read_text()).get("last_value")
 
     def set(self, table: str, value: Any) -> None:
-        p = self._path(table)
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps({"table": table, "last_value": value,
-                                   "committed_at": time.time()}))
-        tmp.replace(p)  # atomic commit
+        write_atomic(str(self._path(table)),
+                     json.dumps({"table": table, "last_value": value,
+                                 "committed_at": time.time()}))
 
 
 class RunManifest:

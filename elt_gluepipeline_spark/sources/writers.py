@@ -8,6 +8,7 @@ upstream, where it would cap stage parallelism.
 
 from __future__ import annotations
 
+import os
 import shutil
 from pathlib import Path
 
@@ -76,29 +77,68 @@ def move_path(src: str, dst: str) -> None:
     shutil.move(src, dst)
 
 
+def swap_dir(live: str, staged: str, aside: str) -> None:
+    """Replace directory ``live`` by ``staged``: rename live→aside,
+    rename staged→live, delete aside. A missing ``staged`` removes
+    ``live`` (through the aside).
+
+    Invariant: one complete copy of the table is on disk at every
+    instant, at ``live`` or at ``aside``, so a crash at any step is
+    healed by ``recover_swap(live, aside)``; every caller runs it at
+    entry. Two renames are not one atomic operation, so local-FS
+    readers must not race a swap (an object store swaps a manifest
+    pointer instead)."""
+    recover_swap(live, aside)
+    if os.path.isdir(live):
+        os.makedirs(os.path.dirname(aside), exist_ok=True)
+        shutil.move(live, aside)
+    if os.path.isdir(staged):
+        os.makedirs(os.path.dirname(live), exist_ok=True)
+        shutil.move(staged, live)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def recover_swap(live: str, aside: str) -> None:
+    """Heal an interrupted ``swap_dir``. An aside without its live dir
+    holds the only copy (the crash fell between the renames): move it
+    back. An aside next to a live dir is superseded: delete it."""
+    if not os.path.isdir(aside):
+        return
+    if os.path.isdir(live):
+        shutil.rmtree(aside, ignore_errors=True)
+    else:
+        os.makedirs(os.path.dirname(live), exist_ok=True)
+        shutil.move(aside, live)
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Commit a small file atomically (temp file, then ``os.replace``):
+    readers see the old contents or the new, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
 def compact_parquet(spark, path: str, *, target_files: int = 8,
                     partition_by: tuple[str, ...] = (),
                     compression: str = "snappy") -> int:
     """Small-file compaction: rewrite a parquet folder into a bounded
-    file count and atomically swap it in. The operational counterpart
-    of an append-mode sink (incremental ingest appends a few files per
+    file count and swap it in. The operational counterpart of an
+    append-mode sink (incremental ingest appends a few files per
     run — go-incremental-ingest-elt.py:224-233 — and a year of runs
     makes thousands of tiny files whose open/footer cost dominates
     scans).
 
-    The rewrite is one read→write job (no driver-side file handling);
-    the swap goes through a sibling temp dir, then old→aside rename,
-    tmp→live rename, delete-aside — a live copy of the data exists on
-    disk at every instant, and a crash mid-swap leaves either the old
-    folder (at the aside path) or the new one recoverable, never
-    neither. (Two renames aren't one atomic op: a reader can race the
-    microseconds between them — on POSIX use renameat2/EXCHANGE for a
-    true atomic swap; on object stores swap via manifest pointer.)
-    Returns the row count (cheap parity check for callers).
+    The rewrite is one read→write job into a sibling temp dir (no
+    driver-side file handling), swapped in by ``swap_dir``; a crashed
+    earlier swap is recovered at entry. Returns the row count (cheap
+    parity check for callers).
     """
-    df = spark.read.parquet(path)
     base = path.rstrip("/")
     tmp, aside = base + "__compact_tmp", base + "__compact_old"
+    recover_swap(base, aside)
+    df = spark.read.parquet(base)
     out = df.coalesce(target_files)
     writer = (out.write.mode("overwrite")
                  .option("compression", compression))
@@ -106,10 +146,7 @@ def compact_parquet(spark, path: str, *, target_files: int = 8,
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
     n = spark.read.parquet(tmp).count()
-    shutil.rmtree(aside, ignore_errors=True)
-    shutil.move(base, aside)   # old data stays live at the aside path
-    shutil.move(tmp, base)     # new data takes the live path
-    shutil.rmtree(aside)       # only now does the old copy disappear
+    swap_dir(base, tmp, aside)
     # the live path now holds different files; drop any cached footer
     # schema so the next read re-resolves (readers also key on a leaf
     # signature, but an in-place rewrite is the explicit case)

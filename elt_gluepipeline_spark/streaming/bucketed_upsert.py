@@ -1,8 +1,7 @@
-"""Bucket-pruned CDC MERGE: the 100 TB scale path for the keyed
-snapshot that ``streaming.upsert`` maintains (reference analog: the
-keep-latest dedupe of go-incremental-ingest-elt.py:200-213, applied
-continuously — here with per-merge cost proportional to the BATCH,
-not the snapshot).
+"""Bucket-pruned CDC MERGE: the keyed keep-latest snapshot
+(reference analog: the keep-latest dedupe of
+go-incremental-ingest-elt.py:200-213, applied continuously — with
+per-merge cost proportional to the BATCH, not the snapshot).
 
 Layout: the snapshot lives as a Hive-partitioned parquet table
 ``<snapshot_dir>/data/_bucket=K/`` with K = pmod(xxhash64(pk), B).
@@ -18,13 +17,12 @@ A merge then:
    (operators.windows.dedupe_keep_latest — one shuffle, by key,
    of O(batch + touched·snapshot/B) rows);
 4. writes the merged buckets to a staging dir and swaps each touched
-   ``_bucket=K`` directory into the live table through the
-   two-rename protocol below. Untouched bucket directories are not
+   ``_bucket=K`` directory into the live table with
+   ``sources.writers.swap_dir``. Untouched bucket directories are not
    rewritten, not read, not even listed by the merge job.
 
 So a batch that touches t of B buckets costs
-O(|batch| + t·|snapshot|/B) — the docstring contract of
-``foreach_batch_upsert``'s scale note, now real. With B sized so a
+O(|batch| + t·|snapshot|/B). With B sized so a
 bucket is a few GB, a trickle batch into a 100 TB snapshot rewrites
 gigabytes, not the table. When the snapshot outgrows its bucket
 count, ``rebucket`` migrates the table to a larger B through the
@@ -34,18 +32,12 @@ becomes a manifest-pointer update; a table format with native MERGE
 (Iceberg/Delta/Hudi) replaces step 4 with its own commit protocol and
 keeps steps 1-3 verbatim.
 
-Crash safety: a swap is move(live→aside), move(staging→live),
-delete(aside), with the aside directory OUTSIDE the live table
-(``<snapshot_dir>/.aside/_bucket=K``) so partition discovery and
-concurrent readers of ``data/`` never see a half-swapped bucket
-under a bogus partition value. Every entry point first runs
-straggler recovery: an aside bucket whose live directory is missing
-is moved back (crash fell between the two renames — the replayed
-batch re-merges it, idempotently); one whose live directory exists
-is deleted (crash fell before the aside cleanup). Local-FS renames
-are not atomic ACROSS directories for readers racing a merge, so
-reads must not overlap a merge on local FS; on an object store the
-swap is a manifest update and this window disappears.
+Crash safety: swaps follow ``sources.writers.swap_dir``, with the
+aside directory OUTSIDE the live table
+(``<snapshot_dir>/.aside/_bucket=K``) so partition discovery never
+sees a half-swapped bucket under a bogus partition value. Every entry
+point first runs ``recover_swap`` over the asides; a restored bucket
+is simply re-merged by the replayed batch, idempotently.
 
 Deletes: change rows may carry an op column; a key whose NEWEST
 change is the delete op disappears from reads. Tombstones are
@@ -82,10 +74,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windows import dedupe_keep_latest
+from ..sources.writers import recover_swap, swap_dir, write_atomic
+from .stream import drain_foreach_batch
 
 BUCKET_COL = "_bucket"
 _DATA = "data"
 _ASIDE = ".aside"
+_WHOLE_TABLE = "__data__"  # rebucket's aside for the whole data dir
 _SIDECAR = "tombstone_bounds.json"
 
 
@@ -107,54 +102,31 @@ def _aside_dir(snapshot_dir: str) -> str:
 
 
 def _recover_asides(snapshot_dir: str) -> None:
-    """Straggler recovery (see module docstring): restore any aside
-    bucket whose live twin is missing; drop asides that were already
-    superseded. Runs at every entry point, so a crashed swap heals on
-    the next touch of the table."""
+    """``recover_swap`` every aside; runs at every entry point, so a
+    crashed swap heals on the next touch of the table. The whole-table
+    aside sorts first, so the table is back before its buckets."""
     aside_root = _aside_dir(snapshot_dir)
     if not os.path.isdir(aside_root):
         return
     live = _live_dir(snapshot_dir)
-    for name in os.listdir(aside_root):
-        src = os.path.join(aside_root, name)
-        dst = live if name == "__data__" else os.path.join(live, name)
-        if os.path.isdir(dst):
-            shutil.rmtree(src, ignore_errors=True)
-        else:
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(src, dst)
+    for name in sorted(os.listdir(aside_root)):
+        recover_swap(live if name == _WHOLE_TABLE
+                     else os.path.join(live, name),
+                     os.path.join(aside_root, name))
 
 
 def _swap_in(snapshot_dir: str, staging: str, bucket_ids: Sequence[int],
              ) -> None:
-    """Two-rename swap of each staged ``_bucket=K`` into the live
-    table, aside dirs outside the read path (crash-recoverable via
-    ``_recover_asides``). A bucket in ``bucket_ids`` that staged
-    EMPTY (no directory) EMPTIES the live table: its live directory
-    is moved aside and deleted — ``expire_tombstones`` relies on this
-    to drop a bucket whose every row expired. ``bucketed_merge``
-    never stages empty for a bucket holding live data (keep-latest
-    retains a winner per key), so the merge path never hits it."""
-    live = _live_dir(snapshot_dir)
-    aside_root = _aside_dir(snapshot_dir)
-    os.makedirs(live, exist_ok=True)
-    os.makedirs(aside_root, exist_ok=True)
+    """``swap_dir`` each staged ``_bucket=K`` into the live table. A
+    bucket that staged EMPTY (no directory) is removed from the live
+    table — ``expire_tombstones`` relies on this to drop a bucket whose
+    every row expired; ``bucketed_merge`` never stages a live bucket
+    empty (keep-latest retains a winner per key)."""
     for k in bucket_ids:
         part = f"{BUCKET_COL}={k}"
-        src = os.path.join(staging, part)
-        dst = os.path.join(live, part)
-        aside = os.path.join(aside_root, part)
-        shutil.rmtree(aside, ignore_errors=True)
-        has_src = os.path.isdir(src)
-        if os.path.isdir(dst) and has_src:
-            shutil.move(dst, aside)
-        if has_src:
-            shutil.move(src, dst)
-        elif os.path.isdir(dst):
-            # staged empty: expiry may compact a bucket to nothing —
-            # the live dir must then disappear too
-            shutil.move(dst, aside)
-        shutil.rmtree(aside, ignore_errors=True)
+        swap_dir(os.path.join(_live_dir(snapshot_dir), part),
+                 os.path.join(staging, part),
+                 os.path.join(_aside_dir(snapshot_dir), part))
 
 
 def _load_sidecar(snapshot_dir: str
@@ -177,19 +149,14 @@ def _load_sidecar(snapshot_dir: str
 
 def _write_sidecar(snapshot_dir: str, bounds: dict[int, int],
                    op_col: str, delete_op: str) -> None:
-    """Atomic (temp+rename) sidecar write. Values are UPPER BOUNDS on
+    """Atomic sidecar write. Values are UPPER BOUNDS on
     per-bucket tombstone counts: raises happen before a swap, exact
     lowerings after — a crash anywhere leaves a valid bound, so the
     sidecar can prune ``expire_tombstones``'s scan but never hide a
     tombstone-bearing bucket from it."""
-    p = os.path.join(snapshot_dir, _SIDECAR)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"op_col": op_col, "delete_op": delete_op,
-                   "bounds": {str(k): v for k, v in sorted(bounds.items())
-                              if v > 0}},
-                  fh)
-    os.replace(tmp, p)
+    write_atomic(os.path.join(snapshot_dir, _SIDECAR), json.dumps(
+        {"op_col": op_col, "delete_op": delete_op,
+         "bounds": {str(k): v for k, v in sorted(bounds.items()) if v > 0}}))
 
 
 def _resolve_op_col(snapshot_dir: str, op_col: str | None, delete_op: str,
@@ -456,10 +423,9 @@ def rebucket(
     table seeded at B=64 that reached 100 TB needs this, not a frozen
     B). One full rewrite: read every row (tombstones INCLUDED — they
     carry their replay-protection across the migration), recompute the
-    bucket id under the new B, stage the whole table, then swap the
-    entire ``data`` directory through the aside protocol (crash
-    between the two renames heals via ``_recover_asides``: the old
-    table returns, the rebucket is simply re-run). Subsequent merges
+    bucket id under the new B, stage the whole table, then
+    ``swap_dir`` the entire ``data`` directory (after a crash the old
+    table returns and the rebucket is simply re-run). Subsequent merges
     into the snapshot must pass ``n_buckets=new_n_buckets``.
 
     The tombstone sidecar is DELETED before the swap and rebuilt with
@@ -492,13 +458,8 @@ def rebucket(
     sidecar = os.path.join(snapshot_dir, _SIDECAR)
     if os.path.isfile(sidecar):
         os.remove(sidecar)
-    aside_root = _aside_dir(snapshot_dir)
-    os.makedirs(aside_root, exist_ok=True)
-    aside = os.path.join(aside_root, "__data__")
-    shutil.rmtree(aside, ignore_errors=True)
-    shutil.move(live, aside)
-    shutil.move(staging, live)
-    shutil.rmtree(aside, ignore_errors=True)
+    swap_dir(live, staging,
+             os.path.join(_aside_dir(snapshot_dir), _WHOLE_TABLE))
 
     if op_col is not None:
         exact = {
@@ -584,22 +545,14 @@ def foreach_batch_bucketed_upsert(
     op_col: str | None = None,
     delete_op: str = "D",
 ) -> None:
-    """Streaming twin of upsert.foreach_batch_upsert with the
-    bucket-pruned merge as the sink: drain ``source`` AvailableNow,
-    merging every micro-batch via bucketed_merge. At-least-once
-    replay composes to exactly-once state because the merge is
-    idempotent (see module docstring); the per-bucket directory swap
-    plays the role the version-pointer commit plays in the
-    full-rewrite path."""
+    """Drain ``source`` AvailableNow, merging every micro-batch into
+    the snapshot via ``bucketed_merge``. At-least-once replay composes
+    to exactly-once state because the merge is idempotent (see module
+    docstring); the per-bucket directory swap is the commit."""
     def merge(batch: DataFrame, batch_id: int) -> None:
         bucketed_merge(batch, snapshot_dir=snapshot_dir,
                        primary_keys=primary_keys, order_by=order_by,
                        n_buckets=n_buckets, tiebreak=tiebreak,
                        op_col=op_col, delete_op=delete_op)
 
-    q = (source.writeStream
-               .foreachBatch(merge)
-               .option("checkpointLocation", checkpoint_path)
-               .trigger(availableNow=True)
-               .start())
-    q.awaitTermination()
+    drain_foreach_batch(source, merge, checkpoint_path)

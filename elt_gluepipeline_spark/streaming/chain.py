@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.conform import normalize_names, normalize_strings
 from ..operators.quality import extract_violations, split_clean
 from ..sources.state import BookmarkStore
+from .stream import drain_foreach_batch
 
 CHAIN_BOOKMARK_TABLE = "stream_chain_batches"
 
@@ -101,12 +102,7 @@ def run_stream_chain(
     src = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(source_dir))
-    q = (src.writeStream
-            .foreachBatch(handler)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-    q.awaitTermination()
+    drain_foreach_batch(src, handler, checkpoint_dir)
 
 
 # re-exported for callers that build the same tagging in batch and need

@@ -86,6 +86,20 @@ def stream_windowed_rollup(
                .start())
 
 
+def drain_foreach_batch(source: DataFrame, fn, checkpoint_path: str,
+                        ) -> None:
+    """Drain streaming ``source`` with Trigger.AvailableNow, calling
+    ``fn(batch, batch_id)`` on every micro-batch; blocks until every
+    file present at start is processed. After a restart the checkpoint
+    replays an unacknowledged batch under the same ``batch_id``."""
+    q = (source.writeStream
+               .foreachBatch(fn)
+               .option("checkpointLocation", checkpoint_path)
+               .trigger(availableNow=True)
+               .start())
+    q.awaitTermination()
+
+
 _MEM_SINK_SEQ = itertools.count(1)
 
 

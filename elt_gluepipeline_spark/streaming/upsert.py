@@ -1,31 +1,18 @@
-"""foreachBatch CDC upsert: maintain a keyed snapshot table from a
-change stream (SURVEY.md §2.8 T1-T3 as a *continuously merged* sink
-rather than an append sink; reference analog: the keep-latest dedupe
-the batch pipeline re-runs per schedule, go-incremental-ingest-elt.py:
-200-213, here applied incrementally per micro-batch).
-
-foreachBatch is Structured Streaming's escape hatch for sinks that
-need a MERGE: each micro-batch arrives as a batch DataFrame together
-with a monotonically increasing ``batch_id``, and the function applies
-it transactionally-enough by making the write idempotent in
-``batch_id`` (a replayed batch after a crash rewrites the same
-versioned snapshot, so at-least-once delivery composes to
-exactly-once state).
+"""Versioned-snapshot foreachBatch sinks for merges that are NOT
+idempotent: streaming incremental aggregation and incremental corpus
+dedup (SURVEY.md §2.8 T1-T3 as continuously merged sinks). The keyed
+keep-latest upsert is idempotent and lives in
+``streaming.bucketed_upsert``.
 
 Snapshot layout: versioned directories ``v{batch_id}`` under
 ``snapshot_dir``, plus a tiny ``_LATEST`` pointer file written last —
 readers resolve the pointer, writers never mutate a published version
-(the swap is the pointer write, same commit-after-write discipline as
-sources.state.BookmarkStore). Each merge unions the previous snapshot
-with the batch and keeps the latest row per primary key.
-
-Scale path (100 TB snapshot): a full-snapshot rewrite per batch is
-O(snapshot) — production buckets the snapshot by pmod(xxhash64(pk), B)
-at write time and rewrites only the buckets the batch touches
-(partition-pruned read + dynamic partition overwrite), making each
-merge O(delta · snapshot/B). The versioned-pointer commit protocol is
-unchanged; only the copy narrows. A table format with native MERGE
-(Iceberg/Delta/Hudi) slots behind the same callback.
+(the commit is the pointer write, the same commit-after-write
+discipline as sources.state.BookmarkStore). Each merge reads the
+newest version STRICTLY BELOW its batch_id, so a batch replayed after
+a crash recomputes its version from the same predecessor instead of
+merging into its own output: at-least-once delivery composes to
+exactly-once state.
 """
 
 from __future__ import annotations
@@ -33,9 +20,10 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.windows import dedupe_keep_latest
+from ..sources.writers import write_atomic
+from .stream import drain_foreach_batch
 
 _POINTER = "_LATEST"
 
@@ -51,46 +39,14 @@ def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
     return spark.read.parquet(os.path.join(snapshot_dir, version))
 
 
-def foreach_batch_upsert(
-    source: DataFrame,
-    *,
-    primary_keys: Sequence[str],
-    order_by: Sequence[Column],
-    snapshot_dir: str,
-    checkpoint_path: str,
-    tiebreak: Sequence[Column] | None = None,
-) -> None:
-    """Drain ``source`` (a streaming DataFrame) with AvailableNow,
-    merging every micro-batch into the keyed snapshot. Blocks until
-    the drain finishes; the merged result is then at
-    ``read_snapshot(spark, snapshot_dir)``.
-
-    Restart safety: the checkpoint replays unacknowledged batches and
-    the ``v{batch_id}`` write is idempotent; the pointer advances only
-    after the version directory is fully written.
-    """
-    spark = source.sparkSession
-    os.makedirs(snapshot_dir, exist_ok=True)
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        prev = read_snapshot(spark, snapshot_dir)
-        merged = batch if prev is None else prev.unionByName(batch)
-        latest = dedupe_keep_latest(merged, list(primary_keys),
-                                    list(order_by),
-                                    list(tiebreak) if tiebreak else ())
-        out = os.path.join(snapshot_dir, f"v{batch_id}")
-        latest.write.mode("overwrite").parquet(out)
-        tmp = os.path.join(snapshot_dir, f"._ptr_{batch_id}")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(f"v{batch_id}")
-        os.replace(tmp, os.path.join(snapshot_dir, _POINTER))
-
-    q = (source.writeStream
-               .foreachBatch(merge)
-               .option("checkpointLocation", checkpoint_path)
-               .trigger(availableNow=True)
-               .start())
-    q.awaitTermination()
+def _publish_version(snapshot_dir: str, batch_id: int, df: DataFrame,
+                     ) -> None:
+    """Write ``df`` as version ``v{batch_id}``, then point ``_LATEST``
+    at it: the pointer only ever names a fully written version, and a
+    replayed batch overwrites its own version."""
+    version = f"v{batch_id}"
+    df.write.mode("overwrite").parquet(os.path.join(snapshot_dir, version))
+    write_atomic(os.path.join(snapshot_dir, _POINTER), version)
 
 
 def _latest_version_before(snapshot_dir: str, batch_id: int) -> str | None:
@@ -125,11 +81,9 @@ def foreach_batch_incremental_agg(
     checkpoint loss).
 
     Exactly-once under replay: additive merges are NOT idempotent, so
-    unlike the keep-latest upsert the previous state resolves to the
-    newest version STRICTLY BELOW this batch_id — never the pointer.
-    A replayed batch recomputes ``v{id}`` from the same predecessor it
-    used the first time instead of double-counting itself; the pointer
-    (written last) only ever advances over fully-written versions.
+    the previous state is the newest version strictly below this
+    batch_id (module docstring), never the pointer — a replayed batch
+    does not double-count itself.
 
     ``delta_fn`` must emit keys + ``count_col`` + ``sum_cols`` with
     sums in an EXACT type (decimal/integer — see merge_agg_states);
@@ -157,19 +111,9 @@ def foreach_batch_incremental_agg(
         merged = merged.select(
             *keys, count_col,
             *[F.col(s).cast(dtypes[s]).alias(s) for s in sum_cols])
-        out = os.path.join(snapshot_dir, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        tmp = os.path.join(snapshot_dir, f"._ptr_{batch_id}")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(f"v{batch_id}")
-        os.replace(tmp, os.path.join(snapshot_dir, _POINTER))
+        _publish_version(snapshot_dir, batch_id, merged)
 
-    q = (source.writeStream
-               .foreachBatch(merge)
-               .option("checkpointLocation", checkpoint_path)
-               .trigger(availableNow=True)
-               .start())
-    q.awaitTermination()
+    drain_foreach_batch(source, merge, checkpoint_path)
 
 
 def foreach_batch_incremental_dedupe(
@@ -191,11 +135,10 @@ def foreach_batch_incremental_dedupe(
     O(batch × overlap) because the corpus side contributes only its
     inverted index (never corpus×corpus).
 
-    Replay safety follows the incremental-agg protocol, not the
-    upsert one: survivor accumulation is not idempotent against the
-    pointer (a replayed batch must not dedupe against a snapshot that
-    already contains its own survivors), so the previous state resolves
-    to the newest version STRICTLY BELOW this batch_id.
+    Replay safety: survivor accumulation is not idempotent (a replayed
+    batch must not dedupe against a snapshot that already contains its
+    own survivors), so the previous state is the newest version
+    strictly below this batch_id (module docstring).
 
     ``block_cols_fn()`` returns the blocking Column expressions
     (unbound, evaluated against both batch and snapshot frames). The
@@ -217,16 +160,6 @@ def foreach_batch_incremental_dedupe(
             k=k, threshold=threshold)
         merged = corpus.unionByName(kept.select(*corpus.columns)
                                     if prev_v is not None else kept)
-        out = os.path.join(snapshot_dir, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        tmp = os.path.join(snapshot_dir, f"._ptr_{batch_id}")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(f"v{batch_id}")
-        os.replace(tmp, os.path.join(snapshot_dir, _POINTER))
+        _publish_version(snapshot_dir, batch_id, merged)
 
-    q = (source.writeStream
-               .foreachBatch(merge)
-               .option("checkpointLocation", checkpoint_path)
-               .trigger(availableNow=True)
-               .start())
-    q.awaitTermination()
+    drain_foreach_batch(source, merge, checkpoint_path)

