@@ -23,7 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.writers import recover_swap, swap_dir, write_atomic
+from ..sources.writers import (bucket_of, read_layout, recover_swap,
+                               swap_dir, write_bucketed)
 from . import ensure_min_partitions
 from ._cache import register_cache
 
@@ -390,7 +391,7 @@ class LshDedupIndex:
     postings: DataFrame | None = None
     tombstones: DataFrame | None = None
     # set when the stored entries table is Hive-partitioned by
-    # pmod(xxhash64(band_id, band_hash), P) (save_lsh_dedup_index
+    # bucket_of(ENTRY_KEYS, P) (save_lsh_dedup_index
     # partition_entries=P): the serve path then prunes the probe
     # join's entries scan to the batch's own partitions.
     entries_partitions: int | None = None
@@ -411,7 +412,7 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
     ``base``: optionally a pre-built (doc_id, shingles) frame for this
     corpus — a caller that manages its own shingle artifact (or that
     must NOT pin a corpus-wide array persist for a one-shot fit at
-    scale; ADVICE r11 item #4) passes it and controls its
+    scale) passes it and controls its
     materialization; when None the fit builds and registers the
     standard shared persisted pass."""
     rows_per_band = n_hashes // bands
@@ -419,9 +420,9 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
     if band_hash is None:
         band_hash = F.xxhash64
     # ONE persisted shingle pass feeds all three index tables (the
-    # fit's signature explode, sizes, and postings each referenced the
-    # shingling projection — three corpus-wide HOF evaluations per fit;
-    # round-11). The registry-tracked cache also means a caller that
+    # signature explode, sizes and postings each reference the
+    # shingling projection, otherwise three corpus-wide HOF evaluations
+    # per fit). The registry-tracked cache also means a caller that
     # fits and immediately saves/serves pays the pass once.
     if base is None:
         base = shingle_base_cached(corpus, id_col, text_col, k=k)
@@ -440,6 +441,7 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
 
 
 ENTRIES_PBUCKET = "_pbucket"
+ENTRY_KEYS = ("band_id", "band_hash")  # what a partitioned entry hashes
 
 # Below this many entries rows the flat entries scan beats the
 # partitioned probe (the layout's fixed overhead is all cost); above
@@ -464,13 +466,30 @@ def auto_entries_partitions(n_entries: int) -> int | None:
     return max(256, min(AUTO_PARTITION_MAX, p))
 
 
-def _entries_pbucket(n_partitions: int) -> Column:
-    """Partition id of a band entry: pmod(xxhash64(band_id, band_hash),
-    P). Seed-stable builtin (same contract as bucketed_upsert.
-    bucket_of) — the on-disk layout must be reproducible across
-    sessions so appends land in the right directories."""
-    return F.pmod(F.xxhash64("band_id", "band_hash"),
-                  F.lit(n_partitions)).cast("int")
+def _write_entries(entries: DataFrame, edir: str, n_partitions: int,
+                   mode: str = "overwrite") -> None:
+    """Write a partitioned entries table through ``write_bucketed``
+    (which records P in ``entries/_layout.json``). A partitioned write
+    of an EMPTY frame emits no schema-bearing file (a load would fail
+    UNABLE_TO_INFER_SCHEMA), so an entries dir without partitions
+    holds one unpartitioned empty anchor instead — ENTRIES_PBUCKET
+    rides as a plain column, so the serve-path filter still resolves.
+    The first partition written removes the anchor: bare files next to
+    partition dirs break partition discovery."""
+    import os
+
+    write_bucketed(entries, edir, col=ENTRIES_PBUCKET, keys=ENTRY_KEYS,
+                   n_buckets=n_partitions, mode=mode)
+    names = os.listdir(edir)
+    anchors = [n for n in names if n.endswith(".parquet")]
+    if any(n.startswith(f"{ENTRIES_PBUCKET}=") for n in names):
+        for n in anchors:
+            os.remove(os.path.join(edir, n))
+    elif not anchors:
+        (entries.limit(0)
+                .withColumn(ENTRIES_PBUCKET,
+                            bucket_of(ENTRY_KEYS, n_partitions))
+                .write.mode("append").parquet(edir))
 
 
 def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
@@ -485,19 +504,19 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
     a batch probe then reads ONLY the partitions its own band hashes
     fall in (PartitionFilters, the same pruning contract as the
     bucketed CDC snapshot), instead of scanning the corpus-sized
-    entries table per batch. P is part of the table layout, recorded
-    in ``path/entries_meta.json``; appends reuse the stored P
+    entries table per batch. P is recorded with the data by
+    ``sources.writers.write_bucketed``; appends reuse the stored P
     automatically (pass None), and per-doc-projection semantics are
     unchanged — append ≡ rebuild holds per partition.
 
-    Layout contract (mirrors bucketed_merge's "n_buckets is part of
-    the table layout"): an append may not change P — passing a
-    partition_entries that differs from the stored layout raises
-    (the delta would land under the wrong directories and the stored
-    P would silently prune it out of every later probe). Growing P
-    on an existing index is ``repartition_entries``'s job. A
-    non-append save REPLACES the layout: saving unpartitioned over a
-    partitioned index also clears ``entries_meta.json``.
+    Layout contract (the bucketed CDC snapshot's, too): an append may
+    not change P — passing a partition_entries that differs from the
+    stored layout raises (the delta would land under the wrong
+    directories and the stored P would silently prune it out of every
+    later probe), as does appending partitioned onto an unpartitioned
+    table. Growing P on an existing index is
+    ``repartition_entries``'s job. A non-append save REPLACES the
+    layout along with the files.
 
     ``partition_entries="auto"`` picks the layout from the DATA: the
     index is written flat first, the written entries table's row count
@@ -506,7 +525,6 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
     the table is migrated in place via ``repartition_entries`` with
     ``auto_entries_partitions``'s P. Auto is a fit/overwrite decision;
     appends always reuse the stored layout."""
-    import json
     import os
 
     if partition_entries == "auto":
@@ -523,8 +541,8 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
             repartition_entries(spark, path, p_auto)
         return
     _recover_index_swaps(path)
-    meta_path = f"{path}/entries_meta.json"
-    stored = _stored_entries_partitions(path)
+    edir = f"{path}/entries"
+    stored = _entries_partitions(path)
     if mode == "append":
         if partition_entries is None:
             partition_entries = stored
@@ -534,56 +552,16 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
                 f"stored layout P={stored} at {path} — P is part of the "
                 "table layout; append with partition_entries=None (reuses "
                 "the stored P) or migrate via repartition_entries() first.")
-        elif stored is None and os.path.isdir(f"{path}/entries"):
+        elif stored is None and os.path.isdir(edir):
             raise ValueError(
                 f"index at {path} has an UNPARTITIONED entries table — "
                 f"appending with partition_entries={partition_entries} "
                 "would mix layouts. Append with partition_entries=None or "
                 "migrate via repartition_entries() first.")
     if partition_entries:
-        edir = f"{path}/entries"
-        withp = index.entries.withColumn(
-            ENTRIES_PBUCKET, _entries_pbucket(partition_entries))
-        # one file per partition dir per write (bucketed_merge's
-        # listing-cost discipline: tasks x P small files otherwise
-        # dominate partition DISCOVERY at serve time); task count
-        # capped so a huge P doesn't serialize the fit write
-        n_tasks = min(int(partition_entries),
-                      int(withp.sparkSession.conf.get(
-                          "spark.sql.shuffle.partitions", "32")) * 8)
-        (withp.repartition(n_tasks, F.col(ENTRIES_PBUCKET))
-              .write.mode(mode).partitionBy(ENTRIES_PBUCKET)
-              .parquet(edir))
-        # A partitioned write of an EMPTY frame emits no schema-bearing
-        # files (load would fail UNABLE_TO_INFER_SCHEMA): keep an
-        # unpartitioned empty anchor instead — ENTRIES_PBUCKET rides as
-        # a plain column, so the serve-path filter still works. The
-        # first non-empty write clears the anchor (mixed bare files +
-        # partition dirs break partition discovery).
-        has_parts = any(d.startswith(f"{ENTRIES_PBUCKET}=")
-                        for d in os.listdir(edir))
-        if not has_parts:
-            (index.entries
-                  .withColumn(ENTRIES_PBUCKET,
-                              _entries_pbucket(partition_entries))
-                  .write.mode("overwrite").parquet(edir))
-        else:
-            for f in os.listdir(edir):
-                fp = os.path.join(edir, f)
-                if os.path.isfile(fp) and f.endswith(".parquet"):
-                    os.remove(fp)
-        if mode != "append" or not os.path.isfile(meta_path):
-            os.makedirs(path, exist_ok=True)
-            write_atomic(meta_path,
-                         json.dumps({"n_partitions": partition_entries}))
+        _write_entries(index.entries, edir, partition_entries, mode=mode)
     else:
-        index.entries.write.mode(mode).parquet(f"{path}/entries")
-        # an unpartitioned overwrite REPLACES a partitioned layout:
-        # drop the stale meta or load would filter on a _pbucket
-        # column the new table doesn't have (AnalysisException far
-        # from the cause)
-        if mode != "append" and os.path.isfile(meta_path):
-            os.remove(meta_path)
+        index.entries.write.mode(mode).parquet(edir)
     index.sizes.write.mode(mode).parquet(f"{path}/sizes")
     if index.postings is not None:
         index.postings.write.mode(mode).parquet(f"{path}/postings")
@@ -607,12 +585,11 @@ def load_lsh_dedup_index(spark, path: str) -> LshDedupIndex:
             return spark.read.parquet(f"{path}/{sub}")
         except Exception:
             return None
-    n_parts = _stored_entries_partitions(path)
     return LshDedupIndex(entries=spark.read.parquet(f"{path}/entries"),
                          sizes=spark.read.parquet(f"{path}/sizes"),
                          postings=_opt("postings"),
                          tombstones=_opt("tombstones"),
-                         entries_partitions=n_parts)
+                         entries_partitions=_entries_partitions(path))
 
 
 def delete_from_lsh_dedup_index(ids: DataFrame, path: str) -> None:
@@ -628,45 +605,19 @@ def delete_from_lsh_dedup_index(ids: DataFrame, path: str) -> None:
     ids.write.mode("append").parquet(f"{path}/tombstones")
 
 
-def _stored_entries_partitions(path: str) -> int | None:
-    """The entries table's partition count P, or None (unpartitioned).
-    The in-directory ``entries/_pmeta.json`` (written by a staged
-    ``repartition_entries`` rewrite so P travels ATOMICALLY with the
-    directory swap; underscore prefix → invisible to Spark's file
-    listing) wins over the table-level ``entries_meta.json``;
-    ``_recover_index_swaps`` folds it back into the table-level file
-    at every entry point."""
-    import json
-    import os
-
-    for p in (f"{path}/entries/_pmeta.json", f"{path}/entries_meta.json"):
-        if os.path.isfile(p):
-            with open(p) as fh:
-                return json.load(fh).get("n_partitions")
-    return None
+def _entries_partitions(path: str) -> int | None:
+    """The entries table's stored partition count P, or None
+    (unpartitioned)."""
+    layout = read_layout(f"{path}/entries")
+    return None if layout is None else layout["n_buckets"]
 
 
 def _recover_index_swaps(path: str) -> None:
     """``recover_swap`` each table's ``.old_`` aside (a restored table
     still serves correctly — tombstones are intact — and the rewrite
-    simply re-runs).
-
-    Also reconciles the entries-partition metadata: a
-    ``repartition_entries`` that crashed after its swap but before
-    updating ``entries_meta.json`` left the authoritative P inside
-    the swapped directory (``entries/_pmeta.json``) — fold it into
-    the table-level file and drop the in-directory copy, so later
-    rewrites that regenerate the entries dir can't strand a stale
-    inner P."""
-    import os
-
+    simply re-runs)."""
     for sub in ("entries", "sizes", "postings"):
         recover_swap(f"{path}/{sub}", f"{path}/.old_{sub}")
-    inner = f"{path}/entries/_pmeta.json"
-    if os.path.isfile(inner):
-        with open(inner) as fh:
-            write_atomic(f"{path}/entries_meta.json", fh.read())
-        os.remove(inner)
 
 
 def compact_lsh_dedup_index(spark, path: str) -> None:
@@ -694,21 +645,11 @@ def compact_lsh_dedup_index(spark, path: str) -> None:
         shutil.rmtree(staging, ignore_errors=True)
         kept = (spark.read.parquet(src)
                      .join(F.broadcast(tombs), "doc_id", "left_anti"))
-        w = kept.write.mode("overwrite")
-        partitioned = sub == "entries" and ENTRIES_PBUCKET in kept.columns
-        if partitioned:
-            w = w.partitionBy(ENTRIES_PBUCKET)  # preserve serve layout
-        w.parquet(staging)
-        if partitioned and not any(
-                d.startswith(f"{ENTRIES_PBUCKET}=")
-                for d in os.listdir(staging)):
-            # compacted to zero rows: a partitioned write of an empty
-            # frame emits no schema-bearing files (next load would fail
-            # UNABLE_TO_INFER_SCHEMA) — fall back to the same empty
-            # anchor save_lsh_dedup_index uses (unpartitioned, with
-            # ENTRIES_PBUCKET riding as a plain column, so the serve
-            # path's partition filter still resolves)
-            kept.repartition(1).write.mode("overwrite").parquet(staging)
+        n_parts = _entries_partitions(path) if sub == "entries" else None
+        if n_parts:
+            _write_entries(kept, staging, n_parts)  # keep the serve layout
+        else:
+            kept.write.mode("overwrite").parquet(staging)
         swap_dir(src, staging, f"{path}/.old_{sub}")
         # the rewrite replaced files under an already-read path: drop
         # Spark's cached file listing or the next scan reads ghosts
@@ -723,18 +664,9 @@ def repartition_entries(spark, path: str, new_n_partitions: int) -> None:
     pruning the layout exists to provide). Works in every direction:
     unpartitioned→P, P1→P2. One staged rewrite of entries only (sizes/
     postings/tombstones are untouched — P is an entries-layout fact),
-    swapped in by ``swap_dir``.
-
-    Metadata atomicity: the new P is written INTO the staged directory
-    as ``entries/_pmeta.json`` (hidden from Spark's listing by the
-    underscore prefix) so the directory swap carries data and P in one
-    rename — a crash between the swap and the table-level
-    ``entries_meta.json`` update cannot leave the serve path pruning a
-    new layout with the old P; recovery folds the inner file back into
-    the table-level one. Appends after migration pick up the new P
-    automatically (``save_lsh_dedup_index`` reads the stored layout).
-    """
-    import json
+    swapped in by ``swap_dir``; the staged table carries its layout
+    (``sources.writers.write_bucketed``), so data and P change in one
+    rename and later appends pick up the new P."""
     import os
     import shutil
 
@@ -745,31 +677,12 @@ def repartition_entries(spark, path: str, new_n_partitions: int) -> None:
     src = f"{path}/entries"
     if not os.path.isdir(src):
         raise FileNotFoundError(f"no entries table at {src}")
-    cur = spark.read.parquet(src)
-    if ENTRIES_PBUCKET in cur.columns:
-        cur = cur.drop(ENTRIES_PBUCKET)
-    cur = cur.withColumn(ENTRIES_PBUCKET, _entries_pbucket(new_n_partitions))
     staging = f"{path}/.repart_entries"
     shutil.rmtree(staging, ignore_errors=True)
-    # one file per partition (bucketed_merge's listing-cost discipline),
-    # task count capped so a huge P doesn't serialize the rewrite
-    n_tasks = min(int(new_n_partitions),
-                  int(spark.conf.get("spark.sql.shuffle.partitions",
-                                     "32")) * 8)
-    (cur.repartition(n_tasks, F.col(ENTRIES_PBUCKET))
-        .write.mode("overwrite").partitionBy(ENTRIES_PBUCKET)
-        .parquet(staging))
-    if not any(d.startswith(f"{ENTRIES_PBUCKET}=")
-               for d in os.listdir(staging)):
-        # empty table: unpartitioned anchor, _pbucket as a plain column
-        cur.repartition(1).write.mode("overwrite").parquet(staging)
-    with open(f"{staging}/_pmeta.json", "w") as fh:
-        json.dump({"n_partitions": new_n_partitions}, fh)
+    _write_entries(spark.read.parquet(src).drop(ENTRIES_PBUCKET), staging,
+                   new_n_partitions)
     swap_dir(src, staging, f"{path}/.old_entries")
     spark.catalog.refreshByPath(src)
-    # fold the in-directory P into the table-level meta (same step
-    # recovery would perform after a crash here)
-    _recover_index_swaps(path)
 
 
 def maintain_entries_layout(spark, path: str, *,
@@ -800,7 +713,7 @@ def maintain_entries_layout(spark, path: str, *,
         raise FileNotFoundError(f"no entries table at {path}/entries")
     n = spark.read.parquet(f"{path}/entries").count()
     want = auto_entries_partitions(n)
-    stored = _stored_entries_partitions(path)
+    stored = _entries_partitions(path)
     if want is None:
         # below the crossover: a partitioned table this small still
         # serves fine (pruning is just unnecessary) — never migrate
@@ -865,9 +778,8 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
             with_postings=False)
     # one persisted shingle pass over the BATCH feeds the probe
     # signatures AND both verify-side consumers (inv_new / n_new) —
-    # unshared, the batch text was shingled three times per serve call
-    # (round-11; the batch is what scales per call, so this is the
-    # serve path's per-batch constant)
+    # unshared, the batch text would be shingled three times per serve
+    # call, and the batch is what scales per call
     batch_base = shingle_base_cached(batch, id_col, text_col, k=k)
     probe = lsh_band_entries(
         minhash_signatures(batch, id_col, text_col, k=k,
@@ -885,7 +797,7 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
         # because it is consumed twice (this collect + the join).
         probe = register_cache(probe)
         pb = sorted(r[0] for r in probe.select(
-            _entries_pbucket(index.entries_partitions).alias("pb"))
+            bucket_of(ENTRY_KEYS, index.entries_partitions).alias("pb"))
             .distinct().collect())
         entries = entries.filter(F.col(ENTRIES_PBUCKET).isin(pb))
     # Candidate pairs are consumed twice (the verify join AND the

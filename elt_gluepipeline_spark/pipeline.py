@@ -42,10 +42,11 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .functions.conform import normalize_names, normalize_strings
+from .functions.observe import observed
 from .operators.quality import extract_violations, split_clean
 from .sources.state import BookmarkStore, RunManifest, parse_pk_config
 from .sources.writers import write_parquet
@@ -109,9 +110,10 @@ def stage_transform(spark: SparkSession, cfg: PipelineConfig,
     rows: dict[str, int] = {}
     for table in cfg.tables:
         df = spark.read.parquet(cfg.path("landing", table))
-        out = normalize_strings(normalize_names(df))
+        out, obs = observed(normalize_strings(normalize_names(df)),
+                            f"transform_{table}", n=F.count(F.lit(1)))
         write_parquet(out, cfg.path("staging", table), max_files=8)
-        rows[table] = spark.read.parquet(cfg.path("staging", table)).count()
+        rows[table] = obs.get["n"]
         manifest.log("transform", table, "success", rows=rows[table])
     return rows
 
@@ -126,19 +128,22 @@ def stage_quality(spark: SparkSession, cfg: PipelineConfig,
         rules = [(name, F.expr(sql))
                  for name, sql in cfg.quality_rules.get(table, ())]
         if not rules:
-            write_parquet(df, cfg.path("final", table), max_files=64)
-            split[table] = (df.count(), 0)
+            out, obs = observed(df, f"quality_{table}", n=F.count(F.lit(1)))
+            write_parquet(out, cfg.path("final", table), max_files=64)
+            split[table] = (obs.get["n"], 0)
             manifest.log("quality", table, "no_rules", rows=split[table][0])
             continue
         tagged = extract_violations(df, rules).persist()
         try:
             clean, bad = split_clean(tagged)
-            write_parquet(clean, cfg.path("final", table), max_files=64)
-            write_parquet(
+            clean, obs_clean = observed(clean, f"clean_{table}",
+                                        n=F.count(F.lit(1)))
+            bad, obs_bad = observed(
                 bad.withColumn("violated", F.array_join("violated", ",")),
-                cfg.path("quarantine", table), max_files=8)
-            n_clean = spark.read.parquet(cfg.path("final", table)).count()
-            n_bad = spark.read.parquet(cfg.path("quarantine", table)).count()
+                f"quarantine_{table}", n=F.count(F.lit(1)))
+            write_parquet(clean, cfg.path("final", table), max_files=64)
+            write_parquet(bad, cfg.path("quarantine", table), max_files=8)
+            n_clean, n_bad = obs_clean.get["n"], obs_bad.get["n"]
         finally:
             tagged.unpersist()
         split[table] = (n_clean, n_bad)
@@ -191,9 +196,10 @@ def stage_metric(spark: SparkSession, cfg: PipelineConfig,
     metric_src = _metric_source_dir(cfg)
     rows: dict[str, int] = {}
     for name in cfg.metric_queries:
-        df: DataFrame = specs[name].build(spark, metric_src)
+        df, obs = observed(specs[name].build(spark, metric_src),
+                           f"metric_{name}", n=F.count(F.lit(1)))
         write_parquet(df, cfg.path("metrics", name), max_files=16)
-        rows[name] = spark.read.parquet(cfg.path("metrics", name)).count()
+        rows[name] = obs.get["n"]
         manifest.log("metric", name, "success", rows=rows[name])
     return rows
 

@@ -8,11 +8,16 @@ upstream, where it would cap stage parallelism.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from collections.abc import Sequence
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+LAYOUT_FILE = "_layout.json"
 
 
 def write_parquet(df: DataFrame, path: str, *, mode: str = "overwrite",
@@ -120,6 +125,55 @@ def write_atomic(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
+def bucket_of(keys: Sequence[str], n_buckets: int) -> Column:
+    """A row's hash bucket: pmod(xxhash64(keys...), n_buckets). xxhash64
+    is a seed-stable Spark builtin, so the mapping is reproducible
+    across sessions and versions — required of an on-disk layout."""
+    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]),
+                  F.lit(n_buckets)).cast("int")
+
+
+def write_bucketed(df: DataFrame, path: str, *, col: str,
+                   keys: Sequence[str], n_buckets: int,
+                   n_written: int | None = None,
+                   mode: str = "overwrite") -> None:
+    """Write ``df`` as a parquet table Hive-partitioned by ``col`` =
+    ``bucket_of(keys, n_buckets)``, then commit the layout
+    ``{col, keys, n_buckets}`` to ``<path>/_layout.json``.
+
+    Every bucket is routed to ONE task, so a write leaves one file per
+    bucket: partition discovery lists the whole table before pruning,
+    and tasks x buckets small files would dominate every later read.
+    ``n_written`` (the number of buckets this write fills, default
+    all) sets the task count, capped at 8 x
+    ``spark.sql.shuffle.partitions`` so a huge bucket count does not
+    serialize the write.
+
+    The layout file lives inside the table directory (the underscore
+    hides it from Spark's listing): a ``swap_dir`` of the table moves
+    data and layout in one rename, and an overwrite removes the old
+    layout with the old files."""
+    n_tasks = min(int(n_written or n_buckets),
+                  int(df.sparkSession.conf.get(
+                      "spark.sql.shuffle.partitions", "32")) * 8)
+    (df.withColumn(col, bucket_of(keys, n_buckets))
+       .repartition(n_tasks, F.col(col))
+       .write.mode(mode).partitionBy(col).parquet(path))
+    os.makedirs(path, exist_ok=True)
+    write_atomic(os.path.join(path, LAYOUT_FILE), json.dumps(
+        {"col": col, "keys": list(keys), "n_buckets": int(n_buckets)}))
+
+
+def read_layout(path: str) -> dict | None:
+    """The layout ``write_bucketed`` committed under ``path``, or None
+    for a table written without one."""
+    try:
+        with open(os.path.join(path, LAYOUT_FILE), encoding="utf-8") as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
 def compact_parquet(spark, path: str, *, target_files: int = 8,
                     partition_by: tuple[str, ...] = (),
                     compression: str = "snappy") -> int:
@@ -172,8 +226,6 @@ def zorder_key(*cols, bits: int = 16):
 
     Pure JVM bit arithmetic (shifts/ors folded by codegen) — no UDF.
     """
-    from pyspark.sql import functions as F
-
     n = len(cols)
     assert n >= 2, "zorder needs >= 2 columns"
     assert n * bits <= 63, "interleaved key must fit a signed long"

@@ -4,8 +4,11 @@ go-incremental-ingest-elt.py:200-213, applied continuously — with
 per-merge cost proportional to the BATCH, not the snapshot).
 
 Layout: the snapshot lives as a Hive-partitioned parquet table
-``<snapshot_dir>/data/_bucket=K/`` with K = pmod(xxhash64(pk), B).
-A merge then:
+``<snapshot_dir>/data/_bucket=K/`` with K = pmod(xxhash64(pk), B),
+written by ``sources.writers.write_bucketed``, which records the
+primary keys and B in ``data/_layout.json``. Every merge reads them
+from there, so the table keeps one hash layout until ``rebucket``
+migrates it. A merge then:
 
 1. computes the batch's touched bucket set (bounded by B — a ≤B-row
    collect, never data-sized);
@@ -18,8 +21,9 @@ A merge then:
    of O(batch + touched·snapshot/B) rows);
 4. writes the merged buckets to a staging dir and swaps each touched
    ``_bucket=K`` directory into the live table with
-   ``sources.writers.swap_dir``. Untouched bucket directories are not
-   rewritten, not read, not even listed by the merge job.
+   ``sources.writers.swap_dir`` (the first merge swaps in the whole
+   staged table, layout included). Untouched bucket directories are
+   not rewritten, not read, not even listed by the merge job.
 
 So a batch that touches t of B buckets costs
 O(|batch| + t·|snapshot|/B). With B sized so a
@@ -74,23 +78,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windows import dedupe_keep_latest
-from ..sources.writers import recover_swap, swap_dir, write_atomic
+from ..sources.writers import (bucket_of, read_layout, recover_swap,
+                               swap_dir, write_atomic, write_bucketed)
 from .stream import drain_foreach_batch
 
 BUCKET_COL = "_bucket"
+DEFAULT_N_BUCKETS = 64  # a new table's B when the first merge names none
 _DATA = "data"
 _ASIDE = ".aside"
-_WHOLE_TABLE = "__data__"  # rebucket's aside for the whole data dir
+_WHOLE_TABLE = "__data__"  # aside of a whole-table swap of the data dir
 _SIDECAR = "tombstone_bounds.json"
-
-
-def bucket_of(primary_keys: Sequence[str], n_buckets: int) -> Column:
-    """The snapshot's bucket id for a row: pmod(xxhash64(pk...), B).
-    xxhash64 is a pinned, seed-stable Spark builtin, so the mapping is
-    reproducible across sessions/versions — required for an on-disk
-    layout contract."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in primary_keys]),
-                  F.lit(n_buckets)).cast("int")
 
 
 def _live_dir(snapshot_dir: str) -> str:
@@ -99,6 +96,35 @@ def _live_dir(snapshot_dir: str) -> str:
 
 def _aside_dir(snapshot_dir: str) -> str:
     return os.path.join(snapshot_dir, _ASIDE)
+
+
+def _layout(snapshot_dir: str) -> dict:
+    """The snapshot's stored layout ({col, keys, n_buckets})."""
+    layout = read_layout(_live_dir(snapshot_dir))
+    if layout is None:
+        raise FileNotFoundError(f"no bucketed snapshot at {snapshot_dir}")
+    return layout
+
+
+def _merge_n_buckets(snapshot_dir: str, primary_keys: Sequence[str],
+                     n_buckets: int | None) -> int:
+    """The B a merge writes under: the stored one on an existing table
+    (a caller's ``n_buckets`` or ``primary_keys`` that differs from the
+    stored layout raises — rows hashed under another layout would land
+    in the wrong buckets and duplicate their keys), else the caller's,
+    or ``DEFAULT_N_BUCKETS``."""
+    if not os.path.isdir(_live_dir(snapshot_dir)):
+        return n_buckets or DEFAULT_N_BUCKETS
+    layout = _layout(snapshot_dir)
+    for name, passed, stored in (
+            ("n_buckets", n_buckets, layout["n_buckets"]),
+            ("primary_keys", list(primary_keys), layout["keys"])):
+        if passed is not None and passed != stored:
+            raise ValueError(
+                f"{name}={passed} does not match the stored layout "
+                f"{name}={stored} of {snapshot_dir}: omit n_buckets to "
+                "merge under the stored B, or migrate with rebucket().")
+    return layout["n_buckets"]
 
 
 def _recover_asides(snapshot_dir: str) -> None:
@@ -130,21 +156,18 @@ def _swap_in(snapshot_dir: str, staging: str, bucket_ids: Sequence[int],
 
 
 def _load_sidecar(snapshot_dir: str
-                  ) -> tuple[dict[int, int], str | None, str] | None:
+                  ) -> tuple[dict[int, int], str, str] | None:
     """-> (bounds, op_col, delete_op), or None if no sidecar. The op
-    column is recorded IN the sidecar (since round 11) so that every
-    later merge can keep the bounds current whether or not the caller
-    re-passes ``op_col``; a legacy flat-format sidecar loads with
-    op_col=None."""
+    column is recorded in the sidecar so that every later merge keeps
+    the bounds current whether or not the caller re-passes
+    ``op_col``."""
     p = os.path.join(snapshot_dir, _SIDECAR)
     if not os.path.isfile(p):
         return None
     with open(p) as fh:
         raw = json.load(fh)
-    if isinstance(raw.get("bounds"), dict):
-        return ({int(k): int(v) for k, v in raw["bounds"].items()},
-                raw.get("op_col"), raw.get("delete_op", "D"))
-    return ({int(k): int(v) for k, v in raw.items()}, None, "D")
+    return ({int(k): int(v) for k, v in raw["bounds"].items()},
+            raw["op_col"], raw["delete_op"])
 
 
 def _write_sidecar(snapshot_dir: str, bounds: dict[int, int],
@@ -162,23 +185,14 @@ def _write_sidecar(snapshot_dir: str, bounds: dict[int, int],
 def _resolve_op_col(snapshot_dir: str, op_col: str | None, delete_op: str,
                     ) -> tuple[str | None, str]:
     """Reconcile the caller's ``op_col`` with the sidecar's recorded
-    one (the mixed-usage hole: a merge WITHOUT op_col into a snapshot
-    WITH a sidecar used to leave new tombstones uncounted, so a pruned
-    expiry silently never rewrote their bucket). Once a snapshot has a
-    sidecar, its recorded op column is adopted automatically; a
-    CONFLICTING op_col raises rather than maintaining bounds for the
-    wrong column."""
+    one. Once a snapshot has a sidecar, its op column is adopted, so a
+    merge without ``op_col`` still counts its tombstones (an uncounted
+    one would be pruned out of every expiry); a CONFLICTING op_col
+    raises rather than maintaining bounds for the wrong column."""
     sc = _load_sidecar(snapshot_dir)
     if sc is None:
         return op_col, delete_op
     _, sc_op, sc_del = sc
-    if sc_op is None:
-        if op_col is None:
-            raise ValueError(
-                f"snapshot {snapshot_dir} has a legacy tombstone-count "
-                "sidecar with no recorded op column — pass op_col= so its "
-                "bounds stay current (this call upgrades the sidecar).")
-        return op_col, delete_op
     if op_col is None:
         return sc_op, sc_del
     if (op_col, delete_op) != (sc_op, sc_del):
@@ -214,19 +228,21 @@ def bucketed_merge(
     snapshot_dir: str,
     primary_keys: Sequence[str],
     order_by: Sequence[Column],
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     tiebreak: Sequence[Column] = (),
     op_col: str | None = None,
     delete_op: str = "D",
 ) -> list[int]:
     """Apply one change batch to the bucketed snapshot. Returns the
-    sorted list of bucket ids this merge rewrote (≤ n_buckets ints).
+    sorted list of bucket ids this merge rewrote (≤ B ints).
 
     ``order_by``/``tiebreak`` follow dedupe_keep_latest's contract
-    (pass desc() columns for newest-wins). ``n_buckets`` is part of
-    the table layout — it must match across merges into the same
-    snapshot (``rebucket`` migrates a table to a new B). Pass
-    ``op_col`` to maintain the tombstone-count sidecar that lets
+    (pass desc() columns for newest-wins). The first merge into a
+    snapshot records ``primary_keys`` and ``n_buckets`` (default
+    ``DEFAULT_N_BUCKETS``) as its layout; later merges use the stored
+    B, and an ``n_buckets`` or ``primary_keys`` that differs from it
+    raises (``rebucket`` migrates a table to a new B). Pass ``op_col``
+    to maintain the tombstone-count sidecar that lets
     ``expire_tombstones`` prune its scan; once the snapshot has a
     sidecar, later merges maintain it automatically (the op column is
     recorded in it) and a conflicting ``op_col`` raises.
@@ -241,6 +257,7 @@ def bucketed_merge(
     live = _live_dir(snapshot_dir)
     os.makedirs(snapshot_dir, exist_ok=True)
     _recover_asides(snapshot_dir)
+    n_buckets = _merge_n_buckets(snapshot_dir, primary_keys, n_buckets)
     op_col, delete_op = _resolve_op_col(snapshot_dir, op_col, delete_op)
 
     b = (batch.withColumn(BUCKET_COL, bucket_of(primary_keys, n_buckets))
@@ -250,8 +267,9 @@ def bucketed_merge(
     if not touched:
         return []
 
+    new_table = not os.path.isdir(live)
     merged = b
-    if os.path.isdir(live):
+    if not new_table:
         prev = (spark.read.parquet(live)
                 .filter(F.col(BUCKET_COL).isin(touched))
                 .withColumn(BUCKET_COL, F.col(BUCKET_COL).cast("int")))
@@ -261,16 +279,8 @@ def bucketed_merge(
 
     staging = os.path.join(snapshot_dir, ".staging")
     shutil.rmtree(staging, ignore_errors=True)
-    # ONE file per bucket per write: without this, every shuffle task
-    # writes its own file into every bucket dir (~tasks x buckets small
-    # files), and partition DISCOVERY — which lists the whole table
-    # before pruning — comes to dominate the merge at large B
-    # (measured: a 35/1024-bucket merge spent most of its clock listing
-    # ~32k files). Hash-repartitioning on the bucket column routes each
-    # bucket to exactly one task.
-    (merged.repartition(len(touched), F.col(BUCKET_COL))
-           .write.mode("overwrite").partitionBy(BUCKET_COL)
-           .parquet(staging))
+    write_bucketed(merged, staging, col=BUCKET_COL, keys=primary_keys,
+                   n_buckets=n_buckets, n_written=len(touched))
 
     # Invariant: every staged bucket is in the touched set, or its prev
     # rows were never read into the merge and the swap would drop them.
@@ -298,7 +308,11 @@ def bucketed_merge(
             raised[k] = max(bounds.get(k, 0), exact.get(k, 0))
         _write_sidecar(snapshot_dir, raised, op_col, delete_op)
 
-    _swap_in(snapshot_dir, staging, touched)
+    if new_table:
+        swap_dir(live, staging,
+                 os.path.join(_aside_dir(snapshot_dir), _WHOLE_TABLE))
+    else:
+        _swap_in(snapshot_dir, staging, touched)
     shutil.rmtree(staging, ignore_errors=True)
 
     if op_col is not None:
@@ -388,12 +402,12 @@ def expire_tombstones(
             _write_sidecar(snapshot_dir, bootstrap, op_col, delete_op)
         return []
     kept = (cur.filter(F.col(BUCKET_COL).isin(touched))
-               .filter(~F.coalesce(expirable, F.lit(False)))
-               .withColumn(BUCKET_COL, F.col(BUCKET_COL).cast("int")))
+               .filter(~F.coalesce(expirable, F.lit(False))))
+    layout = _layout(snapshot_dir)
     staging = os.path.join(snapshot_dir, ".staging")
     shutil.rmtree(staging, ignore_errors=True)
-    (kept.repartition(len(touched), F.col(BUCKET_COL))
-         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging))
+    write_bucketed(kept, staging, col=BUCKET_COL, keys=layout["keys"],
+                   n_buckets=layout["n_buckets"], n_written=len(touched))
     exact = _staged_tombstone_counts(spark, staging, op_col, delete_op)
     _swap_in(snapshot_dir, staging, touched)
     shutil.rmtree(staging, ignore_errors=True)
@@ -412,7 +426,6 @@ def rebucket(
     spark: SparkSession,
     snapshot_dir: str,
     *,
-    primary_keys: Sequence[str],
     new_n_buckets: int,
     op_col: str | None = None,
     delete_op: str = "D",
@@ -423,10 +436,11 @@ def rebucket(
     table seeded at B=64 that reached 100 TB needs this, not a frozen
     B). One full rewrite: read every row (tombstones INCLUDED — they
     carry their replay-protection across the migration), recompute the
-    bucket id under the new B, stage the whole table, then
-    ``swap_dir`` the entire ``data`` directory (after a crash the old
-    table returns and the rebucket is simply re-run). Subsequent merges
-    into the snapshot must pass ``n_buckets=new_n_buckets``.
+    bucket id from the stored primary keys under the new B, stage the
+    whole table with its new layout, then ``swap_dir`` the entire
+    ``data`` directory (after a crash the old table and its layout
+    return and the rebucket is simply re-run). Later merges pick up
+    the new B from the layout.
 
     The tombstone sidecar is DELETED before the swap and rebuilt with
     exact counts after it (old bucket ids are meaningless under the
@@ -435,24 +449,16 @@ def rebucket(
     Returns the number of rows migrated."""
     _recover_asides(snapshot_dir)
     live = _live_dir(snapshot_dir)
-    if not os.path.isdir(live):
-        raise FileNotFoundError(f"no snapshot at {snapshot_dir}")
+    keys = _layout(snapshot_dir)["keys"]
     op_col, delete_op = _resolve_op_col(snapshot_dir, op_col, delete_op)
-    cur = (spark.read.parquet(live)
-           .drop(BUCKET_COL)
-           .withColumn(BUCKET_COL, bucket_of(primary_keys, new_n_buckets)))
-    staging = os.path.join(snapshot_dir, ".staging_rebucket")
-    shutil.rmtree(staging, ignore_errors=True)
     from ..functions.observe import observed
 
-    cur, obs = observed(cur, "rebucket", n=F.count(F.lit(1)))
-    # one file per bucket (see bucketed_merge): B files total instead
-    # of B x shuffle-tasks — the listing cost every later merge pays
-    n_tasks = min(int(new_n_buckets),
-                  int(spark.conf.get("spark.sql.shuffle.partitions",
-                                     "32")) * 8)
-    (cur.repartition(n_tasks, F.col(BUCKET_COL))
-        .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging))
+    cur, obs = observed(spark.read.parquet(live).drop(BUCKET_COL),
+                        "rebucket", n=F.count(F.lit(1)))
+    staging = os.path.join(snapshot_dir, ".staging_rebucket")
+    shutil.rmtree(staging, ignore_errors=True)
+    write_bucketed(cur, staging, col=BUCKET_COL, keys=keys,
+                   n_buckets=new_n_buckets)
     n_rows = int(obs.get["n"])
 
     sidecar = os.path.join(snapshot_dir, _SIDECAR)
@@ -494,8 +500,6 @@ def maintain_bucket_layout(
     spark: SparkSession,
     snapshot_dir: str,
     *,
-    primary_keys: Sequence[str],
-    current_n_buckets: int,
     target_mb_per_bucket: float = 1024,
     drift_factor: int = 4,
     op_col: str | None = None,
@@ -505,31 +509,26 @@ def maintain_bucket_layout(
     maintenance policy around ``rebucket``, mirroring the LSH index's
     ``maintain_entries_layout``: measure the on-disk bytes (a pure
     file listing, no Spark job), compute what ``auto_n_buckets`` would
-    pick today, and migrate only when the layout is off by at least
-    ``drift_factor`` in either direction. Hysteresis matters doubly
-    here: a rebucket is a FULL table rewrite (SCALE_r10: it pays for
-    itself within one outgrown merge, but only once actually
-    outgrown), and the caller must start passing the returned B to
-    every later merge — so routine growth should not churn the
-    contract. ``current_n_buckets`` is explicit because B is part of
-    the merge call contract, not stored state.
+    pick today, and migrate only when the stored B is off by at least
+    ``drift_factor`` in either direction. Hysteresis matters because a
+    rebucket is a FULL table rewrite (SCALE_r10: it pays for itself
+    within one outgrown merge, but only once actually outgrown), so
+    routine growth should not churn the layout.
 
-    Returns the new B when a migration ran (callers MUST use it as
-    ``n_buckets`` from then on), else None."""
+    Returns the new B when a migration ran (later merges read it from
+    the layout), else None."""
     _recover_asides(snapshot_dir)
     live = _live_dir(snapshot_dir)
-    if not os.path.isdir(live):
-        raise FileNotFoundError(f"no snapshot at {snapshot_dir}")
+    cur = _layout(snapshot_dir)["n_buckets"]
     total = 0
     for root, _dirs, files in os.walk(live):
         for f in files:
             total += os.path.getsize(os.path.join(root, f))
     want = auto_n_buckets(total, target_mb_per_bucket=target_mb_per_bucket)
-    cur = int(current_n_buckets)
     if cur * drift_factor > want and want * drift_factor > cur:
         return None
-    rebucket(spark, snapshot_dir, primary_keys=primary_keys,
-             new_n_buckets=want, op_col=op_col, delete_op=delete_op)
+    rebucket(spark, snapshot_dir, new_n_buckets=want, op_col=op_col,
+             delete_op=delete_op)
     return want
 
 
@@ -540,13 +539,14 @@ def foreach_batch_bucketed_upsert(
     order_by: Sequence[Column],
     snapshot_dir: str,
     checkpoint_path: str,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     tiebreak: Sequence[Column] = (),
     op_col: str | None = None,
     delete_op: str = "D",
 ) -> None:
     """Drain ``source`` AvailableNow, merging every micro-batch into
-    the snapshot via ``bucketed_merge``. At-least-once replay composes
+    the snapshot via ``bucketed_merge`` (the stored B, or ``n_buckets``
+    on a new table). At-least-once replay composes
     to exactly-once state because the merge is idempotent (see module
     docstring); the per-bucket directory swap is the commit."""
     def merge(batch: DataFrame, batch_id: int) -> None:

@@ -19,6 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.observe import observed
 from ..operators.windows import dedupe_keep_latest
 from ..sources.state import BookmarkStore, RunManifest
 from ..sources.writers import write_parquet
@@ -71,22 +72,16 @@ def incremental_ingest(
         df, list(primary_keys),
         [F.col(watermark_col).desc_nulls_last()],
     )
-    # three actions consume this frame (bookmark agg, row count, sink
-    # write) — persist so the source is scanned and deduped ONCE, not
-    # three times; an increment is a bounded delta, so MEMORY_AND_DISK
-    # is safe at any scale
-    prepared = add_audit_columns(deduped, table).persist()
-    try:
-        # new bookmark = max watermark in THIS batch, computed before the
-        # write (single agg action) so a mid-write crash never advances it
-        new_bm = prepared.agg(F.max(watermark_col)).collect()[0][0]
-        rows = prepared.count()
-
-        write_parquet(prepared, sink_path, mode="append",
-                      partition_by=("ingest_date", "source_table"),
-                      max_files=max_files)
-    finally:
-        prepared.unpersist()
+    # row count and new bookmark (max watermark of THIS batch) ride the
+    # write: one pass over the increment, and a mid-write crash never
+    # advances the bookmark
+    prepared, obs = observed(add_audit_columns(deduped, table),
+                             f"ingest_{table}", n=F.count(F.lit(1)),
+                             bookmark=F.max(watermark_col))
+    write_parquet(prepared, sink_path, mode="append",
+                  partition_by=("ingest_date", "source_table"),
+                  max_files=max_files)
+    rows, new_bm = obs.get["n"], obs.get["bookmark"]
 
     # commit AFTER successful write (T2)
     if new_bm is not None:

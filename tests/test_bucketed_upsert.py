@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from elt_gluepipeline_spark.sources.writers import read_layout
 from elt_gluepipeline_spark.streaming.bucketed_upsert import (
     BUCKET_COL, bucket_of, bucketed_merge, foreach_batch_bucketed_upsert,
     read_bucketed_snapshot)
@@ -242,7 +244,7 @@ def test_merge_evaluates_batch_once(spark, tmp_path):
 
 def test_null_op_rows_are_upserts(spark, tmp_path):
     # NULL op = ordinary upsert: visible in reads, never expired
-    # (ADVICE r9: non-null-safe predicates silently destroyed them).
+    # (a non-null-safe predicate would silently destroy them).
     from elt_gluepipeline_spark.streaming.bucketed_upsert import (
         expire_tombstones)
 
@@ -274,9 +276,9 @@ def test_rebucket_preserves_state_and_restores_pruning(spark, tmp_path):
     bucketed_merge(df.filter(F.col("seq") <= 2), snapshot_dir=snap,
                    primary_keys=["k"], order_by=[F.col("seq").desc()],
                    n_buckets=8, op_col="op")
-    n = rebucket(spark, snap, primary_keys=["k"], new_n_buckets=32,
-                 op_col="op")
+    n = rebucket(spark, snap, new_n_buckets=32, op_col="op")
     assert n == 40                        # one keep-latest winner per key
+    assert read_layout(os.path.join(snap, "data"))["n_buckets"] == 32
     touched = bucketed_merge(df.filter(F.col("seq") == 3),
                              snapshot_dir=snap, primary_keys=["k"],
                              order_by=[F.col("seq").desc()],
@@ -296,11 +298,30 @@ def test_rebucket_preserves_state_and_restores_pruning(spark, tmp_path):
     raw = read_bucketed_snapshot(spark, snap)
     assert raw.filter((F.col("k") == 7) & (F.col("op") == "D")).count() == 1
     # late OLDER update for the deleted key still loses post-rebucket
+    # (merged under the stored B: no n_buckets passed)
     bucketed_merge(spark.createDataFrame([(7, 0, "zombie", "U")], SCHEMA),
                    snapshot_dir=snap, primary_keys=["k"],
-                   order_by=[F.col("seq").desc()], n_buckets=32,
-                   op_col="op")
+                   order_by=[F.col("seq").desc()], op_col="op")
     assert 7 not in _state(spark, snap)
+
+    # a merge that still passes the pre-rebucket B, or other keys, must
+    # raise instead of hashing rows into the wrong buckets, where every
+    # key would gain a second live row
+    snap = str(tmp_path / "stale")
+    kw = dict(snapshot_dir=snap, order_by=[F.col("seq").desc()])
+    newer = spark.createDataFrame(
+        [(k, 2, f"w{k}", "U") for k in range(1, 41)], SCHEMA)
+    bucketed_merge(df.filter(F.col("seq") == 1), primary_keys=["k"],
+                   n_buckets=4, **kw)
+    rebucket(spark, snap, new_n_buckets=16)
+    with pytest.raises(ValueError, match="stored layout n_buckets=16"):
+        bucketed_merge(newer, primary_keys=["k"], n_buckets=4, **kw)
+    with pytest.raises(ValueError, match=r"primary_keys=\['k', 'seq'\]"):
+        bucketed_merge(newer, primary_keys=["k", "seq"], **kw)
+    bucketed_merge(newer, primary_keys=["k"], **kw)
+    got = read_bucketed_snapshot(spark, snap).collect()
+    assert sorted((r.k, r.seq, r.v) for r in got) == \
+        [(k, 2, f"w{k}") for k in range(1, 41)]
 
 
 def test_expire_prunes_scan_via_sidecar(spark, tmp_path):
@@ -365,19 +386,16 @@ def test_expire_bootstraps_sidecar_on_first_full_scan(spark, tmp_path):
     bounds = {int(k): v for k, v in raw["bounds"].items()}
     assert sum(bounds.values()) == 1
     # the bootstrap records its op column, so later merges WITHOUT
-    # op_col keep the bounds current (mixed-usage hole, VERDICT r10 #5)
+    # op_col keep the bounds current
     assert raw["op_col"] == "op" and raw["delete_op"] == "D"
 
 
 def test_sidecar_maintained_without_op_col_after_adoption(spark, tmp_path):
-    # VERDICT r10 "what's wrong #2": a merge WITHOUT op_col into a
-    # sidecar-bearing snapshot used to leave new tombstones uncounted
-    # (bound stays 0 -> a pruned expiry silently never expires them).
-    # Now the sidecar records its op column and every merge maintains
-    # it; a CONFLICTING op_col raises.
+    # A merge WITHOUT op_col into a sidecar-bearing snapshot must still
+    # count its tombstones (a bound left at 0 means a pruned expiry
+    # never expires them): the sidecar records its op column and every
+    # merge maintains it; a CONFLICTING op_col raises.
     import json
-
-    import pytest
 
     from elt_gluepipeline_spark.streaming.bucketed_upsert import (
         _SIDECAR, expire_tombstones)
@@ -421,7 +439,7 @@ def test_one_data_file_per_bucket_per_write(spark, tmp_path):
     bucketed_merge(spark.createDataFrame(rows, SCHEMA).repartition(8),
                    snapshot_dir=snap, primary_keys=["k"],
                    order_by=[F.col("seq").desc()], n_buckets=8)
-    rebucket(spark, snap, primary_keys=["k"], new_n_buckets=32)
+    rebucket(spark, snap, new_n_buckets=32)
     live = os.path.join(snap, "data")
     for d in os.listdir(live):
         if d.startswith(f"{BUCKET_COL}="):
@@ -455,8 +473,7 @@ def test_maintain_bucket_layout(spark, tmp_path):
     before = _state(spark, snap)
 
     # in band (tiny table wants the floor 16; 8 is within 4x) -> no-op
-    assert maintain_bucket_layout(
-        spark, snap, primary_keys=["k"], current_n_buckets=8) is None
+    assert maintain_bucket_layout(spark, snap) is None
 
     # force a drift: a target of 1/64th of the measured size makes the
     # table "outgrown" (want lands on 64 or 128 vs current 8)
@@ -466,15 +483,15 @@ def test_maintain_bucket_layout(spark, tmp_path):
                    for r, _, fs in os.walk(live) for f in fs)
 
     new_b = maintain_bucket_layout(
-        spark, snap, primary_keys=["k"], current_n_buckets=8,
+        spark, snap,
         target_mb_per_bucket=_du(snap) / 64 / (1024 * 1024), op_col="op")
     assert new_b is not None and new_b >= 8 * 4
+    assert read_layout(os.path.join(snap, "data"))["n_buckets"] == new_b
     assert _state(spark, snap) == before
-    # merges resume at the new B and stay pruned (touched < B)
+    # merges resume at the stored new B and stay pruned (touched < B)
     up = spark.createDataFrame([(7, 999, "v7b", "U")], SCHEMA)
     touched = bucketed_merge(up, snapshot_dir=snap, primary_keys=["k"],
-                             order_by=[F.col("seq").desc()],
-                             n_buckets=new_b, op_col="op")
+                             order_by=[F.col("seq").desc()], op_col="op")
     assert len(touched) == 1
     after = dict(before)
     after[7] = (999, "v7b")
@@ -483,6 +500,6 @@ def test_maintain_bucket_layout(spark, tmp_path):
     # and with a target centered on the CURRENT size the same call is
     # a no-op (hysteresis): want lands on ~new_b, within the 4x band
     assert maintain_bucket_layout(
-        spark, snap, primary_keys=["k"], current_n_buckets=new_b,
+        spark, snap,
         target_mb_per_bucket=_du(snap) / new_b / (1024 * 1024),
         op_col="op") is None

@@ -626,8 +626,6 @@ def test_lsh_partitioned_entries_prunes_probe_scan(spark):
     scan must carry PartitionFilters (the O(corpus)-scan kill), append
     must reuse the stored P and equal a rebuild, and compaction must
     preserve the layout."""
-    import json
-    import os
     import tempfile
 
     from pyspark.sql import functions as F
@@ -655,8 +653,6 @@ def test_lsh_partitioned_entries_prunes_probe_scan(spark):
         idx = fit_lsh_dedup_index(corpus, "doc_id", "text", **fit_kw)
         save_lsh_dedup_index(idx, flat)
         save_lsh_dedup_index(idx, part, partition_entries=8)
-        assert json.load(open(f"{part}/entries_meta.json")) == \
-            {"n_partitions": 8}
 
         base = rows(incremental_lsh_dedup(
             None, batch, "doc_id", "text",
@@ -697,14 +693,11 @@ def test_lsh_partitioned_entries_prunes_probe_scan(spark):
 
 
 def test_repartition_entries_migrates_layout(spark, tmp_path):
-    """repartition_entries: rebucket's analog for the LSH serve layout
-    (VERDICT r10 #3). Pins: (a) unpartitioned->P and P->P' migrations
+    """repartition_entries: rebucket's analog for the LSH serve layout.
+    Pins: (a) unpartitioned->P and P->P' migrations
     serve the SAME pairs as a flat fit, partition-pruned; (b) appends
     after migration land under the NEW P (≡ a fresh partitioned
-    rebuild); (c) a crash between the directory swap and the meta
-    update heals at the next entry point (the staged dir carries its
-    own _pmeta.json)."""
-    import json
+    rebuild)."""
     import os
 
     from pyspark.sql import functions as F
@@ -735,9 +728,6 @@ def test_repartition_entries_migrates_layout(spark, tmp_path):
 
     # (a) flat -> P=4: same pairs, pruned probe scan
     repartition_entries(spark, f"{d}/lsh", 4)
-    assert json.load(open(f"{d}/lsh/entries_meta.json")) == \
-        {"n_partitions": 4}
-    assert not os.path.isfile(f"{d}/lsh/entries/_pmeta.json")  # folded
     m1 = load_lsh_dedup_index(spark, f"{d}/lsh")
     assert m1.entries_partitions == 4
     out1 = incremental_lsh_dedup(None, batch, "doc_id", "text",
@@ -769,31 +759,15 @@ def test_repartition_entries_migrates_layout(spark, tmp_path):
     assert parts == {p for p in os.listdir(f"{d}/fresh/entries")
                      if p.startswith(f"{ENTRIES_PBUCKET}=")}
 
-    # (c) crash between swap and meta fold: stale OUTER meta must not
-    # win over the swapped directory's inner _pmeta.json
-    with open(f"{d}/lsh/entries/_pmeta.json", "w") as fh:
-        json.dump({"n_partitions": 16}, fh)
-    with open(f"{d}/lsh/entries_meta.json", "w") as fh:
-        json.dump({"n_partitions": 4}, fh)      # stale pre-crash value
-    healed = load_lsh_dedup_index(spark, f"{d}/lsh")
-    assert healed.entries_partitions == 16
-    assert json.load(open(f"{d}/lsh/entries_meta.json")) == \
-        {"n_partitions": 16}
-    assert not os.path.isfile(f"{d}/lsh/entries/_pmeta.json")
-    assert rows(incremental_lsh_dedup(None, batch, "doc_id", "text",
-                                      index=healed, **kw)) == base
-
 
 def test_lsh_save_layout_contract_guards(spark, tmp_path):
-    """ADVICE r10: (a) append with a partition_entries that differs
+    """(a) append with a partition_entries that differs
     from the stored P raises (the delta would land under directories
     the stored P never probes — silent missed duplicates); (b) append
     with partition_entries onto an UNPARTITIONED table raises (mixed
     layout); (c) an unpartitioned overwrite of a partitioned index
-    clears entries_meta.json (stale meta made load filter on a missing
+    replaces its layout (a stale P would make load filter on a missing
     _pbucket column)."""
-    import os
-
     import pytest
     from pyspark.sql import functions as F
 
@@ -822,9 +796,8 @@ def test_lsh_save_layout_contract_guards(spark, tmp_path):
         save_lsh_dedup_index(delta, f"{d}/flat", mode="append",
                              partition_entries=8)
 
-    # (c) unpartitioned overwrite replaces the layout AND the meta
+    # (c) an unpartitioned overwrite replaces the layout
     save_lsh_dedup_index(idx, f"{d}/part")          # default: flat
-    assert not os.path.isfile(f"{d}/part/entries_meta.json")
     loaded = load_lsh_dedup_index(spark, f"{d}/part")
     assert loaded.entries_partitions is None
     # and the index still serves (no _pbucket filter on a missing col)
@@ -876,8 +849,6 @@ def test_lsh_auto_layout_selection(spark, tmp_path, monkeypatch):
     migrated in place to auto_entries_partitions()'s P through
     repartition_entries — and later appends reuse that stored P.
     The formula itself is pinned at the measured campaign points."""
-    import os
-
     import pytest
     from pyspark.sql import functions as F
 
@@ -909,9 +880,8 @@ def test_lsh_auto_layout_selection(spark, tmp_path, monkeypatch):
         return sorted((r["id_new"], r["id_existing"])
                       for r in out.collect())
 
-    # below the threshold: auto == flat (no layout meta written)
+    # below the threshold: auto == flat (no layout written)
     save_lsh_dedup_index(idx, f"{d}/small", partition_entries="auto")
-    assert not os.path.isfile(f"{d}/small/entries_meta.json")
     small = load_lsh_dedup_index(spark, f"{d}/small")
     assert small.entries_partitions is None
     want = pairs(small)

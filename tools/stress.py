@@ -148,8 +148,7 @@ def main() -> int:
 
     extra: dict[str, float] = {}
 
-    # ---- bucketed CDC merge + rebucket family (r11, VERDICT_r10 #7:
-    # add the merge family to the batch trend line). Seed the snapshot
+    # ---- bucketed CDC merge + rebucket family. Seed the snapshot
     # once with the full corpus at B=64 (reported separately), then
     # best-of-N an idempotent 10%-batch re-merge — identical work per
     # pass because keep-latest reproduces the same winners — and
@@ -180,8 +179,7 @@ def main() -> int:
         for i in range(n_runs):
             release_operator_caches()
             t0 = time.time()
-            rebucket(spark, snap, primary_keys=["id"],
-                     new_n_buckets=128 if i % 2 == 0 else 64)
+            rebucket(spark, snap, new_n_buckets=128 if i % 2 == 0 else 64)
             samples.append(round(time.time() - t0, 2))
         timings["rebucket"] = min(samples)
         spread["rebucket"] = samples
