@@ -23,8 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.writers import (bucket_of, read_layout, recover_swap,
-                               swap_dir, write_bucketed)
+from ..sources.table import Table
+from ..sources.writers import bucket_of
 from . import ensure_min_partitions
 from ._cache import register_cache
 
@@ -445,20 +445,19 @@ ENTRY_KEYS = ("band_id", "band_hash")  # what a partitioned entry hashes
 
 # Below this many entries rows the flat entries scan beats the
 # partitioned probe (the layout's fixed overhead is all cost); above
-# it the partitioned probe wins by a growing margin (SCALE_r11 records
-# the measured crossover band; the threshold sits at its low side).
+# it the partitioned probe wins by a growing margin. The threshold sits
+# at the low side of the measured crossover band.
 AUTO_PARTITION_MIN_ENTRIES = 10_000_000
 AUTO_PARTITION_TARGET_ROWS = 100_000  # aim ~this many rows/partition
 AUTO_PARTITION_MAX = 16_384
 
 
 def auto_entries_partitions(n_entries: int) -> int | None:
-    """Layout advice from the SCALE_r11 crossover measurements: None
-    (stay flat — the partition overhead is all cost) below the measured
-    crossover, else a power-of-two P targeting
-    ~``AUTO_PARTITION_TARGET_ROWS`` rows per partition dir (yields the
-    measured P=4096 at the 4e8-row campaign point), capped so partition
-    DISCOVERY (an O(P) listing) never itself becomes the scan."""
+    """Layout advice: None (stay flat — the partition overhead is all
+    cost) below the crossover, else a power-of-two P targeting
+    ~``AUTO_PARTITION_TARGET_ROWS`` rows per partition (P=4096 at 4e8
+    rows), capped so the per-partition file count never itself
+    becomes the scan."""
     if n_entries < AUTO_PARTITION_MIN_ENTRIES:
         return None
     p = 1 << max(1, (n_entries // AUTO_PARTITION_TARGET_ROWS) - 1
@@ -466,48 +465,39 @@ def auto_entries_partitions(n_entries: int) -> int | None:
     return max(256, min(AUTO_PARTITION_MAX, p))
 
 
-def _write_entries(entries: DataFrame, edir: str, n_partitions: int,
-                   mode: str = "overwrite") -> None:
-    """Write a partitioned entries table through ``write_bucketed``
-    (which records P in ``entries/_layout.json``). A partitioned write
-    of an EMPTY frame emits no schema-bearing file (a load would fail
-    UNABLE_TO_INFER_SCHEMA), so an entries dir without partitions
-    holds one unpartitioned empty anchor instead — ENTRIES_PBUCKET
-    rides as a plain column, so the serve-path filter still resolves.
-    The first partition written removes the anchor: bare files next to
-    partition dirs break partition discovery."""
-    import os
+def _entries_layout(n_partitions: int | None) -> dict | None:
+    if not n_partitions:
+        return None
+    return {"col": ENTRIES_PBUCKET, "keys": list(ENTRY_KEYS),
+            "n_buckets": int(n_partitions)}
 
-    write_bucketed(entries, edir, col=ENTRIES_PBUCKET, keys=ENTRY_KEYS,
-                   n_buckets=n_partitions, mode=mode)
-    names = os.listdir(edir)
-    anchors = [n for n in names if n.endswith(".parquet")]
-    if any(n.startswith(f"{ENTRIES_PBUCKET}=") for n in names):
-        for n in anchors:
-            os.remove(os.path.join(edir, n))
-    elif not anchors:
-        (entries.limit(0)
-                .withColumn(ENTRIES_PBUCKET,
-                            bucket_of(ENTRY_KEYS, n_partitions))
-                .write.mode("append").parquet(edir))
+
+def _entries_partitions(table: Table) -> int | None:
+    """The entries table's stored partition count P, or None
+    (unpartitioned)."""
+    layout = table.layout("entries")
+    return None if layout is None else layout["n_buckets"]
 
 
 def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
                          mode: str = "overwrite",
                          partition_entries: int | str | None = None) -> None:
-    """Write the index tables under ``path/{entries,sizes,postings}``.
-    ``mode="append"`` admits a batch delta (see
-    ``append_lsh_dedup_index``).
+    """Store the index as one manifest table (``sources.table``) with
+    sub-tables ``path/{entries,sizes,postings}``. Every save commits all
+    of them in ONE manifest write, so a crash leaves the whole old
+    index or the whole new one, never a torn mix. ``mode="overwrite"``
+    replaces the index (tombstones included); ``mode="append"`` admits
+    a batch delta (see ``append_lsh_dedup_index``).
 
     ``partition_entries=P`` Hive-partitions the entries table by
     pmod(xxhash64(band_id, band_hash), P) — the 100 TB serve layout:
     a batch probe then reads ONLY the partitions its own band hashes
     fall in (PartitionFilters, the same pruning contract as the
     bucketed CDC snapshot), instead of scanning the corpus-sized
-    entries table per batch. P is recorded with the data by
-    ``sources.writers.write_bucketed``; appends reuse the stored P
-    automatically (pass None), and per-doc-projection semantics are
-    unchanged — append ≡ rebuild holds per partition.
+    entries table per batch. P is the entries sub-table's layout in
+    the manifest; appends reuse the stored P automatically (pass
+    None), and per-doc-projection semantics are unchanged — append ≡
+    rebuild holds per partition.
 
     Layout contract (the bucketed CDC snapshot's, too): an append may
     not change P — passing a partition_entries that differs from the
@@ -521,12 +511,11 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
     ``partition_entries="auto"`` picks the layout from the DATA: the
     index is written flat first, the written entries table's row count
     is read back (parquet metadata only — the fit plan is NOT
-    re-evaluated), and if it sits past the measured SCALE_r11 crossover
-    the table is migrated in place via ``repartition_entries`` with
+    re-evaluated), and if it sits past the measured crossover the
+    table is migrated in place via ``repartition_entries`` with
     ``auto_entries_partitions``'s P. Auto is a fit/overwrite decision;
     appends always reuse the stored layout."""
-    import os
-
+    spark = index.entries.sparkSession
     if partition_entries == "auto":
         if mode == "append":
             raise ValueError(
@@ -534,15 +523,15 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
                 "appends reuse the stored layout (pass None) and growing "
                 "P on an existing index is repartition_entries()'s job.")
         save_lsh_dedup_index(index, path, mode=mode, partition_entries=None)
-        spark = index.entries.sparkSession
-        n = spark.read.parquet(f"{path}/entries").count()
+        n = Table(spark, path).read("entries").count()
         p_auto = auto_entries_partitions(n)
         if p_auto:
             repartition_entries(spark, path, p_auto)
         return
-    _recover_index_swaps(path)
-    edir = f"{path}/entries"
-    stored = _entries_partitions(path)
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    table = Table(spark, path)
+    stored = _entries_partitions(table)
     if mode == "append":
         if partition_entries is None:
             partition_entries = stored
@@ -552,25 +541,29 @@ def save_lsh_dedup_index(index: LshDedupIndex, path: str, *,
                 f"stored layout P={stored} at {path} — P is part of the "
                 "table layout; append with partition_entries=None (reuses "
                 "the stored P) or migrate via repartition_entries() first.")
-        elif stored is None and os.path.isdir(edir):
+        elif stored is None and "entries" in table.tables:
             raise ValueError(
                 f"index at {path} has an UNPARTITIONED entries table — "
                 f"appending with partition_entries={partition_entries} "
                 "would mix layouts. Append with partition_entries=None or "
                 "migrate via repartition_entries() first.")
-    if partition_entries:
-        _write_entries(index.entries, edir, partition_entries, mode=mode)
-    else:
-        index.entries.write.mode(mode).parquet(edir)
-    index.sizes.write.mode(mode).parquet(f"{path}/sizes")
+    written = {"entries": table.write(
+        "entries", index.entries, layout=_entries_layout(partition_entries)),
+        "sizes": table.write("sizes", index.sizes)}
     if index.postings is not None:
-        index.postings.write.mode(mode).parquet(f"{path}/postings")
+        written["postings"] = table.write("postings", index.postings)
+    if mode == "append":
+        written = {sub: table.appended(sub, e) for sub, e in written.items()}
+    else:
+        written = {"postings": None, "tombstones": None, **written}
+    table.commit(written)
 
 
 def append_lsh_dedup_index(delta: LshDedupIndex, path: str) -> None:
-    """Admit a batch: append its per-doc index rows to a stored index.
-    Because every table is a per-document projection, append equals a
-    full rebuild over corpus ∪ batch (pinned by pytest)."""
+    """Admit a batch: append its per-doc index rows to a stored index,
+    all tables in one commit. Because every table is a per-document
+    projection, append equals a full rebuild over corpus ∪ batch
+    (pinned by pytest)."""
     save_lsh_dedup_index(delta, path, mode="append")
 
 
@@ -578,18 +571,14 @@ def load_lsh_dedup_index(spark, path: str) -> LshDedupIndex:
     """Open a stored index (lazy parquet scans, nothing collected).
     ``postings`` is None when the index was fit without them;
     ``tombstones`` is None until the first delete."""
-    _recover_index_swaps(path)
-
-    def _opt(sub: str) -> DataFrame | None:
-        try:
-            return spark.read.parquet(f"{path}/{sub}")
-        except Exception:
-            return None
-    return LshDedupIndex(entries=spark.read.parquet(f"{path}/entries"),
-                         sizes=spark.read.parquet(f"{path}/sizes"),
-                         postings=_opt("postings"),
-                         tombstones=_opt("tombstones"),
-                         entries_partitions=_entries_partitions(path))
+    table = Table(spark, path)
+    if "entries" not in table.tables:
+        raise FileNotFoundError(f"no LSH dedup index at {path}")
+    return LshDedupIndex(entries=table.read("entries"),
+                         sizes=table.read("sizes"),
+                         postings=table.read("postings"),
+                         tombstones=table.read("tombstones"),
+                         entries_partitions=_entries_partitions(table))
 
 
 def delete_from_lsh_dedup_index(ids: DataFrame, path: str) -> None:
@@ -602,59 +591,30 @@ def delete_from_lsh_dedup_index(ids: DataFrame, path: str) -> None:
     cols = ids.columns
     if cols != ["doc_id"]:
         ids = ids.select(F.col(cols[0]).alias("doc_id"))
-    ids.write.mode("append").parquet(f"{path}/tombstones")
-
-
-def _entries_partitions(path: str) -> int | None:
-    """The entries table's stored partition count P, or None
-    (unpartitioned)."""
-    layout = read_layout(f"{path}/entries")
-    return None if layout is None else layout["n_buckets"]
-
-
-def _recover_index_swaps(path: str) -> None:
-    """``recover_swap`` each table's ``.old_`` aside (a restored table
-    still serves correctly — tombstones are intact — and the rewrite
-    simply re-runs)."""
-    for sub in ("entries", "sizes", "postings"):
-        recover_swap(f"{path}/{sub}", f"{path}/.old_{sub}")
+    table = Table(ids.sparkSession, path)
+    table.commit({"tombstones": table.appended(
+        "tombstones", table.write("tombstones", ids))})
 
 
 def compact_lsh_dedup_index(spark, path: str) -> None:
     """Physically drop tombstoned docs from entries/sizes/postings and
     clear the tombstone table — after this, the stored index equals a
-    fresh fit over the surviving corpus (pinned by pytest). Each table
-    is rewritten into a staging dir and swapped in by ``swap_dir``; a
-    partial compaction is still a CORRECT index because tombstones are cleared
-    LAST — an uncompacted table's dead rows stay suppressed by the
-    serve-time anti-join, and re-running the compaction is a no-op on
-    already-compacted tables."""
-    import os
-    import shutil
-
-    _recover_index_swaps(path)
-    tomb_dir = f"{path}/tombstones"
-    if not os.path.isdir(tomb_dir):
+    fresh fit over the surviving corpus (pinned by pytest). The
+    rewritten tables, each in its stored layout, and the cleared
+    tombstones commit together in one manifest write."""
+    table = Table(spark, path)
+    tombs = table.read("tombstones")
+    if tombs is None:
         return
-    tombs = spark.read.parquet(tomb_dir).select("doc_id").distinct()
+    tombs = tombs.select("doc_id").distinct()
+    written: dict[str, dict | None] = {"tombstones": None}
     for sub in ("entries", "sizes", "postings"):
-        src = f"{path}/{sub}"
-        if not os.path.isdir(src):
-            continue
-        staging = f"{path}/.compact_{sub}"
-        shutil.rmtree(staging, ignore_errors=True)
-        kept = (spark.read.parquet(src)
-                     .join(F.broadcast(tombs), "doc_id", "left_anti"))
-        n_parts = _entries_partitions(path) if sub == "entries" else None
-        if n_parts:
-            _write_entries(kept, staging, n_parts)  # keep the serve layout
-        else:
-            kept.write.mode("overwrite").parquet(staging)
-        swap_dir(src, staging, f"{path}/.old_{sub}")
-        # the rewrite replaced files under an already-read path: drop
-        # Spark's cached file listing or the next scan reads ghosts
-        spark.catalog.refreshByPath(src)
-    shutil.rmtree(tomb_dir, ignore_errors=True)
+        cur = table.read(sub)
+        if cur is not None:
+            written[sub] = table.write(
+                sub, cur.join(F.broadcast(tombs), "doc_id", "left_anti"),
+                layout=table.layout(sub))
+    table.commit(written)
 
 
 def repartition_entries(spark, path: str, new_n_partitions: int) -> None:
@@ -662,27 +622,20 @@ def repartition_entries(spark, path: str, new_n_partitions: int) -> None:
     — ``rebucket``'s analog for the LSH serve layout (P is frozen at
     save time; a corpus that grows 100× under its seed P loses the
     pruning the layout exists to provide). Works in every direction:
-    unpartitioned→P, P1→P2. One staged rewrite of entries only (sizes/
+    unpartitioned→P, P1→P2. One rewrite of entries only (sizes/
     postings/tombstones are untouched — P is an entries-layout fact),
-    swapped in by ``swap_dir``; the staged table carries its layout
-    (``sources.writers.write_bucketed``), so data and P change in one
-    rename and later appends pick up the new P."""
-    import os
-    import shutil
-
+    committed with its new layout in one manifest write, so later
+    appends pick up the new P."""
     if new_n_partitions < 1:
         raise ValueError(f"new_n_partitions must be >=1, got "
                          f"{new_n_partitions}")
-    _recover_index_swaps(path)
-    src = f"{path}/entries"
-    if not os.path.isdir(src):
-        raise FileNotFoundError(f"no entries table at {src}")
-    staging = f"{path}/.repart_entries"
-    shutil.rmtree(staging, ignore_errors=True)
-    _write_entries(spark.read.parquet(src).drop(ENTRIES_PBUCKET), staging,
-                   new_n_partitions)
-    swap_dir(src, staging, f"{path}/.old_entries")
-    spark.catalog.refreshByPath(src)
+    table = Table(spark, path)
+    cur = table.read("entries")
+    if cur is None:
+        raise FileNotFoundError(f"no entries table at {path}/entries")
+    table.commit({"entries": table.write(
+        "entries", cur.drop(ENTRIES_PBUCKET),
+        layout=_entries_layout(new_n_partitions))})
 
 
 def maintain_entries_layout(spark, path: str, *,
@@ -700,20 +653,18 @@ def maintain_entries_layout(spark, path: str, *,
     unpartitioned table has outgrown the crossover). Hysteresis
     matters: every migration is a full entries rewrite, so chasing
     each power-of-two step would rewrite the table on every few
-    appends for no measurable serve win — SCALE_r11 shows the serve
-    cost is flat across a wide P band once pruning engages.
+    appends for no serve win — the serve cost is flat across a wide P
+    band once pruning engages.
 
     Returns the new P when a migration ran, else None (layout already
     within band). Call it where ``compact_lsh_dedup_index`` is called
     — both are maintenance passes over the same artifact."""
-    import os
-
-    _recover_index_swaps(path)
-    if not os.path.isdir(f"{path}/entries"):
+    table = Table(spark, path)
+    entries = table.read("entries")
+    if entries is None:
         raise FileNotFoundError(f"no entries table at {path}/entries")
-    n = spark.read.parquet(f"{path}/entries").count()
-    want = auto_entries_partitions(n)
-    stored = _entries_partitions(path)
+    want = auto_entries_partitions(entries.count())
+    stored = _entries_partitions(table)
     if want is None:
         # below the crossover: a partitioned table this small still
         # serves fine (pruning is just unnecessary) — never migrate

@@ -1590,10 +1590,10 @@ FROM new GROUP BY o_custkey
 # per-user count/value kept current by merging each micro-batch's
 # delta into a versioned aggregate snapshot
 # (streaming.upsert.foreach_batch_incremental_agg). Exactly-once by
-# construction: each version derives from the newest version strictly
-# below its batch_id, so a replayed batch never double-counts. The
-# oracle aggregates the whole history at once — the hash match proves
-# 4 incremental merges == one full aggregation.
+# construction: each state commits with its query and batch ids, and a
+# batch the query already committed is skipped, so a replay never
+# double-counts. The oracle aggregates the whole history at once — the
+# hash match proves 4 incremental merges == one full aggregation.
 # --------------------------------------------------------------------------
 
 def q74_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1834,9 +1834,9 @@ def q201_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(snap, ignore_errors=True)
     # three merge batches, deliberately NOT seq-ordered: final state
     # must be batching-invariant (tombstones retained ⇒ newest wins);
-    # op_col engages the production config — tombstone-count sidecar
-    # maintained per merge (metadata only: the oracle result is
-    # op-agnostic, so the hash also certifies sidecar upkeep is inert)
+    # op_col engages the production config — tombstone counts kept in
+    # the manifest per merge (metadata only: the oracle result is
+    # op-agnostic, so the hash also certifies their upkeep is inert)
     for i in (2, 0, 1):
         bucketed_merge(changes.filter(F.col("seq") % 3 == i),
                        snapshot_dir=snap, primary_keys=["cust"],
@@ -6106,10 +6106,10 @@ FROM tagged GROUP BY band
 # parquet files, drained with maxFilesPerTrigger=1 (four genuine
 # micro-batches through the real streaming runtime), each micro-batch
 # runs the SAME conform + quality-split operators as the batch
-# pipeline (pipeline.stage_transform/stage_quality), appends to
-# final/ + quarantine/, and commits a batch-id bookmark AFTER both
-# writes (T2 commit-after-write; replay-idempotence is pinned by
-# tests/test_streaming.py driving the handler twice). The metric then
+# pipeline (pipeline.stage_transform/stage_quality), and commits its
+# final/ + quarantine/ rows with its batch id in one manifest write
+# (exactly-once under replay; pinned by tests/test_streaming.py
+# driving the handler twice and across a crash). The metric then
 # aggregates final/ — so the oracle (quality predicate + conform
 # lowering replayed in SQL over the raw table) certifies the WHOLE
 # chain end-to-end: one misrouted or double-appended row anywhere and
@@ -6127,6 +6127,7 @@ def q190_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import itertools
     import shutil
 
+    from ..sources.table import Table
     from ..streaming.chain import run_stream_chain
 
     global _CHAIN_SEQ
@@ -6141,14 +6142,12 @@ def q190_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one run root per build: repeat builds in one session re-drain fresh
     root = scratch_dir(spark, sf_dir, f"chain_{next(_CHAIN_SEQ)}")
     shutil.rmtree(root, ignore_errors=True)
-    final_dir = os.path.join(root, "final")
+    table_dir = os.path.join(root, "table")
     run_stream_chain(
-        spark, source_dir=src, final_dir=final_dir,
-        quarantine_dir=os.path.join(root, "quarantine"),
+        spark, source_dir=src, table_dir=table_dir,
         checkpoint_dir=os.path.join(root, "_ckpt"),
-        bookmark_dir=os.path.join(root, "_bookmarks"),
         rules=_CHAIN_RULES, max_files_per_trigger=1)
-    final = spark.read.parquet(final_dir)
+    final = Table(spark, table_dir).read("final")
     return (final.groupBy("l_returnflag", "l_linestatus")
                  .agg(F.count(F.lit(1)).alias("n_rows"),
                       dsum("l_quantity").alias("sum_qty"),

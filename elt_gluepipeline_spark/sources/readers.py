@@ -98,8 +98,6 @@ def _normalize_nanos(df: DataFrame, name: str) -> DataFrame:
 #   - a CONF fingerprint: nanosAsLong / inferTimestampNTZ (set by
 #     _set_ts_read_confs) change how a TIMESTAMP(NANOS) footer maps to
 #     a Spark type, and the cache is process-global across sessions.
-# Writers that rewrite a table in place (compact_parquet) also call
-# invalidate_schema_cache() explicitly.
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
@@ -128,15 +126,6 @@ def _conf_fingerprint(spark: SparkSession) -> tuple:
             return None
     return (get("spark.sql.legacy.parquet.nanosAsLong"),
             get("spark.sql.parquet.inferTimestampNTZ.enabled"))
-
-
-def invalidate_schema_cache(path: str | None = None) -> None:
-    """Drop cached footer schemas for ``path`` (or all, if None)."""
-    if path is None:
-        _SCHEMA_CACHE.clear()
-        return
-    for k in [k for k in _SCHEMA_CACHE if k[0] == path]:
-        del _SCHEMA_CACHE[k]
 
 
 def _table_schema(spark: SparkSession, path: str, name: str | None = None):

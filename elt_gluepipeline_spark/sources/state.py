@@ -59,7 +59,8 @@ class RunManifest:
 
     def flush(self) -> Path:
         p = self.root / f"manifest_{self.run_id}.json"
-        p.write_text(json.dumps({"run_id": self.run_id, "events": self.events}, indent=2))
+        write_atomic(str(p), json.dumps(
+            {"run_id": self.run_id, "events": self.events}, indent=2))
         return p
 
 

@@ -8,7 +8,6 @@ upstream, where it would cap stage parallelism.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from collections.abc import Sequence
@@ -16,8 +15,6 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-LAYOUT_FILE = "_layout.json"
 
 
 def write_parquet(df: DataFrame, path: str, *, mode: str = "overwrite",
@@ -82,47 +79,22 @@ def move_path(src: str, dst: str) -> None:
     shutil.move(src, dst)
 
 
-def swap_dir(live: str, staged: str, aside: str) -> None:
-    """Replace directory ``live`` by ``staged``: rename live→aside,
-    rename staged→live, delete aside. A missing ``staged`` removes
-    ``live`` (through the aside).
-
-    Invariant: one complete copy of the table is on disk at every
-    instant, at ``live`` or at ``aside``, so a crash at any step is
-    healed by ``recover_swap(live, aside)``; every caller runs it at
-    entry. Two renames are not one atomic operation, so local-FS
-    readers must not race a swap (an object store swaps a manifest
-    pointer instead)."""
-    recover_swap(live, aside)
-    if os.path.isdir(live):
-        os.makedirs(os.path.dirname(aside), exist_ok=True)
-        shutil.move(live, aside)
-    if os.path.isdir(staged):
-        os.makedirs(os.path.dirname(live), exist_ok=True)
-        shutil.move(staged, live)
-    shutil.rmtree(aside, ignore_errors=True)
-
-
-def recover_swap(live: str, aside: str) -> None:
-    """Heal an interrupted ``swap_dir``. An aside without its live dir
-    holds the only copy (the crash fell between the renames): move it
-    back. An aside next to a live dir is superseded: delete it."""
-    if not os.path.isdir(aside):
-        return
-    if os.path.isdir(live):
-        shutil.rmtree(aside, ignore_errors=True)
-    else:
-        os.makedirs(os.path.dirname(live), exist_ok=True)
-        shutil.move(aside, live)
-
-
 def write_atomic(path: str, text: str) -> None:
     """Commit a small file atomically (temp file, then ``os.replace``):
-    readers see the old contents or the new, never a torn write."""
+    readers see the old contents or the new, never a torn write. Both
+    the data and the rename are synced to disk, so an OS crash or a
+    power loss cannot leave the rename without the data."""
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as fh:
         fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
     os.replace(tmp, path)
+    fd = os.open(os.path.dirname(os.path.abspath(path)), os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def bucket_of(keys: Sequence[str], n_buckets: int) -> Column:
@@ -133,80 +105,43 @@ def bucket_of(keys: Sequence[str], n_buckets: int) -> Column:
                   F.lit(n_buckets)).cast("int")
 
 
-def write_bucketed(df: DataFrame, path: str, *, col: str,
-                   keys: Sequence[str], n_buckets: int,
-                   n_written: int | None = None,
-                   mode: str = "overwrite") -> None:
-    """Write ``df`` as a parquet table Hive-partitioned by ``col`` =
-    ``bucket_of(keys, n_buckets)``, then commit the layout
-    ``{col, keys, n_buckets}`` to ``<path>/_layout.json``.
-
-    Every bucket is routed to ONE task, so a write leaves one file per
-    bucket: partition discovery lists the whole table before pruning,
-    and tasks x buckets small files would dominate every later read.
-    ``n_written`` (the number of buckets this write fills, default
-    all) sets the task count, capped at 8 x
-    ``spark.sql.shuffle.partitions`` so a huge bucket count does not
-    serialize the write.
-
-    The layout file lives inside the table directory (the underscore
-    hides it from Spark's listing): a ``swap_dir`` of the table moves
-    data and layout in one rename, and an overwrite removes the old
-    layout with the old files."""
-    n_tasks = min(int(n_written or n_buckets),
-                  int(df.sparkSession.conf.get(
-                      "spark.sql.shuffle.partitions", "32")) * 8)
-    (df.withColumn(col, bucket_of(keys, n_buckets))
-       .repartition(n_tasks, F.col(col))
-       .write.mode(mode).partitionBy(col).parquet(path))
-    os.makedirs(path, exist_ok=True)
-    write_atomic(os.path.join(path, LAYOUT_FILE), json.dumps(
-        {"col": col, "keys": list(keys), "n_buckets": int(n_buckets)}))
-
-
-def read_layout(path: str) -> dict | None:
-    """The layout ``write_bucketed`` committed under ``path``, or None
-    for a table written without one."""
-    try:
-        with open(os.path.join(path, LAYOUT_FILE), encoding="utf-8") as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
-
-
 def compact_parquet(spark, path: str, *, target_files: int = 8,
                     partition_by: tuple[str, ...] = (),
                     compression: str = "snappy") -> int:
-    """Small-file compaction: rewrite a parquet folder into a bounded
-    file count and swap it in. The operational counterpart of an
-    append-mode sink (incremental ingest appends a few files per
-    run — go-incremental-ingest-elt.py:224-233 — and a year of runs
-    makes thousands of tiny files whose open/footer cost dominates
-    scans).
+    """Small-file compaction of one append-only sub-table of a manifest
+    table (``sources.table``): ``path`` is ``<table>/<sub>``. The
+    append-only sub-tables are the stream chain's ``final`` and
+    ``quarantine`` (``streaming.chain``), which gain a few files per
+    micro-batch; a long-running stream makes thousands of tiny files
+    whose open/footer cost dominates scans.
 
-    The rewrite is one read→write job into a sibling temp dir (no
-    driver-side file handling), swapped in by ``swap_dir``; a crashed
-    earlier swap is recovered at entry. Returns the row count (cheap
-    parity check for callers).
+    One read→write job rewrites the sub-table into at most
+    ``target_files`` files, and one manifest commit replaces the old
+    files, so a crash leaves the old files or the new, never both. A
+    plain folder has no commit point, and a hash-bucketed sub-table
+    already holds one file per bucket per write, so both raise. The
+    rewrite keeps the session's parquet codec and writes no Hive
+    partitions: ``partition_by`` and ``compression`` must stay at their
+    defaults. Returns the row count, observed on the write.
     """
-    base = path.rstrip("/")
-    tmp, aside = base + "__compact_tmp", base + "__compact_old"
-    recover_swap(base, aside)
-    df = spark.read.parquet(base)
-    out = df.coalesce(target_files)
-    writer = (out.write.mode("overwrite")
-                 .option("compression", compression))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    swap_dir(base, tmp, aside)
-    # the live path now holds different files; drop any cached footer
-    # schema so the next read re-resolves (readers also key on a leaf
-    # signature, but an in-place rewrite is the explicit case)
-    from .readers import invalidate_schema_cache
-    invalidate_schema_cache(base)
-    return n
+    from ..functions.observe import observed
+    from .table import Table
+
+    if partition_by or compression != "snappy":
+        raise ValueError("compact_parquet keeps the sub-table's layout and "
+                         "the session codec: partition_by and compression "
+                         "must stay at their defaults")
+    root, sub = os.path.split(path.rstrip("/"))
+    table = Table(spark, root)
+    if sub not in table.tables:
+        raise FileNotFoundError(f"no sub-table {sub!r} in a manifest "
+                                f"table at {root}")
+    if table.layout(sub) is not None:
+        raise ValueError(f"{path} is hash-bucketed: rewrite it with its "
+                         "own layout migration instead")
+    df, obs = observed(table.read(sub), "compact", n=F.count(F.lit(1)))
+    table.commit({sub: table.write(sub, df.coalesce(target_files))})
+    return int(obs.get["n"])
 
 
 def zorder_key(*cols, bits: int = 16):

@@ -11,9 +11,9 @@ therefore opt-in:
 - streaming drains (STREAMING_QUERIES) run their bounded
   AvailableNow/foreachBatch drain when built;
 - driver-loop/collect builds (EAGER_QUERIES: q25 auto-sizes blocks
-  with a count, q31/q67 collect centroids, q56/q59 iterate connected
-  components, q60 collects per-partition offsets) run real Spark jobs
-  when built.
+  with a count, q31/q67 collect centroids, q56/q59 collect their
+  candidate edges into a union-find, q60 collects per-partition
+  offsets) run real Spark jobs when built.
 """
 
 from __future__ import annotations

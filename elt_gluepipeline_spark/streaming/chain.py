@@ -15,18 +15,20 @@ Stage mapping inside each micro-batch:
   metric     → computed over final/ AFTER the drain (go-metric-elt.py
                reads FINAL_PATH — metrics see only quality-gated rows)
 
-Exactly-once discipline (SURVEY §7.4 crash-window invariant): the
-file-sink appends inside foreachBatch are not transactional, so the
-chain keeps its own BOOKMARK — the last batch_id whose sinks BOTH
-committed, persisted via BookmarkStore's atomic rename only AFTER the
-writes succeed (T2 commit-after-write). On restart the streaming
-runtime replays the in-flight batch with the SAME batch_id, the handler
-sees batch_id <= bookmark for every batch that already committed, and
-skips it — replay-idempotent. A crash INSIDE the window (after the
-final/ append, before the bookmark commit) re-appends that one batch,
-the same at-least-once window the reference's bookmark has
-(go-incremental-ingest-elt.py:305-318); pair the chain with
-PK-keep-latest compaction downstream when that window matters.
+Exactly-once discipline (SURVEY §7.4 crash-window invariant):
+``final`` and ``quarantine`` are two sub-tables of ONE manifest table
+(``sources.table``) at ``table_dir``, and the manifest also holds the
+id of the last batch whose rows it lists. A micro-batch writes its
+clean and quarantined rows as new files, then commits both together
+with its batch_id in one manifest write. On restart the streaming
+runtime replays the in-flight batch with the SAME batch_id: if its
+commit landed, the handler sees batch_id <= the committed id and skips
+it; if the crash came before the commit, its files were never listed
+(the replay's first write deletes them) and the replay writes the
+batch once.
+That closes the at-least-once window of the reference's
+commit-after-write bookmark (go-incremental-ingest-elt.py:305-318):
+the stream chain is exactly-once.
 """
 
 from __future__ import annotations
@@ -38,17 +40,13 @@ from pyspark.sql import functions as F
 
 from ..functions.conform import normalize_names, normalize_strings
 from ..operators.quality import extract_violations, split_clean
-from ..sources.state import BookmarkStore
+from ..sources.table import Table
 from .stream import drain_foreach_batch
-
-CHAIN_BOOKMARK_TABLE = "stream_chain_batches"
 
 
 def make_chain_batch_handler(
     *,
-    final_dir: str,
-    quarantine_dir: str,
-    bookmarks: BookmarkStore,
+    table_dir: str,
     rules: Sequence[tuple[str, str]],
 ) -> Callable[[DataFrame, int], None]:
     """The per-micro-batch transform+quality+sink stage. Exposed
@@ -57,9 +55,9 @@ def make_chain_batch_handler(
     must be a no-op)."""
 
     def handle(bdf: DataFrame, batch_id: int) -> None:
-        last = bookmarks.get(CHAIN_BOOKMARK_TABLE)
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: both sinks already committed
+        table = Table(bdf.sparkSession, table_dir)
+        if batch_id <= table.state.get("batch_id", -1):
+            return  # replayed micro-batch: already committed
         out = normalize_strings(normalize_names(bdf))
         # the SAME operators the batch pipeline's quality stage uses
         # (pipeline.stage_quality) — identical row routing is the
@@ -67,10 +65,11 @@ def make_chain_batch_handler(
         tagged = extract_violations(
             out, [(name, F.expr(sql)) for name, sql in rules])
         clean, bad = split_clean(tagged)
-        clean.write.mode("append").parquet(final_dir)
-        (bad.withColumn("violated", F.array_join("violated", ","))
-            .write.mode("append").parquet(quarantine_dir))
-        bookmarks.set(CHAIN_BOOKMARK_TABLE, batch_id)  # commit LAST
+        bad = bad.withColumn("violated", F.array_join("violated", ","))
+        table.commit({sub: table.appended(sub, table.write(sub, df))
+                      for sub, df in (("final", clean),
+                                      ("quarantine", bad))},
+                     batch_id=batch_id)
 
     return handle
 
@@ -79,26 +78,23 @@ def run_stream_chain(
     spark: SparkSession,
     *,
     source_dir: str,
-    final_dir: str,
-    quarantine_dir: str,
+    table_dir: str,
     checkpoint_dir: str,
-    bookmark_dir: str,
     rules: Sequence[tuple[str, str]],
     max_files_per_trigger: int = 1,
 ) -> None:
     """Drain ``source_dir`` through the chain with Trigger.AvailableNow
-    (the streaming twin of one scheduled nightly run). Uses
+    (the streaming twin of one scheduled nightly run) into the
+    ``final`` and ``quarantine`` sub-tables of the manifest table at
+    ``table_dir`` (read them with ``sources.table.Table``). Uses
     extract_violations' exact semantics via the inline predicate array
     so the batch pipeline (pipeline.stage_quality) and this stream
     route every row identically — the invariant the q190 oracle gates.
     ``max_files_per_trigger=1`` forces one micro-batch per staged file,
-    so a multi-file source genuinely exercises multi-batch append +
-    bookmark progression, not one giant batch."""
+    so a multi-file source genuinely exercises multi-batch commits, not
+    one giant batch."""
     schema = spark.read.parquet(source_dir).schema
-    bookmarks = BookmarkStore(bookmark_dir)
-    handler = make_chain_batch_handler(
-        final_dir=final_dir, quarantine_dir=quarantine_dir,
-        bookmarks=bookmarks, rules=rules)
+    handler = make_chain_batch_handler(table_dir=table_dir, rules=rules)
     src = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(source_dir))
@@ -107,6 +103,5 @@ def run_stream_chain(
 
 # re-exported for callers that build the same tagging in batch and need
 # byte-identical routing (the oracle-gated certification relies on it)
-__all__ = ["CHAIN_BOOKMARK_TABLE", "make_chain_batch_handler",
-           "run_stream_chain", "extract_violations", "normalize_names",
-           "normalize_strings"]
+__all__ = ["make_chain_batch_handler", "run_stream_chain",
+           "extract_violations", "normalize_names", "normalize_strings"]

@@ -4,61 +4,71 @@ dedup (SURVEY.md §2.8 T1-T3 as continuously merged sinks). The keyed
 keep-latest upsert is idempotent and lives in
 ``streaming.bucketed_upsert``.
 
-Snapshot layout: versioned directories ``v{batch_id}`` under
-``snapshot_dir``, plus a tiny ``_LATEST`` pointer file written last —
-readers resolve the pointer, writers never mutate a published version
-(the commit is the pointer write, the same commit-after-write
-discipline as sources.state.BookmarkStore). Each merge reads the
-newest version STRICTLY BELOW its batch_id, so a batch replayed after
-a crash recomputes its version from the same predecessor instead of
-merging into its own output: at-least-once delivery composes to
-exactly-once state.
+Snapshot layout: a manifest table (``sources.table``) at
+``snapshot_dir`` whose ``data`` sub-table is the published state and
+whose state holds the streaming query id and the id of the batch that
+produced it. A merge writes the next state as new files and commits
+them together with both ids in one manifest write (the
+commit-after-write discipline of sources.state.BookmarkStore, without
+its window: data and bookmark are one write).
+
+Replay guard: within one query, a batch with ``batch_id <=`` the
+committed id was already applied and is skipped, and any other batch
+merges into the committed state, its predecessor. A lost checkpoint
+starts a new query (a new id in ``<checkpoint>/metadata``) that
+re-reads every source file from batch 0, however it splits them into
+batches, so its batch 0 rebuilds from an empty state. So at-least-once
+delivery composes to exactly-once state, and the replaced state's
+files are deleted by the commit: the disk holds one generation.
 """
 
 from __future__ import annotations
 
+import json
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.writers import write_atomic
+from ..sources.table import Table
 from .stream import drain_foreach_batch
 
-_POINTER = "_LATEST"
+_DATA = "data"
 
 
 def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
-    """Resolve the pointer and read the published snapshot version
-    (None before the first commit)."""
-    ptr = os.path.join(snapshot_dir, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr, encoding="utf-8") as f:
-        version = f.read().strip()
-    return spark.read.parquet(os.path.join(snapshot_dir, version))
+    """The published snapshot (None before the first commit)."""
+    return Table(spark, snapshot_dir).read(_DATA)
 
 
-def _publish_version(snapshot_dir: str, batch_id: int, df: DataFrame,
-                     ) -> None:
-    """Write ``df`` as version ``v{batch_id}``, then point ``_LATEST``
-    at it: the pointer only ever names a fully written version, and a
-    replayed batch overwrites its own version."""
-    version = f"v{batch_id}"
-    df.write.mode("overwrite").parquet(os.path.join(snapshot_dir, version))
-    write_atomic(os.path.join(snapshot_dir, _POINTER), version)
+def _query_id(checkpoint_path: str) -> str:
+    """The id of the streaming query checkpointed at ``checkpoint_path``:
+    fixed for the checkpoint's life, new after it is lost."""
+    with open(os.path.join(checkpoint_path, "metadata"),
+              encoding="utf-8") as fh:
+        return json.loads(fh.readline())["id"]
 
 
-def _latest_version_before(snapshot_dir: str, batch_id: int) -> str | None:
-    """Newest committed version directory with id STRICTLY below
-    ``batch_id`` (None before the first)."""
-    import re
-    best = -1
-    for d in os.listdir(snapshot_dir):
-        m = re.fullmatch(r"v(\d+)", d)
-        if m and int(m.group(1)) < batch_id:
-            best = max(best, int(m.group(1)))
-    return None if best < 0 else f"v{best}"
+def _merge_batch(spark: SparkSession, snapshot_dir: str,
+                 checkpoint_path: str, batch_id: int,
+                 step: Callable[[DataFrame | None], DataFrame]) -> None:
+    """Commit ``step(predecessor)`` as the state after ``batch_id``,
+    unless this query already committed that batch (a replay)."""
+    table = Table(spark, snapshot_dir)
+    query_id = _query_id(checkpoint_path)
+    if table.state.get("query_id") == query_id:
+        if batch_id <= table.state["batch_id"]:
+            return
+        prev = table.read(_DATA)
+    elif batch_id == 0:
+        prev = None  # a new query re-reads the source from its start
+    else:
+        raise ValueError(
+            f"{snapshot_dir} was last committed by query "
+            f"{table.state.get('query_id')}, but query {query_id} is at "
+            f"batch {batch_id}: one streaming query per snapshot")
+    table.commit({_DATA: table.write(_DATA, step(prev))},
+                 batch_id=batch_id, query_id=query_id)
 
 
 def foreach_batch_incremental_agg(
@@ -78,12 +88,11 @@ def foreach_batch_incremental_agg(
     aggregate stays current at cost ∝ batch volume, and the state
     lives in a bucketable snapshot table instead of the state store
     (no state-store sizing, queryable between batches, survives
-    checkpoint loss).
+    checkpoint loss: the new query rebuilds the state from batch 0).
 
     Exactly-once under replay: additive merges are NOT idempotent, so
-    the previous state is the newest version strictly below this
-    batch_id (module docstring), never the pointer — a replayed batch
-    does not double-count itself.
+    a batch this query already committed is skipped (module
+    docstring) — a replayed batch does not double-count itself.
 
     ``delta_fn`` must emit keys + ``count_col`` + ``sum_cols`` with
     sums in an EXACT type (decimal/integer — see merge_agg_states);
@@ -92,26 +101,24 @@ def foreach_batch_incremental_agg(
     true overflow into an error, never silent corruption).
     """
     spark = source.sparkSession
-    os.makedirs(snapshot_dir, exist_ok=True)
+
+    from pyspark.sql import functions as F
 
     from ..operators.aggregates import merge_agg_states
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         delta = delta_fn(batch)
         dtypes = dict(delta.dtypes)
-        prev_v = _latest_version_before(snapshot_dir, batch_id)
-        if prev_v is None:
-            merged = delta
-        else:
-            prev = spark.read.parquet(os.path.join(snapshot_dir, prev_v))
-            merged = merge_agg_states(prev, delta, list(keys),
-                                      count_col=count_col,
-                                      sum_cols=list(sum_cols))
-        from pyspark.sql import functions as F
-        merged = merged.select(
-            *keys, count_col,
-            *[F.col(s).cast(dtypes[s]).alias(s) for s in sum_cols])
-        _publish_version(snapshot_dir, batch_id, merged)
+
+        def step(prev: DataFrame | None) -> DataFrame:
+            merged = delta if prev is None else merge_agg_states(
+                prev, delta, list(keys), count_col=count_col,
+                sum_cols=list(sum_cols))
+            return merged.select(
+                *keys, count_col,
+                *[F.col(s).cast(dtypes[s]).alias(s) for s in sum_cols])
+
+        _merge_batch(spark, snapshot_dir, checkpoint_path, batch_id, step)
 
     drain_foreach_batch(source, merge, checkpoint_path)
 
@@ -137,8 +144,8 @@ def foreach_batch_incremental_dedupe(
 
     Replay safety: survivor accumulation is not idempotent (a replayed
     batch must not dedupe against a snapshot that already contains its
-    own survivors), so the previous state is the newest version
-    strictly below this batch_id (module docstring).
+    own survivors), so a batch this query already committed is skipped
+    (module docstring).
 
     ``block_cols_fn()`` returns the blocking Column expressions
     (unbound, evaluated against both batch and snapshot frames). The
@@ -146,20 +153,17 @@ def foreach_batch_incremental_dedupe(
     available to future batches.
     """
     spark = source.sparkSession
-    os.makedirs(snapshot_dir, exist_ok=True)
 
     from ..operators.dedup import incremental_jaccard_dedupe
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        prev_v = _latest_version_before(snapshot_dir, batch_id)
-        corpus = (batch.limit(0) if prev_v is None
-                  else spark.read.parquet(
-                      os.path.join(snapshot_dir, prev_v)))
-        kept = incremental_jaccard_dedupe(
-            batch, corpus, id_col, text_col, block_cols_fn(),
-            k=k, threshold=threshold)
-        merged = corpus.unionByName(kept.select(*corpus.columns)
-                                    if prev_v is not None else kept)
-        _publish_version(snapshot_dir, batch_id, merged)
+        def step(prev: DataFrame | None) -> DataFrame:
+            corpus = batch.limit(0) if prev is None else prev
+            kept = incremental_jaccard_dedupe(
+                batch, corpus, id_col, text_col, block_cols_fn(),
+                k=k, threshold=threshold)
+            return corpus.unionByName(kept.select(*corpus.columns))
+
+        _merge_batch(spark, snapshot_dir, checkpoint_path, batch_id, step)
 
     drain_foreach_batch(source, merge, checkpoint_path)

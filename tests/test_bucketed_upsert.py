@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from elt_gluepipeline_spark.sources.writers import read_layout
+from elt_gluepipeline_spark.sources.table import Table
 from elt_gluepipeline_spark.streaming.bucketed_upsert import (
     BUCKET_COL, bucket_of, bucketed_merge, foreach_batch_bucketed_upsert,
     read_bucketed_snapshot)
@@ -109,15 +109,15 @@ def test_replay_idempotent_and_no_resurrection(spark, tmp_path):
 
 
 def test_partition_pruned_read(spark, tmp_path):
-    # the prev-state scan inside a merge must prune to the touched
-    # buckets at the PLAN level, not filter after reading
+    # the prev-state scan inside a merge (a read of the files the
+    # manifest lists) must prune to the touched buckets at the PLAN
+    # level, not filter after reading
     snap = str(tmp_path / "snap")
     seed = [(k, 1, "x", "U") for k in range(64)]
     bucketed_merge(spark.createDataFrame(seed, SCHEMA),
                    snapshot_dir=snap, primary_keys=["k"],
                    order_by=[F.col("seq").desc()], n_buckets=8)
-    live = os.path.join(snap, "data")
-    pruned = (spark.read.parquet(live)
+    pruned = (Table(spark, snap).read("data")
               .filter(F.col(BUCKET_COL).isin([3])))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and f"{BUCKET_COL}#" in plan
@@ -278,7 +278,7 @@ def test_rebucket_preserves_state_and_restores_pruning(spark, tmp_path):
                    n_buckets=8, op_col="op")
     n = rebucket(spark, snap, new_n_buckets=32, op_col="op")
     assert n == 40                        # one keep-latest winner per key
-    assert read_layout(os.path.join(snap, "data"))["n_buckets"] == 32
+    assert Table(spark, snap).layout("data")["n_buckets"] == 32
     touched = bucketed_merge(df.filter(F.col("seq") == 3),
                              snapshot_dir=snap, primary_keys=["k"],
                              order_by=[F.col("seq").desc()],
@@ -325,14 +325,12 @@ def test_rebucket_preserves_state_and_restores_pruning(spark, tmp_path):
 
 
 def test_expire_prunes_scan_via_sidecar(spark, tmp_path):
-    # With the tombstone-bounds sidecar, expiry must never OPEN a
-    # bucket whose bound is zero. Pin it physically: corrupt a
+    # With tombstone counts in the manifest, expiry must never OPEN a
+    # bucket whose count is zero. Pin it physically: corrupt a
     # no-tombstone bucket's parquet file — a pruned scan succeeds, an
     # unpruned one would fail to read the garbage.
-    import json
-
     from elt_gluepipeline_spark.streaming.bucketed_upsert import (
-        _SIDECAR, expire_tombstones)
+        expire_tombstones)
 
     snap = str(tmp_path / "snap")
     rows = [(k, k, f"v{k}", "U") for k in range(1, 33)]
@@ -341,7 +339,7 @@ def test_expire_prunes_scan_via_sidecar(spark, tmp_path):
                    snapshot_dir=snap, primary_keys=["k"],
                    order_by=[F.col("seq").desc()], n_buckets=8,
                    op_col="op")
-    bounds = json.load(open(os.path.join(snap, _SIDECAR)))["bounds"]
+    bounds = Table(spark, snap).state["tombstones"]
     tomb_bucket = [int(k) for k, v in bounds.items() if v > 0]
     assert len(tomb_bucket) == 1
     live = os.path.join(snap, "data")
@@ -357,33 +355,31 @@ def test_expire_prunes_scan_via_sidecar(spark, tmp_path):
     touched = expire_tombstones(spark, snap, op_col="op",
                                 expire_if=F.col("seq") < 10)
     assert touched == tomb_bucket
-    # exact post-swap lowering: no positive bounds remain → the next
-    # expiry is a no-op without reading anything at all
-    bounds2 = json.load(open(os.path.join(snap, _SIDECAR)))["bounds"]
+    # exact counts committed with the rewrite: no positive count
+    # remains → the next expiry is a no-op without reading anything
+    bounds2 = Table(spark, snap).state["tombstones"]
     assert all(v == 0 for v in bounds2.values()) or bounds2 == {}
     assert expire_tombstones(spark, snap, op_col="op",
                              expire_if=F.lit(True)) == []
 
 
 def test_expire_bootstraps_sidecar_on_first_full_scan(spark, tmp_path):
-    import json
-
     from elt_gluepipeline_spark.streaming.bucketed_upsert import (
-        _SIDECAR, expire_tombstones)
+        expire_tombstones)
 
     snap = str(tmp_path / "snap")
     rows = [(1, 1, "a", "U"), (2, 2, None, "D"), (3, 30, None, "D")]
-    # merged WITHOUT op_col: no sidecar maintained
+    # merged WITHOUT op_col: no tombstone counts kept
     bucketed_merge(spark.createDataFrame(rows, SCHEMA),
                    snapshot_dir=snap, primary_keys=["k"],
                    order_by=[F.col("seq").desc()], n_buckets=4)
-    assert not os.path.isfile(os.path.join(snap, _SIDECAR))
+    assert "tombstones" not in Table(spark, snap).state
     expire_tombstones(spark, snap, op_col="op",
                       expire_if=F.col("seq") < 10)
     # the full-scan run bootstrapped exact counts: k=3's tombstone
     # bucket has bound 1, everything else is pruned away next time
-    raw = json.load(open(os.path.join(snap, _SIDECAR)))
-    bounds = {int(k): v for k, v in raw["bounds"].items()}
+    raw = Table(spark, snap).state
+    bounds = {int(k): v for k, v in raw["tombstones"].items()}
     assert sum(bounds.values()) == 1
     # the bootstrap records its op column, so later merges WITHOUT
     # op_col keep the bounds current
@@ -391,26 +387,25 @@ def test_expire_bootstraps_sidecar_on_first_full_scan(spark, tmp_path):
 
 
 def test_sidecar_maintained_without_op_col_after_adoption(spark, tmp_path):
-    # A merge WITHOUT op_col into a sidecar-bearing snapshot must still
-    # count its tombstones (a bound left at 0 means a pruned expiry
-    # never expires them): the sidecar records its op column and every
-    # merge maintains it; a CONFLICTING op_col raises.
-    import json
-
+    # A merge WITHOUT op_col into a snapshot that keeps tombstone
+    # counts must still count its tombstones (a count left at 0 means a
+    # pruned expiry never expires them): the manifest records the op
+    # column and every merge maintains the counts; a CONFLICTING op_col
+    # raises.
     from elt_gluepipeline_spark.streaming.bucketed_upsert import (
-        _SIDECAR, expire_tombstones)
+        expire_tombstones)
 
     snap = str(tmp_path / "snap")
     bucketed_merge(spark.createDataFrame([(1, 1, "a", "U")], SCHEMA),
                    snapshot_dir=snap, primary_keys=["k"],
                    order_by=[F.col("seq").desc()], n_buckets=4,
-                   op_col="op")          # creates the sidecar
-    # tombstone merged WITHOUT op_col: the bound must still rise
+                   op_col="op")          # starts the tombstone counts
+    # tombstone merged WITHOUT op_col: the count must still rise
     bucketed_merge(spark.createDataFrame([(2, 2, None, "D")], SCHEMA),
                    snapshot_dir=snap, primary_keys=["k"],
                    order_by=[F.col("seq").desc()], n_buckets=4)
-    bounds = {int(k): v for k, v in json.load(
-        open(os.path.join(snap, _SIDECAR)))["bounds"].items()}
+    bounds = {int(k): v for k, v in
+              Table(spark, snap).state["tombstones"].items()}
     assert sum(bounds.values()) == 1
     # and a pruned expiry (no full scan) still finds and expires it
     touched = expire_tombstones(spark, snap, op_col="op",
@@ -420,7 +415,7 @@ def test_sidecar_maintained_without_op_col_after_adoption(spark, tmp_path):
         F.col("k") == 2).count() == 0
 
     # conflicting op column is a contract violation, not a silent
-    # second sidecar
+    # second set of counts
     with pytest.raises(ValueError, match="mixed op_col"):
         bucketed_merge(spark.createDataFrame([(3, 3, "c", "U")], SCHEMA),
                        snapshot_dir=snap, primary_keys=["k"],
@@ -429,9 +424,10 @@ def test_sidecar_maintained_without_op_col_after_adoption(spark, tmp_path):
 
 
 def test_one_data_file_per_bucket_per_write(spark, tmp_path):
-    # partition discovery lists the WHOLE table before pruning, so
-    # file count per bucket is a per-merge cost every later reader
-    # pays: each write must route a bucket to exactly one task
+    # every file is one more path the manifest names and every later
+    # read opens, so file count per bucket is a per-merge cost every
+    # later reader pays: each write must route a bucket to exactly one
+    # task
     from elt_gluepipeline_spark.streaming.bucketed_upsert import rebucket
 
     snap = str(tmp_path / "snap")
@@ -486,7 +482,7 @@ def test_maintain_bucket_layout(spark, tmp_path):
         spark, snap,
         target_mb_per_bucket=_du(snap) / 64 / (1024 * 1024), op_col="op")
     assert new_b is not None and new_b >= 8 * 4
-    assert read_layout(os.path.join(snap, "data"))["n_buckets"] == new_b
+    assert Table(spark, snap).layout("data")["n_buckets"] == new_b
     assert _state(spark, snap) == before
     # merges resume at the stored new B and stay pruned (touched < B)
     up = spark.createDataFrame([(7, 999, "v7b", "U")], SCHEMA)

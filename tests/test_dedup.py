@@ -388,11 +388,16 @@ def test_incremental_lsh_index_paths_agree(spark):
     assert stored == base
 
 
-def test_incremental_lsh_artifact_append_equals_rebuild(spark):
+def test_incremental_lsh_artifact_append_equals_rebuild(spark,
+                                                      monkeypatch):
     """Admitting a batch via append_lsh_dedup_index must leave the
     stored artifact identical to a from-scratch fit over corpus∪batch —
-    for ALL THREE tables (entries, sizes, postings)."""
+    for ALL THREE tables (entries, sizes, postings), row for row. An
+    append that crashes after its entries write and is retried must
+    leave the same rows: the retry may not store the delta twice."""
+    import pytest
     from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from elt_gluepipeline_spark.operators.dedup import (
         PortableMinhashFamily, append_lsh_dedup_index, fit_lsh_dedup_index,
@@ -413,12 +418,35 @@ def test_incremental_lsh_artifact_append_equals_rebuild(spark):
             fit_lsh_dedup_index(batch, "doc_id", "text", **kw), f"{d}/a")
         save_lsh_dedup_index(
             fit_lsh_dedup_index(docs, "doc_id", "text", **kw), f"{d}/b")
+
+        # the same append, crashed after its entries write, then retried
+        save_lsh_dedup_index(
+            fit_lsh_dedup_index(corpus, "doc_id", "text", **kw), f"{d}/c")
+        real_parquet, calls = DataFrameWriter.parquet, []
+
+        def parquet(self, path, *args, **kwargs):
+            calls.append(path)
+            if len(calls) == 2:
+                raise RuntimeError("crash after the entries write")
+            return real_parquet(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError):
+            append_lsh_dedup_index(
+                fit_lsh_dedup_index(batch, "doc_id", "text", **kw), f"{d}/c")
+        monkeypatch.undo()
+        assert calls[0].endswith("entries")
+        append_lsh_dedup_index(
+            fit_lsh_dedup_index(batch, "doc_id", "text", **kw), f"{d}/c")
+
         a = load_lsh_dedup_index(spark, f"{d}/a")
         b = load_lsh_dedup_index(spark, f"{d}/b")
-        for ta, tb in ((a.entries, b.entries), (a.sizes, b.sizes),
-                       (a.postings, b.postings)):
-            assert {tuple(r) for r in ta.collect()} == \
-                   {tuple(r) for r in tb.collect()}
+        c = load_lsh_dedup_index(spark, f"{d}/c")
+        for got in (a, c):
+            for ta, tb in ((got.entries, b.entries), (got.sizes, b.sizes),
+                           (got.postings, b.postings)):
+                assert sorted(tuple(r) for r in ta.collect()) == \
+                       sorted(tuple(r) for r in tb.collect())
 
 
 def _plan_subtree(plan: str, anchor) -> list[str]:
@@ -807,10 +835,9 @@ def test_lsh_save_layout_contract_guards(spark, tmp_path):
 
 
 def test_lsh_compact_to_empty_partitioned_index(spark, tmp_path):
-    """ADVICE r10: compacting a PARTITIONED index in which every doc is
-    tombstoned used to write a partitioned empty frame (no
-    schema-bearing files -> next load dies UNABLE_TO_INFER_SCHEMA);
-    the empty-anchor fallback must keep the table loadable and
+    """Compacting a PARTITIONED index in which every doc is tombstoned
+    writes a partitioned empty frame — no schema-bearing file at all.
+    The schema the manifest stores must keep the table loadable and
     serving (zero matches)."""
     from pyspark.sql import functions as F
 

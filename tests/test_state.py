@@ -1,3 +1,5 @@
+import json
+
 import pytest
 
 from elt_gluepipeline_spark.sources.state import (BookmarkStore, RunManifest,
@@ -17,7 +19,9 @@ def test_manifest(tmp_path):
     m = RunManifest(str(tmp_path), "run1")
     m.log("ingest", "t1", "success", rows=10)
     p = m.flush()
-    assert p.exists() and "success" in p.read_text()
+    assert json.loads(p.read_text())["events"][0]["status"] == "success"
+    # committed atomically: no temp file is left next to it
+    assert [f.name for f in tmp_path.iterdir()] == [p.name]
 
 
 def test_parse_pk_config():
@@ -91,20 +95,24 @@ def test_observed_metrics_ride_the_write_action(spark, tmp_path):
 def test_compact_parquet_bounds_files_and_preserves_rows(spark, sf_dir, tmp_path):
     from pathlib import Path
 
+    from elt_gluepipeline_spark.sources.table import Table
     from elt_gluepipeline_spark.sources.writers import compact_parquet
 
     src = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    target = str(tmp_path / "orders_many")
+    root = str(tmp_path / "t")
     # simulate a year of tiny-append runs: 40 files
-    src.repartition(40).write.parquet(target)
-    n_before = len(list(Path(target).glob("*.parquet")))
-    assert n_before >= 40
+    table = Table(spark, root)
+    table.commit({"orders": table.write("orders", src.repartition(40))})
+    assert len(table.tables["orders"]["files"]) >= 40
 
-    n_rows = compact_parquet(spark, target, target_files=4)
-    files = list(Path(target).glob("*.parquet"))
+    n_rows = compact_parquet(spark, f"{root}/orders", target_files=4)
+    table = Table(spark, root)
+    files = sorted(p.name for p in Path(root, "orders").glob("*.parquet"))
+    # the disk holds the compacted generation only
+    assert files == sorted(table.tables["orders"]["files"])
     assert len(files) <= 4
     assert n_rows == src.count()
-    after = spark.read.parquet(target)
+    after = table.read("orders")
     assert after.count() == src.count()
     # value-level identity, not just counts
     assert after.exceptAll(src).count() == 0 and src.exceptAll(after).count() == 0
@@ -112,24 +120,33 @@ def test_compact_parquet_bounds_files_and_preserves_rows(spark, sf_dir, tmp_path
 
 def test_compact_parquet_recovers_from_crashed_prior_swap(spark, sf_dir,
                                                           tmp_path):
-    """Crash-window recovery: a leftover __compact_old (aside) dir from
-    an interrupted earlier swap must not break or contaminate the next
-    compaction — it is cleared and the live data wins."""
+    """Crash-window recovery: the files of an earlier compaction that
+    crashed before its commit must not break or contaminate the next
+    compaction — its first write deletes them and the live data wins. A
+    plain folder has no commit point and raises."""
     from pathlib import Path
 
+    from elt_gluepipeline_spark.sources.table import Table
     from elt_gluepipeline_spark.sources.writers import compact_parquet
 
     src = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    target = str(tmp_path / "orders_live")
-    src.repartition(10).write.parquet(target)
-    # stale aside from a hypothetical crashed run, with DIFFERENT data
-    src.limit(5).write.parquet(target + "__compact_old")
-    n = compact_parquet(spark, target, target_files=2)
+    root = str(tmp_path / "t")
+    table = Table(spark, root)
+    table.commit({"orders": table.write("orders", src.repartition(10))})
+    # files of a hypothetical crashed run, with DIFFERENT data: written,
+    # never committed
+    table.write("orders", src.limit(5))
+    n = compact_parquet(spark, f"{root}/orders", target_files=2)
     assert n == src.count()
-    after = spark.read.parquet(target)
+    table = Table(spark, root)
+    after = table.read("orders")
     assert after.count() == src.count()
-    assert not Path(target + "__compact_old").exists()
-    assert not Path(target + "__compact_tmp").exists()
+    files = sorted(p.name for p in Path(root, "orders").glob("*.parquet"))
+    assert files == sorted(table.tables["orders"]["files"])
+
+    src.write.parquet(str(tmp_path / "plain"))
+    with pytest.raises(FileNotFoundError):
+        compact_parquet(spark, str(tmp_path / "plain"))
 
 
 def test_schema_cache_sees_in_place_partition_append(spark, tmp_path):

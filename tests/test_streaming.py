@@ -330,10 +330,11 @@ def test_stream_incremental_agg_matches_batch_and_replay_safe(spark, sf_dir, tmp
         return b.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n"), F.sum(dec("value")).alias("s"))
 
-    def drain(ckpt):
+    def drain(ckpt, files_per_batch=1):
         src = (spark.readStream
                     .schema(spark.read.parquet(src_dir).schema)
-                    .option("maxFilesPerTrigger", 1).parquet(src_dir))
+                    .option("maxFilesPerTrigger", files_per_batch)
+                    .parquet(src_dir))
         foreach_batch_incremental_agg(
             src, delta_fn=delta_fn, keys=["user_id"], count_col="n",
             sum_cols=["s"], snapshot_dir=str(tmp_path / "snap"),
@@ -345,25 +346,38 @@ def test_stream_incremental_agg_matches_batch_and_replay_safe(spark, sf_dir, tmp
     want = {r.user_id: (r.n, float(r.s)) for r in delta_fn(ev).collect()}
     assert got == want  # 3 incremental merges == one full aggregation
 
-    # FULL REPLAY: lose the checkpoint, keep the snapshots. Every batch
-    # re-runs with the same batch ids; each recomputes its version from
-    # the version strictly below it, so nothing double-counts.
+    # FULL REPLAY: lose the checkpoint, keep the snapshot. The new
+    # checkpoint is a new query: it re-reads every file from batch 0,
+    # which rebuilds from an empty state, so nothing double-counts.
     shutil.rmtree(str(tmp_path / "ckpt1"))
     assert drain(str(tmp_path / "ckpt2")) == want
+    # ... also when the new query batches the files differently: a 4th
+    # file arrives and 2 files make a batch, so batches 0 and 1 cover
+    # other files than the committed batches 0 and 1 did
+    ev.limit(40).coalesce(1).write.mode("append").parquet(src_dir)
+    assert len([f for f in os.listdir(src_dir) if f.endswith(".parquet")]) == 4
+    shutil.rmtree(str(tmp_path / "ckpt2"))
+    want = {r.user_id: (r.n, float(r.s))
+            for r in delta_fn(spark.read.parquet(src_dir)).collect()}
+    assert drain(str(tmp_path / "ckpt3"), files_per_batch=2) == want
     # schema stability: compounding merges must not widen the sum type
     snap = read_snapshot(spark, str(tmp_path / "snap"))
     assert dict(snap.dtypes)["s"] == dict(delta_fn(ev).dtypes)["s"]
 
 
-def test_stream_incremental_dedupe_equals_sequential(spark, tmp_path):
+def test_stream_incremental_dedupe_equals_sequential(spark, tmp_path,
+                                                     monkeypatch):
     """foreachBatch continuous dedup == sequentially applying
     incremental_jaccard_dedupe batch-by-batch (whatever batch order
-    the file source picked)."""
+    the file source picked), and the snapshot keeps one generation:
+    after the drain, the only data files on disk are the live ones."""
     import os
     import time
+    from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
 
+    import elt_gluepipeline_spark.operators.dedup as dedup
     from elt_gluepipeline_spark.operators.dedup import \
         incremental_jaccard_dedupe
     from elt_gluepipeline_spark.streaming.upsert import (
@@ -387,6 +401,14 @@ def test_stream_incremental_dedupe_equals_sequential(spark, tmp_path):
              .coalesce(1).write.parquet(str(src / f"b{i}"))
         time.sleep(1.1)  # distinct mtimes → deterministic-ish order
 
+    # record the batch order the stream actually used
+    seen = []
+
+    def spy(new_docs, *args, **kwargs):
+        seen.append({r.doc_id for r in new_docs.collect()})
+        return incremental_jaccard_dedupe(new_docs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "incremental_jaccard_dedupe", spy)
     stream = (spark.readStream
                    .schema("doc_id long, text string")
                    .option("maxFilesPerTrigger", 1)
@@ -397,29 +419,19 @@ def test_stream_incremental_dedupe_equals_sequential(spark, tmp_path):
         block_cols_fn=lambda: [F.lit(0)],
         snapshot_dir=snap, checkpoint_path=str(tmp_path / "ck"),
         k=3, threshold=0.3)
+    monkeypatch.undo()
 
-    got = {r.doc_id for r in read_snapshot(spark, snap).collect()}
+    snapshot = read_snapshot(spark, snap)
+    got = {r.doc_id for r in snapshot.collect()}
+    # one generation: the superseded states' files are gone
+    live = {urlparse(p).path for p in snapshot.inputFiles()}
+    on_disk = {os.path.join(d, f) for d, _, fs in os.walk(snap)
+               for f in fs if f.endswith(".parquet")}
+    assert on_disk == live
 
-    # reconstruct the batch order the stream actually used from the
-    # version directories, then replay sequentially
-    import re
-    versions = sorted((int(re.fullmatch(r"v(\d+)", d).group(1)), d)
-                      for d in os.listdir(snap)
-                      if re.fullmatch(r"v(\d+)", d))
-    assert len(versions) == 3
-    prev_ids: set = set()
-    order = []
-    all_batches = {i: {r[0] for r in b} for i, b in enumerate(rows)}
-    for _, d in versions:
-        ids = {r.doc_id
-               for r in spark.read.parquet(os.path.join(snap, d)).collect()}
-        new_ids = ids - prev_ids
-        matches = [i for i, b in all_batches.items() if new_ids <= b]
-        assert matches, (ids, prev_ids)
-        order.append(matches[0])
-        del all_batches[matches[0]]
-        prev_ids = ids
-
+    batch_ids = [{r[0] for r in b} for b in rows]
+    order = [batch_ids.index(ids) for ids in seen]
+    assert sorted(order) == [0, 1, 2]
     corpus = spark.createDataFrame([], "doc_id long, text string")
     for i in order:
         b = spark.createDataFrame(rows[i], "doc_id long, text string")
@@ -577,38 +589,64 @@ def test_drain_runs_on_rocksdb_state_store(spark, sf_dir):
             spark.conf.set(key, prev)
 
 
-def test_chain_handler_replay_is_idempotent(spark, tmp_path):
-    """SURVEY §7.4 crash-window invariant: after a batch's bookmark
-    commits, the streaming runtime replaying that batch_id (restart
-    after a crash between checkpoint and shutdown) must append NOTHING
-    — drive the foreachBatch handler directly, twice."""
-    from elt_gluepipeline_spark.sources.state import BookmarkStore
+def test_chain_handler_replay_is_idempotent(spark, tmp_path, monkeypatch):
+    """SURVEY §7.4 crash-window invariant: after a batch commits, the
+    streaming runtime replaying that batch_id (restart after a crash
+    between checkpoint and shutdown) must append NOTHING — drive the
+    foreachBatch handler directly, twice. And a crash AFTER the final/
+    write but BEFORE the commit must not append the batch twice when it
+    is replayed: exactly-once, not at-least-once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from elt_gluepipeline_spark.sources.table import Table
     from elt_gluepipeline_spark.streaming.chain import (
         make_chain_batch_handler)
 
-    final = str(tmp_path / "final")
-    quar = str(tmp_path / "quar")
-    handler = make_chain_batch_handler(
-        final_dir=final, quarantine_dir=quar,
-        bookmarks=BookmarkStore(str(tmp_path / "bm")),
-        rules=(("neg", "v <= 0"),))
+    table_dir = str(tmp_path / "chain")
+    handler = make_chain_batch_handler(table_dir=table_dir,
+                                       rules=(("neg", "v <= 0"),))
+
+    def counts():
+        t = Table(spark, table_dir)
+        return t.read("final").count(), t.read("quarantine").count()
+
     batch = spark.createDataFrame(
         [(1, 5.0, " A "), (2, -1.0, "B"), (3, 2.0, "c")],
         "id long, v double, tag string")
     handler(batch, 0)
-    n_final = spark.read.parquet(final).count()
-    n_quar = spark.read.parquet(quar).count()
-    assert (n_final, n_quar) == (2, 1)
+    assert counts() == (2, 1)
     # transform stage ran inside the chain: strings lower+trim
-    tags = {r.tag for r in spark.read.parquet(final).collect()}
+    tags = {r.tag for r in Table(spark, table_dir).read("final").collect()}
     assert tags == {"a", "c"}
 
     handler(batch, 0)  # replayed micro-batch → no-op
-    assert spark.read.parquet(final).count() == n_final
-    assert spark.read.parquet(quar).count() == n_quar
+    assert counts() == (2, 1)
 
     handler(batch.withColumn("id", batch.id + 10), 1)  # next batch lands
-    assert spark.read.parquet(final).count() == 2 * n_final
+    assert counts() == (4, 2)
+
+    # crash between the final/ write and the commit, then replay
+    crashed = str(tmp_path / "crashed")
+    handler = make_chain_batch_handler(table_dir=crashed,
+                                       rules=(("neg", "v <= 0"),))
+    hundred = spark.range(100).selectExpr("id", "1.0 AS v", "'x' AS tag")
+    real_parquet, calls = DataFrameWriter.parquet, []
+
+    def parquet(self, path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            raise RuntimeError("crash after the final/ write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    try:
+        handler(hundred, 0)
+    except RuntimeError:
+        pass
+    monkeypatch.undo()
+    assert calls[0].endswith("final")
+    handler(hundred, 0)  # the runtime replays the uncommitted batch
+    assert Table(spark, crashed).read("final").count() == 100
 
 
 def test_stream_chain_multibatch_equals_batch_route(spark, sf_dir,
@@ -624,6 +662,7 @@ def test_stream_chain_multibatch_equals_batch_route(spark, sf_dir,
     from elt_gluepipeline_spark.operators.quality import (
         extract_violations, split_clean)
     from elt_gluepipeline_spark.sources.readers import read_table
+    from elt_gluepipeline_spark.sources.table import Table
     from elt_gluepipeline_spark.streaming.chain import run_stream_chain
 
     rules = (("price_nonpos", "l_extendedprice <= 0"),
@@ -632,15 +671,13 @@ def test_stream_chain_multibatch_equals_batch_route(spark, sf_dir,
     src = str(tmp_path / "src")
     li.repartitionByRange(3, "l_orderkey").write.parquet(src)
     run_stream_chain(
-        spark, source_dir=src,
-        final_dir=str(tmp_path / "final"),
-        quarantine_dir=str(tmp_path / "quar"),
+        spark, source_dir=src, table_dir=str(tmp_path / "chain"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        bookmark_dir=str(tmp_path / "bm"),
         rules=rules, max_files_per_trigger=1)
 
-    got_clean = spark.read.parquet(str(tmp_path / "final"))
-    got_quar = spark.read.parquet(str(tmp_path / "quar"))
+    table = Table(spark, str(tmp_path / "chain"))
+    got_clean = table.read("final")
+    got_quar = table.read("quarantine")
     want_clean, want_quar = split_clean(extract_violations(
         normalize_strings(normalize_names(li)),
         [(n, F.expr(s)) for n, s in rules]))

@@ -1,33 +1,44 @@
-"""Crash recovery of every on-disk table rewrite that goes through
-``sources.writers.swap_dir``: the CDC snapshot's merge, tombstone
-expiry and rebucket, the LSH index's compaction and entries
-repartition, and parquet small-file compaction.
+"""Crash recovery of every manifest-committed writer
+(``sources.table``): the CDC snapshot's merge, tombstone expiry and
+rebucket; the LSH index's save, append, delete, compaction and entries
+repartition; ``compact_parquet``; the stream chain's batch handler;
+and both versioned streaming sinks.
 
-Each case crashes the rewrite at one step of the swap —
-1: the live→aside rename, 2: the staged→live rename, 3: the aside
-delete — then checks that the table's next entry point heals it, and
-that re-running the rewrite gives exactly the rows an uninterrupted
-run gives. A crash at step 1 or 2 (in the first swap) must leave the
-previous state readable, row for row; a crash at step 3 of a
-whole-table swap must leave the new state. The read of each table
-includes its stored layout, so the layout must always belong to the
-copy that survived."""
+A writer touches the disk through three primitives — ``step`` 1: the
+Spark write action, 2: the ``os.replace`` inside ``write_atomic`` (the
+commit), 3: a file delete. Each case counts the operations of one
+primitive in an uncrashed run, then crashes at each of them in turn:
+after a write or a delete has run, and both before and after a
+replace. A read must then give back exactly the state before the run
+or the state of the uncrashed run — every sub-table's rows and layout,
+and the writer state (tombstone counts, batch id), and each sub-table's
+file count — and delete nothing. Re-running the writer must give
+exactly the uncrashed state (writers that are not idempotent, an
+append, re-run only when the crash left the old state, as their caller
+would), and the next commit must leave no file on disk that the
+manifest does not list. Writers that replace no file in an uncrashed
+run have no step 3."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
+import elt_gluepipeline_spark.streaming.upsert as upsert
+from elt_gluepipeline_spark.functions.deterministic import dec
 from elt_gluepipeline_spark.operators.dedup import (
-    PortableMinhashFamily, compact_lsh_dedup_index,
-    delete_from_lsh_dedup_index, fit_lsh_dedup_index, load_lsh_dedup_index,
-    portable_band_hash, repartition_entries, save_lsh_dedup_index)
-from elt_gluepipeline_spark.sources.writers import (compact_parquet,
-                                                    read_layout)
+    PortableMinhashFamily, append_lsh_dedup_index, compact_lsh_dedup_index,
+    delete_from_lsh_dedup_index, fit_lsh_dedup_index, portable_band_hash,
+    repartition_entries, save_lsh_dedup_index)
+from elt_gluepipeline_spark.sources.table import Table
+from elt_gluepipeline_spark.sources.writers import compact_parquet
 from elt_gluepipeline_spark.streaming.bucketed_upsert import (
-    bucketed_merge, expire_tombstones, read_bucketed_snapshot, rebucket)
+    bucketed_merge, expire_tombstones, rebucket)
+from elt_gluepipeline_spark.streaming.chain import make_chain_batch_handler
 
 SCHEMA = "k long, seq long, v string, op string"
 
@@ -39,6 +50,29 @@ def _merge_kw():
 
 def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _read(spark, d):
+    """Every sub-table's rows, layout and file count, and the writer
+    state."""
+    table = Table(spark, d)
+    return ({sub: (_rows(table.read(sub)), entry["layout"],
+                   len(entry["files"]))
+             for sub, entry in table.tables.items()}, table.state)
+
+
+def _files(d):
+    return {os.path.join(root, f) for root, _, files in os.walk(d)
+            for f in files}
+
+
+def _only_listed(d):
+    """The data files on disk are exactly the ones the manifest lists."""
+    table = Table(None, d)
+    listed = {os.path.join(d, sub, f)
+              for sub, entry in table.tables.items() for f in entry["files"]}
+    return {f for f in _files(d)
+            if not os.path.basename(f).startswith((".", "_"))} == listed
 
 
 # --- the CDC snapshot ----------------------------------------------------
@@ -59,81 +93,158 @@ def _merge(spark, d):
 
 
 def _expire(spark, d):
-    assert expire_tombstones(spark, d, op_col="op",
-                             expire_if=F.col("seq") < 10)
+    expire_tombstones(spark, d, op_col="op", expire_if=F.col("seq") < 10)
 
 
 def _rebucket(spark, d):
     rebucket(spark, d, new_n_buckets=8, op_col="op")
 
 
-def _read_snapshot(spark, d):
-    return _rows(read_bucketed_snapshot(spark, d)), read_layout(f"{d}/data")
-
-
 # --- the LSH index -------------------------------------------------------
 
-def _docs(spark):
+def _docs(spark, lo=0, hi=40):
     rows = [(i, " ".join(f"w{(i * 3 + j) % 25}" for j in range(12)))
-            for i in range(40)]
+            for i in range(lo, hi)]
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
+def _fit(spark, lo, hi):
+    return fit_lsh_dedup_index(
+        _docs(spark, lo, hi), "doc_id", "text", k=3, n_hashes=32, bands=8,
+        pair_family=PortableMinhashFamily(32, seed=1),
+        band_hash=portable_band_hash)
+
+
 def _index(spark, d):
-    save_lsh_dedup_index(
-        fit_lsh_dedup_index(_docs(spark), "doc_id", "text", k=3,
-                            n_hashes=32, bands=8,
-                            pair_family=PortableMinhashFamily(32, seed=1),
-                            band_hash=portable_band_hash), d)
+    save_lsh_dedup_index(_fit(spark, 0, 40), d)
     delete_from_lsh_dedup_index(
         _docs(spark).filter(F.col("doc_id") % 3 == 1).select("doc_id"), d)
 
 
-def _read_index(spark, d):
-    index = load_lsh_dedup_index(spark, d)
-    tables = (index.entries, index.sizes, index.postings, index.tombstones)
-    return ([None if t is None else _rows(t) for t in tables],
-            index.entries_partitions)
+def _resave(spark, d):
+    save_lsh_dedup_index(_fit(spark, 10, 30), d, partition_entries=4)
 
 
-# --- a parquet folder ----------------------------------------------------
+def _append(spark, d):
+    append_lsh_dedup_index(_fit(spark, 40, 60), d)
+
+
+def _delete(spark, d):
+    delete_from_lsh_dedup_index(
+        spark.createDataFrame([(2,), (5,)], ["doc_id"]), d)
+
+
+# --- a manifest sub-table of many small files ----------------------------
 
 def _folder(spark, d):
-    spark.range(200).selectExpr("id", "id % 7 AS g", "uuid() AS u") \
-         .repartition(10).write.parquet(d)
+    table = Table(spark, d)
+    table.commit({"f": table.write(
+        "f", spark.range(200).selectExpr("id", "id % 7 AS g",
+                                         "uuid() AS u").repartition(10))})
 
 
-def _compacted_rows(spark, d):
-    compact_parquet(spark, d, target_files=2)
-    return _rows(spark.read.parquet(d))
+# --- the stream chain and the versioned streaming sinks ------------------
+
+_RULES = (("neg", "v <= 0"),)
 
 
-# entry point -> (build the table, rewrite it, open it and read its rows)
+def _chain_batch(spark, batch_id):
+    rows = [(batch_id * 10 + i, float(i % 3) - 0.5, f" T{i} ")
+            for i in range(6)]
+    return spark.createDataFrame(rows, "id long, v double, tag string")
+
+
+def _chain_seed(spark, d):
+    make_chain_batch_handler(table_dir=d, rules=_RULES)(
+        _chain_batch(spark, 0), 0)
+
+
+def _chain_next(spark, d):
+    make_chain_batch_handler(table_dir=d, rules=_RULES)(
+        _chain_batch(spark, 1), 1)
+
+
+def _sink_handler(sink, spark, d, **kw):
+    """The per-batch handler ``sink`` drains its source with, captured
+    instead of starting a stream."""
+    ckpt = os.path.join(os.path.dirname(d), "ckpt")
+    os.makedirs(ckpt, exist_ok=True)
+    with open(os.path.join(ckpt, "metadata"), "w") as fh:
+        fh.write('{"id":"query-0"}\n')  # a streaming query's checkpoint
+    handlers = []
+    real = upsert.drain_foreach_batch
+    upsert.drain_foreach_batch = lambda source, handler, ckpt: \
+        handlers.append(handler)
+    try:
+        sink(spark.range(0), snapshot_dir=d, checkpoint_path=ckpt, **kw)
+    finally:
+        upsert.drain_foreach_batch = real
+    return handlers[0]
+
+
+def _events(spark, batch_id):
+    rows = [(u, float(batch_id * 10 + u)) for u in range(5)]
+    return spark.createDataFrame(rows, "user_id long, value double")
+
+
+def _agg_handler(spark, d):
+    return _sink_handler(
+        upsert.foreach_batch_incremental_agg, spark, d,
+        delta_fn=lambda b: b.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n"), F.sum(dec("value")).alias("s")),
+        keys=["user_id"], count_col="n", sum_cols=["s"])
+
+
+def _texts(spark, batch_id):
+    words = ("alpha beta gamma delta epsilon zeta",
+             "one two three four five six seven")
+    rows = [(batch_id * 10 + i, words[i % 2]) for i in range(3)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _dedupe_handler(spark, d):
+    return _sink_handler(
+        upsert.foreach_batch_incremental_dedupe, spark, d, id_col="doc_id",
+        text_col="text", block_cols_fn=lambda: [F.lit(0)], k=3,
+        threshold=0.3)
+
+
+# writer -> (build the table, run the writer on it)
 CASES = {
-    "bucketed_merge": (_snapshot, _merge, _read_snapshot),
-    "expire_tombstones": (_snapshot, _expire, _read_snapshot),
-    "rebucket": (_snapshot, _rebucket, _read_snapshot),
-    "compact_lsh_dedup_index": (_index, compact_lsh_dedup_index,
-                                _read_index),
+    "bucketed_merge": (_snapshot, _merge),
+    "expire_tombstones": (_snapshot, _expire),
+    "rebucket": (_snapshot, _rebucket),
+    "save_lsh_dedup_index": (_index, _resave),
+    "append_lsh_dedup_index": (_index, _append),
+    "delete_from_lsh_dedup_index": (_index, _delete),
+    "compact_lsh_dedup_index": (_index, compact_lsh_dedup_index),
     "repartition_entries": (_index,
-                            lambda spark, d: repartition_entries(spark, d, 4),
-                            _read_index),
+                            lambda spark, d: repartition_entries(spark, d, 4)),
     "compact_parquet": (_folder,
-                        lambda spark, d: compact_parquet(spark, d,
-                                                         target_files=2),
-                        _compacted_rows),
+                        lambda spark, d: compact_parquet(
+                            spark, f"{d}/f", target_files=2)),
+    "chain_batch_handler": (_chain_seed, _chain_next),
+    # a new table: the first batch creates it
+    "foreach_batch_incremental_agg": (
+        lambda spark, d: None,
+        lambda spark, d: _agg_handler(spark, d)(_events(spark, 0), 0)),
+    "foreach_batch_incremental_dedupe": (
+        lambda spark, d: _dedupe_handler(spark, d)(_texts(spark, 0), 0),
+        lambda spark, d: _dedupe_handler(spark, d)(_texts(spark, 1), 1)),
 }
-
-# one whole-table swap: a crash at step 3 leaves the staged copy live
-_ONE_SWAP = {"rebucket", "repartition_entries"}
-_BUILT: dict[str, str] = {}   # entry point -> pristine table to copy
-_CLEAN: dict[str, object] = {}  # entry point -> rows of an uncrashed run
+_NOT_IDEMPOTENT = {"append_lsh_dedup_index", "delete_from_lsh_dedup_index"}
+# writers that only add files in an uncrashed run: no step 3
+_DELETES_NOTHING = {"append_lsh_dedup_index", "delete_from_lsh_dedup_index",
+                    "chain_batch_handler", "foreach_batch_incremental_agg"}
+_BUILT: dict[str, str] = {}    # writer -> pristine table to copy
+_CLEAN: dict[str, tuple] = {}  # writer -> (state before, after, op counts)
 
 
 def _fresh(spark, tmp_path_factory, entry, name):
-    """A private copy of the entry point's pristine table (built once)."""
+    """A private copy of the writer's pristine table (built once)."""
     if entry not in _BUILT:
         d = str(tmp_path_factory.mktemp(entry) / "t")
+        os.makedirs(d)
         CASES[entry][0](spark, d)
         _BUILT[entry] = d
     d = str(tmp_path_factory.mktemp(name) / "t")
@@ -145,48 +256,73 @@ class _Crash(Exception):
     pass
 
 
-def _crash_at(monkeypatch, step):
-    """Make the swap raise at ``step``: the ``step``-th rename (1, 2),
-    or the aside delete that follows the second rename (3)."""
-    moves = {"n": 0}
-    real_move, real_rmtree = shutil.move, shutil.rmtree
+def _instrument(monkeypatch, root, crash=None):
+    """Patch the three primitives so each call on a path under ``root``
+    passes its crash points — after a write or a delete, before and
+    after a replace — and raise at ``crash`` = (step, point index).
+    Returns {step: number of points passed}."""
+    points = {1: 0, 2: 0, 3: 0}
 
-    def move(src, dst, *a, **kw):
-        moves["n"] += 1
-        if step < 3 and moves["n"] == step:
-            raise _Crash(f"crash at rename {step}")
-        return real_move(src, dst, *a, **kw)
+    def point(step):
+        if crash == (step, points[step]):
+            raise _Crash(f"crash at point {points[step]} of step {step}")
+        points[step] += 1
 
-    def rmtree(path, *a, **kw):
-        if step == 3 and moves["n"] == 2:
-            raise _Crash("crash before the aside delete")
-        return real_rmtree(path, *a, **kw)
+    def wrap(real, step, path_of, before=False):
+        def patched(*args, **kwargs):
+            if not str(path_of(*args)).startswith(root):
+                return real(*args, **kwargs)
+            if before:
+                point(step)
+            out = real(*args, **kwargs)
+            point(step)
+            return out
+        return patched
 
-    monkeypatch.setattr(shutil, "move", move)
-    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    monkeypatch.setattr(DataFrameWriter, "parquet", wrap(
+        DataFrameWriter.parquet, 1, lambda self, path, *a: path))
+    monkeypatch.setattr(os, "replace", wrap(
+        os.replace, 2, lambda src, dst, *a: dst, before=True))
+    monkeypatch.setattr(os, "remove", wrap(
+        os.remove, 3, lambda path, *a: path))
+    return points
 
 
-@pytest.mark.parametrize("step", [1, 2, 3])
-@pytest.mark.parametrize("entry", list(CASES))
+@pytest.mark.parametrize("entry,step", [
+    (entry, step) for entry in CASES for step in (1, 2, 3)
+    if step != 3 or entry not in _DELETES_NOTHING])
 def test_crashed_swap_recovers(spark, tmp_path_factory, monkeypatch,
                                entry, step):
-    _, rewrite, read = CASES[entry]
+    rewrite = CASES[entry][1]
     if entry not in _CLEAN:
         d = _fresh(spark, tmp_path_factory, entry, "clean")
+        before = _read(spark, d)
+        counts = _instrument(monkeypatch, d)
         rewrite(spark, d)
-        _CLEAN[entry] = read(spark, d)
+        monkeypatch.undo()
+        _CLEAN[entry] = (before, _read(spark, d), dict(counts))
+    before, clean, counts = _CLEAN[entry]
+    assert clean != before
+    # the writer reaches the step it is crashed at, and a writer that
+    # deletes in an uncrashed run is crashed at its deletes
+    assert counts[step]
+    assert (counts[3] == 0) == (entry in _DELETES_NOTHING)
 
-    d = _fresh(spark, tmp_path_factory, entry, "crashed")
-    before = read(spark, d)
-    _crash_at(monkeypatch, step)
-    with pytest.raises(_Crash):
-        rewrite(spark, d)
-    monkeypatch.undo()
+    for i in range(counts[step]):
+        d = _fresh(spark, tmp_path_factory, entry, f"crash{i}")
+        _instrument(monkeypatch, d, crash=(step, i))
+        with pytest.raises(_Crash):
+            rewrite(spark, d)
+        monkeypatch.undo()
 
-    healed = read(spark, d)
-    if step < 3:
-        assert healed == before
-    elif entry in _ONE_SWAP:
-        assert healed == _CLEAN[entry]
-    rewrite(spark, d)
-    assert read(spark, d) == _CLEAN[entry]
+        on_disk = _files(d)
+        healed = _read(spark, d)
+        assert healed in (before, clean), (step, i)
+        assert _files(d) == on_disk, (step, i)  # a read deletes nothing
+        if entry not in _NOT_IDEMPOTENT or healed == before:
+            rewrite(spark, d)
+            assert _read(spark, d) == clean, (step, i)
+        if healed == before:  # the re-run committed, which cleans up
+            assert _only_listed(d), (step, i)
+        Table(spark, d).commit({})  # so does any later commit
+        assert _only_listed(d) and _read(spark, d) == clean, (step, i)

@@ -15,8 +15,8 @@ representative slice of the engine's operator families:
   chain    T5  the q190 continuous-ELT shape at scale (r8): multi-
                micro-batch foreachBatch drain through
                run_stream_chain — normalize → rule split → real
-               final/ + quarantine/ parquet appends + batch-id
-               bookmarks — under the RocksDB provider; reports
+               final/ + quarantine/ parquet files committed with the
+               batch id — under the RocksDB provider; reports
                rows/s, routed row counts, checkpoint bytes.
   stream   T5  STATEFUL STREAMING drain (r4 judge item #6): the
                production state shape — RocksDB state-store provider
@@ -228,10 +228,11 @@ def main() -> int:
             # ---- chain family (r8): the q190 production shape at
             # generated scale — multi-micro-batch foreachBatch drain
             # through run_stream_chain (normalize → rule split →
-            # final/ + quarantine/ appends + batch-id bookmarks),
+            # final/ + quarantine/ rows committed with the batch id),
             # still under the RocksDB provider. This is what the
             # reference's nightly cron becomes as continuous ELT; the
             # figure includes the real parquet sink appends.
+            from elt_gluepipeline_spark.sources.table import Table
             from elt_gluepipeline_spark.streaming.chain import (
                 run_stream_chain)
             # seedgen value is uniform [0, 10000): rules route ~5% to
@@ -245,17 +246,15 @@ def main() -> int:
             t0 = time.time()
             run_stream_chain(
                 spark, source_dir=src_dir,
-                final_dir=f"{tmp}/final",
-                quarantine_dir=f"{tmp}/quarantine",
+                table_dir=f"{tmp}/chain",
                 checkpoint_dir=f"{tmp}/chain_ckpt",
-                bookmark_dir=f"{tmp}/bookmarks",
                 rules=chain_rules,
                 max_files_per_trigger=4)   # 32 staged files -> 8 batches
             timings["chain"] = round(time.time() - t0, 2)
-            extra["chain_final_rows"] = \
-                spark.read.parquet(f"{tmp}/final").count()
+            chain = Table(spark, f"{tmp}/chain")
+            extra["chain_final_rows"] = chain.read("final").count()
             extra["chain_quarantine_rows"] = \
-                spark.read.parquet(f"{tmp}/quarantine").count()
+                chain.read("quarantine").count()
             state_bytes = 0
             for root, _dirs, files in os.walk(f"{tmp}/chain_ckpt"):
                 state_bytes += sum(os.path.getsize(os.path.join(root, f))
