@@ -119,17 +119,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
     )
 
 
-def _epoch_seconds(col: str, dtype: str) -> F.Column:
-    """Whole seconds since epoch for numeric / timestamp / timestamp_ntz
-    columns — NTZ stays pure wall-clock arithmetic (no session-tz
-    dependence), plain timestamps use the session zone (engine pins UTC)."""
-    if dtype.startswith("timestamp"):
-        return F.expr(
-            "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
-            f"cast({col} as timestamp_ntz))")
-    return F.col(col).cast("long")
-
-
 def _epoch_micros(col: str, dtype: str) -> F.Column:
     """Microseconds since epoch — full timestamp precision. The exact
     band filter MUST compare at source precision: truncating to whole

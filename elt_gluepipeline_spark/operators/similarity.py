@@ -661,14 +661,6 @@ def _pq_subvec(s: int, w: int) -> Column:
     return F.slice("_v", s * w + 1, w)
 
 
-def _pq_sqd(sv: Column, c: list[float]) -> Column:
-    """Squared Euclidean distance of a subvector to a literal centroid
-    (sequential left-to-right fold — the order the SQL oracle mirrors)."""
-    lit_c = F.array(*[F.lit(x) for x in c])
-    return F.aggregate(F.zip_with(sv, lit_c, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, e: acc + e)
-
-
 def _pq_dists(s: int, w: int, book: list[list[float]]) -> Column:
     """Distances of a subvector to EVERY centroid, as ONE transform
     over a 2-D literal array instead of k separate fold expressions —

@@ -25,16 +25,23 @@ import shutil
 import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import Literal
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass(frozen=True)
 class QuerySpec:
+    """``runs_at_build``: what ``build()`` runs before returning a plan —
+    "none" (no Spark job once table footers are cached; checked per
+    spec by tests/test_e2e_chain.py), "jobs" (collects, driver loops,
+    artifact load-or-fit, staged writes) or "stream" (a drain)."""
+
     name: str
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL twin; None → rows-only check
     doc: str = ""
+    runs_at_build: Literal["none", "jobs", "stream"] = "none"
 
 
 # The driver's correctness gate records only the FIRST 50 registry
@@ -42,18 +49,21 @@ class QuerySpec:
 # ROTATION: the head holds every caller of the connected-components
 # and bucketed-merge operators (q56, q59, q65, q100, q103, q149, q172,
 # q196, q201), every builder writing session scratch dirs (q65, q74,
-# q141, q190, q200-q204), plus the rest of the previous head. Every
-# tail query below has a driver row from the round noted in its group
-# header. Tail entries still run everywhere else (pytest, bench,
-# tools/check_correctness). The near-dup queries changed in round 12
-# (q18, q41, q63) are in the head too; a group header's count is the
-# size of that round's record.
+# q134, q135, q141, q144, q151, q190, q200-q204), q18, q41, q63, q123
+# and q140, plus the rest of the previous head. Each group below is a
+# driver record of its queries, taken while they were in the head; tail
+# entries still run everywhere else (pytest, bench, check_correctness).
 _DEPRIORITIZED = (
-    # --- latest record: round 12 (3 queries rotated out for q18, q41, q63) ---
+    # --- rotated out for q123, q134, q135, q144 ---
+    "q178_dsir_weights",
+    "q179_js_drift",
+    "q180_quantile_sketch",
+    "q181_quality_filter",
+    # --- rotated out for q18, q41, q63 ---
     "q182_stream_quantiles",
     "q183_stream_decontaminate",
     "q184_hard_negatives",
-    # --- latest driver record: round 12 (11 queries rotated out for the operator callers and scratch-dir builders above) ---
+    # --- rotated out for the operator callers and scratch-dir builders above ---
     "q137_jpeg_probe",
     "q146_html_extract",
     "q147_domain_cap",
@@ -62,17 +72,16 @@ _DEPRIORITIZED = (
     "q94_priority_argmax",
     "q96_bitmap_distinct",
     "q145_copurchase_pagerank",
-    "q144_shard_writer",
     "q143_compressed_text",
     "q142_gif_probe",
-    # --- latest driver record: round 7 (6 queries; the alphabetically-last 7 of the r7 block less q190 — the first 43 are in the r11 head) ---
+    # --- the q185-q191 block less q190 ---
     "q185_curation_funnel",
     "q186_vocab_coverage",
     "q187_interpolate",
     "q188_source_scorecard",
     "q189_lsh_recall_sampled",
     "q191_image_dhash_dedup",
-    # --- latest driver record: round 8 (50 queries, the q01-q52-era head) ---
+    # --- the q01-q52-era head ---
     "q01_line_revenue",
     "q02_clv",
     "q03_clv_tiered",
@@ -121,7 +130,7 @@ _DEPRIORITIZED = (
     "q50_stream_enrich",
     "q51_order_timeline",
     "q52_status_cube",
-    # --- latest driver record: round 9 (44 queries, the r9 rotation head: q192-q199 + q53-q56 + the 38 round-4-era records) ---
+    # --- the q101-q117, q192-q199 and q53-q84 head ---
     "q101_price_qty_regression",
     "q104_event_cooccurrence",
     "q106_stream_session_window",
@@ -166,7 +175,7 @@ _DEPRIORITIZED = (
     "q82_rerank",
     "q83_salted_enrich",
     "q84_anomaly_days",
-    # --- latest driver record: round 10 (46 queries, the r10 rotation head: q200-q202 + q85-q99 block + round-5-era records) ---
+    # --- the q07-q11, q57, q73, q76, q77 and q85-q139 head ---
     "q07_loyalty_impact",
     "q08_top_locations",
     "q09_discount_effect",
@@ -179,7 +188,6 @@ _DEPRIORITIZED = (
     "q120_histogram_quantiles",
     "q121_unpivot",
     "q122_percentile_rank",
-    "q123_basket_affinity",
     "q124_cohort_ltv",
     "q125_share_shift",
     "q126_passage_dedupe",
@@ -190,8 +198,6 @@ _DEPRIORITIZED = (
     "q131_hll_portable",
     "q132_png_probe",
     "q133_bpe_encode",
-    "q134_json_roundtrip",
-    "q135_orc_roundtrip",
     "q136_stream_hll",
     "q138_sequence_pack",
     "q139_greedy_pack",

@@ -17,15 +17,14 @@ Stage mapping inside each micro-batch:
 
 Exactly-once discipline (SURVEY §7.4 crash-window invariant):
 ``final`` and ``quarantine`` are two sub-tables of ONE manifest table
-(``sources.table``) at ``table_dir``, and the manifest also holds the
-id of the last batch whose rows it lists. A micro-batch writes its
-clean and quarantined rows as new files, then commits both together
-with its batch_id in one manifest write. On restart the streaming
-runtime replays the in-flight batch with the SAME batch_id: if its
-commit landed, the handler sees batch_id <= the committed id and skips
-it; if the crash came before the commit, its files were never listed
-(the replay's first write deletes them) and the replay writes the
-batch once.
+(``sources.table``) at ``table_dir``. A micro-batch writes its clean
+and quarantined rows as new files, then commits both in one manifest
+write with the streaming query id and batch id, which
+``streaming.stream.replay_guard`` checks: a replayed batch whose
+commit landed is skipped; a crash before the commit left its files
+unlisted (the replay's first write deletes them), so the replay writes
+the batch once; a new query after a lost checkpoint rebuilds both
+sub-tables from its batch 0.
 That closes the at-least-once window of the reference's
 commit-after-write bookmark (go-incremental-ingest-elt.py:305-318):
 the stream chain is exactly-once.
@@ -41,23 +40,26 @@ from pyspark.sql import functions as F
 from ..functions.conform import normalize_names, normalize_strings
 from ..operators.quality import extract_violations, split_clean
 from ..sources.table import Table
-from .stream import drain_foreach_batch
+from .stream import drain_foreach_batch, replay_guard
 
 
 def make_chain_batch_handler(
     *,
     table_dir: str,
+    checkpoint_dir: str,
     rules: Sequence[tuple[str, str]],
 ) -> Callable[[DataFrame, int], None]:
-    """The per-micro-batch transform+quality+sink stage. Exposed
-    separately so tests can drive the replay-idempotence contract
-    directly (call it twice with the same batch_id — the second call
-    must be a no-op)."""
+    """The per-micro-batch transform+quality+sink stage of the query
+    checkpointed at ``checkpoint_dir``. Exposed separately so tests can
+    drive the replay-idempotence contract directly (call it twice with
+    the same batch_id — the second call must be a no-op)."""
 
     def handle(bdf: DataFrame, batch_id: int) -> None:
         table = Table(bdf.sparkSession, table_dir)
-        if batch_id <= table.state.get("batch_id", -1):
-            return  # replayed micro-batch: already committed
+        guard = replay_guard(table, checkpoint_dir, batch_id)
+        if guard is None:
+            return
+        query_id, fresh = guard
         out = normalize_strings(normalize_names(bdf))
         # the SAME operators the batch pipeline's quality stage uses
         # (pipeline.stage_quality) — identical row routing is the
@@ -66,10 +68,11 @@ def make_chain_batch_handler(
             out, [(name, F.expr(sql)) for name, sql in rules])
         clean, bad = split_clean(tagged)
         bad = bad.withColumn("violated", F.array_join("violated", ","))
-        table.commit({sub: table.appended(sub, table.write(sub, df))
-                      for sub, df in (("final", clean),
-                                      ("quarantine", bad))},
-                     batch_id=batch_id)
+        entries = {sub: table.write(sub, df)
+                   for sub, df in (("final", clean), ("quarantine", bad))}
+        if not fresh:  # append to the committed rows
+            entries = {s: table.appended(s, e) for s, e in entries.items()}
+        table.commit(entries, batch_id=batch_id, query_id=query_id)
 
     return handle
 
@@ -94,7 +97,8 @@ def run_stream_chain(
     so a multi-file source genuinely exercises multi-batch commits, not
     one giant batch."""
     schema = spark.read.parquet(source_dir).schema
-    handler = make_chain_batch_handler(table_dir=table_dir, rules=rules)
+    handler = make_chain_batch_handler(
+        table_dir=table_dir, checkpoint_dir=checkpoint_dir, rules=rules)
     src = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(source_dir))

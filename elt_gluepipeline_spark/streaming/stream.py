@@ -11,12 +11,16 @@ whole-history keep-latest window.
 from __future__ import annotations
 
 import itertools
+import json
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+from ..sources.table import Table
 
 
 def stream_ingest(
@@ -98,6 +102,28 @@ def drain_foreach_batch(source: DataFrame, fn, checkpoint_path: str,
                .trigger(availableNow=True)
                .start())
     q.awaitTermination()
+
+
+def replay_guard(table: Table, checkpoint_path: str,
+                 batch_id: int) -> tuple[str, bool] | None:
+    """None if the query checkpointed at ``checkpoint_path`` already
+    committed ``batch_id`` to ``table`` (a replay: skip it), else
+    ``(query_id, fresh)`` to commit with. ``fresh`` is a new query's
+    batch 0 (after a lost checkpoint: a new id in
+    ``<checkpoint>/metadata``, re-reading every source file), which
+    rebuilds the table from empty; a new query at a later batch raises
+    ``ValueError``."""
+    with open(os.path.join(checkpoint_path, "metadata"),
+              encoding="utf-8") as fh:
+        query_id = json.loads(fh.readline())["id"]
+    if table.state.get("query_id") == query_id:
+        replay = batch_id <= table.state["batch_id"]
+        return None if replay else (query_id, False)
+    if batch_id == 0:
+        return query_id, True
+    raise ValueError(f"{table.root} was last committed by query "
+                     f"{table.state.get('query_id')}, but query {query_id} "
+                     f"is at batch {batch_id}: one streaming query per table")
 
 
 _MEM_SINK_SEQ = itertools.count(1)

@@ -12,26 +12,20 @@ them together with both ids in one manifest write (the
 commit-after-write discipline of sources.state.BookmarkStore, without
 its window: data and bookmark are one write).
 
-Replay guard: within one query, a batch with ``batch_id <=`` the
-committed id was already applied and is skipped, and any other batch
-merges into the committed state, its predecessor. A lost checkpoint
-starts a new query (a new id in ``<checkpoint>/metadata``) that
-re-reads every source file from batch 0, however it splits them into
-batches, so its batch 0 rebuilds from an empty state. So at-least-once
-delivery composes to exactly-once state, and the replaced state's
-files are deleted by the commit: the disk holds one generation.
+``streaming.stream.replay_guard`` skips a replayed batch, merges any
+other batch into the committed state and rebuilds from empty at a new
+query's batch 0, so at-least-once delivery composes to exactly-once
+state; the commit deletes the replaced state's files.
 """
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.table import Table
-from .stream import drain_foreach_batch
+from .stream import drain_foreach_batch, replay_guard
 
 _DATA = "data"
 
@@ -41,32 +35,17 @@ def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
     return Table(spark, snapshot_dir).read(_DATA)
 
 
-def _query_id(checkpoint_path: str) -> str:
-    """The id of the streaming query checkpointed at ``checkpoint_path``:
-    fixed for the checkpoint's life, new after it is lost."""
-    with open(os.path.join(checkpoint_path, "metadata"),
-              encoding="utf-8") as fh:
-        return json.loads(fh.readline())["id"]
-
-
 def _merge_batch(spark: SparkSession, snapshot_dir: str,
                  checkpoint_path: str, batch_id: int,
                  step: Callable[[DataFrame | None], DataFrame]) -> None:
     """Commit ``step(predecessor)`` as the state after ``batch_id``,
     unless this query already committed that batch (a replay)."""
     table = Table(spark, snapshot_dir)
-    query_id = _query_id(checkpoint_path)
-    if table.state.get("query_id") == query_id:
-        if batch_id <= table.state["batch_id"]:
-            return
-        prev = table.read(_DATA)
-    elif batch_id == 0:
-        prev = None  # a new query re-reads the source from its start
-    else:
-        raise ValueError(
-            f"{snapshot_dir} was last committed by query "
-            f"{table.state.get('query_id')}, but query {query_id} is at "
-            f"batch {batch_id}: one streaming query per snapshot")
+    guard = replay_guard(table, checkpoint_path, batch_id)
+    if guard is None:
+        return
+    query_id, fresh = guard
+    prev = None if fresh else table.read(_DATA)
     table.commit({_DATA: table.write(_DATA, step(prev))},
                  batch_id=batch_id, query_id=query_id)
 

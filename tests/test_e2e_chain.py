@@ -94,9 +94,12 @@ def test_sql_front_door(spark, sf_dir):
     # SURVEY §7.1 engine/sql.py: every declared query is addressable
     # from spark.sql, and compositions over the views run the engine's
     # plans
+    from elt_gluepipeline_spark.plans import registry
     from elt_gluepipeline_spark.sql import register_all
     names = register_all(spark, sf_dir)
     assert "q02_clv" in names and len(names) > 50
+    assert names == [n for n, s in registry().items()
+                     if s.runs_at_build == "none"]
     direct = spark.sql("SELECT COUNT(*) AS n FROM q02_clv").collect()[0].n
     assert direct > 0
     composed = spark.sql("""
@@ -109,26 +112,57 @@ def test_sql_front_door(spark, sf_dir):
 
 
 def test_sql_front_door_default_registration_is_lazy(spark, sf_dir):
-    """The laziness CONTRACT of register_all: with streaming/eager
-    opted out, registration builds logical plans only — zero Spark
-    jobs run (a query creeping into the default set with an eager
-    collect/drain shows up here as submitted jobs)."""
-    from elt_gluepipeline_spark.sql import load_tables, register_all
+    """The laziness CONTRACT of ``QuerySpec.runs_at_build``: building a
+    "none" spec constructs a logical plan only. Each one builds in its
+    own job group and must submit zero Spark jobs, so a builder that
+    gains a collect, a count or a lazy checkpoint that AQE runs at
+    plan time is named here. ``register_all`` registers exactly these
+    specs (``test_sql_front_door``)."""
+    from elt_gluepipeline_spark.plans import registry
+    from elt_gluepipeline_spark.sql import load_tables
 
     sc = spark.sparkContext
-    # pre-warm the footer-schema cache OUTSIDE the counted group so the
-    # bound below is independent of test order (a solo run would
-    # otherwise count one schema job per table — legitimate reads, not
-    # eager creep)
+    # warm the footer-schema cache first: schema reads are legitimate,
+    # and without this the first builder to read a table would pay them
     load_tables(spark, sf_dir)
-    sc.setJobGroup("register_lazy", "laziness guard")
-    names = register_all(spark, sf_dir)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("register_lazy"))
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(names) > 100
-    # the only permissible jobs with a warm schema cache are the two
-    # lazy-localCheckpoint plan finalizations (q123/q140 — AQE runs the
-    # checkpointed stage when the RDD is materialized at registration);
-    # a query creeping into the default set with an eager collect/drain
-    # blows well past this bound
-    assert n_jobs <= 4, f"registration ran {n_jobs} Spark jobs"
+    specs = registry()
+    assert {s.runs_at_build for s in specs.values()} == {
+        "none", "jobs", "stream"}
+    lazy = {n: s for n, s in specs.items() if s.runs_at_build == "none"}
+    assert len(lazy) > 100
+    try:
+        for name, spec in lazy.items():
+            sc.setJobGroup(f"build:{name}", "laziness guard")
+            spec.build(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    ran = {name: n for name in lazy if (n := len(
+        sc.statusTracker().getJobIdsForGroup(f"build:{name}")))}
+    assert not ran, f"runs_at_build='none' specs ran Spark jobs: {ran}"
+
+
+def test_staging_builders_write_under_session_scratch_root(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """q134, q135, q151 (``_stage_roundtrip``) and q144 write staged
+    files at build time. They go under the session's
+    ``plans.scratch_dir`` root (removed at exit), never to a
+    dataset-keyed path in the temp dir, which every session on the
+    dataset shares and where one build's overwrite deletes another
+    session's files."""
+    import os
+    import tempfile
+
+    from elt_gluepipeline_spark.plans import registry, scratch_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    specs = registry()
+    for name in ("q134_json_roundtrip", "q135_orc_roundtrip",
+                 "q151_xml_roundtrip", "q144_shard_writer"):
+        specs[name].build(spark, sf_dir)
+    leaked = [p.name for p in tmp_path.iterdir() if p.name.startswith(
+        ("spark_graft_stage_", "spark_graft_shards_"))]
+    assert not leaked, leaked
+    root = os.path.dirname(scratch_dir(spark, sf_dir, "x"))
+    assert {"stage_json", "stage_orc", "stage_xml", "shards"} <= set(
+        os.listdir(root))

@@ -602,8 +602,12 @@ def test_chain_handler_replay_is_idempotent(spark, tmp_path, monkeypatch):
     from elt_gluepipeline_spark.streaming.chain import (
         make_chain_batch_handler)
 
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "metadata").write_text('{"id":"query-0"}\n')
     table_dir = str(tmp_path / "chain")
     handler = make_chain_batch_handler(table_dir=table_dir,
+                                       checkpoint_dir=str(ckpt),
                                        rules=(("neg", "v <= 0"),))
 
     def counts():
@@ -628,6 +632,7 @@ def test_chain_handler_replay_is_idempotent(spark, tmp_path, monkeypatch):
     # crash between the final/ write and the commit, then replay
     crashed = str(tmp_path / "crashed")
     handler = make_chain_batch_handler(table_dir=crashed,
+                                       checkpoint_dir=str(ckpt),
                                        rules=(("neg", "v <= 0"),))
     hundred = spark.range(100).selectExpr("id", "1.0 AS v", "'x' AS tag")
     real_parquet, calls = DataFrameWriter.parquet, []
@@ -654,7 +659,13 @@ def test_stream_chain_multibatch_equals_batch_route(spark, sf_dir,
     """Drain the full foreachBatch chain over a 3-file source with
     maxFilesPerTrigger=1 (3 genuine micro-batches) and check final/ +
     quarantine/ is a clean partition of the input routed identically
-    to the batch quality stage."""
+    to the batch quality stage. Then a 4th file arrives, the
+    checkpoint is lost and the new query drains 2 files per batch: its
+    batches 0 and 1 cover other files than the committed ones did, and
+    the result must equal the batch route over all 4 files."""
+    import os
+    import shutil
+
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.functions.conform import (
@@ -670,20 +681,32 @@ def test_stream_chain_multibatch_equals_batch_route(spark, sf_dir,
     li = read_table(spark, sf_dir, "lineitem")
     src = str(tmp_path / "src")
     li.repartitionByRange(3, "l_orderkey").write.parquet(src)
-    run_stream_chain(
-        spark, source_dir=src, table_dir=str(tmp_path / "chain"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        rules=rules, max_files_per_trigger=1)
 
-    table = Table(spark, str(tmp_path / "chain"))
-    got_clean = table.read("final")
-    got_quar = table.read("quarantine")
-    want_clean, want_quar = split_clean(extract_violations(
-        normalize_strings(normalize_names(li)),
-        [(n, F.expr(s)) for n, s in rules]))
-    assert got_clean.count() + got_quar.count() == li.count()
-    assert got_clean.count() == want_clean.count()
-    assert got_quar.count() == want_quar.count()
-    # value-level: clean side matches the batch route exactly
-    assert got_clean.exceptAll(want_clean).count() == 0
-    assert want_clean.exceptAll(got_clean).count() == 0
+    def drain_and_check(ckpt, files_per_batch):
+        run_stream_chain(
+            spark, source_dir=src, table_dir=str(tmp_path / "chain"),
+            checkpoint_dir=str(tmp_path / ckpt),
+            rules=rules, max_files_per_trigger=files_per_batch)
+        rows = spark.read.parquet(src)
+        table = Table(spark, str(tmp_path / "chain"))
+        got_clean = table.read("final")
+        got_quar = table.read("quarantine")
+        want_clean, want_quar = split_clean(extract_violations(
+            normalize_strings(normalize_names(rows)),
+            [(n, F.expr(s)) for n, s in rules]))
+        want_quar = want_quar.withColumn(
+            "violated", F.array_join("violated", ","))
+        assert got_clean.count() + got_quar.count() == rows.count()
+        # value-level: both sides match the batch route exactly
+        for got, want in ((got_clean, want_clean), (got_quar, want_quar)):
+            assert got.count() == want.count()
+            assert got.exceptAll(want).count() == 0
+            assert want.exceptAll(got).count() == 0
+
+    drain_and_check("ckpt1", 1)
+    # a 4th file with new keys, then the checkpoint is lost
+    (li.limit(40).withColumn("l_orderkey", F.col("l_orderkey") + 10**9)
+       .coalesce(1).write.mode("append").parquet(src))
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 4
+    shutil.rmtree(str(tmp_path / "ckpt1"))
+    drain_and_check("ckpt2", 2)

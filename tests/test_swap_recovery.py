@@ -154,23 +154,29 @@ def _chain_batch(spark, batch_id):
     return spark.createDataFrame(rows, "id long, v double, tag string")
 
 
+def _checkpoint(d):
+    """A streaming query's checkpoint dir next to the table ``d``."""
+    ckpt = os.path.join(os.path.dirname(d), "ckpt")
+    os.makedirs(ckpt, exist_ok=True)
+    with open(os.path.join(ckpt, "metadata"), "w") as fh:
+        fh.write('{"id":"query-0"}\n')
+    return ckpt
+
+
 def _chain_seed(spark, d):
-    make_chain_batch_handler(table_dir=d, rules=_RULES)(
-        _chain_batch(spark, 0), 0)
+    make_chain_batch_handler(table_dir=d, checkpoint_dir=_checkpoint(d),
+                             rules=_RULES)(_chain_batch(spark, 0), 0)
 
 
 def _chain_next(spark, d):
-    make_chain_batch_handler(table_dir=d, rules=_RULES)(
-        _chain_batch(spark, 1), 1)
+    make_chain_batch_handler(table_dir=d, checkpoint_dir=_checkpoint(d),
+                             rules=_RULES)(_chain_batch(spark, 1), 1)
 
 
 def _sink_handler(sink, spark, d, **kw):
     """The per-batch handler ``sink`` drains its source with, captured
     instead of starting a stream."""
-    ckpt = os.path.join(os.path.dirname(d), "ckpt")
-    os.makedirs(ckpt, exist_ok=True)
-    with open(os.path.join(ckpt, "metadata"), "w") as fh:
-        fh.write('{"id":"query-0"}\n')  # a streaming query's checkpoint
+    ckpt = _checkpoint(d)
     handlers = []
     real = upsert.drain_foreach_batch
     upsert.drain_foreach_batch = lambda source, handler, ckpt: \

@@ -9,8 +9,9 @@ catch a plan-shape regression (a broadcast silently becoming a
 sort-merge join, a new Exchange creeping into a fused stage) before
 it costs wall-clock at scale — timing alone can't attribute WHY.
 
-Streaming/eager queries are skipped (their builds execute work;
-their shapes are pinned by tests instead).
+Only specs with ``runs_at_build == "none"`` are fingerprinted: the
+others execute work when built (their shapes are pinned by tests
+instead).
 
 Usage: python tools/plan_stats.py [sf_dir] [query ...]
 """
@@ -26,8 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from elt_gluepipeline_spark.plans import registry  # noqa: E402
 from elt_gluepipeline_spark.session import get_spark  # noqa: E402
-from elt_gluepipeline_spark.sql import (EAGER_QUERIES,  # noqa: E402
-                                        STREAMING_QUERIES)
 
 # substrings counted in the formatted physical plan
 MARKERS = {
@@ -61,9 +60,7 @@ def main() -> int:
     out: dict[str, dict[str, int]] = {}
     red = []
     for name, spec in registry().items():
-        if only and name not in only:
-            continue
-        if name in STREAMING_QUERIES or name in EAGER_QUERIES:
+        if (only and name not in only) or spec.runs_at_build != "none":
             continue
         fp = fingerprint(spec.build(spark, sf_dir))
         out[name] = {k: v for k, v in fp.items() if v}
