@@ -70,18 +70,8 @@ def has_min_tokens(text: Column, k: int) -> Column:
     > 0``: the shingle array is non-empty iff the whitespace token
     count reaches k (grams of a >=k-token doc are non-empty strings,
     so array_distinct keeps at least one; null text stays null and is
-    dropped by a filter either way).
-
-    Round-11 optimization (guide §7.2 "duplicated UDF evaluation"):
-    filtering on ``size(shingles) > 0`` AFTER projecting the shingle
-    column makes Catalyst push the predicate below the Project by
-    substituting the full interpreted shingling HOF into the Filter —
-    the dominant per-row expression of the text-dedup family then
-    evaluates TWICE per row (measured in the committed before-plans:
-    Filter(n) and Project(n+1) both carry the whole
-    transform/array_distinct tree). Filtering on the token count
-    BEFORE the projection keeps the plan at one regex split in the
-    filter + one full shingling in the project."""
+    dropped by a filter either way). Filter on it BELOW the shingle
+    projection — see :func:`shingle_base`."""
     return F.size(F.split(F.trim(text), r"\s+")) >= k
 
 
@@ -95,14 +85,28 @@ def jaccard(a: Column, b: Column) -> Column:
 
 def shingle_base(df: DataFrame, id_col: str, text_col: str,
                  block_cols: list[Column], *, k: int = 3) -> DataFrame:
-    """The SHARED signature stage of the Jaccard dedup family:
+    """The one shingle stage of the near-dup family:
     ``(doc_id, _b0.., shingles)`` with empty-shingle docs dropped.
-    Composites that run several dedup passes over the same documents
-    (q100: phase-1 corpus dedupe + incremental probe) compute this
-    ONCE, localCheckpoint it, and pass it to ``blocked_jaccard_pairs
-    (base=...)`` / ``incremental_jaccard_dedupe(tagged_base=...)`` —
-    shingling is the scan-heavy part of both plans, and at corpus
-    scale it is the write-once artifact the production loop persists.
+
+    Single-evaluation idiom — the interpreted shingling HOF is the
+    dominant per-row expression of every Jaccard operator, and three
+    rules keep it at one evaluation per row:
+
+    - ``has_min_tokens`` filters the raw text BELOW the projection. A
+      ``size(shingles) > 0`` filter above it would be pushed down by
+      Catalyst with the whole shingle expression substituted in, so
+      the HOF would run in the Filter and again in the Project.
+    - Consumers explode the base with ``explode_outer``. The base is
+      pre-filtered to non-empty arrays, so it emits the same rows as
+      ``explode``, but unlike ``explode`` over an attribute it infers
+      no ``size(shingles) > 0`` predicate for pushdown to expand into
+      a second shingling below the projection.
+    - A base with several consumers is persisted (``register_cache``,
+      or a caller's ``localCheckpoint``): the persisted relation stops
+      predicate pushdown and re-evaluation, so every consumer reads
+      the arrays once computed. Operators that build their own base
+      persist it; a caller passing ``base=`` manages its
+      materialization (q100 checkpoints one base for three passes).
     """
     df = ensure_min_partitions(df)
     return df.filter(has_min_tokens(F.col(text_col), k)).select(
@@ -112,29 +116,70 @@ def shingle_base(df: DataFrame, id_col: str, text_col: str,
     )
 
 
+def shingle_base_cached(df: DataFrame, id_col: str, text_col: str, *,
+                        k: int = 3) -> DataFrame:
+    """Registry-persisted unblocked :func:`shingle_base`, the shared
+    ``(doc_id, shingles)`` input of the MinHash/prefix-filter family;
+    harnesses release it between queries."""
+    return register_cache(shingle_base(df, id_col, text_col, [], k=k))
+
+
+def _verify_jaccard(common: DataFrame, n_a: DataFrame, n_b: DataFrame,
+                    threshold: float, *, a: str = "id_a",
+                    b: str = "id_b") -> DataFrame:
+    """The exact verify every candidate filter feeds: ``common`` holds
+    (a, b, c) with c = |A∩B| counted as one row per shared distinct
+    shingle, ``n_a``/``n_b`` hold (id, n) shingle-set sizes. Returns
+    (a, b, jaccard) with jaccard = c / (n_a + n_b - c) >= threshold —
+    integer set sizes, so the double is the same in every engine."""
+    return (common.join(n_a.toDF(a, "n_a"), a).join(n_b.toDF(b, "n_b"), b)
+                  .withColumn("jaccard",
+                              F.col("c") / (F.col("n_a") + F.col("n_b")
+                                            - F.col("c")))
+                  .filter(F.col("jaccard") >= threshold)
+                  .select(a, b, "jaccard"))
+
+
+def _check_threshold(threshold: float) -> None:
+    if not threshold > 0.0:
+        raise ValueError(
+            f"inverted-index plan requires threshold > 0, got {threshold}")
+
+
+def _lsh_params(n_hashes: int, bands: int, band_hash):
+    """(rows_per_band, band_hash) for the LSH entry points; the band
+    hash defaults to xxhash64."""
+    if bands < 1 or n_hashes % bands:
+        raise ValueError(
+            f"bands must divide n_hashes, got bands={bands}, "
+            f"n_hashes={n_hashes}")
+    return n_hashes // bands, band_hash or F.xxhash64
+
+
 def blocked_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                           block_cols: list[Column], *, k: int = 3,
                           threshold: float = 0.4,
-                          base: DataFrame | None = None,
-                          persist_base: bool = True) -> DataFrame:
+                          base: DataFrame | None = None) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs WITHIN blocks, via an
     inverted-index similarity join (SSJoin shape).
 
     Pass ``base`` (a precomputed ``shingle_base`` frame, possibly
     checkpointed) to skip the signature stage — shared-stage reuse
-    for multi-pass composites.
+    for multi-pass composites. Without it the operator builds and
+    persists its own: the base feeds four consumers (both
+    inverted-index sides and both size lookups).
 
     Instead of materializing all block-local pairs and intersecting
     their shingle arrays per pair (quadratic in block size, interpreted
     array ops), explode the distinct shingles and self-join on
     (block, shingle): each shared shingle yields one pair row, so
-    COUNT(*) per (id_a, id_b) IS the intersection size, and
-    jaccard = c / (n_a + n_b - c). Pairs sharing no shingle never
-    materialize — identical results for any threshold > 0, but the
-    join output is proportional to actual overlap, not to block².
-    Every stage is codegen'd (no higher-order array functions in the
-    hot path) and shuffles key on (block, shingle) — diverse keys, so
-    no single reducer sees a block's full cross product.
+    COUNT(*) per (id_a, id_b) IS the intersection size. Pairs sharing
+    no shingle never materialize — identical results for any
+    threshold > 0, but the join output is proportional to actual
+    overlap, not to block². Every stage is codegen'd (no higher-order
+    array functions in the hot path) and shuffles key on (block,
+    shingle) — diverse keys, so no single reducer sees a block's full
+    cross product.
 
     Recall is exact WITHIN blocks; overall recall depends on the
     caller's blocking. Hard-bucketed keys (e.g. floor(len/10)) miss
@@ -142,29 +187,12 @@ def blocked_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     pass overlapping buckets (two shifted length keys, union the pair
     sets) or use the LSH path, whose banding has no boundary effect.
     """
-    assert threshold > 0.0, "inverted-index plan requires threshold > 0"
+    _check_threshold(threshold)
     if base is None:
-        # base feeds FOUR consumers below (both inverted-index sides +
-        # both size lookups) — persist the internally-built one so the
-        # shingling HOF evaluates once per row, not four times
-        # (callers passing their own base manage its materialization
-        # themselves, e.g. q100's localCheckpoint).
-        #
-        # ``persist_base=False`` is for callers whose consumer is an
-        # iterative eager-checkpoint loop (connected components over
-        # these pairs): there the disk-backed base persist measured
-        # slower and slow-tailed, while flat consumers (q18) measured
-        # faster with it. Either way the pairs are identical.
-        base = shingle_base(df, id_col, text_col, block_cols, k=k)
-        if persist_base:
-            base = register_cache(base)
+        base = register_cache(
+            shingle_base(df, id_col, text_col, block_cols, k=k))
     bkeys = [f"_b{i}" for i in range(len(block_cols))]
-    sizes = base.select("doc_id", F.size("shingles").alias("n"))
-    # explode_outer: base is pre-filtered to non-empty shingles, so the
-    # outer variant emits identical rows — but (unlike plain explode over
-    # an attribute) InferFiltersFromGenerate infers no size>0 predicate,
-    # which pushdown would otherwise expand into a SECOND per-row
-    # evaluation of the shingling HOF below the projection (round-11).
+    sizes = base.select("doc_id", F.size("shingles"))
     inv = base.select(*bkeys, "doc_id",
                       F.explode_outer("shingles").alias("s"))
     a = inv.select(*bkeys, F.col("doc_id").alias("id_a"), "s")
@@ -173,13 +201,7 @@ def blocked_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                 .filter(F.col("id_a") < F.col("id_b"))
                 .groupBy("id_a", "id_b")
                 .agg(F.count(F.lit(1)).alias("c")))
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    return (common.join(na, "id_a").join(nb, "id_b")
-                  .withColumn("jaccard",
-                              F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c")))
-                  .filter(F.col("jaccard") >= threshold)
-                  .select("id_a", "id_b", "jaccard"))
+    return _verify_jaccard(common, sizes, sizes, threshold)
 
 
 class PortableMinhashFamily:
@@ -229,39 +251,13 @@ def portable_band_hash(*cols: Column) -> Column:
     return portable_hash60(F.concat_ws("#", *[c.cast("string") for c in cols]))
 
 
-def shingle_base_cached(df: DataFrame, id_col: str, text_col: str, *,
-                        k: int = 3) -> DataFrame:
-    """PERSISTED (doc_id, shingles) projection of a corpus, pre-filtered
-    to docs with at least one shingle — the shared input of the
-    MinHash/prefix-filter family. The interpreted shingling HOF is the
-    dominant per-row expression of every Jaccard operator; a plan that
-    references the projection N times evaluates it N times unless the
-    subtree is persisted (minhash_lsh_pairs referenced it FIVE times:
-    signatures + both verify-side postings + both size lookups —
-    round-11 profile). The ``has_min_tokens`` precondition sits BELOW
-    the projection, on the raw text column, so Catalyst cannot clone
-    the shingle expression into a pushed predicate (single-evaluation
-    idiom, see :func:`has_min_tokens`).
-
-    Registered with the operator-cache registry — harnesses release it
-    between queries; at production scale this is the write-once shingle
-    artifact a dedup loop would persist explicitly.
-    """
-    return register_cache(
-        ensure_min_partitions(df)
-        .filter(has_min_tokens(F.col(text_col), k))
-        .select(F.col(id_col).alias("doc_id"),
-                word_shingles(F.col(text_col), k).alias("shingles")))
-
-
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str, *,
-                       k: int = 3, n_hashes: int = 32,
-                       pair_family: PortableMinhashFamily | None = None,
-                       base: DataFrame | None = None
+def minhash_signatures(base: DataFrame, *, n_hashes: int = 32,
+                       pair_family: PortableMinhashFamily | None = None
                        ) -> DataFrame:
-    """MinHash signatures as wide columns (_h0.._hN): explode distinct
-    shingles, hash each with n seeds in one codegen'd projection, then
-    min-aggregate per document.
+    """MinHash signatures as wide columns (_h0.._hN) over a
+    :func:`shingle_base` frame: explode distinct shingles, hash each
+    with n seeds in one codegen'd projection, then min-aggregate per
+    document.
 
     The explode→min-agg shape beats per-row higher-order array
     expressions ~10×: projections and hash aggregates are whole-stage
@@ -272,37 +268,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str, *,
     ``PortableMinhashFamily`` for engine-reproducible signatures (one
     md5 per shingle, n derived universal hashes).
     """
-    # no size(shingles)>0 filter, and the shingling HOF is inlined
-    # INTO the explode: the only consumer is this explode, which
-    # emits nothing for an empty/null array, so the old filter was
-    # semantically inert — but it (and, for an exploded ATTRIBUTE,
-    # InferFiltersFromGenerate's size>0 clone of it) made Catalyst
-    # push the full interpreted shingling tree into a predicate below
-    # the projection, evaluating it TWICE per row (round-11
-    # before-plans). A generator over a non-trivial expression infers
-    # no filter, so this shape is the single-evaluation one.
-    #
-    # ``base``: a persisted (doc_id, shingles) frame from
-    # :func:`shingle_base_cached` — callers that ALSO need the arrays
-    # for an exact verify (minhash_lsh_pairs) pass it so the corpus is
-    # shingled once, not once per consumer. Exploding the CACHED array
-    # column emits exactly the rows the inline expression would (the
-    # base is pre-filtered to non-empty; the inferred size>0 predicate
-    # is one comparison on the cached array, not a re-shingle). When
-    # passed, ``df``/``text_col``/``k`` are IGNORED — the base must
-    # have been built from the same corpus with the same k (schema
-    # asserted; ADVICE r11 item #1 — the param also used to shadow the
-    # module-level shingle_base function, hence the rename).
-    if base is not None:
-        assert set(base.columns) == {"doc_id", "shingles"}, (
-            f"minhash_signatures base must be a (doc_id, shingles) frame "
-            f"from shingle_base_cached, got columns {base.columns}")
-        exploded = base.select("doc_id",
-                               F.explode("shingles").alias("s"))
-    else:
-        exploded = ensure_min_partitions(df).select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(word_shingles(F.col(text_col), k)).alias("s"))
+    exploded = base.select("doc_id", F.explode_outer("shingles").alias("s"))
     if pair_family is not None:
         assert pair_family.n == n_hashes
         prep = exploded.select("doc_id", *pair_family.prepare(F.col("s")))
@@ -311,10 +277,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str, *,
         # ONE xxhash64 per shingle, n hashes derived by xor with fixed
         # random masks — the same min-wise family the portable path
         # uses, on a JVM-native base hash. n separate xxhash64(s, i)
-        # calls were 32 inlined copies of the full hash routine in one
-        # whole-stage-codegen unit: ~5s of one-time janino compile
-        # (the r5 judge's q17 bench outlier) AND 32x the per-shingle
-        # hash arithmetic on the map side — the hot path at scale.
+        # calls would be n inlined copies of the full hash routine in
+        # one whole-stage-codegen unit: seconds of one-time janino
+        # compile AND n× the per-shingle hash arithmetic on the map side.
         # Shift the signed base into the non-negative 63-bit domain
         # first: XOR masks drawn from [0, 2^63) never flip bit 63, so
         # with the raw signed hash every derived min was drawn from the
@@ -412,28 +377,16 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
     ``base``: optionally a pre-built (doc_id, shingles) frame for this
     corpus — a caller that manages its own shingle artifact (or that
     must NOT pin a corpus-wide array persist for a one-shot fit at
-    scale) passes it and controls its
-    materialization; when None the fit builds and registers the
-    standard shared persisted pass."""
-    rows_per_band = n_hashes // bands
-    assert bands * rows_per_band == n_hashes, "bands must divide n_hashes"
-    if band_hash is None:
-        band_hash = F.xxhash64
-    # ONE persisted shingle pass feeds all three index tables (the
-    # signature explode, sizes and postings each reference the
-    # shingling projection, otherwise three corpus-wide HOF evaluations
-    # per fit). The registry-tracked cache also means a caller that
-    # fits and immediately saves/serves pays the pass once.
+    scale) passes it and controls its materialization; when None the
+    fit builds and registers one :func:`shingle_base_cached` pass,
+    which the signatures, sizes and postings all read."""
+    rows_per_band, band_hash = _lsh_params(n_hashes, bands, band_hash)
     if base is None:
         base = shingle_base_cached(corpus, id_col, text_col, k=k)
     entries = lsh_band_entries(
-        minhash_signatures(corpus, id_col, text_col, k=k,
-                           n_hashes=n_hashes, pair_family=pair_family,
-                           base=base),
+        minhash_signatures(base, n_hashes=n_hashes, pair_family=pair_family),
         bands=bands, rows_per_band=rows_per_band, band_hash=band_hash)
     sizes = base.select("doc_id", F.size("shingles").alias("n_shingles"))
-    # explode_outer: see blocked_jaccard_pairs — same single-evaluation
-    # idiom over the pre-filtered base
     postings = (base.select("doc_id",
                             F.explode_outer("shingles").alias("s"))
                 if with_postings else None)
@@ -713,10 +666,7 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
     job — admit the batch, and they are corpus duplicates for the next
     batch (or run minhash_lsh_pairs within the batch).
     """
-    rows_per_band = n_hashes // bands
-    assert bands * rows_per_band == n_hashes, "bands must divide n_hashes"
-    if band_hash is None:
-        band_hash = F.xxhash64
+    rows_per_band, band_hash = _lsh_params(n_hashes, bands, band_hash)
     if index is not None and index.postings is None and corpus is None:
         raise ValueError(
             "index has no postings — pass corpus for the verify side")
@@ -733,9 +683,8 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
     # call, and the batch is what scales per call
     batch_base = shingle_base_cached(batch, id_col, text_col, k=k)
     probe = lsh_band_entries(
-        minhash_signatures(batch, id_col, text_col, k=k,
-                           n_hashes=n_hashes, pair_family=pair_family,
-                           base=batch_base),
+        minhash_signatures(batch_base, n_hashes=n_hashes,
+                           pair_family=pair_family),
         bands=bands, rows_per_band=rows_per_band, band_hash=band_hash)
     entries = index.entries
     if index.entries_partitions:
@@ -777,8 +726,7 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
     cand_ids = cand.select(F.col("id_existing").alias("doc_id")).distinct()
 
     # verify-side batch consumers read the SAME persisted base as the
-    # probe signatures (explode_outer over the pre-filtered cached
-    # array: single-evaluation idiom, see blocked_jaccard_pairs)
+    # probe signatures (single-evaluation idiom, see shingle_base)
     bb = batch_base.withColumnRenamed("doc_id", "id_new")
     inv_new = bb.select("id_new", F.explode_outer("shingles").alias("s"))
     n_new = bb.select("id_new", F.size("shingles").alias("n"))
@@ -802,12 +750,9 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
         # No postings: re-shingle ONLY candidate corpus docs. Two plan
         # hazards keep O(corpus) work out of this branch (both pinned
         # by a plan-shape test):
-        # - explode_outer, not explode: InferFiltersFromGenerate adds
-        #   a deterministic size>0 filter under a plain explode, and
-        #   predicate pushdown then re-evaluates the shingle expression
-        #   BELOW the semi-join on every corpus row. The outer variant
-        #   infers nothing, and its null rows can't match the "s"
-        #   equi-join — same output.
+        # - explode_outer, not explode (see shingle_base): a pushed
+        #   size>0 filter would re-shingle every corpus row BELOW the
+        #   semi-join. Its null rows can't match the "s" equi-join.
         # - n is COUNTED from the cached exploded rows instead of a
         #   second size(shingles) projection: the jaccard filter's
         #   not-null constraint on n would otherwise be inferred and
@@ -830,14 +775,8 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
                   .join(inv_old, ["id_existing", "s"])
                   .groupBy("id_new", "id_existing")
                   .agg(F.count(F.lit(1)).alias("c")))
-    verified = (common
-                .join(n_new.withColumnRenamed("n", "n_a"), "id_new")
-                .join(n_old.withColumnRenamed("n", "n_b"), "id_existing")
-                .withColumn("jaccard",
-                            F.col("c") / (F.col("n_a") + F.col("n_b")
-                                          - F.col("c"))))
-    return (verified.filter(F.col("jaccard") >= threshold)
-                    .select("id_new", "id_existing", "jaccard"))
+    return _verify_jaccard(common, n_new, n_old, threshold,
+                           a="id_new", b="id_existing")
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, *,
@@ -876,19 +815,16 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, *,
     once per operator. None → the operator builds (and registers) its
     own.
     """
-    rows_per_band = n_hashes // bands
-    assert bands * rows_per_band == n_hashes, "bands must divide n_hashes"
-    if band_hash is None:
-        band_hash = F.xxhash64
+    rows_per_band, band_hash = _lsh_params(n_hashes, bands, band_hash)
     if base is None:
         base = shingle_base_cached(df, id_col, text_col, k=k)
 
-    sig = minhash_signatures(df, id_col, text_col, k=k, n_hashes=n_hashes,
-                             pair_family=pair_family, base=base)
+    sig = minhash_signatures(base, n_hashes=n_hashes,
+                             pair_family=pair_family)
     # both sides of the band self-join reference this subtree — persist
     # it or the signature pipeline (shingle explode + n_hashes-wide
-    # min-agg, the plan's biggest aggregate) runs twice per query
-    # (round-11). Tiny frame: bands rows of (doc_id, band_id, hash).
+    # min-agg, the plan's biggest aggregate) runs twice per query.
+    # Tiny frame: bands rows of (doc_id, band_id, hash).
     band_entries = register_cache(
         lsh_band_entries(sig, bands=bands, rows_per_band=rows_per_band,
                          band_hash=band_hash))
@@ -916,26 +852,16 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, *,
 
     # exact-Jaccard verify, restricted to candidate pairs: expand each
     # candidate by id_a's shingles, keep only the ones id_b shares →
-    # count = intersection size (shingles are distinct per doc). All
-    # four consumers below (both postings sides, both size lookups)
-    # read the PERSISTED base — unpersisted, each re-ran the
-    # interpreted shingling HOF over the whole corpus (5 evaluations
-    # per query counting the signature side; round-11 profile).
-    sizes = base.select("doc_id", F.size("shingles").alias("n"))
-    # explode_outer over the pre-filtered base: single-evaluation idiom
+    # count = intersection size (shingles are distinct per doc). The
+    # postings and size lookups read the persisted base.
+    sizes = base.select("doc_id", F.size("shingles"))
     inv = base.select("doc_id", F.explode_outer("shingles").alias("s"))
     a_side = inv.select(F.col("doc_id").alias("id_a"), "s")
     b_side = inv.select(F.col("doc_id").alias("id_b"), "s")
     common = (cand.join(a_side, "id_a")
                   .join(b_side, ["id_b", "s"])
                   .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("c")))
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    verified = (common.join(na, "id_a").join(nb, "id_b")
-                      .withColumn("jaccard",
-                                  F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c"))))
-    return (verified.filter(F.col("jaccard") >= threshold)
-                    .select("id_a", "id_b", "jaccard"))
+    return _verify_jaccard(common, sizes, sizes, threshold)
 
 
 def portable_hash60(col: Column) -> Column:
@@ -1033,7 +959,7 @@ def hamming_banded_pairs(df: DataFrame, id_col: str, hash_col: str, *,
     # both self-join sides reference this subtree; the caller's
     # fingerprint build is usually an expensive aggregation (q21/q40:
     # the 64-wide simhash vote; q191: a dHash decode) that would run
-    # twice unpersisted (round-11). Two longs per doc — tiny.
+    # twice unpersisted. Two longs per doc — tiny.
     entries = register_cache(
         df.select(F.col(id_col).alias("fp_id"),
                   F.col(hash_col).cast("long").alias("_h")))
@@ -1170,38 +1096,31 @@ def cross_corpus_containment(corpus: DataFrame, bench: DataFrame, *,
     shingles — acceptable for decontamination (those aren't leaks), and
     it caps the join fan-out of a pathological hot shingle. None = exact.
     """
-    assert threshold > 0.0, "inverted-index plan requires threshold > 0"
-    # no size(sh)>0 filters: the corpus side's only consumer explodes
-    # (empty arrays vanish), and the bench side's n_b=0 rows can never
-    # match `shared` in the inner join below — the filters were
-    # semantically inert and doubled the shingling HOF per row via
-    # predicate pushdown (has_min_tokens docstring)
+    _check_threshold(threshold)
+    # the bench side feeds TWO consumers (sizes + inverted index) and is
+    # small by contract — persist it so its shingling runs once. The
+    # corpus side stays unpersisted: its single full-width consumer is
+    # the c_inv explode (the optional hot-shingle df aggregation
+    # re-reads it once, but caching a corpus-wide exploded index would
+    # cost more memory than the one re-read at any scale). With one
+    # consumer and explode_outer there is no pushdown to guard against,
+    # so the corpus side also skips shingle_base's has_min_tokens
+    # filter, a second regex split per corpus row (measured slower):
+    # an empty array emits one null-s row that no join on "s" matches.
     c = ensure_min_partitions(corpus).select(
         F.col(corpus_id).alias("corpus_id"),
         word_shingles(F.col(corpus_text), k).alias("sh"))
-    # the bench side feeds TWO consumers (sizes + inverted index) and is
-    # small by contract — persist it so its shingling runs once
-    # (round-11). The corpus side stays unpersisted: its single
-    # full-width consumer is the c_inv explode (the optional hot-shingle
-    # df aggregation re-reads it once, but caching a corpus-wide
-    # exploded index would cost more memory than the one re-read at any
-    # scale).
-    b = register_cache(
-        ensure_min_partitions(bench).select(
-            F.col(bench_id).alias("bench_id"),
-            word_shingles(F.col(bench_text), k).alias("sh")))
-
-    # explode_outer: empty/null-shingle docs emit one null-s row that no
-    # equi-join on "s" can match (the documented serve-path idiom) — and
-    # no size>0 filter is inferred, keeping the shingling single-eval
     c_inv = c.select("corpus_id", F.explode_outer("sh").alias("s"))
+    b = shingle_base_cached(bench, bench_id, bench_text, k=k)
     if max_shingle_df is not None:
         hot = (c_inv.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
                     .filter(F.col("_df") > max_shingle_df)
                     .select("s"))
         c_inv = c_inv.join(F.broadcast(hot), "s", "left_anti")
-    b_sizes = b.select("bench_id", F.size("sh").alias("n_b"))
-    b_inv = b.select("bench_id", F.explode_outer("sh").alias("s"))
+    b_sizes = b.select(F.col("doc_id").alias("bench_id"),
+                       F.size("shingles").alias("n_b"))
+    b_inv = b.select(F.col("doc_id").alias("bench_id"),
+                     F.explode_outer("shingles").alias("s"))
 
     shared = (c_inv.join(b_inv, "s")
                    .groupBy("corpus_id", "bench_id")
@@ -1418,34 +1337,18 @@ def incremental_jaccard_dedupe(
     ``shingle_base`` outputs tagged and unioned, with the corpus
     half carried over from a phase-1 dedupe instead of re-shingled.
     """
-    if tagged_base is not None:
-        base = tagged_base
-    else:
-        tagged = (new_docs.select(
-                      F.col(id_col).cast("long").alias("doc_id"),
-                      F.col(text_col).alias("_t"),
-                      *[c.alias(f"_b{i}")
-                        for i, c in enumerate(block_cols)],
-                      F.lit(True).alias("_new"))
-                  .unionByName(
-                      corpus_docs.select(
-                          F.col(id_col).cast("long").alias("doc_id"),
-                          F.col(text_col).alias("_t"),
-                          *[c.alias(f"_b{i}")
-                            for i, c in enumerate(block_cols)],
-                          F.lit(False).alias("_new"))))
+    base = tagged_base
+    if base is None:
+        def tagged(docs: DataFrame, new: bool) -> DataFrame:
+            return (shingle_base(docs, id_col, text_col, block_cols, k=k)
+                    .withColumn("doc_id", F.col("doc_id").cast("long"))
+                    .withColumn("_new", F.lit(new)))
         # four consumers below (both inverted-index sides + both size
-        # lookups) — persist so the union+shingling runs once, not four
-        # times (round-11; a caller-supplied tagged_base manages its own
-        # materialization, e.g. q100's localCheckpoint slices)
-        base = register_cache(
-            ensure_min_partitions(tagged)
-            .filter(has_min_tokens(F.col("_t"), k))
-            .select("doc_id", "_new",
-                    *[f"_b{i}" for i in range(len(block_cols))],
-                    word_shingles(F.col("_t"), k).alias("shingles")))
+        # lookups) — persist so the shingling runs once per doc
+        base = register_cache(tagged(new_docs, True)
+                              .unionByName(tagged(corpus_docs, False)))
     bkeys = [f"_b{i}" for i in range(len(block_cols))]
-    sizes = base.select("doc_id", F.size("shingles").alias("n"))
+    sizes = base.select("doc_id", F.size("shingles"))
     inv = base.select(*bkeys, "doc_id", "_new",
                       F.explode_outer("shingles").alias("s"))
     # probe side: NEW docs only — the corpus never self-joins
@@ -1459,16 +1362,9 @@ def incremental_jaccard_dedupe(
                 .filter(F.col("id_a") != F.col("id_b"))
                 .groupBy("id_a", "id_b")
                 .agg(F.count(F.lit(1)).alias("c")))
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    edges = (common.join(na, "id_a").join(nb, "id_b")
-                   .withColumn("jaccard",
-                               F.col("c") / (F.col("n_a") + F.col("n_b")
-                                             - F.col("c")))
-                   .filter(F.col("jaccard") >= threshold)
-                   .select("id_a", "id_b"))
 
-    comps = connected_components(edges)
+    comps = connected_components(
+        _verify_jaccard(common, sizes, sizes, threshold))
     corpus_ids = corpus_docs.select(F.col(id_col).cast("long").alias("id"))
     contaminated = (comps.join(corpus_ids, "id", "left_semi")
                          .select("component").distinct())
@@ -1675,7 +1571,7 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str, *,
     # kept itself feeds THREE consumers (norms + both dot sides): each
     # would re-run the tf⋈dfc join and dfc's aggregation over the
     # cached tf — persist the weighted postings too, so the join/agg
-    # pipeline above runs once (round-11)
+    # pipeline above runs once
     kept = register_cache(
         tf.join(dfc, "s").crossJoin(F.broadcast(nd))
           .select("_id", "s",
@@ -1733,16 +1629,10 @@ def prefix_filter_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     """
     from pyspark.sql import Window
 
-    assert 0.0 < threshold < 1.0
+    if not 0.0 < threshold < 1.0:
+        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
     # base feeds three consumers (postings for the candidate stage and
-    # both verify sides); persist evaluates the interpreted shingling
-    # HOF once — lazy, so building the plan stays job-free. Handle is
-    # tracked in the operator-cache registry (harnesses release it
-    # between queries; ADVICE r5 leak fix). The has_min_tokens
-    # precondition inside shingle_base_cached sits BELOW the
-    # projection, on raw text, so no pushdown can clone the shingling
-    # HOF into a predicate (the round-11 double-evaluation hazard) —
-    # and it keeps empty-shingle rows out of the cache itself.
+    # both verify sides); the registry persist shingles once, lazily
     if base is None:
         base = shingle_base_cached(df, id_col, text_col, k=k)
     inv = base.select("doc_id", F.explode_outer("shingles").alias("s"))
@@ -1808,27 +1698,19 @@ def prefix_filter_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # the postings side B also has. Work is |cand| * avg|A| rows —
     # bounded by the candidate set the prefix filter just pruned —
     # never the Σ_s df(s)² of a full postings self-join, so one hot
-    # shingle can no longer drive quadratic pair blowup (judge r5
-    # scale defect). Postings move, never the shingle arrays — joining
-    # candidates back to full arrays was measured 4x slower purely
-    # from shuffling array payloads to 650k candidate rows. AllPairs
-    # guarantees every true pair is a candidate, so output is
-    # hash-identical to the unrestricted SSJoin (pinned by pytest
-    # equality and the unchanged q170 oracle).
+    # shingle cannot drive quadratic pair blowup. Postings move, never
+    # the shingle arrays — joining candidates back to full arrays was
+    # measured 4x slower purely from shuffling array payloads to 650k
+    # candidate rows. AllPairs guarantees every true pair is a
+    # candidate, so output is hash-identical to the unrestricted
+    # SSJoin (pinned by pytest equality and the unchanged q170 oracle).
     a = inv.select(F.col("doc_id").alias("id_a"), "s")
     b = inv.select(F.col("doc_id").alias("id_b"), "s")
     common = (cand.join(a, "id_a")
                   .join(b, ["id_b", "s"])
                   .groupBy("id_a", "id_b")
-                  .agg(F.count(F.lit(1)).alias("_c")))
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    return (common.join(na, "id_a").join(nb, "id_b")
-                  .withColumn("jaccard",
-                              F.col("_c") / (F.col("n_a") + F.col("n_b")
-                                             - F.col("_c")))
-                  .filter(F.col("jaccard") >= threshold)
-                  .select("id_a", "id_b", "jaccard"))
+                  .agg(F.count(F.lit(1)).alias("c")))
+    return _verify_jaccard(common, sizes, sizes, threshold)
 
 
 def crossdoc_span_dedup(df: DataFrame, id_col: str, text_col: str, *,

@@ -369,20 +369,12 @@ def ivf_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    if centroids is not None:
-        cent_vecs = [list(c) for c in centroids]
-    else:
-        from .dedup import portable_hash60  # noqa: PLC0415 (cycle-free late import)
-
-        sample_h = portable_hash60(
-            F.concat_ws("#", F.col(id_col).cast("string"),
-                        F.lit(str(seed))))
-        cents = (candidates
-                 .select(F.col(id_col).alias("cid"),
-                         _as_double(F.col(vec_col)).alias("v"),
-                         sample_h.alias("h"))
-                 .orderBy("h", "cid").limit(n_cells).collect())
-        cent_vecs = [list(r.v) for r in cents]
+    if centroids is None:
+        art = fit_ivf_centroids_artifact(candidates, n_cells=n_cells,
+                                         seed=seed, id_col=id_col,
+                                         vec_col=vec_col)
+        centroids = art.books[0] if art else []
+    cent_vecs = [list(c) for c in centroids]
     if not cent_vecs:  # empty corpus → empty result, same schema/id dtype
         return (queries.select(F.col(id_col).alias("query_id")).limit(0)
                        .withColumn("neighbor_id", F.col("query_id"))
@@ -591,8 +583,8 @@ def fit_ivf_centroids_artifact(candidates: DataFrame, *,
                                vec_col: str = "embedding",
                                round_to: int = 6):
     """Offline fit of ``ivf_ann``'s coarse quantizer — the hash-ordered
-    deterministic sample that was previously collected inside every
-    query. Packs into PQArtifact (m=1 codebook) for the shared parquet
+    deterministic sample ``ivf_ann`` collects itself when it is given
+    no centroids. Packs into PQArtifact (m=1 codebook) for the shared parquet
     round-trip. Returns None on empty input."""
     from .dedup import portable_hash60  # noqa: PLC0415 (cycle-free late import)
 

@@ -49,11 +49,16 @@ class QuerySpec:
 # ROTATION: the head holds every caller of the connected-components
 # and bucketed-merge operators (q56, q59, q65, q100, q103, q149, q172,
 # q196, q201), every builder writing session scratch dirs (q65, q74,
-# q134, q135, q141, q144, q151, q190, q200-q204), q18, q41, q63, q123
-# and q140, plus the rest of the previous head. Each group below is a
+# q134, q135, q141, q144, q151, q190, q200-q204), the near-dup LSH
+# and shingle-base callers (q17, q18, q41, q170, q171, q189, q199),
+# q63, q123 and q140, plus the rest of the previous head. Each group below is a
 # driver record of its queries, taken while they were in the head; tail
 # entries still run everywhere else (pytest, bench, check_correctness).
 _DEPRIORITIZED = (
+    # --- rotated out for q17, q189, q199 ---
+    "q160_zipf_fit",
+    "q164_distinct_n",
+    "q166_kmv_distinct",
     # --- rotated out for q123, q134, q135, q144 ---
     "q178_dsir_weights",
     "q179_js_drift",
@@ -74,12 +79,11 @@ _DEPRIORITIZED = (
     "q145_copurchase_pagerank",
     "q143_compressed_text",
     "q142_gif_probe",
-    # --- the q185-q191 block less q190 ---
+    # --- the q185-q191 block less q189 and q190 ---
     "q185_curation_funnel",
     "q186_vocab_coverage",
     "q187_interpolate",
     "q188_source_scorecard",
-    "q189_lsh_recall_sampled",
     "q191_image_dhash_dedup",
     # --- the q01-q52-era head ---
     "q01_line_revenue",
@@ -96,7 +100,6 @@ _DEPRIORITIZED = (
     "q14_text_stats",
     "q15_lang_id",
     "q16_iqr_outliers",
-    "q17_minhash_neardup",
     "q19_knn_cosine",
     "q20_lsh_ann",
     "q21_simhash",
@@ -151,7 +154,6 @@ _DEPRIORITIZED = (
     "q195_bucketed_join",
     "q197_script_mix",
     "q198_jpeg_progressive",
-    "q199_incremental_lsh",
     "q53_stream_dedupe",
     "q54_stream_keep_latest",
     "q55_salted_distinct",

@@ -169,20 +169,16 @@ def q17_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q18 — exact blocked n-gram-Jaccard near-dup pairs
 # --------------------------------------------------------------------------
 
-def _q18_pairs(spark: SparkSession, sf_dir: str, *,
-               persist_base: bool = True) -> DataFrame:
-    """The q18 pair graph, shared by its CC-family consumers.
-
-    ``persist_base=False`` is for callers that feed the pairs into
-    connected components (q56/q59/q149/q172/q196), where the internal
-    shingle-base persist is slower; flat consumers (q18 itself) keep
-    it. See ``blocked_jaccard_pairs``."""
+def _q18_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The q18 pair graph (lang × length-bucket blocks, k=3, t=0.2),
+    shared by q18 and its connected-components consumers q56, q59,
+    q149, q172 and q196. ``blocked_jaccard_pairs`` persists its own
+    shingle base through the operator-cache registry."""
     docs = read_table(spark, sf_dir, "documents")
     blocks = [F.col("lang"),
               F.floor(n_tokens(F.col("text")) / 10).cast("long")]
     return blocked_jaccard_pairs(docs, "doc_id", "text", blocks,
-                                 k=3, threshold=0.2,
-                                 persist_base=persist_base)
+                                 k=3, threshold=0.2)
 
 
 def q18_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1989,7 +1985,8 @@ LIMIT 100
 
 # --------------------------------------------------------------------------
 # Q56 — near-dup GROUPS: connected components over q18's exact Jaccard
-# pair graph (min-reachable-id labels via Pregel-style min propagation).
+# pair graph (min-reachable-id labels via union-find, or star
+# contraction above SMALL_GRAPH_EDGES).
 # Pairs alone can't dedupe transitive clusters; the component id is the
 # canonical survivor each member collapses to. The oracle re-derives
 # the same pair graph and walks it with a recursive CTE.
@@ -1997,7 +1994,7 @@ LIMIT 100
 
 def q56_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components
-    pairs = _q18_pairs(spark, sf_dir, persist_base=False)
+    pairs = _q18_pairs(spark, sf_dir)
     return (connected_components(pairs)
             .select(F.col("id").alias("doc_id"), "component"))
 
@@ -2029,7 +2026,7 @@ SELECT id AS doc_id, MIN(r) AS component FROM reach GROUP BY id
 def q59_dedupe_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components, keep_canonical
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    pairs = _q18_pairs(spark, sf_dir, persist_base=False)
+    pairs = _q18_pairs(spark, sf_dir)
     comps = connected_components(pairs)
     return (keep_canonical(docs, comps, "doc_id")
             .select("doc_id", "lang"))
@@ -4376,7 +4373,7 @@ def q149_component_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import assign_split
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = _q18_pairs(spark, sf_dir, persist_base=False)
+    pairs = _q18_pairs(spark, sf_dir)
     comps = (connected_components(pairs)
              .select(F.col("id").alias("doc_id"), "component"))
     tagged = (docs.join(comps, "doc_id", "left")
@@ -4788,26 +4785,31 @@ def q154_rawfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import tempfile
 
+    from ..sources.writers import write_atomic
+
     # deterministic 1-in-10 subset: reader certification needs the
     # paths proven, not every doc staged — file-per-doc writes cost
     # one directory per row, so the staged corpus is a fixed fraction
-    # and the write happens ONCE per dataset (the _SUCCESS marker
-    # gates re-staging; mtime in the key invalidates on regeneration).
-    # Not a scratch_dir: this is a cache shared across sessions.
+    # and the write happens ONCE per source file. Not a scratch_dir:
+    # this is a cache shared across sessions, one dir per source path.
+    # The source mtime is stamped after the write; a regenerated
+    # dataset (new mtime) restages into the same dir.
     docs = (read_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 10 == 0))
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    key_src = f"rawtxt:{src}"
+    key = hashlib.md5(src.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"spark_graft_rawtxt_{key}")
+    stamp_path = os.path.join(path, "_source_mtime")
+    stamp = str(os.stat(src).st_mtime_ns)
     try:
-        key_src += f"@{os.stat(src).st_mtime_ns}"
+        with open(stamp_path, encoding="utf-8") as fh:
+            staged = fh.read() == stamp
     except OSError:
-        pass
-    key = hashlib.md5(key_src.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_rawtxt_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        staged = False
+    if not staged:
         (docs.select("doc_id", F.col("text").alias("value"))
              .write.partitionBy("doc_id").mode("overwrite").text(path))
+        write_atomic(stamp_path, stamp)
 
     # an EMPTY corpus stages a _SUCCESS with zero partition dirs; the
     # whole-file readers would then see no doc_id partition column at
@@ -6285,7 +6287,7 @@ def q172_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = _q18_pairs(spark, sf_dir, persist_base=False)
+    pairs = _q18_pairs(spark, sf_dir)
     comps = (connected_components(pairs)
              .select(F.col("id").alias("doc_id"), "component"))
     n_tok = (F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0))
@@ -7719,7 +7721,7 @@ def q196_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components_star
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = _q18_pairs(spark, sf_dir, persist_base=False)
+    pairs = _q18_pairs(spark, sf_dir)
     comps = connected_components_star(pairs)
     lab = (docs.join(comps, docs.doc_id == comps.id, "left")
                .select(F.coalesce(comps.component, docs.doc_id)

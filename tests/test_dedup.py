@@ -298,7 +298,8 @@ def test_incremental_lsh_matches_full_and_index_appends(spark):
 
     from elt_gluepipeline_spark.operators.dedup import (
         PortableMinhashFamily, incremental_lsh_dedup, lsh_band_entries,
-        minhash_lsh_pairs, minhash_signatures, portable_band_hash)
+        minhash_lsh_pairs, minhash_signatures, portable_band_hash,
+        shingle_base)
 
     rows = []
     for i in range(40):
@@ -328,8 +329,8 @@ def test_incremental_lsh_matches_full_and_index_appends(spark):
     # append == rebuild: index over corpus+batch equals corpus index
     # UNION batch entries (band rows are a per-doc projection)
     def entries(df):
-        sig = minhash_signatures(df, "doc_id", "text", k=3, n_hashes=32,
-                                 pair_family=fam)
+        sig = minhash_signatures(shingle_base(df, "doc_id", "text", [], k=3),
+                                 n_hashes=32, pair_family=fam)
         return {tuple(r) for r in lsh_band_entries(
             sig, bands=8, rows_per_band=4,
             band_hash=portable_band_hash).collect()}
@@ -993,7 +994,7 @@ def test_maintain_entries_layout(spark, tmp_path, monkeypatch):
 
 
 def test_shared_shingle_base_matches_independent(spark):
-    """Round-11 optimization pin: one shingle_base_cached frame shared
+    """One shingle_base_cached frame shared
     across the prefix-filter truth side and the minhash LSH side (the
     q171/q189 shape) yields pair sets identical to each operator
     building its own base — and the base is actually persisted, so the
@@ -1036,17 +1037,26 @@ def test_shared_shingle_base_matches_independent(spark):
     assert indep_truth  # non-degenerate fixture: some true pairs exist
 
 
-def test_blocked_jaccard_persist_base_gate(spark):
-    """Round-12 optimization pin (VERDICT r11 item #1): callers whose
-    consumer is a connected-components eager-checkpoint loop skip
-    blocked_jaccard_pairs' internal shingle-base persist. The gate is
-    physical only — identical pair rows either way — and with
-    persist_base=False no InMemoryRelation appears in the plan."""
+def test_blocked_jaccard_persist_base_gate(spark, sf_dir):
+    """blocked_jaccard_pairs persists the shingle base it builds, for
+    every caller: each q18-pair consumer leaves at least one
+    registry cache behind after its build. A caller-passed base gives
+    the same rows as the internal one."""
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators._cache import (
         release_operator_caches)
-    from elt_gluepipeline_spark.operators.dedup import blocked_jaccard_pairs
+    from elt_gluepipeline_spark.operators.dedup import (
+        blocked_jaccard_pairs, shingle_base)
+    from elt_gluepipeline_spark.plans import registry
+
+    specs = registry()
+    release_operator_caches()
+    for name in ("q56_neardup_groups", "q59_dedupe_corpus",
+                 "q149_component_split", "q172_keep_best",
+                 "q196_star_components"):
+        specs[name].build(spark, sf_dir)
+        assert release_operator_caches() >= 1, name
 
     docs = spark.createDataFrame(
         [(i, "en", f"alpha beta gamma delta tok{i % 3} epsilon zeta "
@@ -1054,18 +1064,42 @@ def test_blocked_jaccard_persist_base_gate(spark):
         "doc_id long, lang string, text string")
     blocks = [F.col("lang")]
 
-    def pairs(persist_base):
-        return blocked_jaccard_pairs(docs, "doc_id", "text", blocks,
-                                     k=3, threshold=0.2,
-                                     persist_base=persist_base)
+    def pairs(base):
+        return {(r.id_a, r.id_b, r.jaccard) for r in blocked_jaccard_pairs(
+            docs, "doc_id", "text", blocks, k=3, threshold=0.2,
+            base=base).collect()}
 
-    persisted = {(r.id_a, r.id_b, r.jaccard) for r in pairs(True).collect()}
-    release_operator_caches()
-    plain_df = pairs(False)
-    plain = {(r.id_a, r.id_b, r.jaccard) for r in plain_df.collect()}
-    release_operator_caches()
+    internal = pairs(None)
+    passed = pairs(shingle_base(docs, "doc_id", "text", blocks, k=3))
+    assert internal == passed
+    assert internal  # non-degenerate fixture
 
-    assert plain == persisted
-    assert plain  # non-degenerate fixture
-    assert "InMemoryRelation" not in plain_df._jdf.queryExecution() \
-        .optimizedPlan().toString()
+
+def test_dedup_argument_checks_raise_value_error(spark):
+    """Argument checks raise ValueError, which ``python -O`` keeps
+    (it strips asserts): a band count that does not divide n_hashes on
+    all three LSH entry points, and a non-positive threshold on the
+    inverted-index join."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from elt_gluepipeline_spark.operators.dedup import (
+        blocked_jaccard_pairs, fit_lsh_dedup_index, incremental_lsh_dedup,
+        minhash_lsh_pairs)
+
+    docs = _inc_docs(spark)
+    lsh_calls = [
+        lambda: minhash_lsh_pairs(docs, "doc_id", "text", n_hashes=32,
+                                  bands=5),
+        lambda: fit_lsh_dedup_index(docs, "doc_id", "text", n_hashes=32,
+                                    bands=5),
+        lambda: incremental_lsh_dedup(docs, docs, "doc_id", "text",
+                                      n_hashes=32, bands=5),
+    ]
+    for call in lsh_calls:
+        with pytest.raises(ValueError, match="bands must divide"):
+            call()
+    for t in (0.0, -0.1):
+        with pytest.raises(ValueError, match="threshold > 0"):
+            blocked_jaccard_pairs(docs, "doc_id", "text", [F.lit(1)],
+                                  threshold=t)

@@ -4,7 +4,8 @@ from elt_gluepipeline_spark.operators.dedup import (blocked_jaccard_pairs,
                                                     exact_dedupe, jaccard,
                                                     minhash_lsh_pairs,
                                                     minhash_signatures,
-                                                    simhash64, simhash_table,
+                                                    shingle_base, simhash64,
+                                                    simhash_table,
                                                     word_shingles)
 from elt_gluepipeline_spark.operators.similarity import (cosine,
                                                          knn_bruteforce,
@@ -73,7 +74,8 @@ def test_simhash_table_matches_expression_version(spark):
 
 
 def test_minhash_signatures_shape(spark):
-    sig = minhash_signatures(_docs(spark), "doc_id", "text", k=2, n_hashes=8)
+    base = shingle_base(_docs(spark), "doc_id", "text", [], k=2)
+    sig = minhash_signatures(base, n_hashes=8)
     assert sig.count() == 3 and len(sig.columns) == 9  # doc_id + 8 mins
 
 

@@ -166,3 +166,49 @@ def test_staging_builders_write_under_session_scratch_root(
     root = os.path.dirname(scratch_dir(spark, sf_dir, "x"))
     assert {"stage_json", "stage_orc", "stage_xml", "shards"} <= set(
         os.listdir(root))
+
+
+def test_rawtxt_staging_restages_in_place(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """q154 keeps ONE staging dir per source path: a regenerated
+    dataset (new content, new mtime) is restaged into the same dir,
+    not into a second full copy next to the first."""
+    import os
+    import shutil
+    import tempfile
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from elt_gluepipeline_spark.plans import registry
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    data = tmp_path / "data"
+    data.mkdir()
+    src = data / "documents.parquet"
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), src)
+    build = registry()["q154_rawfile_ingest"].build
+
+    def staged():
+        dirs = [p for p in tmp.iterdir()
+                if p.name.startswith("spark_graft_rawtxt_")]
+        assert len(dirs) == 1, dirs
+        return {int(p.name.split("=", 1)[1])
+                for p in dirs[0].glob("doc_id=*")}
+
+    def built_ids():
+        return {r.doc_id for r in build(spark, str(data)).collect()}
+
+    ids = pq.read_table(src).column("doc_id").to_pylist()
+    want = {i for i in ids if i % 10 == 0}
+    assert built_ids() == want and staged() == want
+
+    keep = sorted(ids)[len(ids) // 2]
+    table = pq.read_table(src)
+    pq.write_table(table.filter(pc.less(table["doc_id"], keep)), src)
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    want = {i for i in want if i < keep}
+    assert built_ids() == want and staged() == want
