@@ -270,7 +270,9 @@ def minhash_signatures(base: DataFrame, *, n_hashes: int = 32,
     """
     exploded = base.select("doc_id", F.explode_outer("shingles").alias("s"))
     if pair_family is not None:
-        assert pair_family.n == n_hashes
+        if pair_family.n != n_hashes:
+            raise ValueError(f"pair_family has {pair_family.n} hashes, "
+                             f"n_hashes={n_hashes}")
         prep = exploded.select("doc_id", *pair_family.prepare(F.col("s")))
         hashed = prep.select("doc_id", *pair_family.derive())
     else:
@@ -953,7 +955,9 @@ def hamming_banded_pairs(df: DataFrame, id_col: str, hash_col: str, *,
     Output: (id_a, id_b, hamming) with id_a < id_b, distances in
     [0, max_hamming]. Fingerprints must be non-negative (bits <= 63).
     """
-    assert 0 < bits <= 63 and bits % bands == 0
+    if not (0 < bits <= 63 and bits % bands == 0):
+        raise ValueError(f"need 0 < bits <= 63 with bands dividing bits, "
+                         f"got bits={bits}, bands={bands}")
     width = bits // bands
     mask = (1 << width) - 1
     # both self-join sides reference this subtree; the caller's

@@ -1,28 +1,44 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and vector quantization over embedding columns
+(array<float>).
 
-Two paths, one contract:
-- ``knn_bruteforce`` — exact top-k cosine. The candidate side stays
-  partitioned; the (small) query side broadcasts, so the cross product
-  is a broadcast nested-loop that streams candidates once. Per-query
-  top-k via ranked window on the query id. Right for reranking or
-  small query sets; O(|Q|·|N|) compute but no shuffle of the corpus.
-- ``lsh_ann`` — sign-random-projection LSH: deterministic hyperplanes
-  (seeded), bucket by sign-bit signature, search only within buckets.
-  Sub-linear candidates at the cost of recall; the scale path when |Q|
-  is large. Misses are possible by construction (rows-only check).
+Cosine search: ``knn_bruteforce`` (exact), ``lsh_ann`` (sign-random-
+projection buckets) and ``ivf_ann`` (coarse cells) differ only in how
+they pick candidate pairs. They, and ``hard_negative_mine``, score
+through one stage, ``_cosine_scored``: norms projected once per row,
+the query side broadcast, the cosine rounded before ranking, ties
+broken on neighbor_id.
 
-Dot products are higher-order array expressions in double precision —
-deterministic, codegen'd, no Python. For very wide vectors (≥1k dims)
-a pandas_udf BLAS path can slot behind the same signature.
+Vector quantization: k-means centroids, IVF coarse cells and PQ
+codebooks are one model, ``PQArtifact`` (k-means and IVF are m=1
+codebooks). It has one trainer (``_pq_fit``), one encoder
+(``_pq_cells_udf`` picks each cell, ``_pq_chosen_dist`` reports its
+distance) and one ADC scorer (``_adc_topk``). Four invariants make
+every centroid, code and distance engine-reproducible, so the DuckDB
+oracles replay them bit for bit:
+
+- md5-ordered seeds: the initial centroids are the k vectors with the
+  smallest md5-derived hash of ``id#seed``; no RNG. A corpus smaller
+  than k yields one centroid per vector, and the artifact records
+  that count as its k.
+- grid-exact update: a Lloyd update quantizes each coordinate to
+  ``floor(x*grid + 0.5)`` (a long) and divides the exact integer sum
+  by ``grid * count``. Long sums are associative, so the new centroid
+  is bit-identical under any partitioning; double sums are not.
+- lowest-cell tie-break: an exact distance tie picks the lowest cell
+  id (numpy's first argmin; ``ORDER BY dist, cell`` in SQL).
+- reported distance is a sequential fold: the GEMM distances only pick
+  the cell; the distance a query outputs is the left-to-right fold of
+  ``(x - c)^2`` against the chosen centroid, as the oracle computes it.
 """
 
 from __future__ import annotations
 
 import random
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
@@ -35,11 +51,9 @@ def dot(a: Column, b: Column) -> Column:
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
-# NOTE (r6, measured): expanding these literal-vector folds into
-# element_at chains to "stay in codegen" is NOT faster — ANSI bounds/
-# null checks on 24 planes x 64 element_at nodes cost more than the
-# HOF's tight single-pass loop (micro-bench: 0.16s expanded vs 0.10s
-# HOF over 40k rows x 24 planes, identical outputs). Keep the HOFs.
+# Folds against literal vectors stay higher-order functions: expanding
+# them into element_at chains measured slower (ANSI bounds and null
+# checks on every node) for identical outputs.
 
 
 def l2_norm(a: Column) -> Column:
@@ -55,35 +69,56 @@ def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
 
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str = "_id",
+             vec_as: str = "_v") -> DataFrame:
+    """(id, vector as array<double>) under the given names."""
+    return df.select(F.col(id_col).alias(id_as),
+                     _as_double(F.col(vec_col)).alias(vec_as))
+
+
+def _cosine_scored(c: DataFrame, q: DataFrame, on: str | None,
+                   round_to: int) -> DataFrame:
+    """The cosine scoring stage: candidates (neighbor_id, c_vec) against
+    the broadcast queries (query_id, q_vec), joined on column ``on``
+    (None: every pair), self-matches dropped. Norms are projected
+    before the join, one fold per row instead of one per pair. The
+    cosine is rounded before any ranking so order is reproducible
+    across engines; ``+ 0.0`` canonicalizes IEEE -0.0 (Spark's round
+    drops the sign of tiny negatives, DuckDB's keeps it)."""
+    c = c.withColumn("_cn", l2_norm(F.col("c_vec")))
+    q = q.withColumn("_qn", l2_norm(F.col("q_vec")))
+    return (c.join(F.broadcast(q), on)
+             .filter(F.col("neighbor_id") != F.col("query_id"))
+             .withColumn("cosine",
+                         F.round(dot(F.col("q_vec"), F.col("c_vec"))
+                                 / (F.col("_qn") * F.col("_cn")), round_to)
+                         + F.lit(0.0)))
+
+
+def _cosine_topk(c: DataFrame, q: DataFrame, on: str | None, k: int,
+                 round_to: int) -> DataFrame:
+    """``_cosine_scored`` ranked: (query_id, neighbor_id, cosine), the k
+    most similar per query."""
+    top = top_n_per_key(_cosine_scored(c, q, on, round_to), ["query_id"],
+                        [F.col("cosine").desc(), F.col("neighbor_id")], k)
+    return top.select("query_id", "neighbor_id", "cosine")
+
+
 def knn_bruteforce(queries: DataFrame, candidates: DataFrame, k: int, *,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    round_to: int = 6) -> DataFrame:
     """Exact top-k cosine neighbors per query (self-matches excluded).
 
-    Output: (query_id, neighbor_id, cosine) with cosine rounded to
-    ``round_to`` decimals — rounding happens BEFORE ranking so ordering
-    is reproducible across engines; ties break on neighbor_id.
+    The candidate side stays partitioned and the (small) query side
+    broadcasts, so the cross product is a broadcast nested loop that
+    streams the corpus once: O(|Q|·|N|) compute, no corpus shuffle.
+    Output: (query_id, neighbor_id, cosine), cosine rounded to
+    ``round_to`` decimals before ranking; ties break on neighbor_id.
     """
-    # norms are projected BEFORE the join: one HOF eval per row instead
-    # of one per (query, candidate) pair — identical doubles, ~3x less
-    # interpreted-expression work in the O(|Q|·|N|) scoring stage
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("q_vec")) \
-               .withColumn("_qn", l2_norm(F.col("q_vec")))
-    c = candidates.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(F.col(vec_col)).alias("c_vec")) \
-                  .withColumn("_cn", l2_norm(F.col("c_vec")))
-    scored = (c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-               .withColumn("cosine",
-                           # +0.0 canonicalizes IEEE -0.0 (Spark's round
-                           # drops the sign of tiny negatives, DuckDB's
-                           # keeps it - the string-hash gate sees both)
-                           F.round(dot(F.col("q_vec"), F.col("c_vec"))
-                                   / (F.col("_qn") * F.col("_cn")), round_to)
-                           + F.lit(0.0)))
-    top = top_n_per_key(scored, ["query_id"],
-                        [F.col("cosine").desc(), F.col("neighbor_id")], k)
-    return top.select("query_id", "neighbor_id", "cosine")
+    return _cosine_topk(
+        _vectors(candidates, id_col, vec_col, "neighbor_id", "c_vec"),
+        _vectors(queries, id_col, vec_col, "query_id", "q_vec"),
+        None, k, round_to)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -112,28 +147,15 @@ def lsh_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
             round_to: int = 6) -> DataFrame:
     """Approximate top-k: candidates considered only when their sign
     signature equals the query's (one shuffle on the signature; at
-    scale add multi-probe or fewer planes for recall)."""
+    scale add multi-probe or fewer planes for recall). Misses are
+    possible by construction (rows-only check)."""
     planes = _hyperplanes(dim, n_planes, seed)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("q_vec"))
-    q = q.withColumn("sig", signature_col(F.col("q_vec"), planes)) \
-         .withColumn("_qn", l2_norm(F.col("q_vec")))
-    c = candidates.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(F.col(vec_col)).alias("c_vec"))
-    c = c.withColumn("sig", signature_col(F.col("c_vec"), planes)) \
-         .withColumn("_cn", l2_norm(F.col("c_vec")))
-    scored = (c.join(F.broadcast(q), "sig")
-               .filter(F.col("neighbor_id") != F.col("query_id"))
-               .withColumn("cosine",
-                           # +0.0 canonicalizes IEEE -0.0 (Spark's round
-                           # drops the sign of tiny negatives, DuckDB's
-                           # keeps it - the string-hash gate sees both)
-                           F.round(dot(F.col("q_vec"), F.col("c_vec"))
-                                   / (F.col("_qn") * F.col("_cn")), round_to)
-                           + F.lit(0.0)))
-    top = top_n_per_key(scored, ["query_id"],
-                        [F.col("cosine").desc(), F.col("neighbor_id")], k)
-    return top.select("query_id", "neighbor_id", "cosine")
+    c = _vectors(candidates, id_col, vec_col, "neighbor_id", "c_vec")
+    q = _vectors(queries, id_col, vec_col, "query_id", "q_vec")
+    return _cosine_topk(
+        c.withColumn("sig", signature_col(F.col("c_vec"), planes)),
+        q.withColumn("sig", signature_col(F.col("q_vec"), planes)),
+        "sig", k, round_to)
 
 
 NEARDUP_SCHEMA = StructType([
@@ -183,8 +205,8 @@ def cosine_neardup_pairs(df: DataFrame, *, threshold: float,
     expressions by >100x here — this is the one place the Python/Arrow
     boundary wins over codegen.
 
-    Two scale rails (judge r7 item #2 — this was the one operator a
-    user could point at a full corpus and silently get n^2):
+    Two scale rails, because this is the one operator a user could
+    point at a full corpus and silently get n^2:
 
     - ``max_pairs`` (default 1e9): the call REFUSES with a ValueError
       when the scored-pair count (n*(n-1)/2, or n_anchors*n in
@@ -345,41 +367,29 @@ def ivf_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
     """IVF (inverted-file) approximate NN: the classic coarse-quantizer
     scale path.
 
-    1. CENTROIDS: a deterministic sample of n_cells candidate vectors
-       (ordered by an ENGINE-PORTABLE md5-derived hash of ``id#seed``
-       — reproducible by any engine with md5, no kmeans iterations; a
-       trained quantizer slots in by replacing this list). Tiny →
-       broadcast to every task inside the UDF closures.
-    2. ASSIGN: every candidate vector goes to its nearest centroid's
-       cell — one Arrow-batched numpy GEMM per batch (vectorized
-       argmax), a map-only stage over the corpus.
-    3. PROBE: each query is assigned its n_probe nearest cells, then
-       joins candidates on cell id — the shuffle moves only the probed
+    1. CENTROIDS: ``fit_pq_artifact(candidates, m=1, k=n_cells,
+       n_iter=1, seed=seed)`` — the md5-ordered seed sample, no Lloyd
+       update. Tiny, so it rides into the UDF closures.
+    2. ASSIGN: every candidate goes to its most cosine-similar centroid
+       — an Arrow-batched pandas UDF, map-only.
+    3. PROBE: each query takes its n_probe most similar cells and joins
+       candidates on cell id — the shuffle moves only the probed
        fraction (~n_probe/n_cells of the corpus per query set).
     4. SCORE: exact cosine + per-query top-k within the probed cells.
 
     Recall < 1 by construction (rows-only check); raise n_probe toward
     n_cells to trade speed for recall.
 
-    SERVE PATH: pass ``centroids`` (e.g. ``artifact.books[0]`` from
-    ``fit_ivf_centroids_artifact``) and the plan runs ZERO training
-    jobs — the sample collect above is the fit half of the split and
-    is skipped entirely.
+    SERVE PATH: pass ``centroids`` (``artifact.books[0]`` of a saved
+    m=1 fit) and the plan runs no training job.
     """
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
     if centroids is None:
-        art = fit_ivf_centroids_artifact(candidates, n_cells=n_cells,
-                                         seed=seed, id_col=id_col,
-                                         vec_col=vec_col)
+        art = fit_pq_artifact(candidates, m=1, k=n_cells, n_iter=1,
+                              seed=seed, id_col=id_col, vec_col=vec_col)
         centroids = art.books[0] if art else []
-    cent_vecs = [list(c) for c in centroids]
-    if not cent_vecs:  # empty corpus → empty result, same schema/id dtype
-        return (queries.select(F.col(id_col).alias("query_id")).limit(0)
-                       .withColumn("neighbor_id", F.col("query_id"))
-                       .withColumn("cosine", F.lit(0.0)))
-    cmat = np.array(cent_vecs, dtype=np.float64)
+    if not centroids:  # empty corpus → empty result, same schema/id dtype
+        return _empty_pairs(queries, id_col, "cosine")
+    cmat = np.array(centroids, dtype=np.float64)
     cnorm = np.linalg.norm(cmat, axis=1)
     cnorm[cnorm == 0] = 1.0
 
@@ -403,205 +413,40 @@ def ivf_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
     def best_cell(vs: pd.Series) -> pd.Series:
         return _cells(vs, 1).map(lambda x: x[0])
 
-    c = (candidates.select(F.col(id_col).alias("neighbor_id"),
-                           _as_double(F.col(vec_col)).alias("c_vec"))
-                   .withColumn("cell", best_cell("c_vec"))
-                   .withColumn("_cn", l2_norm(F.col("c_vec"))))
-    q = (queries.select(F.col(id_col).alias("query_id"),
-                        _as_double(F.col(vec_col)).alias("q_vec"))
-                .withColumn("cell", F.explode(probe_cells("q_vec")))
-                .withColumn("_qn", l2_norm(F.col("q_vec"))))
-    scored = (c.join(F.broadcast(q), "cell")
-               .filter(F.col("neighbor_id") != F.col("query_id"))
-               .withColumn("cosine",
-                           # +0.0 canonicalizes IEEE -0.0 (Spark's round
-                           # drops the sign of tiny negatives, DuckDB's
-                           # keeps it - the string-hash gate sees both)
-                           F.round(dot(F.col("q_vec"), F.col("c_vec"))
-                                   / (F.col("_qn") * F.col("_cn")), round_to)
-                           + F.lit(0.0)))
-    top = top_n_per_key(scored, ["query_id"],
-                        [F.col("cosine").desc(), F.col("neighbor_id")], k)
-    return top.select("query_id", "neighbor_id", "cosine")
+    c = _vectors(candidates, id_col, vec_col, "neighbor_id", "c_vec")
+    q = _vectors(queries, id_col, vec_col, "query_id", "q_vec")
+    return _cosine_topk(
+        c.withColumn("cell", best_cell("c_vec")),
+        q.withColumn("cell", F.explode(probe_cells("q_vec"))),
+        "cell", k, round_to)
 
 
-def kmeans_lloyd(df: DataFrame, *, k: int = 8, n_iter: int = 2,
-                 seed: int = 7, id_col: str = "vec_id",
-                 vec_col: str = "embedding", grid: int = 1_000_000,
-                 round_to: int = 6) -> DataFrame:
-    """Distributed Lloyd's k-means over an embedding column — the
-    trained coarse quantizer ``ivf_ann`` leaves as a slot-in (its
-    centroid list is a deterministic SAMPLE; this refines one).
+def hard_negative_mine(queries: DataFrame, candidates: DataFrame, k: int, *,
+                       dup_threshold: float = 0.98,
+                       id_col: str = "vec_id", vec_col: str = "embedding",
+                       round_to: int = 6) -> DataFrame:
+    """Hard-negative mining for contrastive training: per query, the
+    top-k MOST similar candidates that are NOT near-duplicates — the
+    informative negatives sit just below the duplicate band, and a
+    plain kNN would hand back the query's own clones as "negatives"
+    (catastrophic for a contrastive objective; the synthetic corpus'
+    clone groups make the exclusion observable). ``knn_bruteforce``'s
+    scoring stage with the dup band ``cosine >= dup_threshold``
+    excluded BEFORE the per-query top-k — filtering after a plain top-k
+    would silently under-fill.
 
-    Engine-portable and partition-order-independent by construction:
-
-    - INIT: the k seed centroids are the vectors with the smallest
-      md5-derived hash of ``id#seed`` (same discipline as ``ivf_ann``
-      — any engine with md5 re-derives the exact same seeds; no RNG).
-    - ASSIGN (per iteration): squared-Euclidean argmin over the k
-      centroids, evaluated as codegen'd higher-order array expressions
-      (map-only over the corpus; centroids ride along as literals, so
-      there is no join and nothing shuffles). Exact distance ties
-      resolve to the lowest cell index.
-    - UPDATE: the new centroid is the mean of the assigned vectors on
-      a fixed 1/grid grid: each coordinate quantizes to
-      ``floor(x*grid + 0.5)`` (half-up, a LONG) and the mean is the
-      exact integer sum divided by ``grid * count`` in double.
-      Float-double summation is order-dependent — the same mean would
-      hash differently run-to-run — while long sums are associative,
-      so the update is bit-identical for ANY partitioning and any
-      engine. The 1e-6 grid error is far below float32 input noise.
-      One groupBy(cell) aggregation per iteration with k*dim bounded
-      output (the per-iteration centroid collect is model state, the
-      same bounded driver scalar distributed Lloyd always pays —
-      Spark MLlib's KMeans collects exactly this).
-
-    Output: final assignment (id, cell, dist) — ``dist`` is the
-    squared Euclidean distance to the final centroid, rounded.
-
-    FIT/SERVE SPLIT: this fused wrapper = ``_kmeans_fit_centroids``
-    (the training loop — seed collect + per-iteration update
-    aggregations) followed by ``_kmeans_assign_frame`` (one map-only
-    assignment pass). Production serves from a persisted artifact via
-    ``fit_kmeans_artifact`` / ``kmeans_assign_serve`` — zero training
-    jobs per query; this wrapper stays for one-shot/exploratory use
-    and is output-identical by construction.
+    Output: (query_id, neighbor_id, cosine, neg_rank), neg_rank 1..k.
     """
-    v = df.select(F.col(id_col).alias("_id"),
-                  _as_double(F.col(vec_col)).alias("_v"))
-    cents = _kmeans_fit_centroids(v, k=k, n_iter=n_iter, seed=seed,
-                                  grid=grid)
-    if cents is None:
-        return (v.limit(0).select(F.col("_id").alias(id_col))
-                 .withColumn("cell", F.lit(0))
-                 .withColumn("dist", F.lit(0.0)))
-    return _kmeans_assign_frame(v, cents, id_col=id_col,
-                                round_to=round_to)
-
-
-def _kmeans_sqdist(c: list[float]) -> Column:
-    lit_c = F.array(*[F.lit(x) for x in c])
-    return F.aggregate(
-        F.zip_with("_v", lit_c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, e: acc + e)
-
-
-def _kmeans_assign_raw(v: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """Assignment pass over a (_id, _v) frame: distances to every
-    centroid (codegen'd HOF arithmetic, centroids as literals — no
-    join, map-only), argmin with ties to the lowest cell."""
-    d_arr = F.array(*[_kmeans_sqdist(c) for c in cents])
-    return v.select(
-        "_id", "_v", d_arr.alias("_d"),
-        (F.array_position(d_arr, F.array_min(d_arr)) - 1)
-        .cast("int").alias("cell"))
-
-
-def _kmeans_assign_frame(v: DataFrame, cents: list[list[float]], *,
-                         id_col: str, round_to: int) -> DataFrame:
-    out = _kmeans_assign_raw(v, cents)
-    return out.select(
-        F.col("_id").alias(id_col), "cell",
-        F.round(F.element_at("_d", F.col("cell") + 1), round_to)
-         .alias("dist"))
-
-
-def _kmeans_fit_centroids(v: DataFrame, *, k: int, n_iter: int,
-                          seed: int, grid: int
-                          ) -> list[list[float]] | None:
-    """The Lloyd TRAINING loop over a (_id, _v) frame (the offline-fit
-    half of the split): md5-hash-ordered seed pick, then n_iter-1
-    grid-exact update rounds. Returns the centroid list (model state,
-    k·dim bounded) or None on empty input."""
-    from .dedup import portable_hash60  # noqa: PLC0415 (cycle-free late import)
-
-    sample_h = portable_hash60(
-        F.concat_ws("#", F.col("_id").cast("string"), F.lit(str(seed))))
-    seeds = (v.withColumn("_h", sample_h)
-              .orderBy("_h", "_id").limit(k).select("_v").collect())
-    cents: list[list[float]] = [list(r["_v"]) for r in seeds]
-    if not cents:
-        return None
-    dim = len(cents[0])
-    for _ in range(max(0, n_iter - 1)):
-        g = F.lit(float(grid))
-        qsum = [F.sum(F.floor(F.col("_v")[i] * g + F.lit(0.5))).alias(f"s{i}")
-                for i in range(dim)]
-        rows = (_kmeans_assign_raw(v, cents).groupBy("cell")
-                .agg(F.count(F.lit(1)).alias("n"), *qsum).collect())
-        by_cell = {r["cell"]: r for r in rows}
-        cents = [
-            [by_cell[j][f"s{i}"] / (float(grid) * by_cell[j]["n"])
-             for i in range(dim)] if j in by_cell else cents[j]
-            for j in range(len(cents))]
-    return cents
-
-
-def fit_kmeans_artifact(df: DataFrame, *, k: int = 8, n_iter: int = 2,
-                        seed: int = 7, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        grid: int = 1_000_000,
-                        round_to: int = 6):
-    """Offline k-means fit → persistable artifact (round-4 judge item
-    #3: the PQ fit/serve pattern extended to the plain clusterer). A
-    k-means model IS a one-subspace codebook, so it reuses PQArtifact
-    (m=1, books[0][cell] = centroid, w=dim) and the existing
-    save_/load_pq_artifact parquet round-trip. Returns None on empty
-    input."""
-    dim_row = df.select(F.size(vec_col).alias("d")).head(1)
-    if not dim_row:
-        return None
-    dim = dim_row[0]["d"]
-    v = df.select(F.col(id_col).alias("_id"),
-                  _as_double(F.col(vec_col)).alias("_v"))
-    cents = _kmeans_fit_centroids(v, k=k, n_iter=n_iter, seed=seed,
-                                  grid=grid)
-    if cents is None:
-        return None
-    return PQArtifact(m=1, k=k, w=dim, dim=dim, grid=grid,
-                      round_to=round_to,
-                      books=(tuple(tuple(c) for c in cents),),
-                      coarse=None)
-
-
-def kmeans_assign_serve(df: DataFrame, art, *, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """Serve-only k-means assignment: centroids arrive as literals from
-    a fitted artifact — ONE map-only pass, no training jobs, no
-    collect. Output-identical to ``kmeans_lloyd`` with the same fit
-    parameters (same assignment code on both paths)."""
-    v = df.select(F.col(id_col).alias("_id"),
-                  _as_double(F.col(vec_col)).alias("_v"))
-    cents = [list(c) for c in art.books[0]]
-    return _kmeans_assign_frame(v, cents, id_col=id_col,
-                                round_to=art.round_to)
-
-
-def fit_ivf_centroids_artifact(candidates: DataFrame, *,
-                               n_cells: int = 16, seed: int = 42,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               round_to: int = 6):
-    """Offline fit of ``ivf_ann``'s coarse quantizer — the hash-ordered
-    deterministic sample ``ivf_ann`` collects itself when it is given
-    no centroids. Packs into PQArtifact (m=1 codebook) for the shared parquet
-    round-trip. Returns None on empty input."""
-    from .dedup import portable_hash60  # noqa: PLC0415 (cycle-free late import)
-
-    sample_h = portable_hash60(
-        F.concat_ws("#", F.col(id_col).cast("string"), F.lit(str(seed))))
-    cents = (candidates
-             .select(F.col(id_col).alias("cid"),
-                     _as_double(F.col(vec_col)).alias("v"),
-                     sample_h.alias("h"))
-             .orderBy("h", "cid").limit(n_cells).collect())
-    if not cents:
-        return None
-    dim = len(cents[0].v)
-    return PQArtifact(m=1, k=len(cents), w=dim, dim=dim, grid=0,
-                      round_to=round_to,
-                      books=(tuple(tuple(r.v) for r in cents),),
-                      coarse=None)
+    scored = _cosine_scored(
+        _vectors(candidates, id_col, vec_col, "neighbor_id", "c_vec"),
+        _vectors(queries, id_col, vec_col, "query_id", "q_vec"),
+        None, round_to).filter(F.col("cosine") < dup_threshold)
+    w = (Window.partitionBy("query_id")
+               .orderBy(F.col("cosine").desc(), F.col("neighbor_id")))
+    return (scored.withColumn("neg_rank", F.row_number().over(w))
+                  .filter(F.col("neg_rank") <= k)
+                  .select("query_id", "neighbor_id", "cosine",
+                          F.col("neg_rank").cast("long").alias("neg_rank")))
 
 
 def quantize_int8(df: DataFrame, *, id_col: str = "vec_id",
@@ -649,42 +494,55 @@ def quantize_int8(df: DataFrame, *, id_col: str = "vec_id",
         F.round(mse, 6).alias("mse"))
 
 
+
+# --------------------------------------------------------------------
+# Vector quantization. A model is fitted once into a PQArtifact and
+# persisted as a small parquet folder; serving loads it (a bounded
+# collect of k·m centroid rows) and runs with no training stage.
+# --------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class PQArtifact:
+    """Trained quantizer state: m per-subspace codebooks (k centroids
+    of width w each) and optionally the IVF coarse centroids. k-means
+    is the m=1 case (w == dim)."""
+    m: int
+    k: int
+    w: int
+    dim: int
+    grid: int
+    round_to: int
+    books: tuple          # books[s][cell] = centroid (len w)
+    coarse: tuple | None  # coarse[cell] = centroid (len dim)
+
+
 def _pq_subvec(s: int, w: int) -> Column:
     return F.slice("_v", s * w + 1, w)
 
 
-def _pq_dists(s: int, w: int, book: list[list[float]]) -> Column:
-    """Distances of a subvector to EVERY centroid, as ONE transform
-    over a 2-D literal array instead of k separate fold expressions —
-    the values and their left-to-right fold order are identical, but
-    the expression tree is ~k× smaller, which cuts plan analysis +
-    codegen time (the dominant cost of the serve path at small data;
-    at scale it also keeps the generated method under JIT limits)."""
-    lit_book = F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
+def _lit_book(book) -> Column:
+    """A codebook as one 2-D array literal."""
+    return F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
+
+
+def _pq_dists(s: int, w: int, book) -> Column:
+    """Fold distances of subvector s to EVERY centroid of ``book``, as
+    ONE transform over the codebook literal: the same values and fold
+    order as k separate folds, with a ~k× smaller expression tree
+    (plan analysis and codegen dominate serve plans at small data)."""
     sv = _pq_subvec(s, w)
     return F.transform(
-        lit_book,
+        _lit_book(book),
         lambda c: F.aggregate(F.zip_with(sv, c, lambda x, y: (x - y) * (x - y)),
                               F.lit(0.0), lambda acc, e: acc + e))
 
 
-def _pq_argmin(d: Column) -> Column:
-    """First index of the minimum — exact-tie resolution to the lowest
-    cell, same as ORDER BY dist, cell."""
-    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-
-def _pq_cells_udf(books: list[list[list[float]]], w: int):
-    """Arrow-batched GEMM assignment: one pandas_udf mapping a vector
-    to its argmin cell in EVERY subspace (array<int>, length m). This
-    is the BLAS path the module docstring promises — k·w interpreted
-    fold-lambdas per row become one numpy matmul per batch (~10×).
-    np.argmin is first-minimum, the same lowest-cell tie resolution as
-    ``_pq_argmin``; exact duplicates therefore agree exactly, and the
-    distances only pick the cell — the REPORTED distance is still the
-    sequential-fold SQL expression of the chosen centroid, so outputs
-    stay oracle-identical.
-    """
+def _pq_cells_udf(books, w: int):
+    """The encoder's cell pick: one pandas_udf mapping ``_v`` to its
+    nearest cell in EVERY subspace (array<int>, length m), one numpy
+    GEMM per Arrow batch instead of k·w interpreted folds per row.
+    np.argmin is the first minimum: ties go to the lowest cell."""
     mats = [np.asarray(b, dtype=np.float64) for b in books]
     sqs = [(mat * mat).sum(axis=1) for mat in mats]
     m = len(books)
@@ -703,15 +561,12 @@ def _pq_cells_udf(books: list[list[list[float]]], w: int):
     return cells
 
 
-def _pq_chosen_dist(s: int, w: int, book: list[list[float]],
-                    cell: Column) -> Column:
-    """Sequential-fold distance to the CHOSEN centroid: one O(w) fold
-    against the centroid PICKED OUT of the 2-D codebook literal by the
-    cell id. (The previous k-branch when-chain had the same values but
-    a k× bigger expression tree; plan analysis + codegen dominated the
-    query at bench scale.)"""
-    lit_book = F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
-    chosen = F.element_at(lit_book, cell + 1)
+def _pq_chosen_dist(s: int, w: int, book, cell: Column) -> Column:
+    """The encoder's reported distance: one sequential O(w) fold
+    against the centroid picked out of the 2-D codebook literal by
+    ``cell`` (a k-branch when-chain gives the same values with a k×
+    bigger expression tree)."""
+    chosen = F.element_at(_lit_book(book), cell + 1)
     return F.aggregate(
         F.zip_with(_pq_subvec(s, w), chosen,
                    lambda x, y: (x - y) * (x - y)),
@@ -719,12 +574,14 @@ def _pq_chosen_dist(s: int, w: int, book: list[list[float]],
 
 
 def _pq_fit(v: DataFrame, *, m: int, k: int, n_iter: int, seed: int,
-            grid: int, w: int) -> list[list[list[float]]] | None:
-    """Train m per-subspace codebooks over a (_id, _v) frame: md5-seeded
-    init (one collect), then per Lloyd update ONE exploded (s, cell)
-    aggregation of grid-quantized coordinate sums — the engine-portable,
-    partition-order-independent recipe kmeans_lloyd documents, fused
-    across subspaces. Returns books[s][cell] or None on empty input."""
+            grid: int) -> list[list[list[float]]] | None:
+    """The Lloyd trainer over a (_id, _v) frame. One collect picks the
+    seeds (the at most k md5-ordered vectors, sliced into m subspace
+    codebooks); each of the n_iter - 1 updates is ONE aggregation: the
+    encoder assigns every subspace, m (s, cell, subvector) structs
+    explode per row, and groupBy(s, cell) sums the grid-quantized
+    coordinates. A cell that gets no vector keeps its centroid.
+    Returns books[s][cell], or None on empty input."""
     from .dedup import portable_hash60  # noqa: PLC0415 (cycle-free late import)
 
     sample_h = portable_hash60(
@@ -733,22 +590,24 @@ def _pq_fit(v: DataFrame, *, m: int, k: int, n_iter: int, seed: int,
                   .orderBy("_h", "_id").limit(k).select("_v").collect())
     if not seed_rows:
         return None
+    dim = len(seed_rows[0]["_v"])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    w = dim // m
     books = [[list(r["_v"])[s * w:(s + 1) * w] for r in seed_rows]
              for s in range(m)]
     g = float(grid)
     for _ in range(max(0, n_iter - 1)):
-        # assignment via the Arrow GEMM path — one numpy matmul per
-        # batch instead of k·w interpreted fold-lambdas per row
-        staged_u = v.withColumn("_cells", _pq_cells_udf(books, w)("_v"))
+        staged = v.withColumn("_cells", _pq_cells_udf(books, w)("_v"))
         structs = F.array(*[
             F.struct(F.lit(s).alias("_s"),
                      F.element_at("_cells", s + 1).alias("_c"),
                      _pq_subvec(s, w).alias("_sv"))
             for s in range(m)])
-        expl = staged_u.select(F.explode(structs).alias("_e")) \
-                       .select(F.col("_e._s").alias("_s"),
-                               F.col("_e._c").alias("_c"),
-                               F.col("_e._sv").alias("_sv"))
+        expl = staged.select(F.explode(structs).alias("_e")) \
+                     .select(F.col("_e._s").alias("_s"),
+                             F.col("_e._c").alias("_c"),
+                             F.col("_e._sv").alias("_sv"))
         qsum = [F.sum(F.floor(F.col("_sv")[i] * F.lit(g) + F.lit(0.5)))
                 .alias(f"s{i}") for i in range(w)]
         rows = (expl.groupBy("_s", "_c")
@@ -756,181 +615,10 @@ def _pq_fit(v: DataFrame, *, m: int, k: int, n_iter: int, seed: int,
         by_key = {(r["_s"], r["_c"]): r for r in rows}
         books = [
             [[by_key[(s, j)][f"s{i}"] / (g * by_key[(s, j)]["n"])
-              for i in range(w)] if (s, j) in by_key else books[s][j]
-             for j in range(k)]
-            for s in range(m)]
+              for i in range(w)] if (s, j) in by_key else cent
+             for j, cent in enumerate(book)]
+            for s, book in enumerate(books)]
     return books
-
-
-def product_quantize(df: DataFrame, *, m: int = 4, k: int = 16,
-                     n_iter: int = 2, seed: int = 7,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     grid: int = 1_000_000, round_to: int = 6) -> DataFrame:
-    """Product quantization (Jégou et al. 2011): split each vector into
-    ``m`` contiguous subspaces and vector-quantize each against its own
-    ``k``-centroid codebook — the memory layout ANN serving uses at
-    corpus scale (m log2(k) bits per vector instead of 4·dim bytes;
-    here 4 subspaces × 16 cells = 2 bytes for a 64-dim float vector,
-    128× smaller than float64).
-
-    Codebooks follow exactly ``kmeans_lloyd``'s recipe per subspace —
-    md5-seeded init, grid-exact centroid update (long sums → order-
-    independent means), lowest-cell tie-break — so every code and every
-    subspace distortion is engine-reproducible. All m subspaces share
-    the seed ordering (the same sample rows seed every subspace,
-    sliced), which lets one SQL oracle replay all subspaces with a
-    subspace dimension instead of m query copies.
-
-    FUSED plan — job count is independent of m:
-      1. ONE seeds collect (k rows, sliced into m codebooks driver-side);
-      2. per Lloyd update, ONE aggregation: the scan projects every
-         subspace's argmin cell, explodes m (s, cell, subvector) structs
-         per row, and groupBy(s, cell) sums the grid-quantized
-         coordinates — a single shuffle of m small structs per vector,
-         k·m·w bounded output;
-      3. ONE final projection emits all codes + distortions (no join).
-    m assignments are map-only expressions over one scan; memory is the
-    m codebooks as literals.
-
-    Output: (id, codes array<int> length m, dist — summed subspace
-    squared distortion, each subspace rounded then the sum rounded,
-    matching the per-subspace kmeans_lloyd contract).
-    """
-    dim_row = df.select(F.size(vec_col).alias("d")).head(1)
-    if not dim_row:
-        return (df.select(F.col(id_col)).limit(0)
-                  .withColumn("codes", F.array().cast("array<int>"))
-                  .withColumn("dist", F.lit(0.0)))
-    dim = dim_row[0]["d"]
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    w = dim // m
-
-    v = df.select(F.col(id_col).alias("_id"),
-                  _as_double(F.col(vec_col)).alias("_v"))
-    books = _pq_fit(v, m=m, k=k, n_iter=n_iter, seed=seed, grid=grid, w=w)
-    if books is None:
-        return (v.limit(0).select(F.col("_id").alias(id_col))
-                 .withColumn("codes", F.array().cast("array<int>"))
-                 .withColumn("dist", F.lit(0.0)))
-
-    # cells via the Arrow GEMM path; the reported distortion is the
-    # sequential-fold SQL distance of the CHOSEN centroid only (a lazy
-    # when-chain — one O(w) fold per subspace per row), so the values
-    # are byte-identical to the full-fold form and the oracle
-    staged = v.withColumn("_cells", _pq_cells_udf(books, w)("_v"))
-    cells = [F.element_at("_cells", s + 1) for s in range(m)]
-    sub_dists = [
-        F.round(_pq_chosen_dist(s, w, books[s], cells[s]), round_to)
-        for s in range(m)]
-    total = F.round(sum(sub_dists[1:], sub_dists[0]), round_to)
-    return staged.select(
-        F.col("_id").alias(id_col),
-        F.array(*cells).alias("codes"),
-        total.alias("dist"))
-
-
-def pq_adc_topk(queries: DataFrame, candidates: DataFrame, k_neighbors: int,
-                *, m: int = 4, k: int = 16, n_iter: int = 2, seed: int = 7,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                grid: int = 1_000_000, round_to: int = 6) -> DataFrame:
-    """PQ search with asymmetric distance computation (ADC) — the
-    serving pattern product quantization exists for: candidates are
-    stored ONLY as m-byte codes; per query, an m×k lookup table of
-    exact subspace distances to every centroid is built once, and each
-    candidate's approximate distance is m table lookups + adds. At
-    corpus scale the scan reads 2-byte codes instead of 256-byte
-    vectors (the 128× I/O reduction IS the algorithm).
-
-    Plan: codebooks via ``_pq_fit`` (same engine-portable recipe as
-    ``product_quantize``); candidates' codes are a map-only projection;
-    queries project their m lookup-table arrays once and BROADCAST into
-    the scoring join (the code scan never shuffles); per-query top-k
-    via ranked window. Approximate by construction (quantization error),
-    asymmetric (query side stays exact) — rerank survivors with
-    ``knn_bruteforce`` when exactness matters.
-
-    Output: (query_id, neighbor_id, adc_dist) — summed table lookups,
-    rounded BEFORE ranking; ties break on neighbor_id.
-
-    Fit+serve convenience: trains then delegates to the serve-only
-    ``pq_adc_topk_serve`` — production deployments fit once with
-    ``fit_pq_artifact``/``save_pq_artifact`` and serve from the
-    loaded artifact (identical output by construction).
-    """
-    art = fit_pq_artifact(candidates, m=m, k=k, n_iter=n_iter, seed=seed,
-                          id_col=id_col, vec_col=vec_col, grid=grid,
-                          round_to=round_to)
-    if art is None:
-        return _empty_pairs(queries, id_col, "adc_dist")
-    return pq_adc_topk_serve(queries, candidates, k_neighbors, art,
-                             id_col=id_col, vec_col=vec_col)
-
-
-def ivf_pq_topk(queries: DataFrame, candidates: DataFrame, k_neighbors: int,
-                *, n_cells: int = 8, n_probe: int = 2, cell_seed: int = 42,
-                m: int = 4, k: int = 16, n_iter: int = 2, seed: int = 7,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                grid: int = 1_000_000, round_to: int = 6) -> DataFrame:
-    """The production ANN stack end-to-end: IVF coarse cells prune the
-    candidate set, PQ-ADC scores the survivors from their 2-byte codes
-    (Jégou et al. 2011's IVFADC). Per query: probe the ``n_probe``
-    nearest of ``n_cells`` coarse centroids, then rank only same-cell
-    candidates by asymmetric distance — the scoring join is an
-    EQUI-join on the cell id, so work per query is the probed fraction
-    (~n_probe/n_cells of the corpus), not the corpus (q77's exhaustive
-    ADC shape made sub-linear).
-
-    Coarse centroids are an md5-ordered sample (``_pq_fit`` with one
-    full-width subspace and no Lloyd update — a trained quantizer slots
-    in by raising n_iter); PQ codebooks are exactly ``product_quantize``'s.
-    Everything stays engine-reproducible: the oracle replays cells,
-    probes, codes, and lookup tables. Approximate on two axes (cell
-    recall, quantization error); rerank survivors exactly when needed.
-
-    Output: (query_id, neighbor_id, adc_dist), ≤ k_neighbors per query.
-
-    Fit+serve convenience: trains (coarse + PQ) then delegates to the
-    serve-only ``ivf_pq_topk_serve`` — production deployments fit once
-    with ``fit_pq_artifact(n_cells=...)`` and serve from the loaded
-    artifact (identical output by construction).
-    """
-    art = fit_pq_artifact(candidates, m=m, k=k, n_iter=n_iter, seed=seed,
-                          n_cells=n_cells, cell_seed=cell_seed,
-                          id_col=id_col, vec_col=vec_col, grid=grid,
-                          round_to=round_to)
-    if art is None or art.coarse is None:
-        return _empty_pairs(queries, id_col, "adc_dist")
-    return ivf_pq_topk_serve(queries, candidates, k_neighbors, art,
-                             n_probe=n_probe, id_col=id_col,
-                             vec_col=vec_col)
-
-
-# --------------------------------------------------------------------
-# Fit/serve split (round-4): train codebooks ONCE, persist them as a
-# parquet artifact, and serve queries against the stored artifact with
-# NO training stage in the plan. This is the production ANN shape —
-# at 100 TB the fit is a scheduled offline job over a sample; serving
-# loads k·m centroid rows (a bounded collect) and runs pure
-# broadcast-GEMM scoring. The fit+serve convenience wrappers
-# (pq_adc_topk / ivf_pq_topk) now delegate to the same serve code, so
-# both paths are output-identical by construction.
-# --------------------------------------------------------------------
-
-from dataclasses import dataclass
-
-
-@dataclass(frozen=True)
-class PQArtifact:
-    """Trained quantizer state: m per-subspace codebooks (k centroids
-    of width w each) and optionally the IVF coarse centroids."""
-    m: int
-    k: int
-    w: int
-    dim: int
-    grid: int
-    round_to: int
-    books: tuple          # books[s][cell] = centroid (list[float], len w)
-    coarse: tuple | None  # coarse[cell] = centroid (list[float], len dim)
 
 
 def fit_pq_artifact(df: DataFrame, *, m: int = 4, k: int = 16,
@@ -939,29 +627,23 @@ def fit_pq_artifact(df: DataFrame, *, m: int = 4, k: int = 16,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     grid: int = 1_000_000,
                     round_to: int = 6) -> PQArtifact | None:
-    """Train PQ codebooks (and IVF coarse centroids when ``n_cells``)
-    over a corpus — the offline fit job. Same engine-portable recipe
-    as ``product_quantize``/``ivf_pq_topk`` (md5-seeded init,
-    grid-exact Lloyd updates), so a serve run against this artifact is
-    output-identical to the fused fit+serve wrappers. Returns None on
-    empty input."""
-    dim_row = df.select(F.size(vec_col).alias("d")).head(1)
-    if not dim_row:
-        return None
-    dim = dim_row[0]["d"]
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    w = dim // m
-    v = df.select(F.col(id_col).alias("_id"),
-                  _as_double(F.col(vec_col)).alias("_v"))
-    books = _pq_fit(v, m=m, k=k, n_iter=n_iter, seed=seed, grid=grid, w=w)
+    """The offline fit job: m subspace codebooks of up to k centroids,
+    plus the IVF coarse centroids when ``n_cells`` (an m=1 fit with no
+    Lloyd update, seeded by ``cell_seed``). k-means is the m=1 fit; the
+    IVF cell sample alone is the m=1, n_iter=1 fit. The artifact's k is
+    the number of centroids trained, fewer than asked on a corpus
+    smaller than k. Returns None on empty input."""
+    v = _vectors(df, id_col, vec_col)
+    books = _pq_fit(v, m=m, k=k, n_iter=n_iter, seed=seed, grid=grid)
     if books is None:
         return None
     coarse = None
     if n_cells:
-        cb = _pq_fit(v, m=1, k=n_cells, n_iter=1, seed=cell_seed,
-                     grid=grid, w=dim)
-        coarse = tuple(tuple(c) for c in cb[0]) if cb else None
-    return PQArtifact(m=m, k=k, w=w, dim=dim, grid=grid, round_to=round_to,
+        cb = _pq_fit(v, m=1, k=n_cells, n_iter=1, seed=cell_seed, grid=grid)
+        coarse = tuple(tuple(c) for c in cb[0])
+    w = len(books[0][0])
+    return PQArtifact(m=m, k=len(books[0]), w=w, dim=m * w, grid=grid,
+                      round_to=round_to,
                       books=tuple(tuple(tuple(c) for c in b) for b in books),
                       coarse=coarse)
 
@@ -1011,10 +693,76 @@ def load_pq_artifact(spark, path: str) -> PQArtifact:
                 if coarse else None))
 
 
+def _pq_assign(df: DataFrame, art: PQArtifact, id_col: str,
+               vec_col: str) -> DataFrame:
+    """The encoder with distortion: (_id, _cells, dist), where dist
+    sums each subspace's fold distance to its chosen centroid, each
+    rounded, then the sum rounded. Map-only."""
+    staged = _vectors(df, id_col, vec_col).withColumn(
+        "_cells", _pq_cells_udf(art.books, art.w)("_v"))
+    sub = [F.round(_pq_chosen_dist(s, art.w, art.books[s],
+                                   F.element_at("_cells", s + 1)),
+                   art.round_to)
+           for s in range(art.m)]
+    return staged.select("_id", "_cells",
+                         F.round(sum(sub[1:], sub[0]), art.round_to)
+                          .alias("dist"))
+
+
+def product_quantize(df: DataFrame, *, m: int = 4, k: int = 16,
+                     n_iter: int = 2, seed: int = 7,
+                     id_col: str = "vec_id", vec_col: str = "embedding",
+                     grid: int = 1_000_000, round_to: int = 6) -> DataFrame:
+    """Product quantization (Jégou et al. 2011): split each vector into
+    ``m`` contiguous subspaces and vector-quantize each against its own
+    ``k``-centroid codebook — the memory layout ANN serving uses at
+    corpus scale (m log2(k) bits per vector instead of 4·dim bytes;
+    4 subspaces × 16 cells = 2 bytes for a 64-dim float vector).
+
+    ``fit_pq_artifact`` then the encoder. All m subspaces share the
+    seed rows (sliced), so one SQL oracle replays every subspace with a
+    subspace dimension. Job count is independent of m: one seeds
+    collect, one aggregation per Lloyd update, one map-only encode.
+
+    Output: (id, codes array<int> length m, dist — the summed subspace
+    squared distortion, each subspace rounded then the sum rounded).
+    """
+    art = fit_pq_artifact(df, m=m, k=k, n_iter=n_iter, seed=seed,
+                          id_col=id_col, vec_col=vec_col, grid=grid,
+                          round_to=round_to)
+    if art is None:
+        return (df.select(F.col(id_col)).limit(0)
+                  .withColumn("codes", F.array().cast("array<int>"))
+                  .withColumn("dist", F.lit(0.0)))
+    return _pq_assign(df, art, id_col, vec_col).select(
+        F.col("_id").alias(id_col), F.col("_cells").alias("codes"), "dist")
+
+
+def kmeans_assign_serve(df: DataFrame, art: PQArtifact, *,
+                        id_col: str = "vec_id",
+                        vec_col: str = "embedding") -> DataFrame:
+    """k-means assignment against an m=1 artifact (Lloyd's k-means is
+    ``fit_pq_artifact(df, m=1, k=k, n_iter=n_iter, seed=seed)``):
+    (id, cell, dist), dist the rounded squared Euclidean distance to
+    the chosen centroid. One map-only pass, no training job."""
+    return _pq_assign(df, art, id_col, vec_col).select(
+        F.col("_id").alias(id_col), F.element_at("_cells", 1).alias("cell"),
+        "dist")
+
+
 def _empty_pairs(queries: DataFrame, id_col: str, dist_name: str) -> DataFrame:
     return (queries.select(F.col(id_col).alias("query_id")).limit(0)
                    .withColumn("neighbor_id", F.col("query_id"))
                    .withColumn(dist_name, F.lit(0.0)))
+
+
+def _pq_codes(v: DataFrame, art: PQArtifact, *extra: Column) -> DataFrame:
+    """The code projection of a (_id, _v) frame: (neighbor_id, *extra,
+    _c0.._c{m-1}), each code the encoder's cell in its subspace."""
+    staged = v.withColumn("_cells", _pq_cells_udf(art.books, art.w)("_v"))
+    return staged.select(F.col("_id").alias("neighbor_id"), *extra,
+                         *[F.element_at("_cells", s + 1).alias(f"_c{s}")
+                           for s in range(art.m)])
 
 
 def pq_encode(candidates: DataFrame, art: PQArtifact, *,
@@ -1026,48 +774,62 @@ def pq_encode(candidates: DataFrame, art: PQArtifact, *,
     pure function of (artifact, vector), so append-only maintenance —
     encode just the new vectors and append — yields byte-identical
     state to a full re-encode (q141 certifies exactly that)."""
-    m, w, books = art.m, art.w, [list(map(list, b)) for b in art.books]
-    c = candidates.select(F.col(id_col).alias("_id"),
-                          _as_double(F.col(vec_col)).alias("_v"))
-    return (c.withColumn("_cells", _pq_cells_udf(books, w)("_v"))
-             .select(F.col("_id").alias("neighbor_id"),
-                     *[F.element_at("_cells", s + 1).alias(f"_c{s}")
-                       for s in range(m)]))
+    return _pq_codes(_vectors(candidates, id_col, vec_col), art)
 
 
-def pq_adc_topk_codes(queries: DataFrame, codes: DataFrame,
-                      k_neighbors: int, art: PQArtifact, *,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
-    """ADC search against a PRE-ENCODED codes frame (the serve shape
-    when the index lives as a table): query lookup tables build once
-    and broadcast; scoring is m array lookups + adds per candidate."""
-    m, w, books = art.m, art.w, [list(map(list, b)) for b in art.books]
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("_v"))
-    qtabs = q.select(
-        "query_id",
-        *[_pq_dists(s, w, books[s]).alias(f"_t{s}") for s in range(m)])
-    scored = (codes.crossJoin(F.broadcast(qtabs))
-                   .filter(F.col("neighbor_id") != F.col("query_id")))
-    lookups = [F.element_at(f"_t{s}", F.col(f"_c{s}") + 1) for s in range(m)]
-    scored = scored.withColumn(
-        "adc_dist", F.round(sum(lookups[1:], lookups[0]), art.round_to))
+def _adc_tables(art: PQArtifact) -> list[Column]:
+    """Per-query ADC lookup tables over ``_v``: ``_t{s}`` holds the
+    fold distance of subspace s to every centroid of its codebook."""
+    return [_pq_dists(s, art.w, art.books[s]).alias(f"_t{s}")
+            for s in range(art.m)]
+
+
+def _adc_topk(pairs: DataFrame, k_neighbors: int,
+              art: PQArtifact) -> DataFrame:
+    """The ADC scorer over (code, query-table) pairs — neighbor_id with
+    codes _c{s}, query_id with tables _t{s}: self-matches dropped, the
+    m table lookups summed and rounded BEFORE ranking, the k nearest
+    per query kept (ties on neighbor_id)."""
+    lookups = [F.element_at(f"_t{s}", F.col(f"_c{s}") + 1)
+               for s in range(art.m)]
+    scored = (pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+                   .withColumn("adc_dist",
+                               F.round(sum(lookups[1:], lookups[0]),
+                                       art.round_to)))
     top = top_n_per_key(scored, ["query_id"],
                         [F.col("adc_dist").asc(), F.col("neighbor_id")],
                         k_neighbors)
     return top.select("query_id", "neighbor_id", "adc_dist")
 
 
+def pq_adc_topk_codes(queries: DataFrame, codes: DataFrame,
+                      k_neighbors: int, art: PQArtifact, *,
+                      id_col: str = "vec_id",
+                      vec_col: str = "embedding") -> DataFrame:
+    """PQ search with asymmetric distance computation (ADC) against a
+    pre-encoded codes frame (``pq_encode``'s shape): per query, an m×k
+    table of exact subspace distances to every centroid builds once
+    and broadcasts into the code scan, so the corpus never shuffles
+    and each candidate costs m lookups + adds — reading 2-byte codes
+    instead of 256-byte vectors IS the algorithm. Approximate by
+    construction (quantization error), asymmetric (the query side stays
+    exact); rerank survivors with ``knn_bruteforce`` when exactness
+    matters.
+
+    Output: (query_id, neighbor_id, adc_dist), ≤ k_neighbors per query.
+    """
+    qtabs = _vectors(queries, id_col, vec_col, "query_id").select(
+        "query_id", *_adc_tables(art))
+    return _adc_topk(codes.crossJoin(F.broadcast(qtabs)), k_neighbors, art)
+
+
 def pq_adc_topk_serve(queries: DataFrame, candidates: DataFrame,
                       k_neighbors: int, art: PQArtifact, *,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding") -> DataFrame:
-    """Serve-only ADC search: NO training stage in this plan — the
-    codebooks arrive as literals from a fitted artifact. Candidate
-    codes are a map-only GEMM projection (``pq_encode``), scoring is
-    ``pq_adc_topk_codes``. See ``pq_adc_topk`` for the algorithm
-    contract."""
+    """ADC search over raw vectors: ``pq_encode`` then
+    ``pq_adc_topk_codes``. The codebooks arrive as literals from a
+    fitted artifact, so the plan has no training stage."""
     codes = pq_encode(candidates, art, id_col=id_col, vec_col=vec_col)
     return pq_adc_topk_codes(queries, codes, k_neighbors, art,
                              id_col=id_col, vec_col=vec_col)
@@ -1077,92 +839,35 @@ def ivf_pq_topk_serve(queries: DataFrame, candidates: DataFrame,
                       k_neighbors: int, art: PQArtifact, *,
                       n_probe: int = 2, id_col: str = "vec_id",
                       vec_col: str = "embedding") -> DataFrame:
-    """Serve-only IVFADC: coarse centroids + codebooks from a fitted
-    artifact; the plan is cell assignment (GEMM projection), probe
-    explosion, an EQUI-join on cell id, and table lookups — no
-    training jobs. See ``ivf_pq_topk`` for the algorithm contract."""
-    assert art.coarse is not None, "artifact was fitted without n_cells"
-    m, w = art.m, art.w
-    books = [list(map(list, b)) for b in art.books]
-    icent = [list(c) for c in art.coarse]
-    dim = art.dim
-    c = candidates.select(F.col(id_col).alias("_id"),
-                          _as_double(F.col(vec_col)).alias("_v"))
-    # one transform over the 2-D centroid literal (see _pq_dists) —
-    # same fold values, n_cells× smaller expression tree
-    lit_icent = F.array(*[F.array(*[F.lit(x) for x in cv]) for cv in icent])
-    cell_d = F.transform(
-        lit_icent,
-        lambda cv: F.aggregate(
-            F.zip_with(F.col("_v"), cv, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, e: acc + e))
-    codes = (c.withColumn("_cc", _pq_cells_udf([icent], dim)("_v"))
-              .withColumn("_cells", _pq_cells_udf(books, w)("_v"))
-              .select(F.col("_id").alias("neighbor_id"),
-                      F.element_at("_cc", 1).alias("cell"),
-                      *[F.element_at("_cells", s + 1).alias(f"_c{s}")
-                        for s in range(m)]))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("_v"))
-    q_staged = q.select(
-        "query_id", cell_d.alias("_cd"),
-        *[_pq_dists(s, w, books[s]).alias(f"_t{s}") for s in range(m)])
-    probe_structs = F.array(*[
+    """IVFADC (Jégou et al. 2011), the production ANN stack: IVF coarse
+    cells prune the candidates, PQ-ADC scores the survivors from their
+    codes. Each candidate is encoded with its coarse cell; each query
+    probes its ``n_probe`` nearest coarse centroids (ties to the lower
+    cell) and the scoring join is an EQUI-join on cell id, so per-query
+    work is the probed fraction (~n_probe/n_cells of the corpus).
+    Probing every cell equals ``pq_adc_topk_serve``. Needs an artifact
+    fitted with ``n_cells``; serves with no training stage.
+
+    Output: (query_id, neighbor_id, adc_dist), ≤ k_neighbors per query.
+    """
+    if art.coarse is None:
+        raise ValueError("ivf_pq_topk_serve needs an artifact fitted "
+                         "with n_cells (it has no coarse centroids)")
+    v = _vectors(candidates, id_col, vec_col).withColumn(
+        "_cc", _pq_cells_udf([art.coarse], art.dim)("_v"))
+    codes = _pq_codes(v, art, F.element_at("_cc", 1).alias("cell"))
+    tables = [F.col(f"_t{s}") for s in range(art.m)]
+    probes = F.array(*[
         F.struct(F.element_at("_cd", j + 1).alias("d"),
                  F.lit(j).cast("int").alias("c"))
-        for j in range(len(icent))])
-    q_probes = q_staged.select(
-        "query_id", *[F.col(f"_t{s}") for s in range(m)],
-        F.explode(F.slice(F.array_sort(probe_structs), 1, n_probe))
-         .alias("_p")) \
-        .select("query_id", F.col("_p.c").alias("cell"),
-                *[F.col(f"_t{s}") for s in range(m)])
-    scored = (codes.join(F.broadcast(q_probes), "cell")
-                   .filter(F.col("neighbor_id") != F.col("query_id")))
-    lookups = [F.element_at(f"_t{s}", F.col(f"_c{s}") + 1) for s in range(m)]
-    scored = scored.withColumn(
-        "adc_dist", F.round(sum(lookups[1:], lookups[0]), art.round_to))
-    top = top_n_per_key(scored, ["query_id"],
-                        [F.col("adc_dist").asc(), F.col("neighbor_id")],
-                        k_neighbors)
-    return top.select("query_id", "neighbor_id", "adc_dist")
-
-
-def hard_negative_mine(queries: DataFrame, candidates: DataFrame, k: int, *,
-                       dup_threshold: float = 0.98,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       round_to: int = 6) -> DataFrame:
-    """Hard-negative mining for contrastive training: per query, the
-    top-k MOST similar candidates that are NOT near-duplicates — the
-    informative negatives sit just below the duplicate band, and a
-    plain kNN would hand back the query's own clones as "negatives"
-    (catastrophic for a contrastive objective; the synthetic corpus'
-    clone groups make the exclusion observable). Same broadcast-query
-    scored stage as ``knn_bruteforce`` (norms projected once per
-    side), with the dup band ``cosine >= dup_threshold`` excluded
-    BEFORE the per-query top-k — filtering after a plain top-k would
-    silently under-fill.
-
-    Output: (query_id, neighbor_id, cosine, neg_rank), neg_rank 1..k.
-    """
-    from .windows import top_n_per_key
-
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("q_vec")) \
-               .withColumn("_qn", l2_norm(F.col("q_vec")))
-    c = candidates.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(F.col(vec_col)).alias("c_vec")) \
-                  .withColumn("_cn", l2_norm(F.col("c_vec")))
-    scored = (c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-               .withColumn("cosine",
-                           F.round(dot(F.col("q_vec"), F.col("c_vec"))
-                                   / (F.col("_qn") * F.col("_cn")), round_to)
-                           + F.lit(0.0))
-               .filter(F.col("cosine") < dup_threshold))
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-               .orderBy(F.col("cosine").desc(), F.col("neighbor_id")))
-    return (scored.withColumn("neg_rank", F.row_number().over(w))
-                  .filter(F.col("neg_rank") <= k)
-                  .select("query_id", "neighbor_id", "cosine",
-                          F.col("neg_rank").cast("long").alias("neg_rank")))
+        for j in range(len(art.coarse))])
+    q_probes = (
+        _vectors(queries, id_col, vec_col, "query_id")
+        .select("query_id", _pq_dists(0, art.dim, art.coarse).alias("_cd"),
+                *_adc_tables(art))
+        .select("query_id", *tables,
+                F.explode(F.slice(F.array_sort(probes), 1, n_probe))
+                 .alias("_p"))
+        .select("query_id", F.col("_p.c").alias("cell"), *tables))
+    return _adc_topk(codes.join(F.broadcast(q_probes), "cell"),
+                     k_neighbors, art)

@@ -128,40 +128,24 @@ def hll_fit(df: DataFrame, key_col: str) -> DataFrame:
 
 
 def hll_estimate(registers: DataFrame) -> DataFrame:
-    """Harmonic estimate with exact-integer internals: each register
-    contributes 2^(wbits+1-r) to a scaled sum S (an exact long;
-    absent registers contribute 2^(wbits+1)), so the only float op is
-    the final alpha·m²·2^(wbits+1)/S division — deterministic across
-    engines and partitionings. Small-range correction (E ≤ 5m/2 with
-    empty registers → linear counting m·ln(m/V)) applies as in the
-    paper. Output: one row (n_hll double, rounded 4dp)."""
-    scale = 1 << (_HLL_WBITS + 1)
-    # coalesce: zero registers (empty input) → s_present 0, so the
-    # small-range correction yields the CORRECT empty-sketch estimate
-    # m·ln(m/m) = 0.0 instead of a NULL propagating out
-    agg = registers.agg(
-        F.coalesce(
-            F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), "
-                         f"CAST({_HLL_WBITS + 1} - r AS INT))")),
-            F.lit(0)).cast("long").alias("_s_present"),
-        F.count(F.lit(1)).alias("_nb"))
-    s = (F.col("_s_present")
-         + (F.lit(HLL_M) - F.col("_nb")) * F.lit(scale)).cast("double")
-    raw = F.lit(HLL_ALPHA * HLL_M * HLL_M * scale) / s
-    zeros = (F.lit(HLL_M) - F.col("_nb")).cast("double")
-    est = F.when((raw <= 2.5 * HLL_M) & (zeros > 0),
-                 F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros)) \
-           .otherwise(raw)
-    return agg.select(F.round(est, 4).alias("n_hll"))
+    """Whole-sketch estimate: ``hll_estimate_grouped`` with no keys (a
+    global aggregation, so even an empty sketch yields its one row)."""
+    return hll_estimate_grouped(registers, [])
 
 
 def hll_estimate_grouped(registers: DataFrame, keys: list[str]) -> DataFrame:
     """Per-group harmonic estimate over a (keys..., bucket, r) register
-    table — the grouped twin of ``hll_estimate`` with identical
-    exact-integer internals. One hash aggregation; output (keys...,
-    n_hll). Groups with zero registers simply don't appear (they have
-    no rows to group)."""
+    table, with exact-integer internals: each register contributes
+    2^(wbits+1-r) to a scaled sum S (an exact long; absent registers
+    contribute 2^(wbits+1)), so the only float op is the final
+    alpha·m²·2^(wbits+1)/S division — deterministic across engines and
+    partitionings. Small-range correction (E ≤ 5m/2 with empty
+    registers → linear counting m·ln(m/V)) applies as in the paper.
+    One hash aggregation; output (keys..., n_hll rounded 4dp). With
+    keys, groups with zero registers do not appear; with no keys the
+    one row of an empty sketch estimates m·ln(m/m) = 0.0."""
     scale = 1 << (_HLL_WBITS + 1)
+    # coalesce: zero registers → s_present 0, not a NULL propagating out
     agg = registers.groupBy(*keys).agg(
         F.coalesce(
             F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), "

@@ -51,10 +51,22 @@ class QuerySpec:
 # q196, q201), every builder writing session scratch dirs (q65, q74,
 # q134, q135, q141, q144, q151, q190, q200-q204), the near-dup LSH
 # and shingle-base callers (q17, q18, q41, q170, q171, q189, q199),
-# q63, q123 and q140, plus the rest of the previous head. Each group below is a
+# q63, q123 and q140, the vector-quantizer and cosine-search callers
+# (q19, q20, q31, q67, q76, q77, q81, q82, q141, q153, q184, q202),
+# plus the rest of the previous head. Each group below is a
 # driver record of its queries, taken while they were in the head; tail
 # entries still run everywhere else (pytest, bench, check_correctness).
 _DEPRIORITIZED = (
+    # --- rotated out for q19, q20, q31, q67, q76, q77, q81, q82, q184 ---
+    "q156_unicode_nfc",
+    "q158_pmi_cooc",
+    "q163_bm25",
+    "q168_audio_stats",
+    "q173_crossdoc_dedup",
+    "q174_pii_redact",
+    "q175_logistic_fit",
+    "q176_embed_standardize",
+    "q177_winnowing",
     # --- rotated out for q17, q189, q199 ---
     "q160_zipf_fit",
     "q164_distinct_n",
@@ -67,7 +79,6 @@ _DEPRIORITIZED = (
     # --- rotated out for q18, q41, q63 ---
     "q182_stream_quantiles",
     "q183_stream_decontaminate",
-    "q184_hard_negatives",
     # --- rotated out for the operator callers and scratch-dir builders above ---
     "q137_jpeg_probe",
     "q146_html_extract",
@@ -100,8 +111,6 @@ _DEPRIORITIZED = (
     "q14_text_stats",
     "q15_lang_id",
     "q16_iqr_outliers",
-    "q19_knn_cosine",
-    "q20_lsh_ann",
     "q21_simhash",
     "q22_multimodal_meta",
     "q23_json_props",
@@ -112,7 +121,6 @@ _DEPRIORITIZED = (
     "q28_asof_attribution",
     "q29_stream_hourly",
     "q30_frame_sample",
-    "q31_ivf_ann",
     "q32_threshold_severity",
     "q33_top_customers_per_nation",
     "q34_sessionize",
@@ -163,7 +171,6 @@ _DEPRIORITIZED = (
     "q62_mixture_sample",
     "q64_embed_quantize",
     "q66_tfidf",
-    "q67_kmeans",
     "q68_scd2",
     "q69_stream_sliding",
     "q70_weighted_sample",
@@ -173,8 +180,6 @@ _DEPRIORITIZED = (
     "q78_perplexity",
     "q79_trailing_features",
     "q80_split_drift",
-    "q81_ivf_pq",
-    "q82_rerank",
     "q83_salted_enrich",
     "q84_anomaly_days",
     # --- the q07-q11, q57, q73, q76, q77 and q85-q139 head ---
@@ -205,8 +210,6 @@ _DEPRIORITIZED = (
     "q139_greedy_pack",
     "q57_portable_split",
     "q73_incremental_agg",
-    "q76_product_quantize",
-    "q77_pq_adc",
     "q85_funnel",
     "q86_retention",
     "q87_top_paths",

@@ -2975,10 +2975,11 @@ WHERE rn <= 5
 
 # --------------------------------------------------------------------------
 # Q67 — Lloyd's k-means over embeddings (operators.similarity
-# .kmeans_lloyd): md5-seeded init, one grid-exact centroid update, final
-# assignment. The oracle re-derives the seeds, replays the identical
-# update (long sums on a 1e-6 grid → order-independent means), and
-# re-assigns — every cell id and distance hash-checked cross-engine.
+# .fit_pq_artifact with m=1, served by kmeans_assign_serve): md5-seeded
+# init, one grid-exact centroid update, final assignment. The oracle
+# re-derives the seeds, replays the identical update (long sums on a
+# 1e-6 grid → order-independent means), and re-assigns — every cell id
+# and distance hash-checked cross-engine.
 # --------------------------------------------------------------------------
 
 def q67_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3132,12 +3133,13 @@ FROM dense GROUP BY doc_id
 
 
 # --------------------------------------------------------------------------
-# Q76 — product quantization (operators.similarity.product_quantize):
-# 4 subspaces × 16 cells over the embeddings — 2 bytes per 64-dim
-# vector. Every subspace replays q67's kmeans recipe (md5-seeded init,
-# one grid-exact update, final assign); the oracle runs ALL subspaces
-# in one SQL by adding a subspace dimension to the q67 chain. Codes as
-# CSV + per-vector summed distortion, all hash-checked.
+# Q76 — product quantization (operators.similarity.product_quantize:
+# fit_pq_artifact, then the shared encoder): 4 subspaces × 16 cells over
+# the embeddings — 2 bytes per 64-dim vector. Every subspace replays
+# q67's k-means recipe (md5-seeded init, one grid-exact update, final
+# assign); the oracle runs ALL subspaces in one SQL by adding a
+# subspace dimension to the q67 chain. Codes as CSV + per-vector summed
+# distortion, all hash-checked.
 # --------------------------------------------------------------------------
 
 def q76_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3434,11 +3436,11 @@ def _pq_artifact(spark: SparkSession, sf_dir: str):
 def _km_artifact(spark: SparkSession, sf_dir: str):
     """The dataset's fitted k-means centroids (q67 serves assignment
     only)."""
-    from ..operators.similarity import fit_kmeans_artifact
+    from ..operators.similarity import fit_pq_artifact
 
     def fit():
         emb = read_table(spark, sf_dir, "embeddings")
-        return fit_kmeans_artifact(emb, k=8, n_iter=2, seed=7)
+        return fit_pq_artifact(emb, m=1, k=8, n_iter=2, seed=7)
 
     return _fitted_artifact(spark, sf_dir, "km", fit)
 
@@ -3446,11 +3448,11 @@ def _km_artifact(spark: SparkSession, sf_dir: str):
 def _ivf_artifact(spark: SparkSession, sf_dir: str):
     """The dataset's fitted IVF coarse centroids (q31's cell sample,
     persisted so serve runs zero training jobs)."""
-    from ..operators.similarity import fit_ivf_centroids_artifact
+    from ..operators.similarity import fit_pq_artifact
 
     def fit():
         emb = read_table(spark, sf_dir, "embeddings")
-        return fit_ivf_centroids_artifact(emb, n_cells=16, seed=42)
+        return fit_pq_artifact(emb, m=1, k=16, n_iter=1, seed=42)
 
     return _fitted_artifact(spark, sf_dir, "ivfc", fit)
 
@@ -3680,7 +3682,7 @@ FROM cnt, tot
 
 # --------------------------------------------------------------------------
 # Q81 — IVFADC: the full production ANN stack (operators.similarity
-# .ivf_pq_topk). IVF cells prune candidates (equi-join on cell id),
+# .ivf_pq_topk_serve). IVF cells prune candidates (equi-join on cell id),
 # PQ-ADC lookup tables score the survivors from 2-byte codes. The
 # oracle replays coarse centroids, cell assignment, probes, PQ codes,
 # and the per-query tables — every ranked distance hash-checked.
@@ -4596,11 +4598,11 @@ def _semdedup_artifact(spark: SparkSession, sf_dir: str):
     needs no artifact and no refit policy; the k-means artifact still
     refits whenever the dataset changes (mtime/child-count keying,
     pinned by test_artifact_refit)."""
-    from ..operators.similarity import fit_kmeans_artifact
+    from ..operators.similarity import fit_pq_artifact
 
     def fit():
         emb = read_table(spark, sf_dir, "embeddings")
-        return fit_kmeans_artifact(emb, k=_SEMDEDUP_K, n_iter=2, seed=7)
+        return fit_pq_artifact(emb, m=1, k=_SEMDEDUP_K, n_iter=2, seed=7)
 
     # kind 'semk8' (not the older 'semk'): the fit params changed to
     # fixed k=8, and the artifact key must change with them so a

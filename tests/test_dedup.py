@@ -1078,14 +1078,19 @@ def test_blocked_jaccard_persist_base_gate(spark, sf_dir):
 def test_dedup_argument_checks_raise_value_error(spark):
     """Argument checks raise ValueError, which ``python -O`` keeps
     (it strips asserts): a band count that does not divide n_hashes on
-    all three LSH entry points, and a non-positive threshold on the
-    inverted-index join."""
+    all three LSH entry points, a non-positive threshold on the
+    inverted-index join, a minhash family of the wrong width, a Hamming
+    band split that does not fit, a PQ subspace count that does not
+    divide the dimension, and IVFADC serving without coarse cells."""
     import pytest
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        blocked_jaccard_pairs, fit_lsh_dedup_index, incremental_lsh_dedup,
-        minhash_lsh_pairs)
+        PortableMinhashFamily, blocked_jaccard_pairs, fit_lsh_dedup_index,
+        hamming_banded_pairs, incremental_lsh_dedup, minhash_lsh_pairs,
+        minhash_signatures, shingle_base)
+    from elt_gluepipeline_spark.operators.similarity import (
+        fit_pq_artifact, ivf_pq_topk_serve)
 
     docs = _inc_docs(spark)
     lsh_calls = [
@@ -1103,3 +1108,18 @@ def test_dedup_argument_checks_raise_value_error(spark):
         with pytest.raises(ValueError, match="threshold > 0"):
             blocked_jaccard_pairs(docs, "doc_id", "text", [F.lit(1)],
                                   threshold=t)
+    base = shingle_base(docs, "doc_id", "text", [], k=3)
+    with pytest.raises(ValueError, match="pair_family"):
+        minhash_signatures(base, n_hashes=32,
+                           pair_family=PortableMinhashFamily(16, seed=1))
+    fps = spark.createDataFrame([(1, 5), (2, 7)], "id long, h long")
+    for bits, bands in ((56, 5), (64, 4), (0, 4)):
+        with pytest.raises(ValueError, match="bands dividing bits"):
+            hamming_banded_pairs(fps, "id", "h", bits=bits, bands=bands)
+    vecs = spark.createDataFrame([(1, [1.0, 2.0, 3.0]), (2, [0.0, 1.0, 0.0])],
+                                 "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="not divisible"):
+        fit_pq_artifact(vecs, m=2, k=2)
+    flat = fit_pq_artifact(vecs, m=1, k=2)
+    with pytest.raises(ValueError, match="n_cells"):
+        ivf_pq_topk_serve(vecs, vecs, 1, flat)

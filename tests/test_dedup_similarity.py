@@ -198,12 +198,14 @@ def test_minhash_portable_finds_near_dups(spark):
 
 
 def test_kmeans_lloyd_assigns_nearest_and_converges(spark):
-    from elt_gluepipeline_spark.operators.similarity import kmeans_lloyd
+    from elt_gluepipeline_spark.operators.similarity import (
+        fit_pq_artifact, kmeans_assign_serve)
     # two tight planted clusters far apart -> k=2 must separate them
     rows = ([(i, [10.0 + 0.01 * i, 10.0]) for i in range(6)]
             + [(100 + i, [-10.0 - 0.01 * i, -10.0]) for i in range(6)])
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = kmeans_lloyd(df, k=2, n_iter=3, seed=7).collect()
+    art = fit_pq_artifact(df, m=1, k=2, n_iter=3, seed=7)
+    out = kmeans_assign_serve(df, art).collect()
     by_cell = {}
     for r in out:
         by_cell.setdefault(r.cell, set()).add(r.vec_id)
@@ -216,17 +218,24 @@ def test_kmeans_lloyd_assigns_nearest_and_converges(spark):
 
 
 def test_kmeans_lloyd_deterministic_under_repartition(spark, sf_dir):
-    from elt_gluepipeline_spark.operators.similarity import kmeans_lloyd
+    from elt_gluepipeline_spark.operators.similarity import (
+        fit_pq_artifact, kmeans_assign_serve)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = kmeans_lloyd(emb, k=4, n_iter=2, seed=7).collect()
-    b = kmeans_lloyd(emb.repartition(7), k=4, n_iter=2, seed=7).collect()
+
+    def fit_serve(df):
+        art = fit_pq_artifact(df, m=1, k=4, n_iter=2, seed=7)
+        return art, kmeans_assign_serve(df, art).collect()
+
+    art_a, a = fit_serve(emb)
+    art_b, b = fit_serve(emb.repartition(7))
+    assert art_a == art_b
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_kmeans_lloyd_empty_input(spark):
-    from elt_gluepipeline_spark.operators.similarity import kmeans_lloyd
+    from elt_gluepipeline_spark.operators.similarity import fit_pq_artifact
     df = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert kmeans_lloyd(df, k=3, n_iter=2).count() == 0
+    assert fit_pq_artifact(df, m=1, k=3, n_iter=2) is None
 
 
 def test_edit_distance_pairs_exact_recall_vs_bruteforce(spark):
@@ -272,12 +281,14 @@ def test_product_quantize_exact_when_k_covers_corpus(spark):
     rows = [(i, [float(i), float(-i), float(2 * i), float(i * i)])
             for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = product_quantize(df, m=2, k=6, n_iter=2, seed=7).collect()
-    # every vector is a seed -> its own codeword -> zero distortion
-    assert len(out) == 6
-    assert all(r.dist == 0.0 for r in out)
-    assert all(len(r.codes) == 2 for r in out)
-    assert all(0 <= c < 6 for r in out for c in r.codes)
+    # k=8 > 6 rows: the codebooks hold the 6 seeds the corpus has
+    for k in (6, 8):
+        out = product_quantize(df, m=2, k=k, n_iter=2, seed=7).collect()
+        # every vector is a seed -> its own codeword -> zero distortion
+        assert len(out) == 6
+        assert all(r.dist == 0.0 for r in out)
+        assert all(len(r.codes) == 2 for r in out)
+        assert all(0 <= c < 6 for r in out for c in r.codes)
 
 
 def test_product_quantize_deterministic_and_groups_duplicates(spark):
@@ -294,13 +305,15 @@ def test_product_quantize_deterministic_and_groups_duplicates(spark):
 
 
 def test_pq_adc_exact_when_k_covers_corpus(spark):
-    from elt_gluepipeline_spark.operators.similarity import pq_adc_topk
+    from elt_gluepipeline_spark.operators.similarity import (
+        fit_pq_artifact, pq_adc_topk_serve)
     rows = [(i, [float(i), float(3 - i), float(i * i % 5), 1.0])
             for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter(F.col("vec_id") < 2)
     got = {}
-    for r in pq_adc_topk(q, df, 2, m=2, k=6, n_iter=2, seed=7).collect():
+    art = fit_pq_artifact(df, m=2, k=6, n_iter=2, seed=7)
+    for r in pq_adc_topk_serve(q, df, 2, art).collect():
         got.setdefault(r.query_id, []).append((r.neighbor_id, r.adc_dist))
 
     def l2(a, b):
@@ -315,22 +328,22 @@ def test_pq_adc_exact_when_k_covers_corpus(spark):
 
 
 def test_ivf_pq_full_probe_equals_exhaustive_adc(spark, sf_dir):
-    from elt_gluepipeline_spark.operators.similarity import (ivf_pq_topk,
-                                                             pq_adc_topk)
+    from elt_gluepipeline_spark.operators.similarity import (
+        fit_pq_artifact, ivf_pq_topk_serve, pq_adc_topk_serve)
     from elt_gluepipeline_spark.sources.readers import read_table
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 4)
+    art = fit_pq_artifact(emb, m=4, k=8, n_iter=2, n_cells=4)
     # probing EVERY cell removes the IVF approximation: identical to
     # q77's exhaustive ADC ranking, code for code and distance for
     # distance
-    full = sorted(map(tuple, ivf_pq_topk(
-        q, emb, 3, n_cells=4, n_probe=4, m=4, k=8, n_iter=2).collect()))
-    adc = sorted(map(tuple, pq_adc_topk(
-        q, emb, 3, m=4, k=8, n_iter=2).collect()))
+    full = sorted(map(tuple, ivf_pq_topk_serve(
+        q, emb, 3, art, n_probe=4).collect()))
+    adc = sorted(map(tuple, pq_adc_topk_serve(q, emb, 3, art).collect()))
     assert full == adc
     # and a partial probe returns a subset of the exhaustive candidates
-    part = sorted(map(tuple, ivf_pq_topk(
-        q, emb, 3, n_cells=4, n_probe=1, m=4, k=8, n_iter=2).collect()))
+    part = sorted(map(tuple, ivf_pq_topk_serve(
+        q, emb, 3, art, n_probe=1).collect()))
     assert len(part) <= len(full)
 
 

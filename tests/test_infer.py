@@ -93,3 +93,17 @@ def test_read_csv_tolerant_quarantines_bad_rows(spark, tmp_path):
     bad = sorted(r._corrupt_record for r in quar.collect())
     assert bad == ["4,durian,bad", "oops,banana,not_a_number"]
     assert clean.columns == ["id", "name", "price"]
+
+
+def test_read_csv_strings_by_default_typed_on_request(spark, tmp_path):
+    from elt_gluepipeline_spark.sources.readers import read_csv
+
+    path = tmp_path / "t.csv"
+    path.write_text("id,price\n1,2.5\n2,3.0\n")
+    raw = read_csv(spark, str(path))
+    assert [f.dataType for f in raw.schema] == [StringType(), StringType()]
+    assert [tuple(r) for r in raw.collect()] == [("1", "2.5"), ("2", "3.0")]
+    typed = read_csv(spark, str(path), infer=True)
+    assert isinstance(typed.schema["id"].dataType, IntegerType)
+    contract = read_csv(spark, str(path), schema="id long, price string")
+    assert isinstance(contract.schema["id"].dataType, LongType)

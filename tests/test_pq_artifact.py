@@ -1,13 +1,13 @@
-"""Fit/serve split for the PQ/IVF family (round-4 judge item):
-codebooks persist to a parquet artifact; serve runs score against the
-loaded artifact with NO training stage."""
+"""Fit/serve split for the vector-quantizer family: codebooks persist
+to a parquet artifact; serve runs score against the loaded artifact
+with NO training stage."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.similarity import (
-    fit_pq_artifact, ivf_pq_topk, ivf_pq_topk_serve, load_pq_artifact,
-    pq_adc_topk, pq_adc_topk_serve, save_pq_artifact)
+    fit_pq_artifact, ivf_pq_topk_serve, kmeans_assign_serve,
+    load_pq_artifact, pq_adc_topk_serve, save_pq_artifact)
 from elt_gluepipeline_spark.sources.readers import read_table
 
 
@@ -27,19 +27,20 @@ def test_artifact_roundtrip_bitwise(spark, emb, tmp_path):
     assert len(back.books) == 4 and len(back.books[0]) == 16
 
 
-def test_serve_equals_fit_and_serve(spark, emb):
-    """The fused wrappers delegate to serve — output identity between
-    fit+serve convenience and explicit artifact serve, both families."""
+def test_serve_equals_fit_and_serve(spark, emb, tmp_path):
+    """Serving a saved-and-loaded artifact is output-identical to
+    serving the freshly fitted one, for ADC and IVFADC."""
     q = emb.filter(F.col("vec_id") < 5)
     art = fit_pq_artifact(emb, m=4, k=16, n_iter=2, seed=7,
                           n_cells=8, cell_seed=42)
-    a = pq_adc_topk(q, emb, 3, m=4, k=16, n_iter=2, seed=7).collect()
-    b = pq_adc_topk_serve(q, emb, 3, art).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    a2 = ivf_pq_topk(q, emb, 3, n_cells=8, n_probe=2, cell_seed=42,
-                     m=4, k=16, n_iter=2, seed=7).collect()
-    b2 = ivf_pq_topk_serve(q, emb, 3, art, n_probe=2).collect()
-    assert sorted(map(tuple, a2)) == sorted(map(tuple, b2))
+    save_pq_artifact(spark, art, str(tmp_path / "pq"))
+    back = load_pq_artifact(spark, str(tmp_path / "pq"))
+    a = pq_adc_topk_serve(q, emb, 3, art).collect()
+    b = pq_adc_topk_serve(q, emb, 3, back).collect()
+    assert a and sorted(map(tuple, a)) == sorted(map(tuple, b))
+    a2 = ivf_pq_topk_serve(q, emb, 3, art, n_probe=2).collect()
+    b2 = ivf_pq_topk_serve(q, emb, 3, back, n_probe=2).collect()
+    assert a2 and sorted(map(tuple, a2)) == sorted(map(tuple, b2))
 
 
 def test_registry_serve_path_runs_no_fit(spark, sf_dir, monkeypatch, tmp_path):
@@ -74,41 +75,41 @@ def test_load_rejects_torn_artifact(spark, emb, tmp_path):
         load_pq_artifact(spark, str(tmp_path / "torn2"))
 
 
-# ---------------- k-means / IVF coarse artifacts (round-5) ----------------
+# ---------------- k-means / IVF coarse artifacts (m=1 fits) ----------------
 
 def test_kmeans_artifact_roundtrip_and_serve_identity(spark, emb, tmp_path):
-    """fit_kmeans_artifact -> save/load -> kmeans_assign_serve must be
-    output-identical to the fused kmeans_lloyd with the same params."""
-    from elt_gluepipeline_spark.operators.similarity import (
-        fit_kmeans_artifact, kmeans_assign_serve, kmeans_lloyd)
+    """A k-means model is the m=1 fit: save -> load -> serve must be
+    output-identical to serving the fresh fit, also on a corpus smaller
+    than k, where the artifact holds (and records) one centroid per
+    vector."""
+    for n, df in ((8, emb), (5, emb.filter(F.col("vec_id") < 5))):
+        art = fit_pq_artifact(df, m=1, k=8, n_iter=2, seed=7)
+        path = str(tmp_path / f"km{n}")
+        save_pq_artifact(spark, art, path)
+        back = load_pq_artifact(spark, path)
+        assert back == art
+        assert len(back.books) == 1 and len(back.books[0]) == n == back.k
 
-    art = fit_kmeans_artifact(emb, k=8, n_iter=2, seed=7)
-    path = str(tmp_path / "km")
-    save_pq_artifact(spark, art, path)
-    back = load_pq_artifact(spark, path)
-    assert back == art
-    assert len(back.books) == 1 and len(back.books[0]) == 8
-
-    fused = kmeans_lloyd(emb, k=8, n_iter=2, seed=7).collect()
-    served = kmeans_assign_serve(emb, back).collect()
-    assert sorted(map(tuple, fused)) == sorted(map(tuple, served))
+        fresh = kmeans_assign_serve(df, art).collect()
+        served = kmeans_assign_serve(df, back).collect()
+        assert len(served) == df.count()
+        assert sorted(map(tuple, fresh)) == sorted(map(tuple, served))
 
 
 def test_ivf_centroids_artifact_serve_identity(spark, emb, tmp_path):
-    """ivf_ann(centroids=artifact) must equal the fused sample path."""
-    from elt_gluepipeline_spark.operators.similarity import (
-        fit_ivf_centroids_artifact, ivf_ann)
+    """ivf_ann(centroids=artifact) must equal the fit-in-plan path."""
+    from elt_gluepipeline_spark.operators.similarity import ivf_ann
 
     q = emb.filter(F.col("vec_id") < 5)
-    art = fit_ivf_centroids_artifact(emb, n_cells=16, seed=42)
+    art = fit_pq_artifact(emb, m=1, k=16, n_iter=1, seed=42)
     path = str(tmp_path / "ivfc")
     save_pq_artifact(spark, art, path)
     back = load_pq_artifact(spark, path)
     assert back == art
-    fused = ivf_ann(q, emb, 3, n_cells=16, n_probe=4, seed=42).collect()
+    in_plan = ivf_ann(q, emb, 3, n_cells=16, n_probe=4, seed=42).collect()
     served = ivf_ann(q, emb, 3, n_cells=16, n_probe=4, seed=42,
                      centroids=[list(c) for c in back.books[0]]).collect()
-    assert sorted(map(tuple, fused)) == sorted(map(tuple, served))
+    assert sorted(map(tuple, in_plan)) == sorted(map(tuple, served))
 
 
 def test_q67_q31_serve_paths_run_no_fit(spark, sf_dir, monkeypatch, tmp_path):
@@ -127,8 +128,7 @@ def test_q67_q31_serve_paths_run_no_fit(spark, sf_dir, monkeypatch, tmp_path):
         raise AssertionError("serve path must not train")
 
     monkeypatch.setattr(training, "_ARTIFACT_MEMO", {})  # force disk load
-    monkeypatch.setattr(similarity, "_kmeans_fit_centroids", _boom)
-    monkeypatch.setattr(similarity, "fit_ivf_centroids_artifact", _boom)
+    monkeypatch.setattr(similarity, "_pq_fit", _boom)
     monkeypatch.setattr(similarity, "portable_hash60", None, raising=False)
     assert training.q67_kmeans(spark, sf_dir).count() > 0
     assert training.q31_ivf_ann(spark, sf_dir).count() > 0

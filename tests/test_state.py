@@ -172,3 +172,17 @@ def test_schema_cache_sees_in_place_partition_append(spark, tmp_path):
     # NOT serve the pre-append StructType
     s2 = _table_schema(spark, str(base))
     assert s1 is not s2, "stale cached schema served after append"
+
+
+def test_move_path_replaces_the_destination(tmp_path):
+    from elt_gluepipeline_spark.sources.writers import move_path
+
+    src = tmp_path / "landing" / "batch1"
+    src.mkdir(parents=True)
+    (src / "part-0.csv").write_text("a\n")
+    dst = tmp_path / "processed" / "batch1"
+    dst.mkdir(parents=True)
+    (dst / "stale.csv").write_text("old\n")
+    move_path(str(src), str(dst))
+    assert not src.exists()
+    assert [p.name for p in dst.iterdir()] == ["part-0.csv"]
