@@ -33,10 +33,10 @@ def calibration_sec(spark) -> float:
     """Deterministic host-state probe: a fixed 1e8-row whole-stage-
     codegen sum pushed through one 32-partition exchange — identical
     work every invocation, no data dependence. This VM's wall-clock
-    swings several-fold between identical runs (BENCH_r08 driver read
-    1.36x slower than r7 while protocol-matched local runs got FASTER),
-    so the summary line carries this probe at bench start and end:
-    the ratio of two artifacts' calibration values estimates their
+    swings several-fold between identical runs (one bench read 1.36x
+    slower than the previous while protocol-matched local runs got
+    FASTER), so the summary line carries this probe at bench start and
+    end: the ratio of two artifacts' calibration values estimates their
     host-speed ratio, letting any consumer (tools/bench_diff.py)
     separate plan regressions from machine state."""
     t0 = time.time()
@@ -66,7 +66,7 @@ def main() -> None:
     # pre-warm the persisted artifact families (pq/km/ivfc/semk8) so
     # the vector-serve queries (q76/q77/q81/q82/q153...) time the WARM
     # path — a cold/LRU-evicted artifact swung q77 6x between
-    # otherwise-identical benches (VERDICT r9). The summary line
+    # otherwise-identical benches. The summary line
     # records how each family resolved ("load"=disk warm, "fit"=was
     # cold and is now warmed+persisted) plus any fit that still
     # happened INSIDE the timed loop (dataset-keyed artifacts of other
@@ -96,12 +96,12 @@ def main() -> None:
         timings[name] = round(best, 3)
 
     # The driver's artifact capture keeps only the LAST ~2 KB of stdout
-    # and json-parses the final line (BENCH_r05/r06 came back
-    # `parsed: null` because the single full-map line exceeded the
-    # window).  So: emit the complete per-query map first as chunked
-    # lines (human/tooling record), then ONE compact summary line LAST
-    # that is guaranteed to fit in the tail window — totals plus the
-    # heaviest queries, which carry the performance signal.
+    # and json-parses the final line (a single full-map line exceeds
+    # the window and parses as null). So: emit the complete per-query
+    # map first as chunked lines (human/tooling record), then ONE
+    # compact summary line LAST that is guaranteed to fit in the tail
+    # window — totals plus the heaviest queries, which carry the
+    # performance signal.
     cal_end = calibration_sec(spark)
     ordered = sorted(timings.items(), key=lambda kv: -kv[1])
     total = round(sum(timings.values()), 3)
@@ -114,10 +114,10 @@ def main() -> None:
                       "unit": "sec", "n_queries": len(ordered),
                       "queries": dict(ordered[:head_n]),
                       "queries_omitted": max(0, len(ordered) - head_n),
-                      # protocol stamp (judge r7 item #6): round-over-
-                      # round comparisons are only meaningful under the
-                      # same best-of-N; r6 best-of-5 vs r7 best-of-2
-                      # read as a phantom ~1.16x min-statistics drift
+                      # protocol stamp: comparisons between benches are
+                      # only meaningful under the same best-of-N; a
+                      # best-of-5 vs a best-of-2 read as a phantom
+                      # ~1.16x min-statistics drift
                       "protocol": {"best_of": n_runs,
                                    "order": "registry-name-sorted",
                                    "sink": "noop"},

@@ -103,13 +103,6 @@ def scrub_pii(col: Column, *, patterns: Sequence[tuple[str, str]] = PII_PATTERNS
     return out
 
 
-def pii_counts(col: Column, *, patterns: Sequence[tuple[str, str]] = PII_PATTERNS
-               ) -> list[Column]:
-    """Per-pattern match counts (audit columns for a scrub run)."""
-    return [F.size(F.regexp_extract_all(col, F.lit(p), F.lit(0))).alias(f"n_{n}")
-            for n, p in patterns]
-
-
 # ---------------------------------------------------------------------------
 # Unicode normalization: the first pass every multilingual corpus runs
 # (mojibake-adjacent variants of the SAME text hash differently until

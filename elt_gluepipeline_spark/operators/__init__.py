@@ -19,11 +19,10 @@ def _planned_repartition(df: DataFrame) -> int:
     (0 if none). String-level check on purpose: it never touches
     ``df.rdd``, which under AQE finalizes the adaptive plan and RUNS
     every shuffle stage below it as real Spark jobs — at plan-BUILD
-    time. That bit round 11: ``read_table(spread=True)`` puts a
-    round-robin repartition under the operator, and the old
-    ``df.rdd.getNumPartitions()`` probe here executed the scan+shuffle
-    once per query *registration* (lazy-contract violation) and again
-    per run (double scan)."""
+    time. ``read_table(spread=True)`` puts a round-robin repartition
+    under the operator, so a ``df.rdd.getNumPartitions()`` probe here
+    would execute the scan+shuffle once per query *registration*
+    (lazy-contract violation) and again per run (double scan)."""
     best = 0
     for m in _REPARTITION_RE.finditer(
             df._jdf.queryExecution().analyzed().toString()):

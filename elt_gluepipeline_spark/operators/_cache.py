@@ -5,9 +5,9 @@ consumers inside one returned plan (prefix-join shingle sets, triangle
 degree tables). ``DataFrame.persist`` is lazy, so the operator itself
 can never unpersist — it returns before any job runs — and silently
 leaking the handle pins executor storage memory for the life of the
-session (ADVICE r5). Policy: operators register every persisted
-intermediate here, and harness code that runs MANY queries through one
-session (bench.py, tools/check_correctness.py, test fixtures) calls
+session. Policy: operators register every persisted intermediate here,
+and harness code that runs MANY queries through one session (bench.py,
+tools/check_correctness.py, test fixtures) calls
 ``release_operator_caches()`` between queries. Storage level is
 MEMORY_AND_DISK so a too-large intermediate degrades to disk instead
 of evicting neighbors or OOMing.

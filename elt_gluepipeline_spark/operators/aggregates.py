@@ -1,11 +1,8 @@
-"""Aggregation operators (SURVEY.md §2.4).
-
-The headline fix over the reference: its CLV quantile tagging collects
-distinct restaurant ids to the driver and runs one approxQuantile JOB
-PER RESTAURANT (go-metric-elt.py:83-89 — N+1 job storm). Here grouped
-quantiles are ONE aggregation: groupBy(key).agg(percentile(...)), a
-single shuffle regardless of group count. That is the difference
-between 25 jobs at 25 restaurants and 1 job at 1M groups.
+"""Aggregation operators (SURVEY.md §2.4): one-shuffle ROLLUP, pivot
+lowered to conditional aggregation, the additive state merge of
+incremental view maintenance and histogram quantiles. Plain groupBy
+shapes (q03's grouped percentiles, q06's date_trunc buckets, q07's
+two-level agg) are written inline in their plans.
 """
 
 from __future__ import annotations
@@ -14,43 +11,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def grouped_percentiles(df: DataFrame, keys: Sequence[str], value_col: str,
-                        percentiles: Sequence[float],
-                        out_names: Sequence[str],
-                        exact: bool = True,
-                        accuracy: int = 10_000) -> DataFrame:
-    """A3 (fixed): per-group percentiles in one pass.
-
-    exact=True uses SQL ``percentile`` (exact, interpolated — matches
-    DuckDB quantile_cont, needed for oracle hash-parity). exact=False
-    uses ``percentile_approx`` (KLL-sketch, mergeable, the 100 TB path —
-    memory-bounded per group instead of buffering group values).
-    """
-    # ONE aggregate with an array of percentiles: a single value buffer
-    # (exact) / sketch (approx) per group instead of one per requested
-    # percentile — N percentiles for the memory of one.
-    plist = ", ".join(str(p) for p in percentiles)
-    if exact:
-        expr = f"percentile({value_col}, array({plist}))"
-    else:
-        expr = f"percentile_approx({value_col}, array({plist}), {accuracy})"
-    out = df.groupBy(*[F.col(k) for k in keys]).agg(F.expr(expr).alias("_qs"))
-    return out.select(
-        *keys,
-        *[F.element_at("_qs", i + 1).alias(name)
-          for i, name in enumerate(out_names)])
-
-
-def two_level_agg(df: DataFrame, outer_keys: Sequence[str], inner_keys: Sequence[str],
-                  inner_aggs: Sequence[Column], outer_aggs_builder) -> DataFrame:
-    """A5: per-entity agg then re-agg per group (reference loyalty
-    impact, go-metric-elt.py:214-232). Two chained groupBys; the second
-    shuffle is tiny (one row per inner key). ``outer_aggs_builder`` maps
-    the inner frame to the outer agg column list."""
-    inner = df.groupBy(*[F.col(k) for k in [*outer_keys, *inner_keys]]).agg(*inner_aggs)
-    return inner.groupBy(*[F.col(k) for k in outer_keys]).agg(*outer_aggs_builder(inner))
 
 
 def grouping_rollup(df: DataFrame, keys: Sequence[str],
@@ -96,18 +56,6 @@ def pivot_agg(df: DataFrame, keys: Sequence[str], pivot_col: str,
     aggs = [agg_builder(cell_for(v)).alias(name)
             for v, name in values.items()]
     return df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-
-
-def time_rollup(df: DataFrame, ts_col: str, grain: str, keys: Sequence[str],
-                aggs: Sequence[Column]) -> DataFrame:
-    """A4: time-bucketed rollup at one grain ∈ {hour, day, week, month}.
-
-    Bucket start via date_trunc — avoids the reference's year-boundary
-    ISO-week bug (B10: go-metric-elt.py:185 reconstructs week start as
-    jan1 + (week-1)*7). date_trunc('week') is ISO-Monday-correct.
-    """
-    bucket = F.date_trunc(grain, F.col(ts_col)).alias("bucket_start")
-    return df.groupBy(bucket, *[F.col(k) for k in keys]).agg(*aggs)
 
 
 def merge_agg_states(agg_old: DataFrame, agg_delta: DataFrame,

@@ -593,45 +593,6 @@ def repartition_entries(spark, path: str, new_n_partitions: int) -> None:
         layout=_entries_layout(new_n_partitions))})
 
 
-def maintain_entries_layout(spark, path: str, *,
-                            drift_factor: int = 4) -> int | None:
-    """Keep a stored index's entries layout matched to its SIZE as the
-    corpus grows under appends — the maintenance half of the measured
-    auto-layout policy (``partition_entries="auto"`` decides at fit
-    time; this decides at compaction/maintenance time, closing the
-    "corpus grows 100x under the seed P" gap end-to-end).
-
-    Reads the entries row count (parquet metadata only), computes the
-    layout ``auto_entries_partitions`` would pick today, and migrates
-    via ``repartition_entries`` ONLY when the stored layout is off by
-    at least ``drift_factor`` in either direction (or when an
-    unpartitioned table has outgrown the crossover). Hysteresis
-    matters: every migration is a full entries rewrite, so chasing
-    each power-of-two step would rewrite the table on every few
-    appends for no serve win — the serve cost is flat across a wide P
-    band once pruning engages.
-
-    Returns the new P when a migration ran, else None (layout already
-    within band). Call it where ``compact_lsh_dedup_index`` is called
-    — both are maintenance passes over the same artifact."""
-    table = Table(spark, path)
-    entries = table.read("entries")
-    if entries is None:
-        raise FileNotFoundError(f"no entries table at {path}/entries")
-    want = auto_entries_partitions(entries.count())
-    stored = _entries_partitions(table)
-    if want is None:
-        # below the crossover: a partitioned table this small still
-        # serves fine (pruning is just unnecessary) — never migrate
-        # DOWN to flat, that's a rewrite for nothing
-        return None
-    if stored is not None and (
-            stored * drift_factor > want and want * drift_factor > stored):
-        return None
-    repartition_entries(spark, path, want)
-    return want
-
-
 def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
                           id_col: str, text_col: str, *,
                           k: int = 3, n_hashes: int = 32, bands: int = 8,

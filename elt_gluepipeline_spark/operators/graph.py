@@ -45,14 +45,14 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3, damping: float = 0.85,
     bounded (a catalog, a vocabulary); leave False for web-scale node
     sets and let the join shuffle both sides.
     """
-    # NOTE (round-11): persisting `edges` here was tried and REVERTED —
-    # the caller's edge build is referenced 4x below (nodes' two union
-    # branches, outw, the e-join probe side), but an interleaved
-    # same-session A/B on q145 measured the persisted variant SLOWER
-    # every round (med 7.2 s vs 5.3 s): the cache materialization
-    # serializes work that AQE otherwise overlaps, and the persist
-    # write of the 2|pairs| weighted union costs more than the saved
-    # re-evaluations at any size where the rank vector broadcasts.
+    # `edges` is NOT persisted although it is referenced 4x below
+    # (nodes' two union branches, outw, the e-join probe side): an
+    # interleaved same-session A/B on q145 measured the persisted
+    # variant SLOWER in every pass (med 7.2 s vs 5.3 s): the cache
+    # materialization serializes work that AQE otherwise overlaps, and
+    # the persist write of the 2|pairs| weighted union costs more than
+    # the saved re-evaluations at any size where the rank vector
+    # broadcasts.
     nodes = (edges.select(F.col(src).alias("node"))
              .union(edges.select(F.col(dst).alias("node")))
              .distinct().localCheckpoint(eager=False))
@@ -136,13 +136,12 @@ def triangle_counts(edges: DataFrame, *, src: str = "s",
     Output: (node, degree, n_triangles) — every node of the graph,
     zero-triangle nodes included.
     """
-    # NOTE (round-11): persisting `e` here was tried and REVERTED —
-    # it is referenced 3x building the oriented cache (deg's two union
-    # branches + the ed probe side), but an interleaved same-session
-    # A/B on q157 measured the persisted variant slower (med 7.9 s vs
-    # 7.2 s): the extra materialization barrier costs more than the
-    # re-evaluations, which AQE runs as overlapping subtrees inside the
-    # one oriented-cache build job.
+    # `e` is NOT persisted although it is referenced 3x building the
+    # oriented cache (deg's two union branches + the ed probe side): an
+    # interleaved same-session A/B on q157 measured the persisted
+    # variant slower (med 7.9 s vs 7.2 s): the extra materialization
+    # barrier costs more than the re-evaluations, which AQE runs as
+    # overlapping subtrees inside the one oriented-cache build job.
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     deg = (e.select(F.col("a").alias("node"))
             .unionAll(e.select(F.col("b").alias("node")))
@@ -160,7 +159,7 @@ def triangle_counts(edges: DataFrame, *, src: str = "s",
     # (NOT localCheckpoint: under AQE its toRdd conversion executes
     # the upstream stages at BUILD time; persist stays fully lazy.)
     # Registered with the operator-cache registry so harnesses can
-    # release it between queries (ADVICE r5 leak fix).
+    # release it between queries (an unregistered persist leaks).
     from ._cache import register_cache
     oriented = register_cache(ed.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),

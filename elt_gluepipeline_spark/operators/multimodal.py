@@ -108,49 +108,6 @@ def extract_features(assets: DataFrame, *, batch_rows_hint: int = 1024) -> DataF
     return assets.mapInPandas(_extract, schema=FEATURE_SCHEMA)
 
 
-# Resize output contract: original payload replaced by the (stub-)resized
-# payload plus a typed dims struct — the schema a real PIL/libav resize
-# would produce.
-RESIZED_SCHEMA = StructType([
-    StructField("asset_id", LongType(), False),
-    StructField("modality", StringType(), True),
-    StructField("payload", BinaryType(), True),
-    StructField("media_format", StringType(), True),
-    StructField("width", LongType(), True),
-    StructField("height", LongType(), True),
-])
-
-
-def resize_assets(assets: DataFrame, *, width: int = 64,
-                  height: int = 64) -> DataFrame:
-    """Map-only 'resize': per-asset payload transform via mapInPandas.
-
-    STUB transform (no codecs in this container): deterministically
-    derives a width*height-byte pseudo-raster by tiling the payload.
-    The Spark-side contract is the real one — binary in, binary out,
-    typed dimension metadata, zero shuffle, partition-bounded memory.
-    A real decoder replaces only `_fake_raster`.
-    """
-    def _fake_raster(p: bytes | None) -> bytes:
-        if not p:
-            return b"\x00" * (width * height)
-        reps = (width * height) // len(p) + 1
-        return (p * reps)[: width * height]
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "asset_id": pdf["asset_id"],
-                "modality": pdf["modality"],
-                "payload": pdf["payload"].map(_fake_raster),
-                "media_format": "raw-raster",
-                "width": width,
-                "height": height,
-            })
-
-    return assets.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
 FRAME_SCHEMA = StructType([
     StructField("asset_id", LongType(), False),
     StructField("frame_idx", LongType(), False),
@@ -186,99 +143,6 @@ def sample_frames(assets: DataFrame, *, every_n_bytes: int = 1024,
                                 "frame_payload": frames})
 
     return assets.mapInPandas(_sample, schema=FRAME_SCHEMA)
-
-
-# --------------------------------------------------------------------
-# RAW-RASTER path: REAL computation, no codec required. Training
-# pipelines routinely store preprocessed uncompressed tensors (raw
-# uint8 rasters) precisely so downstream stages don't pay a decode;
-# for that format the math below is the production math, not a stub —
-# only formats without a real decoder here (mp3/mp4) keep the
-# stubbed decode above.
-# --------------------------------------------------------------------
-
-RASTER_STATS_SCHEMA = StructType([
-    StructField("asset_id", LongType(), False),
-    StructField("width", LongType(), False),
-    StructField("height", LongType(), False),
-    StructField("mean_lum", StringType(), True),    # fixed 4-dp string:
-    StructField("std_lum", StringType(), True),     # engine-stable form
-    StructField("edge_energy", StringType(), True),
-])
-
-
-def raster_stats(assets: DataFrame, *, width: int, height: int) -> DataFrame:
-    """Real per-image statistics over raw uint8 rasters: mean/σ of
-    luminance and mean absolute horizontal gradient (edge energy — the
-    cheap blur/blank-image quality signal). Vectorized numpy over
-    Arrow batches, map-only; payloads shorter than width*height are
-    zero-padded (truncated tail = black), longer ones truncated.
-    Stats are emitted as fixed 4-decimal strings so results are
-    bit-stable across engines and partitionings.
-    """
-    import numpy as np
-
-    n = width * height
-    assets = ensure_min_partitions(assets)
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means, stds, edges = [], [], [], []
-            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                buf = np.frombuffer(bytes(p[:n]).ljust(n, b"\0"),
-                                    dtype=np.uint8)
-                img = buf.reshape(height, width).astype(np.float64)
-                ids.append(aid)
-                means.append(f"{img.mean():.4f}")
-                stds.append(f"{img.std():.4f}")
-                edges.append(f"{np.abs(np.diff(img, axis=1)).mean():.4f}")
-            yield pd.DataFrame({
-                "asset_id": pd.Series(ids, dtype="int64"),
-                "width": width, "height": height,
-                "mean_lum": means, "std_lum": stds, "edge_energy": edges})
-
-    return assets.mapInPandas(_stats, schema=RASTER_STATS_SCHEMA)
-
-
-def downsample_raster(assets: DataFrame, *, width: int, height: int,
-                      factor: int) -> DataFrame:
-    """Real raster downsampling: factor×factor block mean (area
-    interpolation) over raw uint8 rasters — the actual resize math for
-    uncompressed images, vectorized numpy, map-only, zero shuffle.
-    Output payload is the (width//factor)×(height//factor) raster.
-    """
-    import numpy as np
-
-    if width % factor or height % factor:
-        raise ValueError(f"factor {factor} must divide {width}x{height}")
-    n = width * height
-    ow, oh = width // factor, height // factor
-    assets = ensure_min_partitions(assets)
-
-    def _down(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mods, payloads = [], [], []
-            for aid, mod, p in zip(pdf["asset_id"], pdf["modality"],
-                                   pdf["payload"]):
-                if p is None:
-                    continue
-                buf = np.frombuffer(bytes(p[:n]).ljust(n, b"\0"),
-                                    dtype=np.uint8)
-                img = buf.reshape(height, width).astype(np.float64)
-                small = img.reshape(oh, factor, ow, factor).mean(axis=(1, 3))
-                ids.append(aid)
-                mods.append(mod)
-                payloads.append(np.round(small).clip(0, 255)
-                                  .astype(np.uint8).tobytes())
-            yield pd.DataFrame({
-                "asset_id": pd.Series(ids, dtype="int64"),
-                "modality": mods, "payload": payloads,
-                "media_format": "raw-raster",
-                "width": ow, "height": oh})
-
-    return assets.mapInPandas(_down, schema=RESIZED_SCHEMA)
 
 
 # --------------------------------------------------------------------
@@ -412,9 +276,9 @@ _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}   # gray, RGB, gray+A, RGBA
 
 
 def decode_png(data: bytes):
-    """Parse an 8-bit non-interlaced PNG using ONLY stdlib zlib (judge
-    item r4 #5: one genuinely COMPRESSED format decoded for real — no
-    codec library involved). Supports color types 0/2/4/6; all five
+    """Parse an 8-bit non-interlaced PNG using ONLY stdlib zlib (one
+    genuinely COMPRESSED format decoded for real — no codec library
+    involved). Supports color types 0/2/4/6; all five
     scanline filters; multiple IDAT chunks; CRC-verified.
 
     Returns ``(width, height, channels, arr)`` with ``arr`` a float64
@@ -579,11 +443,10 @@ def encode_wav(samples, rate: int) -> bytes:
 
 # --------------------------------------------------------------------
 # JPEG: baseline sequential DCT (ITU-T T.81, public spec), implemented
-# with numpy + struct only — the LOSSY compressed-codec path made real
-# (round-4 judge "What's missing #2" named JPEG-class formats as the
-# remaining stub). Scope: baseline (SOF0), 8-bit, grayscale or YCbCr
-# at 4:4:4 / 4:2:2 / 4:2:0 (any integer-ratio sampling factors; r8
-# added subsampling — what cameras and the web actually emit), restart
+# with numpy + struct only — the LOSSY compressed-codec path made real.
+# Scope: baseline (SOF0), 8-bit, grayscale or YCbCr at 4:4:4 / 4:2:2 /
+# 4:2:0 (any integer-ratio sampling factors — the subsampling cameras
+# and the web actually emit), restart
 # markers honored; progressive (SOF2) decoded via Annex-G scan
 # accumulation; arithmetic/12-bit files raise
 # ValueError and take the honest stub path.

@@ -141,17 +141,3 @@ def pack_greedy_bins(df: DataFrame, id_col: str, tokens_col, *,
             "fill_after": fills})
 
     return d.groupBy("shard").applyInPandas(_scan, schema=out_schema)
-
-
-def packing_stats(packed: DataFrame, *, ctx_len: int,
-                  seq_col: str = "bin") -> DataFrame:
-    """Per-shard packing utilization: sequences used, tokens packed,
-    and padding waste = capacity - tokens (concat-and-chunk wastes
-    only the final window's tail; greedy bins waste per bin)."""
-    seqs = F.countDistinct(seq_col).alias("n_seqs")
-    toks = F.sum("n_tokens").alias("n_tokens")
-    return (packed.groupBy("shard")
-                  .agg(seqs, toks)
-                  .select("shard", "n_seqs", "n_tokens",
-                          (F.col("n_seqs") * ctx_len - F.col("n_tokens"))
-                          .cast("long").alias("padding_waste")))

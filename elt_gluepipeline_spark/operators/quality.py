@@ -1,4 +1,4 @@
-"""Data-quality gate operators (SURVEY.md §2.2 P5/P6/P9, §2.3 J5,
+"""Data-quality gate operators (SURVEY.md §2.2 P5/P6/P9,
 §2.9 U5 — reference: scripts/go-quality-elt.py).
 
 Three deliberate re-designs vs the reference:
@@ -6,11 +6,10 @@ Three deliberate re-designs vs the reference:
 1. Rule extracts are DATA-DRIVEN: a list of named boolean expressions,
    evaluated in one pass (one scan → N extract predicates), instead of
    one hand-written filter per rule.
-2. Removing flagged rows uses an ANTI-JOIN on row identity, not
-   ``subtract`` — the reference's subtract is EXCEPT DISTINCT and
-   silently dedupes the surviving rows (bug B6,
-   go-quality-elt.py:135-136). ``use_subtract_compat=True`` reproduces
-   the as-written semantics.
+2. Separating flagged rows is a true partition of the tagged frame
+   (``split_clean``), not ``subtract`` — the reference's subtract is
+   EXCEPT DISTINCT and silently dedupes the surviving rows (bug B6,
+   go-quality-elt.py:135-136).
 3. Threshold severity is a BROADCAST JOIN against a flattened rule
    table + arithmetic on violation counts, replacing the Python UDF
    over a broadcast nested dict (U5, go-quality-elt.py:144-168). That
@@ -58,19 +57,6 @@ def split_clean(df_tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     clean = df_tagged.filter(F.size("violated") == 0).drop("violated")
     quarantine = df_tagged.filter(F.size("violated") > 0)
     return clean, quarantine
-
-
-def remove_flagged(df: DataFrame, flagged: DataFrame, row_keys: Sequence[str],
-                   use_subtract_compat: bool = False) -> DataFrame:
-    """J5 (intended semantics): drop rows present in ``flagged``.
-
-    Anti-join on row identity preserves duplicates among survivors.
-    ``use_subtract_compat`` reproduces the reference's EXCEPT DISTINCT
-    behavior (B6) for byte-compat testing.
-    """
-    if use_subtract_compat:
-        return df.subtract(flagged)
-    return df.join(flagged.select(*row_keys), list(row_keys), "left_anti")
 
 
 def severity_from_thresholds(df: DataFrame, thresholds: DataFrame,

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
@@ -83,88 +83,3 @@ def salted_count_distinct(df: DataFrame, keys: Sequence[str], col: str,
     return (per_shard.groupBy(*keys)
                      .agg(F.sum("_n").cast("long").alias(out_name)))
 
-
-def salted_agg(df: DataFrame, keys: Sequence[str],
-               partial_aggs: Sequence[Column],
-               merge_aggs: Sequence[Column], *,
-               n_salt: int = 32) -> DataFrame:
-    """Generic two-phase agg for combinable aggregates whose per-group
-    state is huge (collect_set-ish). partial_aggs run per (keys, salt);
-    merge_aggs combine the shards per key. Caller guarantees the pair
-    is a valid decomposition (e.g. sum/sum, collect_set/flatten-distinct).
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(k) for k in df.columns]), F.lit(n_salt)))
-    partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*merge_aggs)
-
-
-def hot_key_salted_join(skewed: DataFrame, other: DataFrame,
-                        on: Sequence[str], *, n_salt: int = 16,
-                        hot_top_k: int = 64,
-                        hot_min_frac: float = 0.01,
-                        how: str = "inner",
-                        salt_on: Sequence[str] | None = None) -> DataFrame:
-    """Partial salting: salt ONLY the measured hot keys.
-
-    ``salted_join`` replicates the whole build side n_salt× — the right
-    trade when most keys are hot, but at 100 TB skew is usually a
-    handful of whales on a long calm tail. This variant:
-
-      1. measures key frequencies on the skewed side (one keys-only
-         aggregation) and takes the top-k keys holding at least
-         ``hot_min_frac`` of the rows — a BOUNDED driver collect
-         (≤ hot_top_k rows, never the key space);
-      2. splits both sides by membership in the hot set (broadcast
-         literal filter — no extra shuffle);
-      3. joins the cold flows plainly (AQE handles mild residual skew)
-         and only the hot flows through the salted path, so the build
-         replication cost is n_salt × (hot build rows) instead of
-         n_salt × (entire build);
-      4. unions the two outputs.
-
-    Row-identical to ``skewed.join(other, on, how)`` for inner/left
-    equi-joins (the hot/cold split is a partition of the key space).
-    Falls back to a single plain join when no key crosses the
-    threshold.
-    """
-    assert how in ("inner", "left"), "hot_key_salted_join: inner/left only"
-    on = list(on)
-    counts = (skewed.groupBy(*on)
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .orderBy(F.desc("_n"), *[F.asc(k) for k in on])
-                    .limit(hot_top_k))
-    total = skewed.count()
-    hot_rows = [tuple(r[k] for k in on) for r in counts.collect()
-                if total > 0 and r["_n"] >= hot_min_frac * total
-                and all(r[k] is not None for k in on)]
-    if not hot_rows:
-        return skewed.join(other, on, how)
-
-    def is_hot(df: DataFrame) -> Column:
-        # explicit OR-of-AND chain over ≤ hot_top_k literals: a plain
-        # boolean expression Catalyst folds into the scan filter
-        disjuncts = []
-        for t in hot_rows:
-            conj = F.lit(True)
-            for k, v in zip(on, t):
-                conj = conj & (F.col(k) == F.lit(v))
-            disjuncts.append(conj)
-        out = F.lit(False)
-        for d in disjuncts:
-            out = out | d
-        # NULL-keyed rows: each equality yields SQL NULL and so does the
-        # OR-chain, and filter(NULL) / filter(~NULL) BOTH drop the row —
-        # a left join would silently lose skewed-side rows. Coalesce to
-        # false so null keys take the cold path (plain join keeps them
-        # with null payload, matching skewed.join(other, on, how)).
-        return F.coalesce(out, F.lit(False))
-
-    hot_s, cold_s = skewed.filter(is_hot(skewed)), \
-        skewed.filter(~is_hot(skewed))
-    hot_o, cold_o = other.filter(is_hot(other)), \
-        other.filter(~is_hot(other))
-    cold = cold_s.join(cold_o, on, how)
-    hot = salted_join(hot_s, hot_o, on, n_salt=n_salt, how=how,
-                      salt_on=salt_on)
-    return cold.unionByName(hot.select(*cold.columns))

@@ -1,5 +1,5 @@
 """Text-analysis expressions for training-data pipelines: tokenizing,
-quality scoring, language-ID heuristics, fingerprinting.
+stopword ratios, language-ID heuristics, fingerprinting.
 
 All JVM-side array/higher-order expressions — no Python in the hot
 path, so these scale to corpus-sized inputs (the per-row cost is a
@@ -14,7 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Small English stopword set used by quality scoring and the lang-ID
+# Small English stopword set used by the stopword ratio and the lang-ID
 # heuristic. Kept deliberately tiny & frozen: it is part of the query
 # semantics (the DuckDB oracle embeds the same list).
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "that", "for")
@@ -50,25 +50,6 @@ def stopword_ratio(col: Column, stopwords: Sequence[str] = EN_STOPWORDS) -> Colu
             .otherwise(n_stop / F.size(toks))
 
 
-def uniq_token_ratio(col: Column) -> Column:
-    toks = tokens(col)
-    return F.when(F.size(toks) == 0, F.lit(0.0)) \
-            .otherwise(F.size(F.array_distinct(toks)) / F.size(toks))
-
-
-def quality_score(col: Column) -> Column:
-    """Composite [0,1] quality heuristic: lexical diversity up, stopword
-    saturation down, degenerate-length docs down. Mirrors the kinds of
-    rules corpus-filtering pipelines apply (length/punct/stopword
-    ratios); deterministic double arithmetic only."""
-    nt = F.size(tokens(col))
-    diversity = uniq_token_ratio(col)
-    stop = stopword_ratio(col)
-    length_ok = F.when((nt >= 10) & (nt <= 10_000), F.lit(1.0)).otherwise(F.lit(0.0))
-    return (F.lit(0.5) * diversity + F.lit(0.2) * (F.lit(1.0) - stop)
-            + F.lit(0.3) * length_ok)
-
-
 def langid_en_heuristic(col: Column, threshold: float = 0.12) -> Column:
     """N-gram-free language-ID heuristic: English-stopword density.
     Returns 'en' when density ≥ threshold else 'other'. (A real n-gram
@@ -97,19 +78,6 @@ def fingerprint_rolling(col: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, t: F.xxhash64(acc, t),
     )
-
-
-def line_repetition(text: Column) -> Column:
-    """Duplicate-line fraction: 1 - distinct_lines/total_lines over
-    non-empty trimmed lines (0.0 for empty docs). High values flag
-    boilerplate/spam — the classic repetition quality filter. Pure
-    array expressions, codegen'd, no shuffle."""
-    lines = F.filter(
-        F.transform(F.split(text, r"\n"), lambda x: F.trim(x)),
-        lambda x: x != "")
-    n = F.size(lines)
-    return F.when(n == 0, F.lit(0.0)) \
-            .otherwise(1.0 - F.size(F.array_distinct(lines)) / n)
 
 
 def top_count(arr: Column) -> Column:
@@ -400,7 +368,7 @@ def bigram_perplexity(df, id_col: str, text_col: str):
                       F.round(F.exp(nll), 6).alias("ppl"))
 
 
-# ---- Unicode script profiling (r8) ----------------------------------------
+# ---- Unicode script profiling ---------------------------------------------
 # mC4/CCNet-style script detection: per-document character counts for a
 # fixed set of Unicode BLOCK ranges, all JVM-side regex (no UDF).
 # Explicit codepoint ranges — not \p{script=...} classes — so any engine

@@ -91,7 +91,7 @@ def cap_per_domain(df: DataFrame, domain_col: str, key_col: str, *,
 
     ``key_col`` must be unique per row: the md5-order tiebreak is the
     raw key as a STRING (always non-null, any key type — a long cast
-    was silently NULL for non-numeric keys, ADVICE r5), so distinct
+    is NULL for non-numeric keys), so distinct
     keys give a total, partitioning-independent order; duplicate keys
     would make the kept set nondeterministic.
     """

@@ -102,15 +102,3 @@ def scd2_history(df: DataFrame, keys: Sequence[str],
              .withColumn("valid_from", F.col(ts_col))
              .withColumn("valid_to", F.lead(F.col(ts_col)).over(w2))
              .withColumn("is_current", F.col("valid_to").isNull()))
-
-
-def lag_features(df: DataFrame, keys: Sequence[str], order_col: str,
-                 lag_cols: dict[str, str]) -> DataFrame:
-    """W2/W3: per-entity lag columns (reference: go-metric-elt.py:132-139
-    order-gap and %-change lags). ``lag_cols`` maps new_name → source col.
-    One window, one shuffle, all lags computed in a single pass."""
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col))
-    out = df
-    for new_name, src in lag_cols.items():
-        out = out.withColumn(new_name, F.lag(F.col(src)).over(w))
-    return out

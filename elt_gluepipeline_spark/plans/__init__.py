@@ -53,10 +53,17 @@ class QuerySpec:
 # and shingle-base callers (q17, q18, q41, q170, q171, q189, q199),
 # q63, q123 and q140, the vector-quantizer and cosine-search callers
 # (q19, q20, q31, q67, q76, q77, q81, q82, q141, q153, q184, q202),
-# plus the rest of the previous head. Each group below is a
-# driver record of its queries, taken while they were in the head; tail
-# entries still run everywhere else (pytest, bench, check_correctness).
+# q11 (calls drop_test_rows), q58 (cross_corpus_containment) and the
+# shared HLL estimator's q131 and q136, plus the rest of the previous
+# head. Each group below is a driver record of its queries, taken while
+# they were in the head; tail entries still run everywhere else
+# (pytest, bench, check_correctness).
 _DEPRIORITIZED = (
+    # --- rotated out for q11, q58, q131, q136 ---
+    "q159_inverted_index",
+    "q161_warc_roundtrip",
+    "q165_stream_enrich",
+    "q167_kmv_jaccard",
     # --- rotated out for q19, q20, q31, q67, q76, q77, q81, q82, q184 ---
     "q156_unicode_nfc",
     "q158_pmi_cooc",
@@ -165,7 +172,6 @@ _DEPRIORITIZED = (
     "q53_stream_dedupe",
     "q54_stream_keep_latest",
     "q55_salted_distinct",
-    "q58_contamination",
     "q60_token_shards",
     "q61_chunk_docs",
     "q62_mixture_sample",
@@ -187,7 +193,6 @@ _DEPRIORITIZED = (
     "q08_top_locations",
     "q09_discount_effect",
     "q10_quality_gate",
-    "q11_transform_clean",
     "q102_price_histogram",
     "q105_transition_matrix",
     "q118_linear_attribution",
@@ -202,10 +207,8 @@ _DEPRIORITIZED = (
     "q128_countmin",
     "q129_table_digest",
     "q130_generated_rollup",
-    "q131_hll_portable",
     "q132_png_probe",
     "q133_bpe_encode",
-    "q136_stream_hll",
     "q138_sequence_pack",
     "q139_greedy_pack",
     "q57_portable_split",

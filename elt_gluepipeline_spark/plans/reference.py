@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import (clean_item_name, first_match_classify)
+from ..functions.cleaning import (clean_item_name, drop_test_rows,
+                                  first_match_classify)
 from ..functions.deterministic import (davg, davg_sql, dec, dsum, dsum_sql,
                                        rnd0, rnd0_sql)
 from ..functions.keys import surrogate_key, surrogate_key_sql
@@ -529,8 +530,7 @@ def q11_transform_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     default=F.lower(F.col("p_type")))
     name_clean = clean_item_name(F.col("p_name"))
     size_token = F.regexp_extract(F.col("p_name"), SIZE_PATTERN, 0)
-    keep = ~(F.coalesce(F.col("p_name").rlike("(?i)test"), F.lit(False)))
-    return (p.filter(keep)
+    return (p.filter(drop_test_rows([F.col("p_name")]))
              .select("p_partkey", name_clean.alias("name_clean"),
                      category.alias("category"), size_token.alias("size_token")))
 

@@ -3342,25 +3342,6 @@ def _evict_artifacts(keep: str | None = None) -> list[str]:
     return evicted
 
 
-def clear_artifacts() -> int:
-    """Remove every persisted artifact and reset the in-process memo —
-    the operational reset for a corrupted root or a forced refit.
-    Returns how many artifact dirs were removed."""
-    import shutil
-
-    n = 0
-    try:
-        for d in os.listdir(_ARTIFACT_ROOT):
-            p = os.path.join(_ARTIFACT_ROOT, d)
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-                n += 1
-    except OSError:
-        pass
-    _ARTIFACT_MEMO.clear()
-    return n
-
-
 def _fitted_artifact(spark: SparkSession, sf_dir: str, kind: str, fit):
     """Memoized load-or-fit-and-persist for a dataset-keyed artifact
     (the serve half of every fit/serve split).
@@ -4575,39 +4556,21 @@ LEFT JOIN agg a USING (doc_id)
 # the paper's clusters already make, certified samplable the q171 way.
 # --------------------------------------------------------------------------
 
-_SEMDEDUP_K = 8          # fixed coarse k-means layer (memory budget)
+_SEMDEDUP_K = 8          # _km_artifact's k: the fixed coarse layer
 _SEMDEDUP_PLANES_N = 24  # fixed hyperplane pool; the MASK grows, not this
 _SEMDEDUP_CELL = 2048    # target pre-split corpus per km-cell octant
 
 
-def _semdedup_bits(n: int) -> int:
-    """Masked sub-split width: b = #{i in [0,24) : n > 2048*2^i}.
-    Doubling the corpus adds one bit, so expected cell size stays in
-    [128, 256] — and the rule is integer comparisons only, identical
-    in Spark and DuckDB (ceil(log2(...)) would be libm-dependent at
-    exact powers of two)."""
-    return sum(1 for i in range(_SEMDEDUP_PLANES_N)
-               if n > _SEMDEDUP_CELL * (1 << i))
-
-
 def _semdedup_artifact(spark: SparkSession, sf_dir: str):
-    """Fixed-k coarse cells for q153 (cache kind 'semk'; k=8, seed 7 —
-    distinct artifact from q67's 'km' so the two queries stay
-    independently cacheable). The corpus-scaled piece of the cell id
-    (the LSH mask) is derived IN-PLAN from a count aggregate, so it
-    needs no artifact and no refit policy; the k-means artifact still
-    refits whenever the dataset changes (mtime/child-count keying,
-    pinned by test_artifact_refit)."""
-    from ..operators.similarity import fit_pq_artifact
-
-    def fit():
-        emb = read_table(spark, sf_dir, "embeddings")
-        return fit_pq_artifact(emb, m=1, k=_SEMDEDUP_K, n_iter=2, seed=7)
-
-    # kind 'semk8' (not the older 'semk'): the fit params changed to
-    # fixed k=8, and the artifact key must change with them so a
-    # cache written by the old dynamic-k rule can never be served
-    return _fitted_artifact(spark, sf_dir, "semk8", fit)
+    """Fixed-k coarse cells for q153: the same k=8, seed-7 k-means as
+    q67's ``km`` artifact, so the fit resolves that artifact instead of
+    training a second identical model. The corpus-scaled piece of the
+    cell id (the LSH mask) is derived IN-PLAN from a count aggregate,
+    so it needs no artifact and no refit policy; the k-means artifact
+    still refits whenever the dataset changes (mtime/child-count
+    keying, pinned by test_artifact_refit)."""
+    return _fitted_artifact(spark, sf_dir, "semk8",
+                            lambda: _km_artifact(spark, sf_dir))
 
 
 _SEM_PLANES = _hyperplanes(EMB_DIM, _SEMDEDUP_PLANES_N, 7)

@@ -13,9 +13,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the test harness (local[32], 128 GiB box). On a
-# real cluster these are submit-time conf, not code — everything here
-# is safe to override via environment / spark-submit.
+_GIB = 1024 ** 3
+_MAX_DRIVER_GIB = 48
+
+
+def driver_mem_for(phys_bytes: int) -> str:
+    """Default driver heap: half the host's physical memory in whole GiB
+    (at least 1), capped at 48g. In local[N] mode the driver JVM hosts
+    every executor thread, so it needs executor-fleet-sized heap: on a
+    128 GiB box, 32 concurrent tasks in 8g stalled up to 20 s in full
+    GC and 48g ran stable. A heap the host cannot back gets the JVM
+    OOM-killed instead: with 48g on a 15 GiB host the sf0.1 gate died
+    after 90 queries, and with 8g it passed all 207."""
+    return f"{max(1, min(_MAX_DRIVER_GIB, phys_bytes // 2 // _GIB))}g"
+
+
+# Defaults sized for local[N] on one host. On a real cluster these are
+# submit-time conf, not code — everything here is safe to override via
+# environment / spark-submit.
 _DEFAULT_CONF: dict[str, str] = {
     # AQE: runtime shuffle-partition coalescing, skew-join splitting,
     # and plan re-optimization from real statistics. This is the main
@@ -35,20 +50,19 @@ _DEFAULT_CONF: dict[str, str] = {
     # date_format/hour derivations match the DuckDB oracle.
     "spark.sql.session.timeZone": "UTC",
     # The generated-class cache defaults to 100 entries; a session
-    # that runs the whole 175-query registry (bench, correctness gate)
-    # churns it, so a query's second run can recompile its widest
-    # codegen unit (janino compile of the 32-min minhash aggregate is
-    # the occasional ~10s bench outlier the r5 judge saw on q17 while
-    # its identical-plan twin q41 ran 1.8s). Sizing the cache to hold
-    # every unit across the registry makes recompiles one-time per
-    # session. Cost is bounded: cached classes are small.
+    # that runs the whole registry (bench, correctness gate) churns it,
+    # so a query's second run can recompile its widest codegen unit
+    # (a janino compile of q17's 32-min minhash aggregate costs ~10 s,
+    # while its identical-plan twin q41 ran in 1.8 s). Sizing the cache
+    # to hold every unit across the registry makes recompiles one-time
+    # per session. Cost is bounded: cached classes are small.
     "spark.sql.codegen.cache.maxEntries": "4096",
-    # In local[N] mode the driver JVM hosts every executor thread, so it
-    # needs executor-fleet-sized heap: 32 concurrent tasks in a small heap
-    # spend seconds in full GC (measured: 8g → 20s stalls on random
-    # queries; 48g → stable). On a real cluster this maps to normal
-    # per-executor memory, not a big driver.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    # Sized to the host (driver_mem_for). On a real cluster this maps to
+    # normal per-executor memory, not a big driver.
+    "spark.driver.memory": (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or driver_mem_for(os.sysconf("SC_PHYS_PAGES")
+                          * os.sysconf("SC_PAGE_SIZE"))),
 }
 
 

@@ -51,10 +51,10 @@ def _stream_base(seed: int) -> int:
     """64-bit pre-mix of the seed. The per-row mix input is
     ``_splitmix64(seed) ^ i``: the row index perturbs a full-width
     mixed value instead of the low bits of ``seed << 32``, so streams
-    stay disjoint past i = 2^32 (the old scheme let the index bleed
-    into the seed bits there — same cliff ADVICE r4 flagged as an
-    OverflowError on the Arrow path for seed >= 2^32, which the mask
-    here also removes)."""
+    stay disjoint past i = 2^32 (a ``seed << 32`` scheme lets the index
+    bleed into the seed bits there). Masking the seed to 64 bits also
+    keeps seed >= 2^32 from raising OverflowError on the Arrow
+    path."""
     return _splitmix64(seed & _MASK)
 
 

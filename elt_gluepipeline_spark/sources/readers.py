@@ -21,28 +21,6 @@ TESTDATA_TABLES = (
 )
 
 
-def read_parquet(spark: SparkSession, path: str, *,
-                 merge_schema: bool = False) -> DataFrame:
-    """S3/S10: parquet scan with native Hive-partition discovery.
-
-    Spark discovers ``key=value`` directories and reattaches partition
-    columns automatically (the reference hand-rolled this,
-    streamlit/go_streamlit.py:21-63 — native discovery replaces it).
-
-    ``merge_schema=True`` unions the footers of every file instead of
-    trusting the first one — the schema-EVOLUTION read: a dataset whose
-    later partitions gained columns comes back with the superset
-    schema, older files NULL-filling the new columns. Off by default
-    because footer-merging costs one extra pass over file metadata
-    (at 100 TB that is many footers) and ingest pipelines that enforce
-    a contract (functions.conform) don't need it.
-    """
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(path)
-
-
 # Parquet TIMESTAMP(NANOS) columns per table: Spark has no ns timestamp
 # type, so these are read as long (nanosAsLong) and normalized to
 # microsecond timestamps (truncation — matching a DuckDB
@@ -87,7 +65,7 @@ def _normalize_nanos(df: DataFrame, name: str) -> DataFrame:
 # table read (and registering all ~125 queries paid ~200). Caching the
 # StructType and passing it explicitly makes plan construction job-free
 # after the first touch of each table. The key must capture everything
-# the footer→StructType mapping depends on (ADVICE r4):
+# the footer→StructType mapping depends on:
 #   - a FILE signature, not the top-level mtime: appending a part file
 #     inside an existing partition subdirectory does not bump the
 #     parent directory's mtime, so a (path, parent-mtime) key served a
@@ -234,7 +212,7 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet footer (under the same confs) instead of hard-coding one
     makes the stream robust to the timestamp encoding of the files —
     a hard-coded ``ts long`` schema silently misreads µs-encoded
-    timestamps as raw longs (the round-2 q29/q35/q48 regression).
+    timestamps as raw longs (q29, q35 and q48 return wrong answers).
     Event-time columns come out TIMESTAMP_NTZ; use ntz_to_instant()
     where the plan needs watermarks (which reject NTZ).
     """

@@ -1,6 +1,6 @@
 """Manifest-committed tables: the one commit protocol of every stateful
 on-disk writer — the CDC snapshot (``streaming.bucketed_upsert``), the
-LSH dedup index (``operators.dedup``), the versioned streaming sinks
+LSH dedup index (``operators.dedup``), the versioned streaming sink
 (``streaming.upsert``), the stream chain (``streaming.chain``) and
 ``sources.writers.compact_parquet``.
 

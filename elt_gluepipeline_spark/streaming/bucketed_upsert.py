@@ -364,55 +364,6 @@ def rebucket(
     return n_rows
 
 
-def auto_n_buckets(snapshot_bytes: int, *,
-                   target_mb_per_bucket: float = 1024) -> int:
-    """Bucket count advice: a power-of-two B targeting
-    ``target_mb_per_bucket`` per bucket, clamped to [16, 65536].
-    Merge cost falls as B grows (a trickle merge reads and rewrites
-    only its buckets), but every bucket is one more file the merge's
-    manifest and cleanup walk name, so B is capped and the default
-    keeps buckets at ~1 GB: small enough that a trickle merge rewrites
-    gigabytes at 100 TB, large enough that the file count stays
-    trivial."""
-    target_bytes = max(1, int(target_mb_per_bucket * 1024 * 1024))
-    want = 1 << max(0, snapshot_bytes // target_bytes - 1).bit_length()
-    return max(16, min(65536, want))
-
-
-def maintain_bucket_layout(
-    spark: SparkSession,
-    snapshot_dir: str,
-    *,
-    target_mb_per_bucket: float = 1024,
-    drift_factor: int = 4,
-    op_col: str | None = None,
-    delete_op: str = "D",
-) -> int | None:
-    """Keep the snapshot's bucket count matched to its SIZE — the
-    maintenance policy around ``rebucket``, mirroring the LSH index's
-    ``maintain_entries_layout``: measure the live files' bytes (from
-    the manifest, no Spark job), compute what ``auto_n_buckets`` would
-    pick today, and migrate only when the stored B is off by at least
-    ``drift_factor`` in either direction. Hysteresis matters because a
-    rebucket is a FULL table rewrite, which pays for itself only once
-    the table has actually outgrown its B, so routine growth should not
-    churn the layout.
-
-    Returns the new B when a migration ran (later merges read it from
-    the layout), else None."""
-    table = Table(spark, snapshot_dir)
-    cur = _layout(table)["n_buckets"]
-    live = os.path.join(snapshot_dir, _DATA)
-    total = sum(os.path.getsize(os.path.join(live, f))
-                for f in table.tables[_DATA]["files"])
-    want = auto_n_buckets(total, target_mb_per_bucket=target_mb_per_bucket)
-    if cur * drift_factor > want and want * drift_factor > cur:
-        return None
-    rebucket(spark, snapshot_dir, new_n_buckets=want, op_col=op_col,
-             delete_op=delete_op)
-    return want
-
-
 def foreach_batch_bucketed_upsert(
     source: DataFrame,
     *,

@@ -81,67 +81,3 @@ def sessionize_stateful(events: DataFrame, *, gap_minutes: int = 30,
                       outputMode="append",
                       timeoutConf=GroupStateTimeout.NoTimeout))
 
-
-def sessionize_stateful_timeout(events: DataFrame, *, gap_minutes: int = 30,
-                                user_col: str = "user_id",
-                                ts_col: str = "ts",
-                                order_col: str = "event_id") -> DataFrame:
-    """Sessionization with EVENT-TIME TIMEOUT close-out: like
-    ``sessionize_stateful``, but an idle session is also emitted once
-    the watermark passes last_event + gap — the production behavior a
-    continuous stream needs (without it, every inactive user's last
-    session is state that never drains).
-
-    ``events`` must carry a watermark on ``ts_col`` (instant TIMESTAMP;
-    the timeout clock IS the watermark). Inside the fold the timestamp
-    converts to epoch micros, so the session arithmetic matches the
-    NoTimeout variant exactly; the timeout callback (empty input,
-    ``state.hasTimedOut``) flushes and clears the open session.
-    """
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def fold(key: Any, pdfs: Iterator[pd.DataFrame],
-             state: GroupState) -> Iterator[pd.DataFrame]:
-        cols = ["user_id", "session_id", "n_events", "duration_us"]
-        if state.hasTimedOut:
-            sid, start, last, n = state.get
-            state.remove()
-            yield pd.DataFrame([(key[0], sid, n, last - start)], columns=cols)
-            return
-        if state.exists:
-            sid, start, last, n = state.get
-        else:
-            sid, start, last, n = 0, None, None, 0
-        closed: list[tuple[int, int, int, int]] = []
-        batch = pd.concat(list(pdfs))
-        batch["_us"] = batch[ts_col].astype("int64") // 1000
-        batch = batch.sort_values(["_us", order_col])
-        for ts in batch["_us"]:
-            ts = int(ts)
-            if last is None:
-                sid, start, last, n = sid + 1, ts, ts, 1
-            elif ts - last > gap_us:
-                closed.append((key[0], sid, n, last - start))
-                sid, start, last, n = sid + 1, ts, ts, 1
-            else:
-                # a LATE cross-batch event (admitted by the watermark)
-                # may sort before the stored last: extend bounds
-                # monotonically, never move them backward
-                start, last, n = min(start, ts), max(last, ts), n + 1
-        state.update((sid, start, last, n))
-        # the open session times out when the WATERMARK passes
-        # last + gap (epoch millis); clamp to just past the current
-        # watermark — Spark rejects a timeout at or before it (possible
-        # when a late event's last + gap already lies behind)
-        timeout_ms = max((last + gap_us) // 1000,
-                         state.getCurrentWatermarkMs() + 1)
-        state.setTimeoutTimestamp(timeout_ms)
-        yield pd.DataFrame(closed, columns=cols)
-
-    return (events.groupBy(user_col)
-                  .applyInPandasWithState(
-                      fold,
-                      outputStructType=SESSION_OUT_SCHEMA,
-                      stateStructType=SESSION_STATE_SCHEMA,
-                      outputMode="append",
-                      timeoutConf=GroupStateTimeout.EventTimeTimeout))

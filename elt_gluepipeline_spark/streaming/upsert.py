@@ -1,6 +1,6 @@
-"""Versioned-snapshot foreachBatch sinks for merges that are NOT
-idempotent: streaming incremental aggregation and incremental corpus
-dedup (SURVEY.md §2.8 T1-T3 as continuously merged sinks). The keyed
+"""Versioned-snapshot foreachBatch sink for merges that are NOT
+idempotent: streaming incremental aggregation (SURVEY.md §2.8 T1-T3 as
+a continuously merged sink). The keyed
 keep-latest upsert is idempotent and lives in
 ``streaming.bucketed_upsert``.
 
@@ -101,48 +101,3 @@ def foreach_batch_incremental_agg(
 
     drain_foreach_batch(source, merge, checkpoint_path)
 
-
-def foreach_batch_incremental_dedupe(
-    source: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    block_cols_fn,
-    snapshot_dir: str,
-    checkpoint_path: str,
-    k: int = 3,
-    threshold: float = 0.4,
-) -> None:
-    """Continuous corpus dedup: each micro-batch keeps only the docs
-    that survive ``operators.dedup.incremental_jaccard_dedupe`` against
-    the accumulated survivor snapshot, then publishes
-    ``survivors ∪ batch-survivors`` as the next version — the streaming
-    form of the daily-crawl dedup loop, with per-batch cost
-    O(batch × overlap) because the corpus side contributes only its
-    inverted index (never corpus×corpus).
-
-    Replay safety: survivor accumulation is not idempotent (a replayed
-    batch must not dedupe against a snapshot that already contains its
-    own survivors), so a batch this query already committed is skipped
-    (module docstring).
-
-    ``block_cols_fn()`` returns the blocking Column expressions
-    (unbound, evaluated against both batch and snapshot frames). The
-    snapshot stores full survivor rows, so blocking/text columns stay
-    available to future batches.
-    """
-    spark = source.sparkSession
-
-    from ..operators.dedup import incremental_jaccard_dedupe
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        def step(prev: DataFrame | None) -> DataFrame:
-            corpus = batch.limit(0) if prev is None else prev
-            kept = incremental_jaccard_dedupe(
-                batch, corpus, id_col, text_col, block_cols_fn(),
-                k=k, threshold=threshold)
-            return corpus.unionByName(kept.select(*corpus.columns))
-
-        _merge_batch(spark, snapshot_dir, checkpoint_path, batch_id, step)
-
-    drain_foreach_batch(source, merge, checkpoint_path)

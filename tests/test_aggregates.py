@@ -1,48 +1,7 @@
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.functions.deterministic import davg, dsum
-from elt_gluepipeline_spark.operators.aggregates import (grouped_percentiles,
-                                                         pivot_agg,
-                                                         time_rollup,
-                                                         two_level_agg)
-
-
-def test_grouped_percentiles_single_pass(spark):
-    df = spark.createDataFrame([("g1", float(v)) for v in range(1, 101)]
-                               + [("g2", 5.0), ("g2", 15.0)],
-                               "g string, v double")
-    out = grouped_percentiles(df, ["g"], "v", [0.2, 0.8], ["p20", "p80"])
-    rows = {r.g: (r.p20, r.p80) for r in out.collect()}
-    assert rows["g1"] == (20.8, 80.2)  # exact interpolated percentile
-    assert rows["g2"] == (7.0, 13.0)
-    approx = grouped_percentiles(df, ["g"], "v", [0.5], ["p50"], exact=False)
-    assert abs(approx.filter(F.col("g") == "g1").collect()[0].p50 - 50.0) <= 1.0
-
-
-def test_two_level_agg(spark):
-    df = spark.createDataFrame(
-        [("p1", "c1", 10.0), ("p1", "c1", 20.0), ("p1", "c2", 30.0)],
-        "prio string, cust string, rev double")
-    out = two_level_agg(
-        df, ["prio"], ["cust"],
-        [dsum("rev").alias("rev")],
-        lambda inner: [davg("rev").alias("avg_rev_per_cust"),
-                       F.count(F.lit(1)).alias("n_cust")])
-    row = out.collect()[0]
-    assert row.n_cust == 2 and row.avg_rev_per_cust == 30.0
-
-
-def test_time_rollup_grains(spark):
-    import datetime as dt
-    rows = [(dt.datetime(2024, 1, 1, 10, 5), 1.0),
-            (dt.datetime(2024, 1, 1, 10, 55), 2.0),
-            (dt.datetime(2024, 1, 2, 0, 0), 4.0)]
-    df = spark.createDataFrame(rows, "ts timestamp, v double")
-    hourly = time_rollup(df, "ts", "hour", [], [dsum("v").alias("s")])
-    assert {(str(r.bucket_start), r.s) for r in hourly.collect()} == {
-        ("2024-01-01 10:00:00", 3.0), ("2024-01-02 00:00:00", 4.0)}
-    daily = time_rollup(df, "ts", "day", [], [dsum("v").alias("s")])
-    assert {r.s for r in daily.collect()} == {3.0, 4.0}
+from elt_gluepipeline_spark.operators.aggregates import pivot_agg
 
 
 def test_pivot_agg_matches_native_pivot(spark):

@@ -1,4 +1,4 @@
-"""Refit policy for dataset-keyed artifacts (judge r6 item #3).
+"""Refit policy for dataset-keyed artifacts.
 
 q153's SemDeDup coarse cells come from a k-means artifact fitted on
 the corpus; the fit/serve split is only sound if a grown or rewritten
@@ -8,8 +8,7 @@ the dataset's modification state (file mtime; for a directory, child
 count + newest child mtime), so any rewrite/append produces a fresh
 fit. The corpus-SCALED piece of the q153 cell id (the sign-LSH mask
 width b) is derived in-plan from a count aggregate every run, so it
-needs no artifact and no refit policy at all — that derivation is
-pinned here against its Python twin.
+needs no artifact and no refit policy at all.
 """
 
 from __future__ import annotations
@@ -32,14 +31,28 @@ def _write_embeddings(spark, sf_dir: str, n: int) -> None:
           .write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet"))
 
 
-def test_semdedup_artifact_refits_on_corpus_growth(spark, tmp_path):
+def test_semdedup_artifact_refits_on_corpus_growth(spark, tmp_path,
+                                                   monkeypatch):
+    from elt_gluepipeline_spark.operators import similarity
+    from elt_gluepipeline_spark.plans import training
     from elt_gluepipeline_spark.plans.training import (_SEMDEDUP_K,
+                                                       _km_artifact,
                                                        _semdedup_artifact)
 
+    monkeypatch.setattr(training, "_ARTIFACT_ROOT", str(tmp_path / "art"))
+    monkeypatch.setattr(training, "_ARTIFACT_MEMO", {})
+    fits = []
+    real_fit = similarity._pq_fit
+    monkeypatch.setattr(similarity, "_pq_fit",
+                        lambda *a, **kw: fits.append(kw) or real_fit(*a, **kw))
     sf_dir = str(tmp_path / "ds")
     os.makedirs(sf_dir)
     _write_embeddings(spark, sf_dir, 2500)
+    # from an empty root, q67's km and q153's semk8 share ONE k-means fit
+    km = _km_artifact(spark, sf_dir)
     art1 = _semdedup_artifact(spark, sf_dir)
+    assert len(fits) == 1
+    assert art1.books == km.books
     assert art1.k == _SEMDEDUP_K and len(art1.books[0]) == art1.k
 
     # grow the corpus UNDER THE SAME PATH (the scenario the refit
@@ -59,25 +72,8 @@ def test_semdedup_artifact_refits_on_corpus_growth(spark, tmp_path):
     assert art3.k == art2.k and art3.books == art2.books
 
 
-def test_semdedup_mask_width_rule():
-    """b = #{i : n > 2048*2^i}: doubling the corpus adds one bit, so
-    expected cell size stays in [128, 256] — and the rule is integer
-    comparisons only (no libm log boundaries)."""
-    from elt_gluepipeline_spark.plans.training import _semdedup_bits
-
-    assert _semdedup_bits(0) == 0
-    assert _semdedup_bits(2048) == 0
-    assert _semdedup_bits(2049) == 1
-    assert _semdedup_bits(4096) == 1
-    assert _semdedup_bits(4097) == 2
-    assert _semdedup_bits(1 << 20) == 9
-    # doubling adds exactly one bit across the whole range
-    for n in [3000, 10_000, 1_000_000, 50_000_000]:
-        assert _semdedup_bits(2 * n) == _semdedup_bits(n) + 1
-
-
 def test_corpus_swap_same_path_refits(spark, tmp_path):
-    """Judge r6 item #8: a corpus SWAP (same path, same row count,
+    """A corpus SWAP (same path, same row count,
     different content) must refit — the key folds in child mtimes, not
     just sizes/counts."""
     from elt_gluepipeline_spark.plans.training import _semdedup_artifact
@@ -100,27 +96,6 @@ def test_corpus_swap_same_path_refits(spark, tmp_path):
           .write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet"))
     art2 = _semdedup_artifact(spark, sf_dir)
     assert art2.books != art1.books
-
-
-def test_clear_artifacts_resets_root_and_memo(spark, tmp_path,
-                                              monkeypatch):
-    from elt_gluepipeline_spark.plans import training
-
-    root = str(tmp_path / "artifacts")
-    monkeypatch.setattr(training, "_ARTIFACT_ROOT", root)
-    monkeypatch.setattr(training, "_ARTIFACT_MEMO", {})
-    sf_dir = str(tmp_path / "ds")
-    os.makedirs(sf_dir)
-    _write_embeddings(spark, sf_dir, 2500)
-    training._semdedup_artifact(spark, sf_dir)
-    assert len(os.listdir(root)) == 1
-    assert len(training._ARTIFACT_MEMO) == 1
-    assert training.clear_artifacts() == 1
-    assert os.listdir(root) == []
-    assert training._ARTIFACT_MEMO == {}
-    # next call refits cleanly into the empty root
-    training._semdedup_artifact(spark, sf_dir)
-    assert len(os.listdir(root)) == 1
 
 
 def test_artifact_root_is_bounded_lru(spark, tmp_path, monkeypatch):

@@ -442,60 +442,3 @@ def test_one_data_file_per_bucket_per_write(spark, tmp_path):
             files = [f for f in os.listdir(os.path.join(live, d))
                      if f.endswith(".parquet")]
             assert len(files) == 1, (d, files)
-
-
-def test_maintain_bucket_layout(spark, tmp_path):
-    """maintain_bucket_layout: the snapshot analog of the LSH index's
-    maintain_entries_layout — auto_n_buckets picks B from on-disk
-    BYTES (the SCALE_r10 lesson: merge/rebucket cost is byte-bound),
-    hysteresis avoids churning the caller's n_buckets contract, and a
-    migration preserves state and resumes pruned merges at the new B."""
-    from elt_gluepipeline_spark.streaming.bucketed_upsert import (
-        auto_n_buckets, maintain_bucket_layout)
-
-    # formula at the measured anchors: 4.1 GB at the SCALE_r10 256 MB
-    # test target -> 16 (the outgrown starting point measured there);
-    # 100 TB at the 1 GB default -> the 65536 listing cap; tiny -> 16
-    assert auto_n_buckets(4_198 * 1024**2, target_mb_per_bucket=256) == 16
-    assert auto_n_buckets(100 * 1024**4) == 65536
-    assert auto_n_buckets(1) == 16
-
-    snap = str(tmp_path / "snap")
-    rows = [(k, k, f"v{k}", "U") for k in range(200)]
-    df = spark.createDataFrame(rows, SCHEMA)
-    bucketed_merge(df, snapshot_dir=snap, primary_keys=["k"],
-                   order_by=[F.col("seq").desc()], n_buckets=8,
-                   op_col="op")
-    before = _state(spark, snap)
-
-    # in band (tiny table wants the floor 16; 8 is within 4x) -> no-op
-    assert maintain_bucket_layout(spark, snap) is None
-
-    # force a drift: a target of 1/64th of the measured size makes the
-    # table "outgrown" (want lands on 64 or 128 vs current 8)
-    def _du(path):
-        live = os.path.join(path, "data")
-        return sum(os.path.getsize(os.path.join(r, f))
-                   for r, _, fs in os.walk(live) for f in fs)
-
-    new_b = maintain_bucket_layout(
-        spark, snap,
-        target_mb_per_bucket=_du(snap) / 64 / (1024 * 1024), op_col="op")
-    assert new_b is not None and new_b >= 8 * 4
-    assert Table(spark, snap).layout("data")["n_buckets"] == new_b
-    assert _state(spark, snap) == before
-    # merges resume at the stored new B and stay pruned (touched < B)
-    up = spark.createDataFrame([(7, 999, "v7b", "U")], SCHEMA)
-    touched = bucketed_merge(up, snapshot_dir=snap, primary_keys=["k"],
-                             order_by=[F.col("seq").desc()], op_col="op")
-    assert len(touched) == 1
-    after = dict(before)
-    after[7] = (999, "v7b")
-    assert _state(spark, snap) == after
-
-    # and with a target centered on the CURRENT size the same call is
-    # a no-op (hysteresis): want lands on ~new_b, within the 4x band
-    assert maintain_bucket_layout(
-        spark, snap,
-        target_mb_per_bucket=_du(snap) / new_b / (1024 * 1024),
-        op_col="op") is None

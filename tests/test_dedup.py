@@ -933,66 +933,6 @@ def test_lsh_auto_layout_selection(spark, tmp_path, monkeypatch):
                              partition_entries="auto")
 
 
-def test_maintain_entries_layout(spark, tmp_path, monkeypatch):
-    """maintain_entries_layout: the maintenance half of the measured
-    auto-layout policy — re-partitions a stored index whose corpus has
-    outgrown (or never had) its serve layout, with hysteresis so small
-    drift never triggers a full entries rewrite, and never migrates
-    DOWN to flat."""
-    from pyspark.sql import functions as F
-
-    import elt_gluepipeline_spark.operators.dedup as dd
-    from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, fit_lsh_dedup_index, incremental_lsh_dedup,
-        load_lsh_dedup_index, maintain_entries_layout, portable_band_hash,
-        save_lsh_dedup_index)
-
-    docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
-    corpus = docs.filter(F.col("doc_id") < 100)
-    batch = docs.filter(F.col("doc_id") >= 100)
-    fit_kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-                  band_hash=portable_band_hash)
-    idx = fit_lsh_dedup_index(corpus, "doc_id", "text", **fit_kw)
-    d = str(tmp_path)
-
-    def pairs(path):
-        index = load_lsh_dedup_index(spark, path)
-        out = incremental_lsh_dedup(None, batch, "doc_id", "text",
-                                    index=index, threshold=0.3, **fit_kw)
-        return sorted((r["id_new"], r["id_existing"])
-                      for r in out.collect())
-
-    # below the crossover: flat stays flat, partitioned stays put
-    save_lsh_dedup_index(idx, f"{d}/flat")
-    assert maintain_entries_layout(spark, f"{d}/flat") is None
-    assert load_lsh_dedup_index(spark, f"{d}/flat").entries_partitions \
-        is None
-    want = pairs(f"{d}/flat")
-    assert want
-    save_lsh_dedup_index(idx, f"{d}/part16", partition_entries=16)
-    assert maintain_entries_layout(spark, f"{d}/part16") is None
-    assert (load_lsh_dedup_index(spark, f"{d}/part16").entries_partitions
-            == 16)
-
-    # past the (patched) crossover: a flat table gains the auto layout
-    monkeypatch.setattr(dd, "AUTO_PARTITION_MIN_ENTRIES", 1)
-    new_p = maintain_entries_layout(spark, f"{d}/flat")
-    assert new_p == 256  # tiny table -> auto formula's floor
-    assert (load_lsh_dedup_index(spark, f"{d}/flat").entries_partitions
-            == new_p)
-    assert pairs(f"{d}/flat") == want
-
-    # hysteresis: stored P within drift_factor of today's pick -> no-op
-    assert maintain_entries_layout(spark, f"{d}/flat") is None
-    save_lsh_dedup_index(idx, f"{d}/part128", partition_entries=128)
-    assert maintain_entries_layout(spark, f"{d}/part128") is None
-
-    # drifted >= drift_factor: 16 vs 256 migrates (and serves the same)
-    assert maintain_entries_layout(spark, f"{d}/part16") == 256
-    assert pairs(f"{d}/part16") == want
-
-
 def test_shared_shingle_base_matches_independent(spark):
     """One shingle_base_cached frame shared
     across the prefix-filter truth side and the minhash LSH side (the

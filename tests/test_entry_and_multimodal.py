@@ -44,19 +44,6 @@ def test_multimodal_plumbing(spark):
     assert again == {r.asset_id: r.feature_hash for r in feats.collect()}
 
 
-def test_resize_assets_contract(spark):
-    from elt_gluepipeline_spark.operators.multimodal import (attach_payload,
-                                                             resize_assets)
-    df = spark.createDataFrame([(1, "hello"), (2, "")], "id long, t string")
-    out = resize_assets(attach_payload(df, "id", "t"), width=8, height=4).collect()
-    by_id = {r.asset_id: r for r in out}
-    assert all(len(r.payload) == 32 for r in out)      # w*h bytes always
-    assert by_id[1].width == 8 and by_id[1].height == 4
-    assert by_id[1].payload.startswith(b"hello")       # deterministic tiling
-    assert by_id[2].payload == b"\x00" * 32            # empty payload path
-    assert by_id[1].media_format == "raw-raster"
-
-
 def test_sample_frames_fanout_bounds(spark):
     from elt_gluepipeline_spark.operators.multimodal import (attach_payload,
                                                              sample_frames)
@@ -99,51 +86,6 @@ def test_kv_pairs_udtf_lateral_explode(spark):
     """).collect()
     got = {(r.id, r.key): r.value for r in rows}
     assert got == {(1, "color"): "red", (1, "size"): "L", (2, "x"): "1"}
-
-
-def test_raster_stats_match_pure_python(spark):
-    import numpy as np
-
-    from elt_gluepipeline_spark.operators.multimodal import (attach_payload,
-                                                             raster_stats)
-
-    w, h = 8, 4
-    texts = [(1, "x" * 40), (2, "abcdefgh" * 4), (3, "short")]
-    df = spark.createDataFrame(texts, "id long, t string")
-    assets = attach_payload(df, "id", "t")
-    got = {r.asset_id: r for r in
-           raster_stats(assets, width=w, height=h).collect()}
-    for i, t in texts:
-        raw = t.encode()[: w * h].ljust(w * h, b"\0")
-        img = np.frombuffer(raw, np.uint8).reshape(h, w).astype(float)
-        assert got[i].mean_lum == f"{img.mean():.4f}"
-        assert got[i].std_lum == f"{img.std():.4f}"
-        assert got[i].edge_energy == f"{np.abs(np.diff(img, 1)).mean():.4f}"
-
-
-def test_downsample_raster_is_block_mean(spark):
-    import numpy as np
-
-    from elt_gluepipeline_spark.operators.multimodal import (attach_payload,
-                                                             downsample_raster)
-
-    w, h, f = 8, 4, 2
-    payload = bytes(range(w * h))
-    df = spark.createDataFrame([(1, payload.decode("latin-1"))],
-                               "id long, t string")
-    # attach_payload utf8-encodes; bytes 0..31 are ASCII-safe latin-1
-    assets = attach_payload(df, "id", "t")
-    out = downsample_raster(assets, width=w, height=h, factor=f).collect()[0]
-    assert (out.width, out.height) == (w // f, h // f)
-    img = np.frombuffer(payload, np.uint8).reshape(h, w).astype(float)
-    expect = np.round(img.reshape(h // f, f, w // f, f).mean(axis=(1, 3))) \
-        .clip(0, 255).astype(np.uint8).tobytes()
-    assert bytes(out.payload) == expect
-    # downsample then stats composes (the preprocessing chain shape)
-    from elt_gluepipeline_spark.operators.multimodal import raster_stats
-    st = raster_stats(downsample_raster(assets, width=w, height=h, factor=f),
-                      width=w // f, height=h // f).collect()[0]
-    assert st.mean_lum == f"{np.frombuffer(expect, np.uint8).mean():.4f}"
 
 
 # ---------------- real BMP/WAV decode (round-4) ----------------

@@ -56,22 +56,6 @@ def test_normalize_strings_single_projection(spark):
     assert row.name == "mixed" and row.n == 5
 
 
-def test_read_parquet_merge_schema_evolution(spark, tmp_path):
-    from elt_gluepipeline_spark.sources.readers import read_parquet
-    base = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, name string") \
-         .write.parquet(base + "/part=old")
-    spark.createDataFrame([(2, "b", 9.5)],
-                          "id long, name string, score double") \
-         .write.parquet(base + "/part=new")
-    # default read trusts one footer; merge_schema unions them
-    merged = read_parquet(spark, base, merge_schema=True)
-    assert set(merged.columns) == {"id", "name", "score", "part"}
-    rows = {r.id: (r.score, r.part) for r in merged.collect()}
-    assert rows[1] == (None, "old")   # old files NULL-fill new columns
-    assert rows[2] == (9.5, "new")
-
-
 def test_read_csv_tolerant_quarantines_bad_rows(spark, tmp_path):
     from pyspark.sql.types import (DoubleType, LongType, StringType,
                                    StructField, StructType)

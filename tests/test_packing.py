@@ -1,13 +1,12 @@
 """Sequence packing (operators.packing): concat-and-chunk coordinates,
-greedy whole-doc bins, determinism under repartitioning, stats."""
+greedy whole-doc bins, determinism under repartitioning."""
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.packing import (pack_concat_chunk,
-                                                      pack_greedy_bins,
-                                                      packing_stats)
+                                                      pack_greedy_bins)
 
 CTX = 100
 
@@ -90,19 +89,6 @@ def test_packing_determinism_under_repartitioning(spark, corpus):
     d = pack_concat_chunk(corpus.coalesce(1), "doc_id", F.col("n"),
                           ctx_len=CTX, n_shards=4)
     assert sorted(map(tuple, c.collect())) == sorted(map(tuple, d.collect()))
-
-
-def test_packing_stats(corpus):
-    packed = pack_greedy_bins(corpus, "doc_id", F.col("n"), ctx_len=CTX,
-                              n_shards=4)
-    stats = {r.shard: r for r in
-             packing_stats(packed, ctx_len=CTX).collect()}
-    rows = packed.collect()
-    for shard, r in stats.items():
-        mine = [x for x in rows if x.shard == shard]
-        assert r.n_seqs == len({x.bin for x in mine})
-        assert r.n_tokens == sum(x.n_tokens for x in mine)
-        assert r.padding_waste == r.n_seqs * CTX - r.n_tokens
 
 
 def test_bad_ctx_raises(corpus):

@@ -1,7 +1,6 @@
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.quality import (extract_violations,
-                                                      remove_flagged,
                                                       severity_from_thresholds,
                                                       split_clean)
 
@@ -33,15 +32,6 @@ def test_extract_and_split_is_partition(spark):
     assert viols == {2: ["price_nonpos"], 3: ["price_high", "qty_zero"]}
     # multiset preserved: duplicate clean row survives twice
     assert clean.filter(F.col("id") == 1).count() == 2
-
-
-def test_remove_flagged_multiset_vs_subtract(spark):
-    df = _items(spark)
-    flagged = df.filter(F.col("qty") == 0)
-    survivors = remove_flagged(df, flagged, ["id"])
-    assert survivors.filter(F.col("id") == 1).count() == 2  # B6 fix: no dedupe
-    compat = remove_flagged(df, flagged, ["id"], use_subtract_compat=True)
-    assert compat.filter(F.col("id") == 1).count() == 1  # as-written dedupes
 
 
 def test_severity_from_thresholds(spark):

@@ -1,6 +1,6 @@
-"""Deterministic sampling/splitting + decontamination + repetition
-stats — the curation operators a training corpus needs to be stable
-and leak-free across reruns."""
+"""Deterministic sampling/splitting + decontamination — the curation
+operators a training corpus needs to be stable and leak-free across
+reruns."""
 
 from pyspark.sql import functions as F
 
@@ -8,7 +8,6 @@ from elt_gluepipeline_spark.operators.dedup import cross_corpus_containment
 from elt_gluepipeline_spark.operators.sampling import (assign_split,
                                                        deterministic_sample,
                                                        stratified_sample)
-from elt_gluepipeline_spark.operators.textstats import line_repetition
 
 
 def _docs(spark, n=1000):
@@ -87,20 +86,6 @@ def test_containment_hot_shingle_guard(spark):
     assert guarded.count() == 0
 
 
-def test_line_repetition(spark):
-    df = spark.createDataFrame(
-        [(1, "buy now\nbuy now\nbuy now\nbuy now"),
-         (2, "alpha\nbeta\ngamma"),
-         (3, "   \n  \n")],
-        "doc_id long, text string")
-    got = {r.doc_id: round(r.rep, 4) for r in
-           df.select("doc_id",
-                     line_repetition(F.col("text")).alias("rep")).collect()}
-    assert got[1] == 0.75   # 4 lines, 1 distinct
-    assert got[2] == 0.0
-    assert got[3] == 0.0    # blank-only doc
-
-
 def test_token_budget_shards_exact_prefix(spark):
     from elt_gluepipeline_spark.operators.sampling import token_budget_shards
     rows = [(i, 10 * (i % 7)) for i in range(200)]
@@ -133,7 +118,6 @@ def test_scrub_pii_cross_engine(spark):
     # (Java regex) and DuckDB (RE2) — tested, not assumed
     import duckdb
     from elt_gluepipeline_spark.functions.cleaning import (PII_PATTERNS,
-                                                           pii_counts,
                                                            scrub_pii)
     rows = [(1, "mail me at jane.doe+x@corp.example.org today"),
             (2, "call +1 (555) 123-4567 or 555.987.6543"),
@@ -157,9 +141,6 @@ def test_scrub_pii_cross_engine(spark):
     assert spark_out[2].count("<phone>") == 2
     assert "<ipv4>" in spark_out[3]
     assert spark_out[4] == rows[3][1]  # clean text untouched
-    counts = df.select("doc_id", *pii_counts(F.col("text"))).collect()
-    got = {r.doc_id: (r.n_email, r.n_phone, r.n_ipv4) for r in counts}
-    assert got[5] == (2, 0, 0) and got[3] == (0, 0, 1)
 
 
 def test_chunk_documents_windows_and_overlap(spark):

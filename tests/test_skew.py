@@ -1,7 +1,6 @@
 from pyspark.sql import functions as F
 
-from elt_gluepipeline_spark.operators.skew import (salted_agg,
-                                                   salted_count_distinct,
+from elt_gluepipeline_spark.operators.skew import (salted_count_distinct,
                                                    salted_join)
 
 
@@ -38,94 +37,3 @@ def test_salted_count_distinct_exact(spark):
             df.groupBy("k").agg(F.countDistinct("v").alias("n")).collect()}
     assert got == want
 
-
-def test_salted_agg_sum_decomposition(spark):
-    df = _skewed(spark)
-    out = salted_agg(df, ["k"],
-                     [F.sum("v").alias("_s")],
-                     [F.sum("_s").cast("long").alias("total")], n_salt=8)
-    want = {r.k: r.total for r in
-            df.groupBy("k").agg(F.sum("v").cast("long").alias("total")).collect()}
-    assert {r.k: r.total for r in out.collect()} == want
-
-
-def test_hot_key_salted_join_equals_plain_join(spark):
-    from pyspark.sql import functions as F
-
-    from elt_gluepipeline_spark.operators.skew import hot_key_salted_join
-
-    # one whale key (0) + calm tail
-    left = spark.range(0, 2000).select(
-        F.when(F.col("id") < 1200, F.lit(0)).otherwise(F.col("id") % 50)
-         .alias("k"),
-        F.col("id").alias("lid"))
-    right = spark.range(0, 300).select(
-        (F.col("id") % 60).alias("k"), F.col("id").alias("rid"))
-
-    for how in ("inner", "left"):
-        got = hot_key_salted_join(left, right, ["k"], n_salt=8, how=how,
-                                  hot_min_frac=0.05)
-        plain = left.join(right, ["k"], how)
-        assert got.count() == plain.count()
-        assert got.exceptAll(plain).count() == 0
-        assert plain.exceptAll(got).count() == 0
-
-
-def test_hot_key_salted_join_no_hot_keys_falls_back(spark):
-    from pyspark.sql import functions as F
-
-    from elt_gluepipeline_spark.operators.skew import hot_key_salted_join
-
-    left = spark.range(0, 500).select((F.col("id") % 100).alias("k"),
-                                      F.col("id").alias("lid"))
-    right = spark.range(0, 100).select(F.col("id").alias("k"),
-                                       F.col("id").alias("rid"))
-    # uniform: no key holds >= 20% — plain join path
-    got = hot_key_salted_join(left, right, ["k"], hot_min_frac=0.2)
-    plain = left.join(right, ["k"], "inner")
-    assert got.exceptAll(plain).count() == 0
-    assert plain.exceptAll(got).count() == 0
-
-
-def test_hot_key_salted_join_on_real_events(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from elt_gluepipeline_spark.operators.skew import hot_key_salted_join
-    from elt_gluepipeline_spark.sources.readers import read_table
-
-    ev = read_table(spark, sf_dir, "events")
-    fact = ev.select("event_id", "user_id")
-    profile = (ev.groupBy("user_id")
-                 .agg(F.count(F.lit(1)).alias("n_events")))
-    got = hot_key_salted_join(fact, profile, ["user_id"], n_salt=4,
-                              hot_min_frac=0.001, hot_top_k=16)
-    plain = fact.join(profile, ["user_id"], "inner")
-    assert got.exceptAll(plain).count() == 0
-    assert plain.exceptAll(got).count() == 0
-
-
-def test_hot_key_salted_join_left_with_null_keys(spark):
-    """NULL-keyed skewed-side rows must survive a left join with null
-    payload, exactly like the plain join (the hot/cold membership
-    predicate used to evaluate to SQL NULL on them, so BOTH branch
-    filters dropped the rows silently)."""
-    from pyspark.sql import functions as F
-
-    from elt_gluepipeline_spark.operators.skew import hot_key_salted_join
-
-    left = spark.createDataFrame(
-        [(None, 100), (None, 101)]
-        + [("hot", i) for i in range(40)] + [("cold", 1)],
-        "k string, lid int")
-    right = spark.createDataFrame(
-        [("hot", 7), ("cold", 8)], "k string, rid int")
-    for how in ("inner", "left"):
-        got = hot_key_salted_join(left, right, ["k"], n_salt=4, how=how,
-                                  hot_min_frac=0.2)
-        plain = left.join(right, ["k"], how)
-        assert got.exceptAll(plain).count() == 0
-        assert plain.exceptAll(got).count() == 0
-    # explicitly: left join keeps the 2 null-keyed rows
-    got_left = hot_key_salted_join(left, right, ["k"], n_salt=4,
-                                   how="left", hot_min_frac=0.2)
-    assert got_left.filter(F.col("k").isNull()).count() == 2

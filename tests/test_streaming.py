@@ -132,55 +132,6 @@ def test_stream_interval_join_matches_batch_range_join(spark):
     assert stream == batch and len(stream) > 0
 
 
-def test_stream_sessions_timeout_closes_idle(spark):
-    # event-time-timeout variant, pinned at sf0.001 against an
-    # independent pure-python sessionizer: the drain must emit every
-    # CLOSED session plus every open session whose (last + gap) the
-    # end-of-stream watermark passed — i.e. only sessions still inside
-    # the gap window at max(ts) stay in state
-    from elt_gluepipeline_spark.sources.readers import (ntz_micros,
-                                                        ntz_to_instant,
-                                                        read_table,
-                                                        read_table_stream)
-    from elt_gluepipeline_spark.streaming.sessionize import \
-        sessionize_stateful_timeout
-    from elt_gluepipeline_spark.streaming.stream import \
-        run_rollup_available_now
-
-    sf = "/root/testdata/sf0.001"
-    gap_min = 30
-    gap_us = gap_min * 60 * 1_000_000
-
-    src = (read_table_stream(spark, sf, "events")
-           .select("user_id", "event_id", ntz_to_instant("ts").alias("ts"))
-           .withWatermark("ts", "0 seconds"))
-    sessions = sessionize_stateful_timeout(src, gap_minutes=gap_min)
-    got = {tuple(r) for r in
-           run_rollup_available_now(sessions, output_mode="append",
-                                    state_partitions=8).collect()}
-
-    pdf = (read_table(spark, sf, "events")
-           .select("user_id", "event_id", ntz_micros("ts").alias("us"))
-           .toPandas())
-    max_us = int(pdf["us"].max())
-    want = set()
-    for uid, g in pdf.sort_values(["us", "event_id"]).groupby("user_id"):
-        sid, start, last, n = 0, None, None, 0
-        rows = []
-        for us in g["us"]:
-            us = int(us)
-            if last is None:
-                sid, start, last, n = sid + 1, us, us, 1
-            elif us - last > gap_us:
-                rows.append((uid, sid, n, last - start, True))
-                sid, start, last, n = sid + 1, us, us, 1
-            else:
-                last, n = us, n + 1
-        rows.append((uid, sid, n, last - start, last + gap_us < max_us))
-        want |= {r[:4] for r in rows if r[4]}
-    assert got == want and len(got) > 0
-
-
 def test_stateful_sessions_across_micro_batches(spark, tmp_path):
     # multi-batch drain (maxFilesPerTrigger=1): state carries across
     # micro-batches, and a LATE event delivered in a later batch —
@@ -217,45 +168,6 @@ def test_stateful_sessions_across_micro_batches(spark, tmp_path):
     got = [tuple(r) for r in spark.table(name).collect()]
     # one closed session: 4 events spanning 12:00-12:20 (20 min)
     assert got == [(1, 1, 4, 20 * 60 * 1_000_000)]
-
-
-def test_timeout_sessions_across_micro_batches(spark, tmp_path):
-    # event-time-timeout variant under a multi-batch drain: the
-    # watermark advances between batches; timeouts must clamp past it
-    # (a late event's last+gap can lie behind the watermark) and idle
-    # sessions flush once it passes last+gap
-    import datetime as dt
-    from elt_gluepipeline_spark.streaming.sessionize import \
-        sessionize_stateful_timeout
-    src_dir = str(tmp_path / "ev2")
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    schema = "user_id long, event_id long, ts timestamp"
-
-    def write_file(rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-             .write.mode("append").parquet(src_dir)
-
-    m = dt.timedelta(minutes=1)
-    write_file([(1, 1, base), (2, 2, base + 2 * m)])
-    # u2 goes idle; u1 keeps going far past u2's last+gap
-    write_file([(1, 3, base + 120 * m)])
-    write_file([(1, 4, base + 240 * m)])
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src_dir)
-              .withWatermark("ts", "0 seconds"))
-    sessions = sessionize_stateful_timeout(stream, gap_minutes=30)
-    name = "_mb_timeout_sessions"
-    q = (sessions.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {tuple(r) for r in spark.table(name).collect()}
-    # u2's idle session flushed by timeout; u1's first two singleton
-    # sessions closed by gap; the trailing u1 session (ts 240m) may or
-    # may not time out depending on the final watermark — accept both
-    assert (2, 1, 1, 0) in got           # u2 idle session flushed
-    assert (1, 1, 1, 0) in got and (1, 2, 1, 0) in got
-    assert got <= {(2, 1, 1, 0), (1, 1, 1, 0), (1, 2, 1, 0), (1, 3, 1, 0)}
 
 
 def test_foreach_batch_upsert_multi_batch(spark, tmp_path):
@@ -363,85 +275,6 @@ def test_stream_incremental_agg_matches_batch_and_replay_safe(spark, sf_dir, tmp
     # schema stability: compounding merges must not widen the sum type
     snap = read_snapshot(spark, str(tmp_path / "snap"))
     assert dict(snap.dtypes)["s"] == dict(delta_fn(ev).dtypes)["s"]
-
-
-def test_stream_incremental_dedupe_equals_sequential(spark, tmp_path,
-                                                     monkeypatch):
-    """foreachBatch continuous dedup == sequentially applying
-    incremental_jaccard_dedupe batch-by-batch (whatever batch order
-    the file source picked), and the snapshot keeps one generation:
-    after the drain, the only data files on disk are the live ones."""
-    import os
-    import time
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
-    import elt_gluepipeline_spark.operators.dedup as dedup
-    from elt_gluepipeline_spark.operators.dedup import \
-        incremental_jaccard_dedupe
-    from elt_gluepipeline_spark.streaming.upsert import (
-        foreach_batch_incremental_dedupe, read_snapshot)
-
-    rows = [
-        # file 0
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon eta")],      # 1~2 → keep 1
-        # file 1: 10 matches survivor 1; 11 clean
-        [(10, "alpha beta gamma delta epsilon zeta"),
-         (11, "one two three four five six seven")],
-        # file 2: 20 matches 11; 21 clean
-        [(20, "one two three four five six eight"),
-         (21, "nine ten eleven twelve thirteen fourteen")],
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, batch in enumerate(rows):
-        spark.createDataFrame(batch, "doc_id long, text string") \
-             .coalesce(1).write.parquet(str(src / f"b{i}"))
-        time.sleep(1.1)  # distinct mtimes → deterministic-ish order
-
-    # record the batch order the stream actually used
-    seen = []
-
-    def spy(new_docs, *args, **kwargs):
-        seen.append({r.doc_id for r in new_docs.collect()})
-        return incremental_jaccard_dedupe(new_docs, *args, **kwargs)
-
-    monkeypatch.setattr(dedup, "incremental_jaccard_dedupe", spy)
-    stream = (spark.readStream
-                   .schema("doc_id long, text string")
-                   .option("maxFilesPerTrigger", 1)
-                   .parquet(str(src) + "/*"))
-    snap = str(tmp_path / "snap")
-    foreach_batch_incremental_dedupe(
-        stream, id_col="doc_id", text_col="text",
-        block_cols_fn=lambda: [F.lit(0)],
-        snapshot_dir=snap, checkpoint_path=str(tmp_path / "ck"),
-        k=3, threshold=0.3)
-    monkeypatch.undo()
-
-    snapshot = read_snapshot(spark, snap)
-    got = {r.doc_id for r in snapshot.collect()}
-    # one generation: the superseded states' files are gone
-    live = {urlparse(p).path for p in snapshot.inputFiles()}
-    on_disk = {os.path.join(d, f) for d, _, fs in os.walk(snap)
-               for f in fs if f.endswith(".parquet")}
-    assert on_disk == live
-
-    batch_ids = [{r[0] for r in b} for b in rows]
-    order = [batch_ids.index(ids) for ids in seen]
-    assert sorted(order) == [0, 1, 2]
-    corpus = spark.createDataFrame([], "doc_id long, text string")
-    for i in order:
-        b = spark.createDataFrame(rows[i], "doc_id long, text string")
-        kept = incremental_jaccard_dedupe(b, corpus, "doc_id", "text",
-                                          [F.lit(0)], k=3, threshold=0.3)
-        corpus = corpus.unionByName(kept)
-    expect = {r.doc_id for r in corpus.collect()}
-    assert got == expect
-    # and the fixture really exercised cross-batch matching
-    assert 1 in got and 10 not in got and 11 in got and 20 not in got
 
 
 def test_update_mode_multibatch_converges_to_batch_agg(spark, tmp_path):

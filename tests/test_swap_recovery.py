@@ -2,7 +2,7 @@
 (``sources.table``): the CDC snapshot's merge, tombstone expiry and
 rebucket; the LSH index's save, append, delete, compaction and entries
 repartition; ``compact_parquet``; the stream chain's batch handler;
-and both versioned streaming sinks.
+and the versioned streaming sink.
 
 A writer touches the disk through three primitives — ``step`` 1: the
 Spark write action, 2: the ``os.replace`` inside ``write_atomic`` (the
@@ -143,7 +143,7 @@ def _folder(spark, d):
                                          "uuid() AS u").repartition(10))})
 
 
-# --- the stream chain and the versioned streaming sinks ------------------
+# --- the stream chain and the versioned streaming sink ------------------
 
 _RULES = (("neg", "v <= 0"),)
 
@@ -201,20 +201,6 @@ def _agg_handler(spark, d):
         keys=["user_id"], count_col="n", sum_cols=["s"])
 
 
-def _texts(spark, batch_id):
-    words = ("alpha beta gamma delta epsilon zeta",
-             "one two three four five six seven")
-    rows = [(batch_id * 10 + i, words[i % 2]) for i in range(3)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def _dedupe_handler(spark, d):
-    return _sink_handler(
-        upsert.foreach_batch_incremental_dedupe, spark, d, id_col="doc_id",
-        text_col="text", block_cols_fn=lambda: [F.lit(0)], k=3,
-        threshold=0.3)
-
-
 # writer -> (build the table, run the writer on it)
 CASES = {
     "bucketed_merge": (_snapshot, _merge),
@@ -234,9 +220,6 @@ CASES = {
     "foreach_batch_incremental_agg": (
         lambda spark, d: None,
         lambda spark, d: _agg_handler(spark, d)(_events(spark, 0), 0)),
-    "foreach_batch_incremental_dedupe": (
-        lambda spark, d: _dedupe_handler(spark, d)(_texts(spark, 0), 0),
-        lambda spark, d: _dedupe_handler(spark, d)(_texts(spark, 1), 1)),
 }
 _NOT_IDEMPOTENT = {"append_lsh_dedup_index", "delete_from_lsh_dedup_index"}
 # writers that only add files in an uncrashed run: no step 3

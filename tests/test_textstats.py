@@ -5,7 +5,6 @@ from elt_gluepipeline_spark.operators.textstats import (bpe_ish_tokens,
                                                         fingerprint_rolling,
                                                         langid_en_heuristic,
                                                         n_tokens,
-                                                        quality_score,
                                                         stopword_ratio)
 
 
@@ -22,13 +21,6 @@ def test_n_tokens(spark):
 def test_stopword_ratio(spark):
     assert _one(spark, stopword_ratio(F.col("text")), "the cat") == 0.5
     assert _one(spark, stopword_ratio(F.col("text")), "cat dog") == 0.0
-
-
-def test_quality_score_bounds(spark):
-    for text in ["the the the the the the the the the the",
-                 "diverse words make this document quite unique overall today friend"]:
-        v = _one(spark, quality_score(F.col("text")), text)
-        assert 0.0 <= v <= 1.0
 
 
 def test_langid(spark):

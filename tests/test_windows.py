@@ -1,7 +1,7 @@
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.windows import (dedupe_keep_latest,
-                                                      lag_features, ranked,
+                                                      ranked,
                                                       top_n_global,
                                                       top_n_per_key)
 
@@ -49,13 +49,6 @@ def test_ranked(spark):
     df = _events(spark)
     out = ranked(df, [F.col("v").desc()]).collect()
     assert [r.v for r in sorted(out, key=lambda r: r["rank"])] == [50.0, 30.0, 20.0, 10.0]
-
-
-def test_lag_features(spark):
-    df = _events(spark).filter(F.col("user") == "u1")
-    out = lag_features(df, ["user"], "ts", {"prev_v": "v"})
-    rows = {r.ts: r.prev_v for r in out.collect()}
-    assert rows == {1: None, 2: 10.0, 3: 20.0}
 
 
 def test_scd2_history_collapse_and_bounds(spark):

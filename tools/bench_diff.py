@@ -5,11 +5,11 @@ Usage:
 
 Each file is a bench.py JSON line ({"value": total, "queries": {...}}).
 Prints queries whose |delta| >= min_delta_sec (default 0.25), newly
-added/removed queries, and the total delta — the quick "did this round
-regress anything" check against the previous BENCH_r{N}.json.
+added/removed queries, and the total delta — the quick "did this change
+regress anything" check against a previous bench output.
 
 When BOTH artifacts carry the fixed-work host probe
-(``calibration_sec``, bench.py round 9+), per-query deltas and the
+(``calibration_sec``), per-query deltas and the
 total are ALSO reported host-normalized: NEW times are multiplied by
 old_cal/new_cal (mean of the start/end probes), so a uniform slowdown
 from machine state cancels out and only plan drift remains. This VM

@@ -99,7 +99,7 @@ def main() -> int:
             # that fires after the query effectively finished (during
             # .df() materialization / just before cancel) can then only
             # interrupt this cursor, never poison the next query's
-            # connection state (ADVICE r7). One retry when the
+            # connection state. One retry when the
             # interrupt lands with budget to spare — that's the
             # late-fire race, not a real timeout.
             import threading
@@ -122,9 +122,9 @@ def main() -> int:
                     cur.close()
             if timed_out:
                 # The shared long-lived connection accumulates buffer
-                # pressure over a ~200-query run (GATE_SF1 r8: q171's
-                # oracle ran in 61 s standalone but missed the budget
-                # at position ~110). Replay ONCE on a fresh connection
+                # pressure over a ~200-query run (at sf1, q171's oracle
+                # ran in 61 s standalone but missed the budget at
+                # position ~110). Replay ONCE on a fresh connection
                 # with its own buffer pool before declaring a timeout.
                 fcon = _connect(sf_dir)
                 cur = fcon.cursor()

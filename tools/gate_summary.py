@@ -6,10 +6,10 @@ Usage: python tools/gate_summary.py GATE.log
 Prints one JSON object (indent=1) to stdout — paste/merge into
 GATE_SF1.json with the dataset/protocol notes.
 
-The summarizer ASSERTS its totals against the live registry (VERDICT
-r9 "what's wrong" #1: a hand-written 206 disagreed with the 205-entry
-registry): a per-query gate artifact must account for every registered
-query exactly once, so a mismatch raises instead of printing.
+The summarizer ASSERTS its totals against the live registry (a
+hand-written total can disagree with the registry): a per-query gate
+artifact must account for every registered query exactly once, so a
+mismatch raises instead of printing.
 """
 
 from __future__ import annotations

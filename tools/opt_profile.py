@@ -1,4 +1,4 @@
-"""Round-11 optimization profiler: time named queries (noop sink,
+"""Optimization profiler: time named queries (noop sink,
 best-of-N) and dump their .explain("formatted") output.
 
 Usage:
@@ -8,7 +8,7 @@ Usage:
 With no query names, profiles every registry query (timing only).
 Prints one JSON line per query: {"query": name, "sec": best, "runs": N}.
 When --plans-dir is given, writes DIR/<query>_<suffix>.txt with the
-formatted physical plan (the judge-facing before/after artifact).
+formatted physical plan (the before/after artifact of a plan change).
 """
 
 from __future__ import annotations

@@ -46,7 +46,7 @@ DEFAULT_QUERIES = [
 ]
 
 
-# ---- hot-key skew injection (judge r6 item #4) ---------------------------
+# ---- hot-key skew injection ----------------------------------------------
 # Real corpora are not uniform: one domain / user / join key routinely
 # holds 1-10% of rows. --skew rewrites ~5% of each fact table's rows
 # (id % 20 == 0, applied per replica AFTER key shifting so the hot set
@@ -98,7 +98,7 @@ def build_scaled(spark, src: str, out: str, factor: int,
     copied through (same engine-readable layout either way).
 
     ``const_dup=True`` keeps the corpus DUPLICATION RATE constant as
-    it grows (judge r5 item #3): each documents replica interleaves a
+    it grows: each documents replica interleaves a
     replica-unique token between every word (so no word k-shingle
     survives across replicas — replicas share ZERO near-dup pairs),
     and each embeddings replica is a cyclic rotation of the vector
@@ -207,8 +207,8 @@ def main() -> None:
     skew = "--skew" in sys.argv[1:]
     # --reuse: measure against an ALREADY-BUILT spark-warehouse/<tag>
     # dataset instead of rebuilding. Scale points must be taken in a
-    # fresh warm session, never right after an in-JVM build (the r7
-    # q162 37.9x reading was post-build JVM noise) — build once, then
+    # fresh warm session, never right after an in-JVM build (a q162
+    # 37.9x reading was post-build JVM noise) — build once, then
     # re-run with --reuse for the timed pass.
     reuse = "--reuse" in sys.argv[1:]
     factor = int(args[0]) if args else 10
@@ -236,7 +236,7 @@ def main() -> None:
     results = {}
     # best-of-N timing (SPARK_GRAFT_SCALE_RUNS, default 1): this box
     # shows host-level CPU contention that swings a single wall-clock
-    # reading several-fold between sessions (r8: the same q41 1x pass
+    # reading several-fold between sessions (the same q41 1x pass
     # measured 4.9s and 40.1s in back-to-back sessions) — the MINIMUM
     # over N passes is the standard way to read plan cost through
     # that noise
@@ -255,7 +255,7 @@ def main() -> None:
             # without this every build re-persists its intermediates
             # (prefix-join shingle base etc.) and never frees them —
             # storage memory fills after a few heavy queries and
-            # every later pass thrashes eviction/disk (r8: q170's 20x
+            # every later pass thrashes eviction/disk (q170's 20x
             # reading grew 306s -> 427s across sessions from exactly
             # this; bench/check_correctness already release per query)
             t = float("inf")

@@ -10,15 +10,15 @@ representative slice of the engine's operator families:
   keep1    W1  dedupe-keep-latest per key
   sdist    A6  salted exact distinct (skew kit)
   sessions     gap-based sessionization count
-  pack         sequence packing (r5): hash-shard + per-shard
+  pack         sequence packing: hash-shard + per-shard
                prefix-sum window over synthesized token counts
-  chain    T5  the q190 continuous-ELT shape at scale (r8): multi-
+  chain    T5  the q190 continuous-ELT shape at scale: multi-
                micro-batch foreachBatch drain through
                run_stream_chain — normalize → rule split → real
                final/ + quarantine/ parquet files committed with the
                batch id — under the RocksDB provider; reports
                rows/s, routed row counts, checkpoint bytes.
-  stream   T5  STATEFUL STREAMING drain (r4 judge item #6): the
+  stream   T5  STATEFUL STREAMING drain: the
                production state shape — RocksDB state-store provider
                AND append-mode watermark eviction together — over a
                seedgen-sized input (default 10M rows, ~rows-sized
@@ -101,7 +101,7 @@ def main() -> int:
         return flagged.groupBy().agg(F.sum("_new"))
 
     def pack():
-        # r5: sequence packing at generated scale — hash-shard +
+        # sequence packing at generated scale — hash-shard +
         # per-shard prefix-sum window; token counts synthesized from
         # the value column (1..200), shard count sized so a shard is
         # a writer's working set (~rows/shards docs each)
@@ -120,8 +120,8 @@ def main() -> int:
     from elt_gluepipeline_spark.operators._cache import (
         release_operator_caches)
 
-    # host-state probe + best-of-N: STRESS_r08's batch families swung
-    # 2-15x between identical runs (rollup 14.9/131.4/23.2 s) — the
+    # host-state probe + best-of-N: the batch families swung 2-15x
+    # between identical runs (rollup 14.9/131.4/23.2 s) — the
     # same host noise the bench protocol handles with best-of-N and a
     # fixed-work calibration. SPARK_GRAFT_STRESS_RUNS (default 3)
     # applies to the batch families only; the stream/chain drains are
@@ -225,7 +225,7 @@ def main() -> int:
             q.awaitTermination()
             timings["stream"] = round(time.time() - t0, 2)
 
-            # ---- chain family (r8): the q190 production shape at
+            # ---- chain family: the q190 production shape at
             # generated scale — multi-micro-batch foreachBatch drain
             # through run_stream_chain (normalize → rule split →
             # final/ + quarantine/ rows committed with the batch id),
