@@ -4563,14 +4563,17 @@ _SEMDEDUP_CELL = 2048    # target pre-split corpus per km-cell octant
 
 def _semdedup_artifact(spark: SparkSession, sf_dir: str):
     """Fixed-k coarse cells for q153: the same k=8, seed-7 k-means as
-    q67's ``km`` artifact, so the fit resolves that artifact instead of
-    training a second identical model. The corpus-scaled piece of the
-    cell id (the LSH mask) is derived IN-PLAN from a count aggregate,
-    so it needs no artifact and no refit policy; the k-means artifact
-    still refits whenever the dataset changes (mtime/child-count
-    keying, pinned by test_artifact_refit)."""
-    return _fitted_artifact(spark, sf_dir, "semk8",
-                            lambda: _km_artifact(spark, sf_dir))
+    q67's ``km`` artifact, served as an alias of it: one fit, one saved
+    copy, one memo entry. A ``("semk8", how)`` event still records how
+    the family resolved (``km``'s own resolution is the event before
+    it). The corpus-scaled piece of the cell id (the LSH mask) is
+    derived IN-PLAN from a count aggregate, so it needs no artifact and
+    no refit policy; the k-means artifact still refits whenever the
+    dataset changes (mtime/child-count keying, pinned by
+    test_artifact_refit)."""
+    art = _km_artifact(spark, sf_dir)
+    ARTIFACT_EVENTS.append(("semk8", ARTIFACT_EVENTS[-1][1]))
+    return art
 
 
 _SEM_PLANES = _hyperplanes(EMB_DIM, _SEMDEDUP_PLANES_N, 7)

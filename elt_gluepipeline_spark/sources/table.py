@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..functions.observe import observed
 from .writers import bucket_of, write_atomic
 
 MANIFEST = "_manifest.json"
@@ -101,23 +102,34 @@ class Table:
 
         With a ``layout``, rows are Hive-partitioned by ``col`` =
         ``bucket_of(keys, n_buckets)`` and every bucket goes to ONE
-        task, so a write leaves one file per bucket. ``n_written`` (the
+        task, so a write leaves one file per bucket; ``n_written`` (the
         number of buckets this write fills, default all) sets the task
-        count, capped at 8 x ``spark.sql.shuffle.partitions`` so a huge
-        bucket count does not serialize the write."""
+        count, ``layout_tasks``. A frame that already carries ``col``
+        keeps it: a caller that partitioned by it upstream, into the
+        same task count, saves this write its shuffle. The write then
+        checks the column in the same job: a row whose ``col`` is not
+        ``bucket_of(keys, n_buckets)`` raises before the entry is
+        returned, its files stay uncommitted and the next write deletes
+        them. A caller that changes the layout drops the column first."""
         if not self._exists:
             self._create()
         elif not self._swept:
             self._sweep()
         partition_by: tuple[str, ...] = ()
+        obs = None
         if layout is not None:
             col = layout["col"]
-            n_tasks = min(int(n_written or layout["n_buckets"]),
-                          int(self.spark.conf.get(
-                              "spark.sql.shuffle.partitions", "32")) * 8)
-            df = (df.withColumn(col, bucket_of(layout["keys"],
-                                               layout["n_buckets"]))
-                    .repartition(n_tasks, F.col(col)))
+            expect = bucket_of(layout["keys"], layout["n_buckets"])
+            given = col in df.columns
+            if not given:
+                df = df.withColumn(col, expect)
+            df = df.repartition(layout_tasks(self.spark, layout, n_written),
+                                F.col(col))
+            if given:
+                # above the exchange: AQE replaces an exchange that
+                # comes out empty, and metrics below it with it
+                df, obs = observed(df, f"layout_{sub}", n_off=F.count(
+                    F.when(~F.col(col).eqNullSafe(expect), 1)))
             partition_by = (col,)
         d = os.path.join(self.root, sub)
         before = set(_data_files(d))
@@ -126,6 +138,12 @@ class Table:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(d)
+        if obs is not None and obs.get["n_off"]:
+            self._swept = False
+            raise ValueError(
+                f"{obs.get['n_off']} rows of {self.root}/{sub} have a "
+                f"{layout['col']} that is not bucket_of({layout['keys']}, "
+                f"{layout['n_buckets']}); the write is not committed.")
         # a read puts partition columns last
         fields = ([f for f in df.schema.fields if f.name not in partition_by]
                   + [df.schema[c] for c in partition_by])
@@ -181,6 +199,16 @@ class Table:
             if d != self.root and not os.listdir(d):
                 os.rmdir(d)
         self._swept = True
+
+
+def layout_tasks(spark: SparkSession, layout: dict,
+                 n_written: int | None = None) -> int:
+    """The task count of a write under ``layout`` that fills
+    ``n_written`` buckets (default all): one task per bucket, capped at
+    8 x ``spark.sql.shuffle.partitions`` so a huge bucket count does
+    not serialize the write."""
+    return min(int(n_written or layout["n_buckets"]),
+               int(spark.conf.get("spark.sql.shuffle.partitions", "32")) * 8)
 
 
 def _data_files(d: str) -> list[str]:

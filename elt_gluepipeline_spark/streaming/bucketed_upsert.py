@@ -10,15 +10,20 @@ records the primary keys and B as the sub-table's layout. Every merge
 reads them from there, so the table keeps one hash layout until
 ``rebucket`` migrates it. A merge then:
 
-1. computes the batch's touched bucket set (bounded by B — a ≤B-row
-   collect, never data-sized);
-2. reads ONLY those partitions back (an ``isin`` filter on the
+1. runs one aggregate over the batch grouped by bucket: the touched
+   bucket set and the batch's delete rows per bucket (≤B rows back,
+   never data-sized);
+2. reads ONLY the touched partitions back (an ``isin`` filter on the
    partition column — Catalyst turns it into PartitionFilters, so
    untouched buckets are never opened, pinned by
    tests/test_bucketed_upsert.py);
-3. unions prev ∪ batch and keeps the newest row per key
-   (operators.windows.dedupe_keep_latest — one shuffle, by key,
-   of O(batch + touched·snapshot/B) rows);
+3. shuffles prev ∪ batch ONCE, by bucket, into the task count of the
+   bucket write (``sources.table.layout_tasks``), and keeps the newest
+   row per (bucket, key) (operators.windows.dedupe_keep_latest). The
+   bucket is a function of the key, so the winners are keep-latest's
+   per key, and the write's own repartition by bucket meets a child
+   already partitioned that way, which Spark drops: one exchange of
+   O(batch + touched·snapshot/B) rows;
 4. writes the merged buckets as new files, one per touched bucket, and
    commits them in place of the touched buckets' old files. Untouched
    buckets are not rewritten and not read.
@@ -45,18 +50,23 @@ version), so a late-arriving OLDER update can never resurrect a
 deleted key — ``read_bucketed_snapshot`` filters them out (null-safe:
 rows with a NULL op are ordinary upserts, never dropped). Expiring
 tombstones past a replay horizon is a compaction-time policy
-(``expire_tombstones``), not a merge-time one; passing
-``op_col``/``delete_op`` to the merge keeps exact per-bucket tombstone
-counts in the manifest, so that compaction reads only
-tombstone-bearing buckets instead of scanning the table.
+(``expire_tombstones``), not a merge-time one. Passing
+``op_col``/``delete_op`` to the merge keeps per-bucket tombstone counts
+in the manifest, so that compaction reads only tombstone-bearing
+buckets instead of scanning the table. A count is an UPPER BOUND: a
+merge adds the batch's delete rows to it without reading back what it
+wrote (a batch tombstone that loses keep-latest, or replaces an older
+one, is still counted), and ``expire_tombstones`` and ``rebucket`` make
+it exact for every bucket they scan. The invariant pruning rests on: a
+bucket that holds a tombstone never has count 0.
 
 Idempotence: keep-latest is a join-semilattice fold (max by
 (order_by, tiebreak) per key), so re-merging an already-applied batch
 reproduces the same winners — a replayed micro-batch after a crash
 rewrites the same bucket contents. This REQUIRES a deterministic
 total order: pass unique tiebreakers when the ordering columns can
-collide. The merge consumes the batch twice (touched-bucket collect,
-bucket write), so it localCheckpoints the batch first: the plan is
+collide. The merge consumes the batch twice (the per-bucket aggregate,
+the bucket write), so it localCheckpoints the batch first: the plan is
 EVALUATED ONCE, an expensive upstream plan is not recomputed, and a
 nondeterministic batch (limit without order, rand()) merges exactly
 the rows it materialized.
@@ -71,7 +81,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windows import dedupe_keep_latest
-from ..sources.table import Table
+from ..sources.table import Table, layout_tasks
 from ..sources.writers import bucket_of
 from .stream import drain_foreach_batch
 
@@ -133,8 +143,10 @@ def _resolve_op_col(table: Table, op_col: str | None, delete_op: str,
 
 def _tombstone_state(op_col: str, delete_op: str,
                      counts: dict[int, int]) -> dict:
-    """Manifest state for exact per-bucket tombstone counts (zero
-    counts omitted)."""
+    """Manifest state for per-bucket tombstone counts (zero counts
+    omitted): each an upper bound on the bucket's tombstones, exact
+    for the buckets the last expiry or rebucket scanned (module
+    docstring)."""
     return {"op_col": op_col, "delete_op": delete_op,
             "tombstones": {str(k): v for k, v in sorted(counts.items())
                            if v > 0}}
@@ -197,34 +209,42 @@ def bucketed_merge(
     to keep the tombstone counts that let ``expire_tombstones`` prune
     its scan; once the snapshot keeps them, later merges maintain them
     automatically (the op column is recorded in the manifest) and a
-    conflicting ``op_col`` raises.
+    conflicting ``op_col`` raises. Counts start with the first merge
+    into a new snapshot; on one merged without them, the first
+    ``expire_tombstones`` starts them.
 
     The batch is localCheckpointed so it is EVALUATED ONCE: the merge
-    consumes it twice (touched-bucket collect + bucket write), which
+    consumes it twice (the per-bucket aggregate that finds the touched
+    buckets and counts their delete rows, and the bucket write), which
     for an expensive upstream plan would double real work and for a
     nondeterministic one (rand(), bare limit) would change rows between
     the two passes. Both consumers read the same materialized rows (a
     lost block fails the job rather than silently recomputing)."""
-    table = Table(batch.sparkSession, snapshot_dir)
+    spark = batch.sparkSession
+    table = Table(spark, snapshot_dir)
     n_buckets = _merge_n_buckets(table, primary_keys, n_buckets)
     op_col, delete_op = _resolve_op_col(table, op_col, delete_op)
+    layout = {"col": BUCKET_COL, "keys": list(primary_keys),
+              "n_buckets": n_buckets}
 
     b = (batch.withColumn(BUCKET_COL, bucket_of(primary_keys, n_buckets))
               .localCheckpoint(eager=True))
-    touched = sorted(
-        r[0] for r in b.select(BUCKET_COL).distinct().collect())
+    is_del = (F.col(op_col).eqNullSafe(delete_op)
+              if op_col in b.columns else F.lit(False))
+    per_bucket = {r[0]: r[1] for r in b.groupBy(BUCKET_COL).agg(
+        F.count(F.when(is_del, 1))).collect()}
+    touched = sorted(per_bucket)
     if not touched:
         return []
 
     prev = table.read(_DATA)
     merged = b if prev is None else b.unionByName(
         prev.filter(F.col(BUCKET_COL).isin(touched)))
-    merged = dedupe_keep_latest(merged, list(primary_keys),
+    merged = merged.repartition(layout_tasks(spark, layout, len(touched)),
+                                F.col(BUCKET_COL))
+    merged = dedupe_keep_latest(merged, [BUCKET_COL, *primary_keys],
                                 list(order_by), list(tiebreak))
-    entry = table.write(
-        _DATA, merged, n_written=len(touched),
-        layout={"col": BUCKET_COL, "keys": list(primary_keys),
-                "n_buckets": n_buckets})
+    entry = table.write(_DATA, merged, n_written=len(touched), layout=layout)
 
     # Invariant: every written bucket is in the touched set, or its
     # prev rows were never read into the merge and the commit would
@@ -238,11 +258,14 @@ def bucketed_merge(
             f"set {touched} — their prev rows were never merged.")
 
     state = {}
-    if op_col is not None:
-        counts = _tombstones(table) or {}
-        exact = _count_tombstones(table.read(_DATA, entry), op_col,
-                                  delete_op)
-        counts.update({k: exact.get(k, 0) for k in touched})
+    counts = _tombstones(table)
+    # counts start on a new table; on one merged without them, the
+    # buckets this merge does not touch are unknown, so the first
+    # expiry's full scan starts them instead
+    if op_col is not None and (counts is not None or prev is None):
+        counts = counts or {}
+        for k in touched:
+            counts[k] = counts.get(k, 0) + per_bucket[k]
         state = _tombstone_state(op_col, delete_op, counts)
     table.commit({_DATA: _replace_buckets(table, entry, touched)}, **state)
     return touched
@@ -290,42 +313,49 @@ def expire_tombstones(
     (``bucketed_merge(op_col=...)``), only buckets with a positive
     count are READ — a PartitionFilters-pruned scan, same shape as the
     merge's (pinned by pytest). Without counts the first run scans the
-    whole table once and bootstraps exact counts for every bucket, so
-    the NEXT expiry prunes. Null-op rows are upserts: they are never
-    expirable and never dropped by the rewrite (null-safe predicates
-    throughout)."""
+    whole table once and starts them, so the NEXT expiry prunes.
+
+    One aggregate over the scanned buckets, grouped by bucket, gives
+    both the buckets to rewrite (those holding an expirable tombstone)
+    and the number of tombstones each scanned bucket keeps. The rewrite
+    commits with those counts, which are exact, and reads nothing back
+    (``expire_if`` must be deterministic: the rewrite evaluates it
+    again). An expiry that rewrites nothing commits only when the
+    counts changed.
+    Null-op rows are upserts: they are never expirable and never
+    dropped by the rewrite (null-safe predicates throughout)."""
     table = Table(spark, snapshot_dir)
     cur = table.read(_DATA)
     if cur is None:
         return []
     op_col, delete_op = _resolve_op_col(table, op_col, delete_op)
     counts = _tombstones(table)
-    bootstrap = counts is None
-    if bootstrap:
-        # full scan (documented fallback); piggyback exact per-bucket
-        # tombstone counts so this is the LAST unpruned expiry
-        counts = _count_tombstones(cur, op_col, delete_op)
-    else:
+    if counts is not None:
         candidates = sorted(k for k, v in counts.items() if v > 0)
         if not candidates:
             return []
         cur = cur.filter(F.col(BUCKET_COL).isin(candidates))
-    expirable = F.col(op_col).eqNullSafe(delete_op) & \
-        F.coalesce(expire_if, F.lit(False))
-    touched = sorted(r[0] for r in cur.filter(expirable)
-                     .select(BUCKET_COL).distinct().collect())
+    is_del = F.col(op_col).eqNullSafe(delete_op)
+    expirable = is_del & F.coalesce(expire_if, F.lit(False))
+    exact, touched = {}, []
+    for bucket, n_expire, n_keep in cur.groupBy(BUCKET_COL).agg(
+            F.count(F.when(expirable, 1)),
+            F.count(F.when(is_del & ~expirable, 1))).collect():
+        exact[bucket] = n_keep
+        if n_expire:
+            touched.append(bucket)
+    # a bucket the scan skipped has count 0 and so holds no tombstone:
+    # these are the exact counts of every bucket
+    state = _tombstone_state(op_col, delete_op, exact)
     if not touched:
-        if bootstrap:
-            table.commit({}, **_tombstone_state(op_col, delete_op, counts))
+        if any(table.state.get(k) != v for k, v in state.items()):
+            table.commit({}, **state)
         return []
-    kept = (cur.filter(F.col(BUCKET_COL).isin(touched))
-               .filter(~F.coalesce(expirable, F.lit(False))))
+    touched.sort()
+    kept = cur.filter(F.col(BUCKET_COL).isin(touched)).filter(~expirable)
     entry = table.write(_DATA, kept, layout=_layout(table),
                         n_written=len(touched))
-    exact = _count_tombstones(table.read(_DATA, entry), op_col, delete_op)
-    counts.update({k: exact.get(k, 0) for k in touched})
-    table.commit({_DATA: _replace_buckets(table, entry, touched)},
-                 **_tombstone_state(op_col, delete_op, counts))
+    table.commit({_DATA: _replace_buckets(table, entry, touched)}, **state)
     return touched
 
 

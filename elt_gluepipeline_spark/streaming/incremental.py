@@ -62,19 +62,14 @@ def incremental_ingest(
     last = None if load_mode == "full" else bookmarks.get(table)
     df = read_since(last)
 
-    # empty-increment early exit (cheap head(1), not count())
-    if not df.head(1):
-        if manifest:
-            manifest.log("ingest", table, "skipped_empty", bookmark=str(last))
-        return IncrementalResult(table, 0, last, skipped=True)
-
     deduped = dedupe_keep_latest(
         df, list(primary_keys),
         [F.col(watermark_col).desc_nulls_last()],
     )
     # row count and new bookmark (max watermark of THIS batch) ride the
     # write: one pass over the increment, and a mid-write crash never
-    # advances the bookmark
+    # advances the bookmark. An empty increment writes no file, and its
+    # observed count of 0 is the skip: no separate emptiness probe.
     prepared, obs = observed(add_audit_columns(deduped, table),
                              f"ingest_{table}", n=F.count(F.lit(1)),
                              bookmark=F.max(watermark_col))
@@ -82,6 +77,10 @@ def incremental_ingest(
                   partition_by=("ingest_date", "source_table"),
                   max_files=max_files)
     rows, new_bm = obs.get["n"], obs.get["bookmark"]
+    if not rows:
+        if manifest:
+            manifest.log("ingest", table, "skipped_empty", bookmark=str(last))
+        return IncrementalResult(table, 0, last, skipped=True)
 
     # commit AFTER successful write (T2)
     if new_bm is not None:

@@ -122,3 +122,21 @@ def test_artifact_root_is_bounded_lru(spark, tmp_path, monkeypatch):
     # budget of 1 byte: the older artifact was evicted, the one just
     # saved survives (keep= guard)
     assert len(left) == 1 and left != first
+
+
+def test_semk8_serves_the_km_artifact(spark, tmp_path, monkeypatch):
+    """q153's semk8 family is an alias of q67's km artifact: warming
+    every family from an empty root saves one k-means copy, not two,
+    and still reports how semk8 resolved."""
+    from elt_gluepipeline_spark.plans import training
+
+    root = str(tmp_path / "art")
+    monkeypatch.setattr(training, "_ARTIFACT_ROOT", root)
+    monkeypatch.setattr(training, "_ARTIFACT_MEMO", {})
+    sf_dir = str(tmp_path / "ds")
+    os.makedirs(sf_dir)
+    _write_embeddings(spark, sf_dir, 2500)
+    warmed = training.warm_artifacts(spark, sf_dir)
+    assert set(warmed) == {"pq", "km", "ivfc", "semk8"}
+    assert sorted(d.split("_")[0] for d in os.listdir(root)) == \
+        ["ivfc", "km", "pq"]

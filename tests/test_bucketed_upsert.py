@@ -43,6 +43,18 @@ def _bucket_files(snap):
     return out
 
 
+def _on_disk_tombstones(spark, snap):
+    """{bucket: tombstone rows the manifest's files hold}."""
+    rows = (Table(spark, snap).read("data").filter(F.col("op") == "D")
+            .groupBy(BUCKET_COL).count().collect())
+    return {r[0]: r[1] for r in rows}
+
+
+def _counts(spark, snap):
+    raw = Table(spark, snap).state["tombstones"]
+    return {int(k): v for k, v in raw.items()}
+
+
 def test_merge_matches_single_pass_and_handles_deletes(spark, tmp_path):
     snap = str(tmp_path / "snap")
     rows = [(1, 1, "a", "U"), (2, 2, "b", "U"), (3, 3, "c", "U"),
@@ -423,6 +435,29 @@ def test_sidecar_maintained_without_op_col_after_adoption(spark, tmp_path):
                        op_col="v")
 
 
+def test_counts_start_on_a_new_table_only(spark, tmp_path):
+    # Tombstones merged before the snapshot kept counts can sit in
+    # buckets a later op_col merge does not touch. Counting only the
+    # touched buckets would leave theirs at 0, and every pruned expiry
+    # would skip them, so such a merge starts no counts: the next
+    # expiry's full scan starts them, and expires those tombstones.
+    from elt_gluepipeline_spark.streaming.bucketed_upsert import (
+        expire_tombstones)
+
+    snap = str(tmp_path / "snap")
+    kw = dict(snapshot_dir=snap, primary_keys=["k"],
+              order_by=[F.col("seq").desc()], n_buckets=8)
+    bucketed_merge(spark.createDataFrame(
+        [(k, 1, None, "D") for k in range(16)], SCHEMA), **kw)
+    bucketed_merge(spark.createDataFrame([(100, 2, "x", "U")], SCHEMA),
+                   op_col="op", **kw)          # touches one bucket
+    assert "tombstones" not in Table(spark, snap).state
+    expire_tombstones(spark, snap, op_col="op",
+                      expire_if=F.col("seq") < 2)
+    assert _on_disk_tombstones(spark, snap) == {}
+    assert _counts(spark, snap) == {}
+
+
 def test_one_data_file_per_bucket_per_write(spark, tmp_path):
     # every file is one more path the manifest names and every later
     # read opens, so file count per bucket is a per-merge cost every
@@ -442,3 +477,130 @@ def test_one_data_file_per_bucket_per_write(spark, tmp_path):
             files = [f for f in os.listdir(os.path.join(live, d))
                      if f.endswith(".parquet")]
             assert len(files) == 1, (d, files)
+
+
+def test_tombstone_counts_bound_on_random_feed(spark, tmp_path):
+    # A merge adds its batch's deletes to the per-bucket counts without
+    # reading back what it wrote, so a count is an upper bound (never 0
+    # for a bucket that holds a tombstone, or pruning would skip it);
+    # an expiry recounts the buckets it scans, which makes every count
+    # exact. Feed: upserts, deletes, re-inserts after a delete, and
+    # replayed batches, in seeded random order.
+    import random
+
+    from elt_gluepipeline_spark.streaming.bucketed_upsert import (
+        expire_tombstones)
+
+    rng = random.Random(13)
+    snap = str(tmp_path / "snap")
+    kw = dict(snapshot_dir=snap, primary_keys=["k"],
+              order_by=[F.col("seq").desc()], n_buckets=8, op_col="op")
+    seq, batches, deleted = 0, [], set()
+    reinserts = loose = 0
+    for step in range(8):
+        if step in (3, 6):
+            expire_tombstones(spark, snap, op_col="op",
+                              expire_if=F.col("seq") < seq - 20)
+            assert _counts(spark, snap) == _on_disk_tombstones(spark, snap)
+            continue
+        if step == 5:
+            rows = batches[1]                    # a replayed batch
+        else:
+            rows = []
+            for k in rng.sample(range(40), 16):
+                seq += 1
+                op = "U" if k in deleted else rng.choice("UUD")
+                reinserts += k in deleted
+                (deleted.add if op == "D" else deleted.discard)(k)
+                rows.append((k, seq, f"v{seq}", op))
+            batches.append(rows)
+        bucketed_merge(spark.createDataFrame(rows, SCHEMA), **kw)
+        counts, disk = _counts(spark, snap), _on_disk_tombstones(spark, snap)
+        for bucket, n in disk.items():
+            assert counts.get(bucket, 0) >= n, (step, bucket)
+        loose += counts != disk
+    assert reinserts and loose        # the feed exercised both cases
+
+
+def test_write_rejects_a_wrong_layout_column(spark, tmp_path):
+    # A frame that carries the layout column keeps it, and the write
+    # checks it: rows hashed into the wrong bucket would give their key
+    # a second live row. The failed write commits nothing and the next
+    # write deletes its files.
+    snap = str(tmp_path / "snap")
+    kw = dict(snapshot_dir=snap, primary_keys=["k"],
+              order_by=[F.col("seq").desc()], n_buckets=8)
+    bucketed_merge(spark.createDataFrame(
+        [(k, 1, f"v{k}", "U") for k in range(16)], SCHEMA), **kw)
+    table = Table(spark, snap)
+    manifest = (table.tables, table.state)
+    rows = sorted(tuple(r) for r in table.read("data").collect())
+    listed = set(table.tables["data"]["files"])
+
+    off = spark.createDataFrame([(k, 2, "w", "U") for k in range(4)],
+                                SCHEMA).withColumn(
+        BUCKET_COL, ((bucket_of(["k"], 8) + 1) % 8).cast("int"))
+    with pytest.raises(ValueError, match="is not bucket_of"):
+        table.write("data", off, layout=table.layout("data"))
+    after = Table(spark, snap)
+    assert (after.tables, after.state) == manifest
+    assert sorted(tuple(r) for r in after.read("data").collect()) == rows
+
+    def on_disk():
+        live = os.path.join(snap, "data")
+        return {os.path.relpath(os.path.join(r, n), live)
+                for r, _, names in os.walk(live) for n in names
+                if n.endswith(".parquet")}
+
+    assert on_disk() - listed                    # uncommitted orphans
+    bucketed_merge(spark.createDataFrame([(1, 3, "x", "U")], SCHEMA), **kw)
+    assert on_disk() == set(Table(spark, snap).tables["data"]["files"])
+    assert _state(spark, snap)[1] == (3, "x")
+
+
+def test_merge_and_expire_job_budget(spark, tmp_path):
+    # Every Spark job is a fixed driver cost. A merge runs 5: the batch
+    # checkpoint, the per-bucket aggregate (2 under AQE) and the write,
+    # whose one exchange serves both keep-latest and the bucket layout
+    # (2); no read-back. An expiry runs 4: the aggregate over the
+    # candidate buckets (2) and the write (2). An ingest runs 3: the
+    # source read's schema job, then the write's keep-latest exchange
+    # and the write; the write's observed row count is the emptiness
+    # check.
+    from elt_gluepipeline_spark.sources.state import BookmarkStore
+    from elt_gluepipeline_spark.streaming.bucketed_upsert import (
+        expire_tombstones)
+    from elt_gluepipeline_spark.streaming.incremental import (
+        incremental_ingest)
+
+    sched = spark._jsc.sc().dagScheduler()
+
+    def jobs(fn):
+        n0 = sched.numTotalJobs()
+        fn()
+        return sched.numTotalJobs() - n0
+
+    snap = str(tmp_path / "snap")
+    kw = dict(snapshot_dir=snap, primary_keys=["k"],
+              order_by=[F.col("seq").desc()], op_col="op")
+    seed = [(k, 1, f"v{k}", "D" if k % 5 == 0 else "U") for k in range(200)]
+    bucketed_merge(spark.createDataFrame(seed, SCHEMA), n_buckets=8, **kw)
+    batch = spark.createDataFrame(
+        [(k, 2, f"w{k}", "D" if k % 3 == 0 else "U")
+         for k in range(1, 300, 7)], SCHEMA)
+    assert jobs(lambda: bucketed_merge(batch, **kw)) <= 5
+    touched = []
+    assert jobs(lambda: touched.extend(expire_tombstones(
+        spark, snap, op_col="op", expire_if=F.col("seq") < 2))) <= 4
+    assert touched
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(i, i, "x") for i in range(100)],
+                          "pk long, wm long, v string").write.parquet(src)
+    result = []
+    assert jobs(lambda: result.append(incremental_ingest(
+        spark, table="t", read_since=lambda last: spark.read.parquet(src),
+        watermark_col="wm", primary_keys=["pk"],
+        sink_path=str(tmp_path / "sink"),
+        bookmarks=BookmarkStore(str(tmp_path / "bm"))))) <= 3
+    assert result[0].rows_ingested == 100
