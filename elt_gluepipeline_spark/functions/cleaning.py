@@ -9,7 +9,8 @@ to the broadcast compiled-regex loop but JVM-side.
 
 The reference's double-escaped regexes (bug B2: r"http\\\\S+" matches a
 literal backslash, go-transform-elt.py:112,149) are implemented with
-the INTENDED single-escape semantics; compat=True reproduces as-written.
+the INTENDED single-escape semantics; ``clean_label(compat=True)``
+reproduces as-written.
 """
 
 from __future__ import annotations
@@ -47,17 +48,14 @@ def first_match_classify(col: Column, rules: Sequence[tuple[str, str]],
     return expr.otherwise(default) if default is not None else expr
 
 
-def clean_item_name(col: Column, *, brand_words: Sequence[str] = ("the",),
-                    compat: bool = False) -> Column:
+def clean_item_name(col: Column) -> Column:
     """U4: canonicalize an item/part name (go-transform-elt.py:138-157):
-    keep [a-zA-Z0-9|&* ], drop '*', lowercase, remove stop/brand words,
-    collapse whitespace."""
+    keep [a-zA-Z0-9|&* ], drop '*', lowercase, remove the stop word
+    'the', collapse whitespace."""
     c = F.regexp_replace(col, r"[^a-zA-Z0-9|&* ]", " ")
     c = F.regexp_replace(c, r"\*", "")
     c = F.lower(c)
-    for w in brand_words:
-        pattern = rf"\\b{w}\\b" if compat else rf"\b{w}\b"
-        c = F.regexp_replace(c, pattern, " ")
+    c = F.regexp_replace(c, r"\bthe\b", " ")
     c = F.regexp_replace(c, r"\s+", " ")
     return F.trim(c)
 
@@ -91,15 +89,14 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 )
 
 
-def scrub_pii(col: Column, *, patterns: Sequence[tuple[str, str]] = PII_PATTERNS,
-              token_fmt: str = "<{name}>") -> Column:
+def scrub_pii(col: Column) -> Column:
     """Replace every PII match with a typed placeholder token
     (``<email>``, ``<phone>``, ...). Chained regexp_replace — pure
     codegen'd expressions, order follows the pattern list (emails
     before phones so a phone regex never eats an address's digits)."""
     out = col
-    for name, pattern in patterns:
-        out = F.regexp_replace(out, pattern, token_fmt.format(name=name))
+    for name, pattern in PII_PATTERNS:
+        out = F.regexp_replace(out, pattern, f"<{name}>")
     return out
 
 

@@ -32,7 +32,7 @@ def _planned_repartition(df: DataFrame) -> int:
     return best
 
 
-def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
     """Repartition only if the plan has fewer partitions than the
     cluster's default parallelism.
 
@@ -49,7 +49,7 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     job, not a metadata probe.
     """
     sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = sc.defaultParallelism
     if _planned_repartition(df) >= target:
         return df
     if df.rdd.getNumPartitions() < target:

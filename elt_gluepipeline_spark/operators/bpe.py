@@ -10,8 +10,9 @@ vocabulary table. Per iteration:
   1. pair counting — adjacent symbol pairs via zip_with over the
      symbol array and its shift, exploded and weight-summed
      (map-side partial agg; shuffle = distinct pairs, not occurrences);
-  2. argmax — one orderBy(count desc, pair asc).limit(1) driver round
-     (a bounded scalar per iteration, the kmeans-style recipe);
+  2. argmax — orderBy(count desc, pair asc) over the pair counts,
+     one bounded collect per driver round (the kmeans-style recipe);
+     a round may accept several non-interacting merges;
   3. merge application — a single F.aggregate fold per word rewrites
      [.., a, b, ..] → [.., ab, ..] left-to-right non-overlapping,
      entirely JVM-side (no Python in the loop).
@@ -19,7 +20,7 @@ vocabulary table. Per iteration:
 Iterations localCheckpoint so lineage doesn't compound. Everything is
 deterministic: ties break lexicographically on the pair, so the rule
 list is reproducible across partitionings and engines (pytest pins
-equality with a pure-python reference implementation).
+equality with a pure-python sequential reference implementation).
 """
 
 from __future__ import annotations
@@ -56,40 +57,15 @@ def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
               .groupBy("word").agg(F.count(F.lit(1)).alias("n")))
 
 
-def bpe_fit(df: DataFrame, text_col: str, *, n_merges: int = 10,
-            min_pair_count: int = 2) -> list[tuple[str, str]]:
-    """Learn up to ``n_merges`` BPE merge rules over the corpus.
-    Returns the ordered rule list [(a, b), ...]; stops early when no
-    pair reaches ``min_pair_count``."""
-    vocab = (word_frequencies(df, text_col)
-             .select(_symbols(F.col("word")).alias("sym"), "n")
-             .localCheckpoint(eager=False))
-    rules: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs = vocab.select(
-            F.explode(F.zip_with(
-                F.slice("sym", 1, F.greatest(F.size("sym") - 1, F.lit(0))),
-                F.slice("sym", 2, F.greatest(F.size("sym") - 1, F.lit(0))),
-                lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-            )).alias("p"), "n")
-        top = (pairs.groupBy("p").agg(F.sum("n").alias("cnt"))
-                    .orderBy(F.desc("cnt"), F.asc("p.a"), F.asc("p.b"))
-                    .limit(1).collect())
-        if not top or top[0]["cnt"] < min_pair_count:
-            break
-        a, b = top[0]["p"]["a"], top[0]["p"]["b"]
-        rules.append((a, b))
-        vocab = (vocab.select(_merge_fold(F.col("sym"), a, b).alias("sym"),
-                              "n")
-                      .localCheckpoint(eager=False))
-    return rules
-
-
 def bpe_fit_batched(df: DataFrame, text_col: str, *, n_merges: int = 10,
                     min_pair_count: int = 2, batch_size: int = 4,
                     stats: dict | None = None) -> list[tuple[str, str]]:
-    """``bpe_fit`` with BATCHED merge rounds: per driver round, accept
-    up to ``batch_size`` pairs from the round's ranked pair counts,
+    """Learn up to ``n_merges`` BPE merge rules over the corpus, in
+    BATCHED merge rounds. Returns the ordered rule list [(a, b), ...];
+    stops early when no pair reaches ``min_pair_count``.
+
+    Per driver round, accept up to ``batch_size`` pairs from the
+    round's ranked pair counts,
     greedily skipping any pair that shares a symbol with an already-
     accepted pair (or its merged token) — mutually non-interacting
     merges whose counts are invariant under each other, the standard
@@ -97,7 +73,8 @@ def bpe_fit_batched(df: DataFrame, text_col: str, *, n_merges: int = 10,
     so driver rounds (and Spark jobs) drop ~batch_size× for the same
     vocabulary.
 
-    PROVABLY identical to the sequential fit — the batch extends only
+    PROVABLY identical to the sequential fit (one argmax merge per
+    round) — the batch extends only
     while equivalence is certain, using two facts about a merge (a, b):
 
     1. it only changes counts of pairs TOUCHING an a·b occurrence:
@@ -118,8 +95,8 @@ def bpe_fit_batched(df: DataFrame, text_col: str, *, n_merges: int = 10,
 
     Within those stops, accepted pairs' counts are exact and nothing
     can overtake them — the batch is byte-identical to running the
-    sequential argmax repeatedly (pytest pins list equality, and the
-    sequential fit is itself pinned to a pure-python reference).
+    sequential argmax repeatedly (pytest pins list equality with a
+    pure-python sequential fit).
     Worst case every round degenerates to one merge (batch stops
     immediately) and the job count matches sequential +1 for the
     maxima aggregation.

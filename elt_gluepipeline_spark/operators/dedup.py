@@ -75,14 +75,6 @@ def has_min_tokens(text: Column, k: int) -> Column:
     return F.size(F.split(F.trim(text), r"\s+")) >= k
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard over two DISTINCT-element arrays (set semantics);
-    integer set sizes → deterministic double."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
-
-
 def shingle_base(df: DataFrame, id_col: str, text_col: str,
                  block_cols: list[Column], *, k: int = 3) -> DataFrame:
     """The one shingle stage of the near-dup family:
@@ -368,23 +360,17 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
                         k: int = 3, n_hashes: int = 32, bands: int = 8,
                         pair_family: PortableMinhashFamily | None = None,
                         band_hash=None,
-                        with_postings: bool = True,
-                        base: DataFrame | None = None) -> LshDedupIndex:
+                        with_postings: bool = True) -> LshDedupIndex:
     """Build the LSH dedup index tables for ``corpus`` (lazy plans —
     no jobs run until the index is written or probed). Call once over
     the initial corpus, then again over each ADMITTED batch to get the
     delta for ``append_lsh_dedup_index`` (per-doc projections make
     append ≡ rebuild).
 
-    ``base``: optionally a pre-built (doc_id, shingles) frame for this
-    corpus — a caller that manages its own shingle artifact (or that
-    must NOT pin a corpus-wide array persist for a one-shot fit at
-    scale) passes it and controls its materialization; when None the
-    fit builds and registers one :func:`shingle_base_cached` pass,
+    The fit builds and registers one :func:`shingle_base_cached` pass,
     which the signatures, sizes and postings all read."""
     rows_per_band, band_hash = _lsh_params(n_hashes, bands, band_hash)
-    if base is None:
-        base = shingle_base_cached(corpus, id_col, text_col, k=k)
+    base = shingle_base_cached(corpus, id_col, text_col, k=k)
     entries = lsh_band_entries(
         minhash_signatures(base, n_hashes=n_hashes, pair_family=pair_family),
         bands=bands, rows_per_band=rows_per_band, band_hash=band_hash)
@@ -953,6 +939,7 @@ def hamming_banded_pairs(df: DataFrame, id_col: str, hash_col: str, *,
 
 
 SMALL_GRAPH_EDGES = 100_000
+STAR_MAX_ITERS = 30  # star-contraction rounds before it fails loudly
 
 
 def _canonical_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
@@ -971,7 +958,7 @@ def _canonical_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
 
 
 def connected_components(pairs: DataFrame, *, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iters: int = 30,
+                         id_b: str = "id_b",
                          component_col: str = "component") -> DataFrame:
     """Near-dup GROUPS from a pair graph: (id, component) where
     component = the minimum id reachable through the undirected pair
@@ -991,7 +978,7 @@ def connected_components(pairs: DataFrame, *, id_a: str = "id_a",
     """
     edges = _canonical_edges(pairs, id_a, id_b)
     if edges.count() > SMALL_GRAPH_EDGES:
-        return _star_components(edges, max_iters, component_col)
+        return _star_components(edges, STAR_MAX_ITERS, component_col)
 
     parent: dict[int, int] = {}
 
@@ -1108,7 +1095,8 @@ def _edge_digest(e: DataFrame) -> tuple[int, int]:
 
 
 def connected_components_star(pairs: DataFrame, *, id_a: str = "id_a",
-                              id_b: str = "id_b", max_iters: int = 30,
+                              id_b: str = "id_b",
+                              max_iters: int = STAR_MAX_ITERS,
                               component_col: str = "component") -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -1183,10 +1171,10 @@ def _star_components(canon: DataFrame, max_iters: int,
 
 
 def edit_distance_pairs(df: DataFrame, id_col: str, str_col: str, *,
-                        max_dist: int = 2, q: int = 2,
-                        lowercase: bool = True) -> DataFrame:
+                        max_dist: int = 2, q: int = 2) -> DataFrame:
     """Exact edit-distance near-dup pairs: every (id_a < id_b) with
-    levenshtein(s_a, s_b) <= max_dist — the fuzzy string matching the
+    levenshtein(s_a, s_b) <= max_dist over the lowercased, trimmed
+    strings — the fuzzy string matching the
     reference's item-name cleanup implies (clean_item_name fixes typos
     ONE regex at a time, U4; this finds ALL typo-distance neighbors).
 
@@ -1211,8 +1199,7 @@ def edit_distance_pairs(df: DataFrame, id_col: str, str_col: str, *,
     family (blocked_jaccard_pairs / minhash_lsh_pairs).
     """
     d = max_dist
-    s = F.lower(F.trim(F.col(str_col))) if lowercase \
-        else F.trim(F.col(str_col))
+    s = F.lower(F.trim(F.col(str_col)))
     base = df.select(F.col(id_col).alias("_id"), s.alias("_s")) \
              .withColumn("_len", F.length("_s"))
     min_long = q + d * q
@@ -1266,7 +1253,7 @@ def edit_distance_pairs(df: DataFrame, id_col: str, str_col: str, *,
 def incremental_jaccard_dedupe(
     new_docs: DataFrame, corpus_docs: DataFrame, id_col: str,
     text_col: str, block_cols: list[Column], *, k: int = 3,
-    threshold: float = 0.4, keep_cols: list[str] | None = None,
+    threshold: float = 0.4,
     tagged_base: DataFrame | None = None,
 ) -> DataFrame:
     """Survivors of a NEW document batch against an already-deduped
@@ -1294,8 +1281,8 @@ def incremental_jaccard_dedupe(
       - a corpus-free component keeps only its min-id new doc;
       - new docs with no verified match survive untouched.
 
-    Returns the surviving rows of ``new_docs`` (``keep_cols`` or all
-    columns). Ids must be unique across new∪corpus (longs).
+    Returns the surviving rows of ``new_docs``, all columns. Ids must
+    be unique across new∪corpus (longs).
 
     ``tagged_base`` (shared-stage reuse): a precomputed signature
     frame ``(doc_id long, _new boolean, _b0.., shingles)`` — e.g. two
@@ -1340,7 +1327,7 @@ def incremental_jaccard_dedupe(
                            | (F.col("id") != F.col("component")))
                    .select(F.col("id").alias(id_col)))
     out = new_docs.join(losers, id_col, "left_anti")
-    return out.select(*(keep_cols or new_docs.columns))
+    return out.select(*new_docs.columns)
 
 
 def passage_dedupe(df: DataFrame, id_col: str, text_col: str, *,

@@ -26,12 +26,14 @@ from pyspark.sql import functions as F
 
 _GRID = 1_000_000_000_000.0     # 10^12: exactly representable; per-dst
                                 # unit sums stay < 10^12 (total mass 1)
+DAMPING = 0.85
 
 
-def pagerank(edges: DataFrame, *, n_iter: int = 3, damping: float = 0.85,
+def pagerank(edges: DataFrame, *, n_iter: int = 3,
              src: str = "src", dst: str = "dst", weight: str = "w",
              broadcast_ranks: bool = False) -> DataFrame:
-    """Weighted PageRank over an edge list; returns (node, rank).
+    """Weighted PageRank over an edge list, damping ``DAMPING``;
+    returns (node, rank).
 
     Nodes are the union of endpoints; a node's outgoing mass splits
     proportionally to edge weight. Dangling nodes (no out-edges)
@@ -65,8 +67,8 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3, damping: float = 0.85,
     ranks = (nodes.crossJoin(F.broadcast(n_frame))
              .select("node", "_n",
                      (F.lit(1.0) / F.col("_n")).alias("rank")))
-    base = F.lit(1.0 - damping) / F.col("_n")  # python-float repr: the
-    # oracle embeds repr(1 - damping) so both engines use the same bits
+    base = F.lit(1.0 - DAMPING) / F.col("_n")  # python-float repr: the
+    # oracle embeds repr(1 - DAMPING) so both engines use the same bits
     for _ in range(n_iter):
         rvec = ranks.select(F.col("node").alias("_s"), "rank")
         if broadcast_ranks:
@@ -80,7 +82,7 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3, damping: float = 0.85,
         sums = contribs.groupBy("_d").agg(F.sum("_c").alias("_sum"))
         ranks = (ranks.join(sums, ranks["node"] == sums["_d"], "left")
                  .select("node", "_n",
-                         (base + F.lit(damping)
+                         (base + F.lit(DAMPING)
                           * (F.coalesce(F.col("_sum"), F.lit(0))
                              .cast("double") / F.lit(_GRID)))
                          .alias("rank")))
@@ -91,12 +93,12 @@ def pagerank(edges: DataFrame, *, n_iter: int = 3, damping: float = 0.85,
     return ranks.select("node", "rank").localCheckpoint(eager=False)
 
 
-def pagerank_sql(*, n_iter: int = 3, damping: float = 0.85) -> str:
+def pagerank_sql(*, n_iter: int = 3) -> str:
     """DuckDB twin of ``pagerank``: unrolled power-iteration CTEs over
     an ``edges(s, d, w)`` CTE the caller must define earlier in the
     WITH chain. Returns the CTE chain text (continuing that chain)
     ending in a SELECT of (node, rank)."""
-    rest = repr(1.0 - damping)
+    rest = repr(1.0 - DAMPING)
     parts = [f"""
 nodes AS (SELECT DISTINCT node FROM (
   SELECT s AS node FROM edges UNION ALL SELECT d FROM edges)),
@@ -112,7 +114,7 @@ c{k} AS (
   FROM edges e JOIN r{k - 1} r ON e.s = r.node JOIN outw o ON e.s = o.s),
 r{k} AS (
   SELECT n.node,
-         {rest} / cnt.n + {damping!r}
+         {rest} / cnt.n + {DAMPING!r}
            * (CAST(COALESCE(s.sc, 0) AS DOUBLE) / {grid}) AS rank
   FROM nodes n CROSS JOIN cnt
   LEFT JOIN (SELECT d, CAST(SUM(c) AS BIGINT) AS sc FROM c{k} GROUP BY d) s

@@ -57,13 +57,12 @@ FEATURE_SCHEMA = StructType([
 ])
 
 
-def attach_payload(df: DataFrame, id_col: str, text_col: str,
-                   modality: str = "image") -> DataFrame:
-    """Build an asset table from any string column (test harness for the
-    binary plumbing: encode() gives a real BinaryType payload)."""
+def attach_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Build an 'image' asset table from any string column (test harness
+    for the binary plumbing: encode() gives a real BinaryType payload)."""
     return df.select(
         F.col(id_col).cast("long").alias("asset_id"),
-        F.lit(modality).alias("modality"),
+        F.lit("image").alias("modality"),
         F.encode(F.col(text_col), "UTF-8").alias("payload"),
         F.lit("utf8-blob").alias("media_format"),
     )
@@ -82,7 +81,7 @@ def _decode_stub(payload: bytes) -> int:
     return h
 
 
-def extract_features(assets: DataFrame, *, batch_rows_hint: int = 1024) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Map-only feature extraction via mapInPandas (Arrow batches).
 
     No shuffle at scale: each partition's assets are decoded in place

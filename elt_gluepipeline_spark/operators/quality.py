@@ -59,6 +59,20 @@ def split_clean(df_tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, quarantine
 
 
+def route_violations(
+        df: DataFrame,
+        rules: Sequence[tuple[str, Column | str]],
+) -> tuple[DataFrame, DataFrame]:
+    """The quality gate's one route: tag (``extract_violations``), split
+    (``split_clean``), and join each quarantined row's violated rule
+    names with ','. Returns (clean, quarantine). The nightly quality
+    stage and the stream chain both write this pair, so they route
+    every row identically (the invariant q190's oracle gates). Both
+    sides read ``df``: persist it first when it is expensive."""
+    clean, bad = split_clean(extract_violations(df, rules))
+    return clean, bad.withColumn("violated", F.array_join("violated", ","))
+
+
 def severity_from_thresholds(df: DataFrame, thresholds: DataFrame,
                              join_keys: Sequence[str],
                              checks: Sequence[tuple[str, str, str]]) -> DataFrame:

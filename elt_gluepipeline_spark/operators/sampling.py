@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from .dedup import portable_hash60
 
 BUCKETS = 1_000
+TEST_PERMILLE = 100  # assign_split's test share, in buckets of BUCKETS
 
 
 def portable_bucket(key: Column, *, seed: int = 7,
@@ -40,37 +41,30 @@ def portable_bucket(key: Column, *, seed: int = 7,
     return F.pmod(h, F.lit(n_buckets))
 
 
-def assign_split(df: DataFrame, key_col: str, *, test_permille: int = 100,
-                 seed: int = 7, split_col: str = "split") -> DataFrame:
-    """Tag each row 'test' (≈test_permille/1000 of keys) or 'train'.
+def assign_split(df: DataFrame, key_col: str, *,
+                 split_col: str = "split") -> DataFrame:
+    """Tag each row 'test' (≈TEST_PERMILLE/1000 of keys) or 'train'.
 
     Hash-based, so the same key lands in the same split forever —
     growing the corpus, changing partitioning, or re-running never
     moves a document across the boundary (the leak-proofing property
     random sampling lacks).
     """
-    bucket = portable_bucket(F.col(key_col), seed=seed)
+    bucket = portable_bucket(F.col(key_col))
     return df.withColumn(
         split_col,
-        F.when(bucket < test_permille, F.lit("test")).otherwise(F.lit("train")))
-
-
-def deterministic_sample(df: DataFrame, key_col: str, *, permille: int,
-                         seed: int = 7) -> DataFrame:
-    """Keep ≈permille/1000 of keys, deterministically (filter is a
-    pushdown-friendly single predicate; no RNG, no shuffle)."""
-    return df.filter(portable_bucket(F.col(key_col), seed=seed) < permille)
+        F.when(bucket < TEST_PERMILLE, F.lit("test"))
+         .otherwise(F.lit("train")))
 
 
 def stratified_sample(df: DataFrame, key_col: str,
                       strata: Sequence[tuple[Column, int]], *,
-                      default_permille: int = 0,
-                      seed: int = 7) -> DataFrame:
+                      default_permille: int = 0) -> DataFrame:
     """Per-stratum deterministic sampling: ``strata`` is
     [(predicate, permille)], first match wins — e.g. keep 100% of rare
     languages, 5% of english. Same hash discipline as assign_split, so
     per-stratum membership is stable under corpus growth."""
-    bucket = portable_bucket(F.col(key_col), seed=seed)
+    bucket = portable_bucket(F.col(key_col))
     rate: Column | None = None
     for pred, pm in strata:
         rate = F.when(pred, pm) if rate is None else rate.when(pred, pm)

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
+from .textstats import ROUND_TO
 from .windows import top_n_per_key
 
 
@@ -76,49 +77,49 @@ def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str = "_id",
                      _as_double(F.col(vec_col)).alias(vec_as))
 
 
-def _cosine_scored(c: DataFrame, q: DataFrame, on: str | None,
-                   round_to: int) -> DataFrame:
+def _cosine_scored(c: DataFrame, q: DataFrame, on: str | None) -> DataFrame:
     """The cosine scoring stage: candidates (neighbor_id, c_vec) against
     the broadcast queries (query_id, q_vec), joined on column ``on``
     (None: every pair), self-matches dropped. Norms are projected
     before the join, one fold per row instead of one per pair. The
-    cosine is rounded before any ranking so order is reproducible
-    across engines; ``+ 0.0`` canonicalizes IEEE -0.0 (Spark's round
-    drops the sign of tiny negatives, DuckDB's keeps it)."""
+    cosine is rounded to ``ROUND_TO`` decimals before any ranking so
+    order is reproducible across engines; ``+ 0.0`` canonicalizes IEEE
+    -0.0 (Spark's round drops the sign of tiny negatives, DuckDB's
+    keeps it)."""
     c = c.withColumn("_cn", l2_norm(F.col("c_vec")))
     q = q.withColumn("_qn", l2_norm(F.col("q_vec")))
     return (c.join(F.broadcast(q), on)
              .filter(F.col("neighbor_id") != F.col("query_id"))
              .withColumn("cosine",
                          F.round(dot(F.col("q_vec"), F.col("c_vec"))
-                                 / (F.col("_qn") * F.col("_cn")), round_to)
+                                 / (F.col("_qn") * F.col("_cn")), ROUND_TO)
                          + F.lit(0.0)))
 
 
-def _cosine_topk(c: DataFrame, q: DataFrame, on: str | None, k: int,
-                 round_to: int) -> DataFrame:
+def _cosine_topk(c: DataFrame, q: DataFrame, on: str | None,
+                 k: int) -> DataFrame:
     """``_cosine_scored`` ranked: (query_id, neighbor_id, cosine), the k
     most similar per query."""
-    top = top_n_per_key(_cosine_scored(c, q, on, round_to), ["query_id"],
+    top = top_n_per_key(_cosine_scored(c, q, on), ["query_id"],
                         [F.col("cosine").desc(), F.col("neighbor_id")], k)
     return top.select("query_id", "neighbor_id", "cosine")
 
 
 def knn_bruteforce(queries: DataFrame, candidates: DataFrame, k: int, *,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   round_to: int = 6) -> DataFrame:
+                   id_col: str = "vec_id",
+                   vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors per query (self-matches excluded).
 
     The candidate side stays partitioned and the (small) query side
     broadcasts, so the cross product is a broadcast nested loop that
     streams the corpus once: O(|Q|·|N|) compute, no corpus shuffle.
     Output: (query_id, neighbor_id, cosine), cosine rounded to
-    ``round_to`` decimals before ranking; ties break on neighbor_id.
+    ``ROUND_TO`` decimals before ranking; ties break on neighbor_id.
     """
     return _cosine_topk(
         _vectors(candidates, id_col, vec_col, "neighbor_id", "c_vec"),
         _vectors(queries, id_col, vec_col, "query_id", "q_vec"),
-        None, k, round_to)
+        None, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -143,8 +144,8 @@ def signature_col(vec: Column, planes: list[list[float]]) -> Column:
 
 def lsh_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
             dim: int, n_planes: int = 8, seed: int = 42,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            round_to: int = 6) -> DataFrame:
+            id_col: str = "vec_id",
+            vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k: candidates considered only when their sign
     signature equals the query's (one shuffle on the signature; at
     scale add multi-probe or fewer planes for recall). Misses are
@@ -155,7 +156,7 @@ def lsh_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
     return _cosine_topk(
         c.withColumn("sig", signature_col(F.col("c_vec"), planes)),
         q.withColumn("sig", signature_col(F.col("q_vec"), planes)),
-        "sig", k, round_to)
+        "sig", k)
 
 
 NEARDUP_SCHEMA = StructType([
@@ -175,7 +176,7 @@ DEFAULT_MAX_SCORED_PAIRS = 1_000_000_000
 
 def cosine_neardup_pairs(df: DataFrame, *, threshold: float,
                          n_blocks: int | None = None, id_col: str = "vec_id",
-                         vec_col: str = "embedding", round_to: int = 6,
+                         vec_col: str = "embedding",
                          target_block_bytes: int = 64 << 20,
                          anchor_ids: DataFrame | None = None,
                          max_pairs: int | None = DEFAULT_MAX_SCORED_PAIRS,
@@ -228,7 +229,7 @@ def cosine_neardup_pairs(df: DataFrame, *, threshold: float,
     if anchor_ids is not None:
         return _anchored_neardup_pairs(
             v, anchor_ids, n=n, dim=dim, threshold=threshold,
-            round_to=round_to, target_block_bytes=target_block_bytes,
+            target_block_bytes=target_block_bytes,
             max_pairs=max_pairs)
     if max_pairs is not None and n * (n - 1) // 2 > max_pairs:
         raise ValueError(
@@ -277,7 +278,7 @@ def cosine_neardup_pairs(df: DataFrame, *, threshold: float,
         denom = np.outer(norm_a, norm_b)
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = np.where(denom > 0, (mat_a @ mat_b.T) / denom, 0.0)
-        cos = np.round(cos, round_to) + 0.0  # canonicalize -0.0
+        cos = np.round(cos, ROUND_TO) + 0.0  # canonicalize -0.0
         ii, jj = np.nonzero(cos >= threshold)
         if same:
             keep = ii < jj  # strict upper triangle: each pair once
@@ -292,7 +293,7 @@ def cosine_neardup_pairs(df: DataFrame, *, threshold: float,
 
 def _anchored_neardup_pairs(v: DataFrame, anchor_ids: DataFrame, *,
                             n: int, dim: int, threshold: float,
-                            round_to: int, target_block_bytes: int,
+                            target_block_bytes: int,
                             max_pairs: int | None) -> DataFrame:
     """Exact cosine pairs restricted to >=1 anchor endpoint.
 
@@ -345,7 +346,7 @@ def _anchored_neardup_pairs(v: DataFrame, anchor_ids: DataFrame, *,
         denom = np.outer(norm_a, norm_b)
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = np.where(denom > 0, (mat_a @ mat_b.T) / denom, 0.0)
-        cos = np.round(cos, round_to) + 0.0  # canonicalize -0.0
+        cos = np.round(cos, ROUND_TO) + 0.0  # canonicalize -0.0
         ii, jj = np.nonzero(cos >= threshold)
         ia, ib = ids_a[ii], ids_b[jj]
         keep = ia != ib
@@ -362,7 +363,6 @@ def _anchored_neardup_pairs(v: DataFrame, anchor_ids: DataFrame, *,
 def ivf_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
             n_cells: int = 16, n_probe: int = 2, seed: int = 42,
             id_col: str = "vec_id", vec_col: str = "embedding",
-            round_to: int = 6,
             centroids: list[list[float]] | None = None) -> DataFrame:
     """IVF (inverted-file) approximate NN: the classic coarse-quantizer
     scale path.
@@ -418,13 +418,13 @@ def ivf_ann(queries: DataFrame, candidates: DataFrame, k: int, *,
     return _cosine_topk(
         c.withColumn("cell", best_cell("c_vec")),
         q.withColumn("cell", F.explode(probe_cells("q_vec"))),
-        "cell", k, round_to)
+        "cell", k)
 
 
 def hard_negative_mine(queries: DataFrame, candidates: DataFrame, k: int, *,
                        dup_threshold: float = 0.98,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       round_to: int = 6) -> DataFrame:
+                       id_col: str = "vec_id",
+                       vec_col: str = "embedding") -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the
     top-k MOST similar candidates that are NOT near-duplicates — the
     informative negatives sit just below the duplicate band, and a
@@ -440,7 +440,7 @@ def hard_negative_mine(queries: DataFrame, candidates: DataFrame, k: int, *,
     scored = _cosine_scored(
         _vectors(candidates, id_col, vec_col, "neighbor_id", "c_vec"),
         _vectors(queries, id_col, vec_col, "query_id", "q_vec"),
-        None, round_to).filter(F.col("cosine") < dup_threshold)
+        None).filter(F.col("cosine") < dup_threshold)
     w = (Window.partitionBy("query_id")
                .orderBy(F.col("cosine").desc(), F.col("neighbor_id")))
     return (scored.withColumn("neg_rank", F.row_number().over(w))

@@ -26,8 +26,7 @@ from pyspark.sql.types import MapType
 
 
 def salted_join(skewed: DataFrame, other: DataFrame, on: Sequence[str],
-                *, n_salt: int = 16, how: str = "inner",
-                salt_on: Sequence[str] | None = None) -> DataFrame:
+                *, n_salt: int = 16, how: str = "inner") -> DataFrame:
     """Equi-join a skewed big side against a non-broadcastable side.
 
     The skewed side gets a per-row deterministic salt in [0, n_salt);
@@ -36,8 +35,8 @@ def salted_join(skewed: DataFrame, other: DataFrame, on: Sequence[str],
     builds; tiny dims should just broadcast). The join key becomes
     (on..., salt), so a hot key's rows spread over n_salt reducers.
 
-    Salt derivation: hash of ``salt_on`` columns (default: every
-    HASHABLE non-join column, falling back to all columns) —
+    Salt derivation: hash of every HASHABLE non-join column (falling
+    back to every hashable column) —
     deterministic across task retries, unlike an id-generator salt.
     Caveat: rows IDENTICAL in the salted columns share a salt, so a
     hot key whose rows are exact duplicates does not spread — project
@@ -48,13 +47,11 @@ def salted_join(skewed: DataFrame, other: DataFrame, on: Sequence[str],
     'inner'/'left' type.
     """
     assert how in ("inner", "left"), "salted_join supports inner/left"
-    if salt_on is None:
-        hashable = [f.name for f in skewed.schema.fields
-                    if not isinstance(f.dataType, MapType)]
-        # prefer non-join columns: they are what distinguishes a hot
-        # key's rows from each other
-        non_join = [c for c in hashable if c not in on]
-        salt_on = non_join or hashable
+    hashable = [f.name for f in skewed.schema.fields
+                if not isinstance(f.dataType, MapType)]
+    # prefer non-join columns: they are what distinguishes a hot key's
+    # rows from each other
+    salt_on = [c for c in hashable if c not in on] or hashable
     assert salt_on, "no hashable columns to derive a salt from"
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_on]), F.lit(n_salt))
     s = skewed.withColumn("_salt", salt)

@@ -9,8 +9,6 @@ aggregates).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -18,6 +16,10 @@ from pyspark.sql import functions as F
 # heuristic. Kept deliberately tiny & frozen: it is part of the query
 # semantics (the DuckDB oracle embeds the same list).
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "that", "for")
+LANGID_EN_THRESHOLD = 0.12  # stopword density at or above which a doc is 'en'
+# decimals a score keeps before any ranking, so order reproduces across
+# engines
+ROUND_TO = 6
 
 
 def tokens(col: Column) -> Column:
@@ -42,19 +44,21 @@ def n_tokens(col: Column) -> Column:
     return F.size(tokens(col)).cast("long")
 
 
-def stopword_ratio(col: Column, stopwords: Sequence[str] = EN_STOPWORDS) -> Column:
-    """Fraction of tokens that are stopwords (0 for empty docs)."""
+def stopword_ratio(col: Column) -> Column:
+    """Fraction of tokens in ``EN_STOPWORDS`` (0 for empty docs)."""
     toks = tokens(F.lower(col))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
+    n_stop = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
     return F.when(F.size(toks) == 0, F.lit(0.0)) \
             .otherwise(n_stop / F.size(toks))
 
 
-def langid_en_heuristic(col: Column, threshold: float = 0.12) -> Column:
+def langid_en_heuristic(col: Column) -> Column:
     """N-gram-free language-ID heuristic: English-stopword density.
-    Returns 'en' when density ≥ threshold else 'other'. (A real n-gram
-    profile model slots in behind the same Column contract.)"""
-    return F.when(stopword_ratio(col) >= threshold, "en").otherwise("other")
+    Returns 'en' when density ≥ ``LANGID_EN_THRESHOLD`` else 'other'.
+    (A real n-gram profile model slots in behind the same Column
+    contract.)"""
+    return F.when(stopword_ratio(col) >= LANGID_EN_THRESHOLD,
+                  "en").otherwise("other")
 
 
 def fingerprint_md5(col: Column) -> Column:
@@ -100,8 +104,7 @@ def singleton_count(arr: Column) -> Column:
         lambda x: F.size(F.filter(arr, lambda y: y == x)) == 1))
 
 
-def repetition_stats_linear(df, id_col: str, text_col: str, *,
-                            round_to: int = 6):
+def repetition_stats_linear(df, id_col: str, text_col: str):
     """LINEAR-shape twin of the per-row HOF repetition signals
     (``top_count``/``singleton_count`` as used by q63): explode each
     document's unigrams and bigrams once, count per (doc, gram) with
@@ -162,9 +165,9 @@ def repetition_stats_linear(df, id_col: str, text_col: str, *,
     return out.select(
         F.col(id_col),
         n.cast("long").alias("n_tokens"),
-        F.round(top_tok, round_to).alias("top_token_frac"),
-        F.round(top_big, round_to).alias("top_bigram_frac"),
-        F.round(dup_tok, round_to).alias("dup_token_frac"))
+        F.round(top_tok, ROUND_TO).alias("top_token_frac"),
+        F.round(top_big, ROUND_TO).alias("top_bigram_frac"),
+        F.round(dup_tok, ROUND_TO).alias("dup_token_frac"))
 
 
 def bigrams(tok: Column) -> Column:
@@ -175,8 +178,7 @@ def bigrams(tok: Column) -> Column:
                    lambda a, b: F.concat(a, F.lit(" "), b)))
 
 
-def tfidf_top_terms(df, id_col: str, text_col: str, *, k: int = 5,
-                    round_to: int = 6):
+def tfidf_top_terms(df, id_col: str, text_col: str, *, k: int = 5):
     """Top-k TF-IDF terms per document — the classic keyword/topic
     signal a corpus curation pipeline derives before clustering or
     relevance filtering.
@@ -213,7 +215,7 @@ def tfidf_top_terms(df, id_col: str, text_col: str, *, k: int = 5,
                         F.round(F.col("tf")
                                 * F.log((F.col("_n") + F.lit(1.0))
                                         / (doc_f + F.lit(1.0))),
-                                round_to).alias("tfidf")))
+                                ROUND_TO).alias("tfidf")))
     top = top_n_per_key(scored, [id_col],
                         [F.col("tfidf").desc(), F.col("token")], k)
     return top.select(id_col, "token", "tf", "tfidf")
@@ -334,8 +336,9 @@ def bigram_perplexity(df, id_col: str, text_col: str):
 
     Plan: explode → window(w1,w2) → window(w1) → groupBy(doc) — three
     shuffles over the token stream, the honest cost of training on the
-    full corpus. At 100 TB train the model on a deterministic_sample
-    and broadcast it instead; the scoring join shape is unchanged.
+    full corpus. At 100 TB train the model on a hash sample
+    (``operators.sampling.stratified_sample``) and broadcast it
+    instead; the scoring join shape is unchanged.
 
     Output: (id, n_bigrams, nll, ppl) for documents with ≥1 bigram.
     """

@@ -1,29 +1,23 @@
-"""User-defined aggregate / table function surface (SURVEY.md §2.9).
+"""User-defined aggregate surface (SURVEY.md §2.9).
 
 The reference's UDFs are all scalar row-functions, re-expressed here
-as native expressions (U1-U5). These are the OTHER two UDF shapes
-Spark offers, demonstrated with the same discipline the scalar ones
-got — Arrow-vectorized, deterministic, oracle-checkable:
+as native expressions (U1-U5). ``median_udaf()`` is the grouped-
+AGGREGATE shape, with the same discipline the scalar ones got —
+Arrow-vectorized, deterministic, oracle-checkable: the whole group
+arrives as one pandas Series; np.median sorts internally, so the
+result is independent of shuffle arrival order (a float SUM in the
+same position would not be — accumulation order varies run to run).
 
-- ``median_udaf()``: a pandas grouped-AGGREGATE udf. The whole group
-  arrives as one pandas Series; np.median sorts internally, so the
-  result is independent of shuffle arrival order (a float SUM in the
-  same position would not be — accumulation order varies run to run).
-- ``kv_pairs_udtf()``: a UDTF (one input row → many output rows) that
-  parses "k=v;k2=v2" option strings — the lateral-view shape for
-  semi-structured columns that are NOT JSON (q23 covers JSON via
-  get_json_object).
-
-Both are factories (UDF registration parses the return type, which
-needs an active SparkSession — a module-level decorator would demand
-one at import time).
+It is a factory: UDF registration parses the return type, which needs
+an active SparkSession — a module-level decorator would demand one at
+import time.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf, udtf
+from pyspark.sql.functions import pandas_udf
 
 
 def median_udaf():
@@ -37,20 +31,3 @@ def median_udaf():
     return median
 
 
-def kv_pairs_udtf():
-    """Explode a 'k=v;k2=v2' option string into (key, value) rows;
-    malformed fragments (no '=') are skipped, empty input yields no
-    rows."""
-
-    @udtf(returnType="key: string, value: string")
-    class KvPairs:
-        def eval(self, s: str):  # noqa: D102 - contract documented above
-            if not s:
-                return
-            for frag in s.split(";"):
-                if "=" in frag:
-                    k, _, val = frag.partition("=")
-                    if k:
-                        yield (k, val)
-
-    return KvPairs

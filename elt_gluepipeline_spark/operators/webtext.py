@@ -26,6 +26,13 @@ from pyspark.sql import functions as F
 # discipline without importing a list the SQL twin can't see).
 GOPHER_STOPWORDS = ("the", "a", "of", "to", "and")
 
+# gopher_flags thresholds: word-count bounds, mean-word-length bounds,
+# minimum stopword hits, minimum unique-token ratio
+GOPHER_WORDS = (15, 100_000)
+GOPHER_MEAN_WORD_LEN = (2.0, 10.0)
+GOPHER_MIN_STOP_HITS = 1
+GOPHER_MIN_UNIQ_RATIO = 0.2
+
 
 # --------------------------------------------------------------------------
 # HTML boilerplate strip
@@ -78,9 +85,9 @@ def domain_of(url: Column) -> Column:
 
 
 def cap_per_domain(df: DataFrame, domain_col: str, key_col: str, *,
-                   k: int, seed: int = 7) -> DataFrame:
+                   k: int) -> DataFrame:
     """Keep at most ``k`` rows per domain, chosen by a deterministic
-    hash order (md5 of the key) so the kept set is stable under
+    hash order (md5 of ``<key>#7``) so the kept set is stable under
     re-runs, corpus growth, and any partitioning — the Common-Crawl
     rebalance step that stops one mega-domain from dominating a corpus.
 
@@ -96,7 +103,7 @@ def cap_per_domain(df: DataFrame, domain_col: str, key_col: str, *,
     would make the kept set nondeterministic.
     """
     order = F.md5(F.concat(F.col(key_col).cast("string"),
-                           F.lit(f"#{seed}")))
+                           F.lit("#7")))
     w = Window.partitionBy(domain_col)
     ranked = (df.withColumn("n_domain_docs", F.count(F.lit(1)).over(w))
                 .withColumn(
@@ -111,18 +118,13 @@ def cap_per_domain(df: DataFrame, domain_col: str, key_col: str, *,
 # Gopher-style composite quality rules
 # --------------------------------------------------------------------------
 
-def gopher_flags(df: DataFrame, text_col: str, *,
-                 min_words: int = 15, max_words: int = 100_000,
-                 min_mean_word_len: float = 2.0,
-                 max_mean_word_len: float = 10.0,
-                 min_stop_hits: int = 1,
-                 min_uniq_ratio: float = 0.2) -> DataFrame:
+def gopher_flags(df: DataFrame, text_col: str) -> DataFrame:
     """Rule-mask document filter in the style of Gopher's quality
     heuristics (word-count bounds, mean-word-length bounds, stopword
-    presence, duplicate-token saturation). Each rule contributes a bit
-    to ``rule_mask`` (bit set = rule VIOLATED) so downstream can audit
-    *why* a document was dropped, not just that it was; ``keep`` is
-    mask == 0.
+    presence, duplicate-token saturation; thresholds ``GOPHER_*``).
+    Each rule contributes a bit to ``rule_mask`` (bit set = rule
+    VIOLATED) so downstream can audit *why* a document was dropped,
+    not just that it was; ``keep`` is mask == 0.
 
     Pure column expressions over one split() — no shuffle, no UDF;
     ratios are single IEEE divisions so the oracle replays them
@@ -141,10 +143,12 @@ def gopher_flags(df: DataFrame, text_col: str, *,
         F.size(F.array_distinct(toks)).cast("double") / n_words
     ).otherwise(F.lit(0.0))
 
+    min_words, max_words = GOPHER_WORDS
+    min_wl, max_wl = GOPHER_MEAN_WORD_LEN
     viol_words = (n_words < min_words) | (n_words > max_words)
-    viol_mean = (mean_wl < min_mean_word_len) | (mean_wl > max_mean_word_len)
-    viol_stop = stop_hits < min_stop_hits
-    viol_uniq = uniq_ratio < min_uniq_ratio
+    viol_mean = (mean_wl < min_wl) | (mean_wl > max_wl)
+    viol_stop = stop_hits < GOPHER_MIN_STOP_HITS
+    viol_uniq = uniq_ratio < GOPHER_MIN_UNIQ_RATIO
     mask = (viol_words.cast("int") * 1 + viol_mean.cast("int") * 2
             + viol_stop.cast("int") * 4 + viol_uniq.cast("int") * 8)
 

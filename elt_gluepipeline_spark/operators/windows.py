@@ -6,10 +6,9 @@ Scale notes baked in:
   group's rows.
 - the reference's global rank (W4: row_number over an UNPARTITIONED
   window, go-metric-elt.py:245) funnels the whole table through one
-  task; ``ranked()`` here keeps that shape ONLY for provably-small
-  inputs (post-aggregation tables), and ``top_n_global`` gives the
-  scale-safe orderBy+limit alternative (TakeOrderedAndProject — a
-  per-partition heap + driver merge, no single-partition shuffle).
+  task; ``top_n_global`` gives the scale-safe orderBy+limit
+  alternative (TakeOrderedAndProject — a per-partition heap + driver
+  merge, no single-partition shuffle).
 """
 
 from __future__ import annotations
@@ -55,14 +54,6 @@ def top_n_global(df: DataFrame, order_by: Sequence[Column], n: int) -> DataFrame
     TakeOrderedAndProject (per-partition heaps, driver-side merge of
     N-row heaps) instead of a single-partition window."""
     return df.orderBy(*order_by).limit(n)
-
-
-def ranked(df: DataFrame, order_by: Sequence[Column], rank_col: str = "rank") -> DataFrame:
-    """W4: global dense ranking column. Single-partition window — use
-    ONLY on post-aggregation tables whose cardinality is bounded (e.g.
-    per-restaurant rollups). For raw-fact ranking use top_n_global."""
-    w = Window.orderBy(*order_by)
-    return df.withColumn(rank_col, F.row_number().over(w))
 
 
 def scd2_history(df: DataFrame, keys: Sequence[str],

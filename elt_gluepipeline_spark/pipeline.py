@@ -42,15 +42,15 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.conform import normalize_names, normalize_strings
 from .functions.observe import observed
-from .operators.quality import extract_violations, split_clean
+from .operators.quality import route_violations
 from .sources.state import BookmarkStore, RunManifest, parse_pk_config
 from .sources.writers import write_parquet
-from .streaming.incremental import incremental_ingest
+from .streaming.incremental import add_audit_columns, incremental_ingest
 
 STAGES = ("ingest", "transform", "quality", "metric")
 
@@ -102,6 +102,22 @@ def stage_ingest(spark: SparkSession, cfg: PipelineConfig,
     return rows
 
 
+def _read_landing(spark: SparkSession, cfg: PipelineConfig,
+                  table: str) -> DataFrame:
+    """``landing/<table>`` as transform reads it. Before the first
+    non-empty increment the folder holds no data file, so it reads as
+    zero rows under the schema a landing read gives: the source's
+    columns plus the audit columns, ``ingest_date`` typed as partition
+    discovery types it. The check lists files only; it runs no job."""
+    path = cfg.path("landing", table)
+    if any(f.endswith(".parquet") for _, _, files in os.walk(path)
+           for f in files):
+        return spark.read.parquet(path)
+    src = spark.read.parquet(f"{cfg.source_dir.rstrip('/')}/{table}.parquet")
+    return (add_audit_columns(src.limit(0), table)
+            .withColumn("ingest_date", F.col("ingest_date").cast("date")))
+
+
 def stage_transform(spark: SparkSession, cfg: PipelineConfig,
                     manifest: RunManifest) -> dict[str, int]:
     """Conform pass (go-transform-elt.py:185-201 + 82-86 analog):
@@ -109,7 +125,7 @@ def stage_transform(spark: SparkSession, cfg: PipelineConfig,
     row count is invariant across this stage."""
     rows: dict[str, int] = {}
     for table in cfg.tables:
-        df = spark.read.parquet(cfg.path("landing", table))
+        df = _read_landing(spark, cfg, table)
         out, obs = observed(normalize_strings(normalize_names(df)),
                             f"transform_{table}", n=F.count(F.lit(1)))
         write_parquet(out, cfg.path("staging", table), max_files=8)
@@ -120,32 +136,31 @@ def stage_transform(spark: SparkSession, cfg: PipelineConfig,
 
 def stage_quality(spark: SparkSession, cfg: PipelineConfig,
                   manifest: RunManifest) -> dict[str, tuple[int, int]]:
-    """Rule gate: tag violations (one JVM-expression pass), split clean
-    vs quarantine off the same cached plan (P9), write both."""
+    """Rule gate: route each row (``route_violations``: one
+    JVM-expression pass) to clean or quarantine off the same cached
+    input (P9), write both."""
     split: dict[str, tuple[int, int]] = {}
     for table in cfg.tables:
         df = spark.read.parquet(cfg.path("staging", table))
-        rules = [(name, F.expr(sql))
-                 for name, sql in cfg.quality_rules.get(table, ())]
+        rules = cfg.quality_rules.get(table, ())
         if not rules:
             out, obs = observed(df, f"quality_{table}", n=F.count(F.lit(1)))
             write_parquet(out, cfg.path("final", table), max_files=64)
             split[table] = (obs.get["n"], 0)
             manifest.log("quality", table, "no_rules", rows=split[table][0])
             continue
-        tagged = extract_violations(df, rules).persist()
+        df = df.persist()
         try:
-            clean, bad = split_clean(tagged)
+            clean, bad = route_violations(df, rules)
             clean, obs_clean = observed(clean, f"clean_{table}",
                                         n=F.count(F.lit(1)))
-            bad, obs_bad = observed(
-                bad.withColumn("violated", F.array_join("violated", ",")),
-                f"quarantine_{table}", n=F.count(F.lit(1)))
+            bad, obs_bad = observed(bad, f"quarantine_{table}",
+                                    n=F.count(F.lit(1)))
             write_parquet(clean, cfg.path("final", table), max_files=64)
             write_parquet(bad, cfg.path("quarantine", table), max_files=8)
             n_clean, n_bad = obs_clean.get["n"], obs_bad.get["n"]
         finally:
-            tagged.unpersist()
+            df.unpersist()
         split[table] = (n_clean, n_bad)
         manifest.log("quality", table, "success",
                      clean=n_clean, quarantined=n_bad)

@@ -658,9 +658,8 @@ def q29_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stream import run_rollup_available_now
     # No withWatermark here: complete-mode output never evicts window
     # state, and watermarks require instant TIMESTAMP while this column
-    # is deliberately NTZ (session-timezone-independent output). The
-    # production append-mode path (streaming.stream_windowed_rollup)
-    # carries the watermark.
+    # is deliberately NTZ (session-timezone-independent output). An
+    # append-mode rollup carries a watermark instead.
     src = read_table_stream(spark, sf_dir, "events")
     agg = (src.groupBy(F.window("ts", "1 hour").alias("bucket"),
                        F.col("event_type"))
@@ -1011,8 +1010,7 @@ def q53_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # matching the DISTINCT oracle requires no eviction during the
     # drain (a multi-file drain with 1h lateness could re-emit a key
     # recurring days apart). A continuous production stream sets a real
-    # lateness — that path (eviction + bounded state) is pytest'd in
-    # stream_ingest.
+    # lateness, which evicts state and keeps it bounded.
     src = (read_table_stream(spark, sf_dir, "events")
            # watermarks reject NTZ: convert via epoch micros
            .withColumn("ts", ntz_to_instant("ts"))

@@ -297,12 +297,13 @@ WHERE rn <= 3
 # Q20 — LSH-bucketed approximate NN (probabilistic recall → rows-only)
 # --------------------------------------------------------------------------
 
-def _embedding_dim(default: int = 64) -> int:
-    """Vector width of the testdata embeddings, read from a parquet
-    footer at import — q20's hyperplanes (and their oracle literals)
-    must match the data's dim, and the driver has regenerated testdata
-    between rounds before (the ts-encoding drift); deriving the dim
-    from the data keeps both sides in lockstep if it drifts too."""
+def _embedding_dim() -> int:
+    """Vector width of the testdata embeddings (64 when none is found),
+    read from a parquet footer at import — q20's hyperplanes (and their
+    oracle literals) must match the data's dim, and regenerated
+    testdata has changed encodings before (the ts-encoding drift);
+    deriving the dim from the data keeps both sides in lockstep if it
+    drifts too."""
     import glob
     import os
     try:
@@ -315,7 +316,7 @@ def _embedding_dim(default: int = 64) -> int:
                     return len(col[0])
     except Exception:
         pass
-    return default
+    return 64
 
 
 EMB_DIM = _embedding_dim()

@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 def write_bucketed(df: DataFrame, table: str, bucket_keys: Sequence[str],
                    n_buckets: int, *, sort_keys: Sequence[str] = (),
-                   single_file_buckets: bool = False,
-                   mode: str = "overwrite") -> None:
-    """Write df as a catalog-managed bucketed parquet table.
+                   single_file_buckets: bool = False) -> None:
+    """Write df as a catalog-managed bucketed parquet table, replacing
+    any table of that name.
 
     ``sort_keys`` additionally sorts within each bucket file, which
     upgrades bucket joins from hash to sort-merge-without-sort — but
@@ -40,7 +40,7 @@ def write_bucketed(df: DataFrame, table: str, bucket_keys: Sequence[str],
     """
     if single_file_buckets:
         df = df.repartition(n_buckets, *bucket_keys)
-    writer = (df.write.mode(mode).format("parquet")
+    writer = (df.write.mode("overwrite").format("parquet")
                 .bucketBy(n_buckets, *bucket_keys))
     if sort_keys:
         writer = writer.sortBy(*sort_keys)

@@ -19,9 +19,8 @@ from pyspark.sql import functions as F
 
 def write_parquet(df: DataFrame, path: str, *, mode: str = "overwrite",
                   partition_by: tuple[str, ...] = (), max_files: int | None = None,
-                  sort_by: tuple[str, ...] = (),
-                  compression: str = "snappy") -> None:
-    """S5/S6/S7: (partitioned) parquet sink.
+                  sort_by: tuple[str, ...] = ()) -> None:
+    """S5/S6/S7: (partitioned) snappy parquet sink.
 
     ``max_files`` bounds output file count per the reference's layout
     budget (landing ≤8, final ≤64 — go-incremental-ingest-elt.py:222,
@@ -41,7 +40,7 @@ def write_parquet(df: DataFrame, path: str, *, mode: str = "overwrite",
         out = out.coalesce(max_files)
     if sort_by:
         out = out.sortWithinPartitions(*sort_by)
-    writer = out.write.mode(mode).option("compression", compression)
+    writer = out.write.mode(mode).option("compression", "snappy")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -105,9 +104,7 @@ def bucket_of(keys: Sequence[str], n_buckets: int) -> Column:
                   F.lit(n_buckets)).cast("int")
 
 
-def compact_parquet(spark, path: str, *, target_files: int = 8,
-                    partition_by: tuple[str, ...] = (),
-                    compression: str = "snappy") -> int:
+def compact_parquet(spark, path: str, *, target_files: int = 8) -> int:
     """Small-file compaction of one append-only sub-table of a manifest
     table (``sources.table``): ``path`` is ``<table>/<sub>``. The
     append-only sub-tables are the stream chain's ``final`` and
@@ -121,16 +118,11 @@ def compact_parquet(spark, path: str, *, target_files: int = 8,
     plain folder has no commit point, and a hash-bucketed sub-table
     already holds one file per bucket per write, so both raise. The
     rewrite keeps the session's parquet codec and writes no Hive
-    partitions: ``partition_by`` and ``compression`` must stay at their
-    defaults. Returns the row count, observed on the write.
+    partitions. Returns the row count, observed on the write.
     """
     from ..functions.observe import observed
     from .table import Table
 
-    if partition_by or compression != "snappy":
-        raise ValueError("compact_parquet keeps the sub-table's layout and "
-                         "the session codec: partition_by and compression "
-                         "must stay at their defaults")
     root, sub = os.path.split(path.rstrip("/"))
     table = Table(spark, root)
     if sub not in table.tables:

@@ -48,10 +48,11 @@ change is the delete op disappears from reads. Tombstones are
 RETAINED in the stored snapshot (they win keep-latest like any other
 version), so a late-arriving OLDER update can never resurrect a
 deleted key — ``read_bucketed_snapshot`` filters them out (null-safe:
-rows with a NULL op are ordinary upserts, never dropped). Expiring
+rows with a NULL op are ordinary upserts, never dropped). The delete op
+is ``DELETE_OP``. Expiring
 tombstones past a replay horizon is a compaction-time policy
-(``expire_tombstones``), not a merge-time one. Passing
-``op_col``/``delete_op`` to the merge keeps per-bucket tombstone counts
+(``expire_tombstones``), not a merge-time one. Passing ``op_col`` to
+the merge keeps per-bucket tombstone counts
 in the manifest, so that compaction reads only tombstone-bearing
 buckets instead of scanning the table. A count is an UPPER BOUND: a
 merge adds the batch's delete rows to it without reading back what it
@@ -87,6 +88,7 @@ from .stream import drain_foreach_batch
 
 BUCKET_COL = "_bucket"
 DEFAULT_N_BUCKETS = 64  # a new table's B when the first merge names none
+DELETE_OP = "D"  # the op column value that marks a delete
 _DATA = "data"
 
 
@@ -119,35 +121,29 @@ def _merge_n_buckets(table: Table, primary_keys: Sequence[str],
     return layout["n_buckets"]
 
 
-def _resolve_op_col(table: Table, op_col: str | None, delete_op: str,
-                    ) -> tuple[str | None, str]:
+def _resolve_op_col(table: Table, op_col: str | None) -> str | None:
     """Reconcile the caller's ``op_col`` with the one the manifest
     records. Once a snapshot keeps tombstone counts, its op column is
     adopted, so a merge without ``op_col`` still counts its tombstones
     (an uncounted one would be pruned out of every expiry); a
     CONFLICTING op_col raises rather than counting the wrong column."""
     stored = table.state.get("op_col")
-    if stored is None:
-        return op_col, delete_op
-    stored_del = table.state["delete_op"]
-    if op_col is None:
-        return stored, stored_del
-    if (op_col, delete_op) != (stored, stored_del):
+    if stored is None or op_col is None:
+        return stored or op_col
+    if op_col != stored:
         raise ValueError(
             f"mixed op_col usage on {table.root}: the manifest records "
-            f"(op_col={stored!r}, delete_op={stored_del!r}) but this call "
-            f"passed (op_col={op_col!r}, delete_op={delete_op!r}) — the "
-            "op column is part of the table contract.")
-    return op_col, delete_op
+            f"op_col={stored!r} but this call passed op_col={op_col!r} — "
+            "the op column is part of the table contract.")
+    return op_col
 
 
-def _tombstone_state(op_col: str, delete_op: str,
-                     counts: dict[int, int]) -> dict:
+def _tombstone_state(op_col: str, counts: dict[int, int]) -> dict:
     """Manifest state for per-bucket tombstone counts (zero counts
     omitted): each an upper bound on the bucket's tombstones, exact
     for the buckets the last expiry or rebucket scanned (module
     docstring)."""
-    return {"op_col": op_col, "delete_op": delete_op,
+    return {"op_col": op_col,
             "tombstones": {str(k): v for k, v in sorted(counts.items())
                            if v > 0}}
 
@@ -159,13 +155,12 @@ def _tombstones(table: Table) -> dict[int, int] | None:
     return None if raw is None else {int(k): v for k, v in raw.items()}
 
 
-def _count_tombstones(df: DataFrame, op_col: str,
-                      delete_op: str) -> dict[int, int]:
+def _count_tombstones(df: DataFrame, op_col: str) -> dict[int, int]:
     """Exact per-bucket delete-row counts of ``df`` (zero counts for a
     frame that does not carry the op column)."""
     if op_col not in df.columns:
         return {}
-    rows = (df.filter(F.col(op_col).eqNullSafe(delete_op))
+    rows = (df.filter(F.col(op_col).eqNullSafe(DELETE_OP))
               .groupBy(BUCKET_COL).count().collect())
     return {int(r[0]): int(r[1]) for r in rows}
 
@@ -195,7 +190,6 @@ def bucketed_merge(
     n_buckets: int | None = None,
     tiebreak: Sequence[Column] = (),
     op_col: str | None = None,
-    delete_op: str = "D",
 ) -> list[int]:
     """Apply one change batch to the bucketed snapshot. Returns the
     sorted list of bucket ids this merge rewrote (≤ B ints).
@@ -223,13 +217,13 @@ def bucketed_merge(
     spark = batch.sparkSession
     table = Table(spark, snapshot_dir)
     n_buckets = _merge_n_buckets(table, primary_keys, n_buckets)
-    op_col, delete_op = _resolve_op_col(table, op_col, delete_op)
+    op_col = _resolve_op_col(table, op_col)
     layout = {"col": BUCKET_COL, "keys": list(primary_keys),
               "n_buckets": n_buckets}
 
     b = (batch.withColumn(BUCKET_COL, bucket_of(primary_keys, n_buckets))
               .localCheckpoint(eager=True))
-    is_del = (F.col(op_col).eqNullSafe(delete_op)
+    is_del = (F.col(op_col).eqNullSafe(DELETE_OP)
               if op_col in b.columns else F.lit(False))
     per_bucket = {r[0]: r[1] for r in b.groupBy(BUCKET_COL).agg(
         F.count(F.when(is_del, 1))).collect()}
@@ -266,7 +260,7 @@ def bucketed_merge(
         counts = counts or {}
         for k in touched:
             counts[k] = counts.get(k, 0) + per_bucket[k]
-        state = _tombstone_state(op_col, delete_op, counts)
+        state = _tombstone_state(op_col, counts)
     table.commit({_DATA: _replace_buckets(table, entry, touched)}, **state)
     return touched
 
@@ -276,7 +270,6 @@ def read_bucketed_snapshot(
     snapshot_dir: str,
     *,
     op_col: str | None = None,
-    delete_op: str = "D",
 ) -> DataFrame | None:
     """Current state of the bucketed snapshot (None before the first
     merge). With ``op_col`` set, keys whose newest change is the
@@ -288,7 +281,7 @@ def read_bucketed_snapshot(
         return None
     df = df.drop(BUCKET_COL)
     if op_col is not None:
-        df = df.filter(~F.col(op_col).eqNullSafe(delete_op))
+        df = df.filter(~F.col(op_col).eqNullSafe(DELETE_OP))
     return df
 
 
@@ -298,7 +291,6 @@ def expire_tombstones(
     *,
     op_col: str,
     expire_if: Column,
-    delete_op: str = "D",
 ) -> list[int]:
     """Compaction-time tombstone expiry: rewrite the buckets that hold
     delete tombstones matching ``expire_if`` (e.g. ``F.col("seq") <
@@ -328,14 +320,14 @@ def expire_tombstones(
     cur = table.read(_DATA)
     if cur is None:
         return []
-    op_col, delete_op = _resolve_op_col(table, op_col, delete_op)
+    op_col = _resolve_op_col(table, op_col)
     counts = _tombstones(table)
     if counts is not None:
         candidates = sorted(k for k, v in counts.items() if v > 0)
         if not candidates:
             return []
         cur = cur.filter(F.col(BUCKET_COL).isin(candidates))
-    is_del = F.col(op_col).eqNullSafe(delete_op)
+    is_del = F.col(op_col).eqNullSafe(DELETE_OP)
     expirable = is_del & F.coalesce(expire_if, F.lit(False))
     exact, touched = {}, []
     for bucket, n_expire, n_keep in cur.groupBy(BUCKET_COL).agg(
@@ -346,7 +338,7 @@ def expire_tombstones(
             touched.append(bucket)
     # a bucket the scan skipped has count 0 and so holds no tombstone:
     # these are the exact counts of every bucket
-    state = _tombstone_state(op_col, delete_op, exact)
+    state = _tombstone_state(op_col, exact)
     if not touched:
         if any(table.state.get(k) != v for k, v in state.items()):
             table.commit({}, **state)
@@ -365,7 +357,6 @@ def rebucket(
     *,
     new_n_buckets: int,
     op_col: str | None = None,
-    delete_op: str = "D",
 ) -> int:
     """Migrate the snapshot to a new bucket count — the compaction job
     that keeps merge pruning effective as the table grows (touched-
@@ -378,7 +369,7 @@ def rebucket(
     Returns the number of rows migrated."""
     table = Table(spark, snapshot_dir)
     layout = _layout(table)
-    op_col, delete_op = _resolve_op_col(table, op_col, delete_op)
+    op_col = _resolve_op_col(table, op_col)
     from ..functions.observe import observed
 
     cur, obs = observed(table.read(_DATA).drop(BUCKET_COL),
@@ -388,8 +379,8 @@ def rebucket(
     n_rows = int(obs.get["n"])
     state = {}
     if op_col is not None:
-        state = _tombstone_state(op_col, delete_op, _count_tombstones(
-            table.read(_DATA, entry), op_col, delete_op))
+        state = _tombstone_state(op_col, _count_tombstones(
+            table.read(_DATA, entry), op_col))
     table.commit({_DATA: entry}, **state)
     return n_rows
 
@@ -404,7 +395,6 @@ def foreach_batch_bucketed_upsert(
     n_buckets: int | None = None,
     tiebreak: Sequence[Column] = (),
     op_col: str | None = None,
-    delete_op: str = "D",
 ) -> None:
     """Drain ``source`` AvailableNow, merging every micro-batch into
     the snapshot via ``bucketed_merge`` (the stored B, or ``n_buckets``
@@ -415,6 +405,6 @@ def foreach_batch_bucketed_upsert(
         bucketed_merge(batch, snapshot_dir=snapshot_dir,
                        primary_keys=primary_keys, order_by=order_by,
                        n_buckets=n_buckets, tiebreak=tiebreak,
-                       op_col=op_col, delete_op=delete_op)
+                       op_col=op_col)
 
     drain_foreach_batch(source, merge, checkpoint_path)

@@ -10,7 +10,7 @@ Stage mapping inside each micro-batch:
                checkpoint offsets replace the JSON high-watermark)
   transform  → normalize_names + normalize_strings (go-transform-elt.py
                :185-201, 82-86)
-  quality    → extract_violations + split_clean → final/ + quarantine/
+  quality    → route_violations → final/ + quarantine/
                (go-quality-elt.py:108-312)
   metric     → computed over final/ AFTER the drain (go-metric-elt.py
                reads FINAL_PATH — metrics see only quality-gated rows)
@@ -35,10 +35,9 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.conform import normalize_names, normalize_strings
-from ..operators.quality import extract_violations, split_clean
+from ..operators.quality import route_violations
 from ..sources.table import Table
 from .stream import drain_foreach_batch, replay_guard
 
@@ -60,14 +59,8 @@ def make_chain_batch_handler(
         if guard is None:
             return
         query_id, fresh = guard
-        out = normalize_strings(normalize_names(bdf))
-        # the SAME operators the batch pipeline's quality stage uses
-        # (pipeline.stage_quality) — identical row routing is the
-        # invariant the oracle-gated q190 certification relies on
-        tagged = extract_violations(
-            out, [(name, F.expr(sql)) for name, sql in rules])
-        clean, bad = split_clean(tagged)
-        bad = bad.withColumn("violated", F.array_join("violated", ","))
+        clean, bad = route_violations(
+            normalize_strings(normalize_names(bdf)), rules)
         entries = {sub: table.write(sub, df)
                    for sub, df in (("final", clean), ("quarantine", bad))}
         if not fresh:  # append to the committed rows
@@ -89,10 +82,9 @@ def run_stream_chain(
     """Drain ``source_dir`` through the chain with Trigger.AvailableNow
     (the streaming twin of one scheduled nightly run) into the
     ``final`` and ``quarantine`` sub-tables of the manifest table at
-    ``table_dir`` (read them with ``sources.table.Table``). Uses
-    extract_violations' exact semantics via the inline predicate array
-    so the batch pipeline (pipeline.stage_quality) and this stream
-    route every row identically — the invariant the q190 oracle gates.
+    ``table_dir`` (read them with ``sources.table.Table``). Each batch
+    goes through ``route_violations``, the route the batch pipeline
+    (pipeline.stage_quality) uses — the invariant the q190 oracle gates.
     ``max_files_per_trigger=1`` forces one micro-batch per staged file,
     so a multi-file source genuinely exercises multi-batch commits, not
     one giant batch."""
@@ -103,9 +95,3 @@ def run_stream_chain(
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(source_dir))
     drain_foreach_batch(src, handler, checkpoint_dir)
-
-
-# re-exported for callers that build the same tagging in batch and need
-# byte-identical routing (the oracle-gated certification relies on it)
-__all__ = ["make_chain_batch_handler", "run_stream_chain",
-           "extract_violations", "normalize_names", "normalize_strings"]

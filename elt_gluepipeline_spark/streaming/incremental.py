@@ -51,10 +51,10 @@ def incremental_ingest(
     bookmarks: BookmarkStore,
     manifest: RunManifest | None = None,
     load_mode: str = "incremental",
-    max_files: int | None = 8,
 ) -> IncrementalResult:
     """One incremental load: read > bookmark → dedupe keep-latest per PK
-    → audit cols → partitioned parquet append → commit bookmark.
+    → audit cols → partitioned parquet append (at most 8 files, the
+    reference's landing budget) → commit bookmark.
 
     ``load_mode='full'`` ignores the bookmark (reference LOAD_MODE,
     go-incremental-ingest-elt.py:162-173).
@@ -75,7 +75,7 @@ def incremental_ingest(
                              bookmark=F.max(watermark_col))
     write_parquet(prepared, sink_path, mode="append",
                   partition_by=("ingest_date", "source_table"),
-                  max_files=max_files)
+                  max_files=8)
     rows, new_bm = obs.get["n"], obs.get["bookmark"]
     if not rows:
         if manifest:

@@ -1,11 +1,10 @@
-"""Structured Streaming re-expression of the incremental pipeline
-(SURVEY.md §2.8: T1→readStream, T2→checkpoint commit log,
-T3→dropDuplicatesWithinWatermark, A4→windowed aggregation).
+"""Structured Streaming plumbing of the incremental pipeline
+(SURVEY.md §2.8: T1→readStream, T2→checkpoint commit log).
 
-The batch pipeline's bookmark/dedupe/commit machinery maps 1:1 onto
-Spark's streaming runtime: the checkpoint directory IS the bookmark
-store (offsets + commit log), and watermark-scoped dedupe replaces the
-whole-history keep-latest window.
+The batch pipeline's bookmark/commit machinery maps onto Spark's
+streaming runtime: the checkpoint directory IS the bookmark store
+(offsets + commit log). The helpers here drain a stream through
+``foreachBatch`` and guard a ``Table`` sink against batch replays.
 """
 
 from __future__ import annotations
@@ -15,79 +14,10 @@ import json
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..sources.table import Table
-
-
-def stream_ingest(
-    spark: SparkSession,
-    *,
-    source_dir: str,
-    schema: StructType,
-    watermark_col: str,
-    primary_keys: Sequence[str],
-    sink_path: str,
-    checkpoint_path: str,
-    lateness: str = "1 hour",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """File-source streaming ingest: dedupe-within-watermark → parquet.
-
-    Trigger.AvailableNow drains everything currently present then
-    stops — the streaming twin of one scheduled batch run (T5), with
-    restart-safe progress in the checkpoint instead of a JSON bookmark.
-    """
-    src = (spark.readStream.schema(schema).parquet(source_dir)
-           .withWatermark(watermark_col, lateness)
-           .dropDuplicatesWithinWatermark([*primary_keys]))
-    writer = (src.writeStream
-              .format("parquet")
-              .option("path", sink_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_windowed_rollup(
-    spark: SparkSession,
-    *,
-    source_dir: str,
-    schema: StructType,
-    ts_col: str,
-    keys: Sequence[str],
-    value_col: str,
-    window: str = "1 hour",
-    lateness: str = "30 minutes",
-    sink_path: str | None = None,
-    checkpoint_path: str | None = None,
-) -> DataFrame | StreamingQuery:
-    """Streaming twin of the A4 time-bucket rollups: tumbling-window
-    aggregation with late-data handling via watermark. Returns the
-    aggregated streaming DataFrame (caller attaches a sink), or starts
-    an append-mode parquet sink when paths are given."""
-    src = (spark.readStream.schema(schema).parquet(source_dir)
-           .withWatermark(ts_col, lateness))
-    agg = (src.groupBy(F.window(F.col(ts_col), window).alias("bucket"),
-                       *[F.col(k) for k in keys])
-              .agg(F.sum(F.col(value_col).cast("decimal(18,4)"))
-                    .cast("double").alias("total_value"),
-                   F.count(F.lit(1)).alias("n_events"))
-              .select(F.col("bucket.start").alias("bucket_start"),
-                      *keys, "total_value", "n_events"))
-    if sink_path is None:
-        return agg
-    return (agg.writeStream.format("parquet")
-               .option("path", sink_path)
-               .option("checkpointLocation", checkpoint_path)
-               .outputMode("append")
-               .trigger(availableNow=True)
-               .start())
 
 
 def drain_foreach_batch(source: DataFrame, fn, checkpoint_path: str,
@@ -177,7 +107,6 @@ def stream_interval_join(
     right_ts: str,
     lower_s: int,
     upper_s: int,
-    lateness: str = "2 hours",
     prefix: str = "r_",
     how: str = "inner",
 ) -> DataFrame:
@@ -186,9 +115,9 @@ def stream_interval_join(
     ``[left_ts + lower_s, left_ts + upper_s]`` seconds of each left row,
     equi-matched on ``on``.
 
-    Both sides carry watermarks and the join condition bounds event
-    time in both directions, which is exactly what lets Spark evict
-    join state: a buffered right row can be dropped once the left
+    Both sides carry 2-hour watermarks and the join condition bounds
+    event time in both directions, which is exactly what lets Spark
+    evict join state: a buffered right row can be dropped once the left
     watermark passes ``right_ts - lower_s``. Without the time bound the
     state store grows forever — the interval is load-bearing at scale,
     not a convenience. Right columns come back ``prefix``-renamed.
@@ -197,8 +126,8 @@ def stream_interval_join(
     downstream rather than formatting.
     """
     r = right.select([F.col(c).alias(prefix + c) for c in right.columns])
-    lw = left.withWatermark(left_ts, lateness)
-    rw = r.withWatermark(prefix + right_ts, lateness)
+    lw = left.withWatermark(left_ts, "2 hours")
+    rw = r.withWatermark(prefix + right_ts, "2 hours")
     cond = None
     for k in on:
         c = lw[k] == rw[prefix + k]

@@ -56,11 +56,12 @@ TEXTS = ["the cat sat on the mat",
 
 
 def test_bpe_fit_matches_python_reference(spark):
-    from elt_gluepipeline_spark.operators.bpe import bpe_encode, bpe_fit
+    from elt_gluepipeline_spark.operators.bpe import (bpe_encode,
+                                                      bpe_fit_batched)
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)],
                                "doc_id long, text string")
-    rules = bpe_fit(df, "text", n_merges=8)
+    rules = bpe_fit_batched(df, "text", n_merges=8)
     py_rules, seqs = _py_bpe_fit(TEXTS, 8)
     assert rules == py_rules and len(rules) > 3
 
@@ -71,31 +72,31 @@ def test_bpe_fit_matches_python_reference(spark):
 
 
 def test_bpe_fit_partitioning_invariant(spark):
-    from elt_gluepipeline_spark.operators.bpe import bpe_fit
+    from elt_gluepipeline_spark.operators.bpe import bpe_fit_batched
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)],
                                "doc_id long, text string")
-    r1 = bpe_fit(df, "text", n_merges=5)
-    r2 = bpe_fit(df.repartition(7), "text", n_merges=5)
+    r1 = bpe_fit_batched(df, "text", n_merges=5)
+    r2 = bpe_fit_batched(df.repartition(7), "text", n_merges=5)
     assert r1 == r2
 
 
 def test_bpe_fit_on_real_docs(spark, sf_dir):
-    from elt_gluepipeline_spark.operators.bpe import bpe_fit
+    from elt_gluepipeline_spark.operators.bpe import bpe_fit_batched
 
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
                  .select("doc_id", "text").limit(100))
-    rules = bpe_fit(docs, "text", n_merges=4)
+    rules = bpe_fit_batched(docs, "text", n_merges=4)
     texts = [r.text for r in docs.collect()]
     py_rules, _ = _py_bpe_fit(texts, 4)
     assert rules == py_rules and len(rules) == 4
 
 
 def test_bpe_empty_corpus(spark):
-    from elt_gluepipeline_spark.operators.bpe import bpe_fit
+    from elt_gluepipeline_spark.operators.bpe import bpe_fit_batched
 
     df = spark.createDataFrame([], "doc_id long, text string")
-    assert bpe_fit(df, "text", n_merges=3) == []
+    assert bpe_fit_batched(df, "text", n_merges=3) == []
 
 
 def test_bpe_batched_same_rules_fewer_rounds(spark, sf_dir):
@@ -103,25 +104,29 @@ def test_bpe_batched_same_rules_fewer_rounds(spark, sf_dir):
     (the equivalence-guarded batch — same encode output follows) in
     measurably fewer driver rounds; sequential pays one round per
     merge."""
-    from elt_gluepipeline_spark.operators.bpe import bpe_fit, bpe_fit_batched
+    from elt_gluepipeline_spark.operators.bpe import bpe_fit_batched
     from elt_gluepipeline_spark.sources.readers import read_table
 
-    docs = read_table(spark, sf_dir, "documents").limit(200)
-    seq = bpe_fit(docs, "text", n_merges=12)
+    texts = [r.text for r in read_table(spark, sf_dir, "documents")
+             .select("text").limit(200).collect()]
+    docs = spark.createDataFrame([(t,) for t in texts], "text string")
     st: dict = {}
     bat = bpe_fit_batched(docs, "text", n_merges=12, batch_size=6, stats=st)
+    seq, _ = _py_bpe_fit(texts, 12)
     assert seq == bat                      # identical ordered rule list
     assert len(seq) == 12
     assert st["rounds"] <= 6               # vs 12 sequential rounds
 
 
 def test_bpe_batched_batch_size_one_degenerates_to_sequential(spark):
-    from elt_gluepipeline_spark.operators.bpe import bpe_fit, bpe_fit_batched
+    from elt_gluepipeline_spark.operators.bpe import bpe_fit_batched
 
     docs = spark.createDataFrame(
         [(1, "low lower lowest newer newest wide wider widest low low")],
         "doc_id long, text string")
     st: dict = {}
+    want, _ = _py_bpe_fit(
+        ["low lower lowest newer newest wide wider widest low low"], 6)
     assert bpe_fit_batched(docs, "text", n_merges=6, batch_size=1,
-                           stats=st) == bpe_fit(docs, "text", n_merges=6)
+                           stats=st) == want
     assert st["rounds"] >= 6

@@ -395,7 +395,7 @@ def test_expire_bootstraps_sidecar_on_first_full_scan(spark, tmp_path):
     assert sum(bounds.values()) == 1
     # the bootstrap records its op column, so later merges WITHOUT
     # op_col keep the bounds current
-    assert raw["op_col"] == "op" and raw["delete_op"] == "D"
+    assert raw["op_col"] == "op" and "delete_op" not in raw
 
 
 def test_sidecar_maintained_without_op_col_after_adoption(spark, tmp_path):

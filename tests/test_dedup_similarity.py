@@ -1,7 +1,7 @@
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.dedup import (blocked_jaccard_pairs,
-                                                    exact_dedupe, jaccard,
+                                                    exact_dedupe,
                                                     minhash_lsh_pairs,
                                                     minhash_signatures,
                                                     shingle_base, simhash64,
@@ -25,13 +25,6 @@ def test_word_shingles_edges(spark):
     out = df.select(word_shingles(F.col("t"), 3).alias("sh")).collect()
     assert list(out[0].sh) == ["a b c", "b c d"]
     assert list(out[1].sh) == []  # shorter than k
-
-
-def test_jaccard_bounds(spark):
-    df = spark.createDataFrame([(["a", "b"], ["a", "b"]), (["a"], ["b"])],
-                               "x array<string>, y array<string>")
-    vals = [r.j for r in df.select(jaccard(F.col("x"), F.col("y")).alias("j")).collect()]
-    assert vals == [1.0, 0.0]
 
 
 NEAR_A = "the quick brown fox jumps over the lazy dog again and again today"

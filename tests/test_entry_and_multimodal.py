@@ -73,21 +73,6 @@ def test_median_udaf_matches_exact_median_any_partitioning(spark):
         assert got == {"a": 4.0, "b": 20.0}   # even count interpolates
 
 
-def test_kv_pairs_udtf_lateral_explode(spark):
-    from elt_gluepipeline_spark.operators.udx import kv_pairs_udtf
-    kv = kv_pairs_udtf()
-    spark.udtf.register("kv_pairs", kv)
-    spark.createDataFrame(
-        [(1, "color=red;size=L"), (2, "broken;x=1"), (3, "")],
-        "id long, opts string").createOrReplaceTempView("t_opts")
-    rows = spark.sql("""
-        SELECT t.id, p.key, p.value
-        FROM t_opts t, LATERAL kv_pairs(t.opts) p
-    """).collect()
-    got = {(r.id, r.key): r.value for r in rows}
-    assert got == {(1, "color"): "red", (1, "size"): "L", (2, "x"): "1"}
-
-
 # ---------------- real BMP/WAV decode (round-4) ----------------
 
 def test_decode_bmp_24bpp_golden_bottom_up():

@@ -7,7 +7,9 @@ Contracts pinned here:
   - LOAD_MODE=full ignores the bookmark (reference
     go-incremental-ingest-elt.py:162-173);
   - a failing stage stops the chain and the manifest records it (T4,
-    like a Glue SUCCEEDED trigger that never fires).
+    like a Glue SUCCEEDED trigger that never fires);
+  - a first night whose increment is empty runs through transform and
+    quality, writing empty outputs with the landing schema.
 """
 
 import json
@@ -69,6 +71,26 @@ def test_full_chain_and_incremental_rerun(spark, sf_dir, tmp_path):
     rows2 = stage_ingest(spark, cfg, man2)
     assert rows2["lineitem"] == 0
     assert spark.read.parquet(cfg.path("landing", "lineitem")).count() == n_pk
+
+
+def test_empty_first_increment_runs_through_quality(spark, sf_dir,
+                                                    tmp_path):
+    src = tmp_path / "src"
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li.limit(0).write.parquet(str(src / "lineitem.parquet"))
+    cfg = PipelineConfig(source_dir=str(src), warehouse=str(tmp_path / "wh"))
+    res = run_pipeline(spark, cfg, stages=("ingest", "transform", "quality"),
+                       run_id="r1")
+    assert res["ingest"] == {"lineitem": 0}
+    assert res["transform"] == {"lineitem": 0}
+    assert res["quality"] == {"lineitem": (0, 0)}
+    landing = [*li.columns, "ingest_ts_utc", "ingest_date", "source_table"]
+    for sub, cols in (("final", landing),
+                      ("quarantine", [*landing, "violated"])):
+        out = spark.read.parquet(cfg.path(sub, "lineitem"))
+        assert out.columns == cols and out.count() == 0
+    assert dict(spark.read.parquet(cfg.path("final", "lineitem")).dtypes)[
+        "ingest_date"] == "date"
 
 
 def test_full_load_mode_ignores_bookmark(spark, sf_dir, tmp_path):

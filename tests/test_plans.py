@@ -5,6 +5,7 @@ a property that would silently degrade throughput at 100 TB if lost
 shuffle-everything)."""
 
 import io
+import os
 from contextlib import redirect_stdout
 
 from elt_gluepipeline_spark.plans import registry
@@ -370,3 +371,21 @@ def test_q104_cooccurrence_dedupes_before_pair_join(spark):
     # no CartesianProduct, and the per-type/user totals broadcast
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_q36_approx_top_locations_match_q08(spark, sf_dir):
+    # q36 is checked on rows only by the oracle gate (its active_days is
+    # an HLL estimate); pin its values against q08's exact twin instead,
+    # at sf0.01: the same top 10 by revenue, exact counts and revenue,
+    # and each estimate within 3 x rsd (rsd=0.01) of the exact count
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    exact = {r.n_name: r for r in registry()["q08_top_locations"]
+             .build(spark, sf).filter("rank <= 10").collect()}
+    approx = registry()["q36_top_locations_approx"].build(spark, sf).collect()
+    assert len(approx) == len(exact) == 10
+    for r in approx:
+        want = exact[r.n_name]
+        assert (r.total_orders, r.revenue) == (want.total_orders,
+                                               want.revenue)
+        assert abs(r.active_days - want.active_days) <= \
+            3 * 0.01 * want.active_days

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.dedup import cross_corpus_containment
 from elt_gluepipeline_spark.operators.sampling import (assign_split,
-                                                       deterministic_sample,
                                                        stratified_sample)
 
 
@@ -30,14 +29,6 @@ def test_split_disjoint_and_total(spark):
     out = assign_split(_docs(spark), "doc_id")
     assert out.filter(~F.col("split").isin("train", "test")).count() == 0
     assert out.count() == 1000
-
-
-def test_deterministic_sample_is_subset_property(spark):
-    s10 = {r.doc_id for r in
-           deterministic_sample(_docs(spark), "doc_id", permille=100).collect()}
-    s20 = {r.doc_id for r in
-           deterministic_sample(_docs(spark), "doc_id", permille=200).collect()}
-    assert s10 <= s20  # raising the rate only ADDS members
 
 
 def test_stratified_sample_first_match_rates(spark):

@@ -1,70 +1,8 @@
-"""Structured Streaming variants: AvailableNow ingest with
-dedupe-within-watermark, and windowed rollup parity with the batch A4
-rollup."""
+"""Structured Streaming queries: stream-static enrichment, stateful
+sessionization, the versioned sink and the stream chain, each pinned
+against its batch twin."""
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType, TimestampType)
-
-from elt_gluepipeline_spark.streaming.stream import (stream_ingest,
-                                                     stream_windowed_rollup)
-
-SCHEMA = StructType([
-    StructField("pk", LongType()),
-    StructField("ts", TimestampType()),
-    StructField("v", DoubleType()),
-    StructField("cat", StringType()),
-])
-
-
-def _write_source(spark, path, rows):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-
-def _rows(spark):
-    import datetime as dt
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    return [
-        (1, base, 1.0, "a"),
-        (1, base + dt.timedelta(minutes=1), 2.0, "a"),  # dup pk within watermark
-        (2, base + dt.timedelta(hours=1), 3.0, "b"),
-    ]
-
-
-def test_stream_ingest_available_now(spark, tmp_path):
-    src = str(tmp_path / "src")
-    _write_source(spark, src, _rows(spark))
-    q = stream_ingest(spark, source_dir=src, schema=SCHEMA,
-                      watermark_col="ts", primary_keys=["pk"],
-                      sink_path=str(tmp_path / "sink"),
-                      checkpoint_path=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "sink"))
-    assert out.count() == 2  # pk=1 deduped within watermark
-    assert {r.pk for r in out.collect()} == {1, 2}
-
-
-def test_stream_windowed_rollup_matches_batch(spark, tmp_path):
-    src = str(tmp_path / "src")
-    _write_source(spark, src, _rows(spark))
-    q = stream_windowed_rollup(
-        spark, source_dir=src, schema=SCHEMA, ts_col="ts", keys=["cat"],
-        value_col="v", window="1 hour", lateness="0 seconds",
-        sink_path=str(tmp_path / "roll"),
-        checkpoint_path=str(tmp_path / "ckpt2"))
-    q.awaitTermination(120)
-    got = {(r.cat, r.total_value, r.n_events)
-           for r in spark.read.parquet(str(tmp_path / "roll")).collect()}
-    # append mode emits only windows CLOSED by the watermark: with
-    # max(ts)=01:00 the [00:00,01:00) window is final, [01:00,02:00)
-    # is held in state awaiting later data — correct late-data behavior
-    batch = (spark.read.parquet(src)
-             .groupBy(F.window("ts", "1 hour").alias("w"), "cat")
-             .agg(F.sum(F.col("v").cast("decimal(18,4)")).cast("double").alias("tv"),
-                  F.count(F.lit(1)).alias("n")))
-    max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
-    want = {(r.cat, r.tv, r.n) for r in batch.collect() if r.w.end <= max_ts}
-    assert got == want and len(got) >= 1
 
 
 def test_stream_enrich_matches_batch_join(spark):

@@ -1,7 +1,6 @@
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.windows import (dedupe_keep_latest,
-                                                      ranked,
                                                       top_n_global,
                                                       top_n_per_key)
 
@@ -43,12 +42,6 @@ def test_top_n_per_key_and_global(spark):
     assert per_key.filter(F.col("user") == "u1").count() == 2
     top = top_n_global(df, [F.col("v").desc()], 1).collect()
     assert top[0].v == 50.0
-
-
-def test_ranked(spark):
-    df = _events(spark)
-    out = ranked(df, [F.col("v").desc()]).collect()
-    assert [r.v for r in sorted(out, key=lambda r: r["rank"])] == [50.0, 30.0, 20.0, 10.0]
 
 
 def test_scd2_history_collapse_and_bounds(spark):
