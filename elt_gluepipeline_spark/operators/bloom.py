@@ -44,7 +44,9 @@ def bloom_fit(keys: DataFrame, key_col: str, *, m_bits: int = 1 << 16,
     Returns (word_idx, bits). Shuffle carries at most m_bits/32 rows
     (map-side bit_or partials) no matter the corpus size.
     """
-    assert m_bits % WORD_BITS == 0
+    if m_bits % WORD_BITS:
+        raise ValueError(f"m_bits must be a multiple of {WORD_BITS}, "
+                         f"got {m_bits}")
     key = F.col(key_col)
     pos = F.explode(F.array(*[
         _bit_pos(key, i, m_bits, seed) for i in range(k)])).alias("_pos")

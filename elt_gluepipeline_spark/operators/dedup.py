@@ -138,14 +138,13 @@ def _check_threshold(threshold: float) -> None:
             f"inverted-index plan requires threshold > 0, got {threshold}")
 
 
-def _lsh_params(n_hashes: int, bands: int, band_hash):
-    """(rows_per_band, band_hash) for the LSH entry points; the band
-    hash defaults to xxhash64."""
+def _lsh_params(n_hashes: int, bands: int) -> int:
+    """rows_per_band for the LSH entry points."""
     if bands < 1 or n_hashes % bands:
         raise ValueError(
             f"bands must divide n_hashes, got bands={bands}, "
             f"n_hashes={n_hashes}")
-    return n_hashes // bands, band_hash or F.xxhash64
+    return n_hashes // bands
 
 
 def blocked_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -196,44 +195,27 @@ def blocked_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     return _verify_jaccard(common, sizes, sizes, threshold)
 
 
-class PortableMinhashFamily:
-    """n engine-portable minhash functions from ONE md5 per shingle.
+MINHASH_SEED = 1
 
-    Hashing the shingle n times (md5 of ``s#seed`` per seed) makes the
-    signature stage n× as expensive as it needs to be; instead the md5
-    runs once, its first 60 bits become a base value z, and hash i is
-    the XOR permutation ``h_i = z XOR r_i`` with seeded 60-bit
-    constants — one codegen'd XOR per hash, reproducible in any engine
-    with md5 and 64-bit integers (DuckDB: ``xor(z, r)``).
+
+def minhash_masks(n_hashes: int) -> list[int]:
+    """The XOR masks of the MinHash family: n 60-bit constants drawn
+    from ``random.Random(MINHASH_SEED)``. Hash i of a shingle is
+    ``portable_hash60(s) XOR masks[i]``: one md5 per shingle instead of
+    n, one codegen'd XOR per hash, and reproducible in any engine with
+    md5 and 64-bit integers (DuckDB: ``MIN(xor(z, r))``).
 
     The family must genuinely REORDER per i: an affine
     ``(a_i·x + b_i·y + c_i)`` with small coefficients never wraps its
     modulus, stays monotone in (x, y), and so lets one dominant shingle
     win the argmin for every i — measured 2× spurious band candidates
-    on a dense corpus. XOR flips high bits per r_i, so each hash picks
+    on a dense corpus. XOR flips high bits per mask, so each hash picks
     a different winner; candidate recall only needs approximate
     min-wise uniformity, and the exact-Jaccard verify stage is
     hash-independent.
     """
-
-    def __init__(self, n_hashes: int, seed: int = 1):
-        rng = random.Random(seed)
-        self.n = n_hashes
-        self.rs = [rng.randrange(0, 1 << 60) for _ in range(n_hashes)]
-
-    def prepare(self, s: Column) -> list[Column]:
-        """The one-md5 projection: first 60 bits as a long."""
-        return [F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
-                 .cast("long").alias("_z")]
-
-    def derive(self) -> list[Column]:
-        """The n hash columns over a prepared (_z,) projection."""
-        return [F.col("_z").bitwiseXOR(F.lit(r)).alias(f"_h{i}")
-                for i, r in enumerate(self.rs)]
-
-    def sql_min_exprs(self) -> list[str]:
-        """DuckDB MIN(...) AS h{i} twins over column z."""
-        return [f"MIN(xor(z, {r})) AS h{i}" for i, r in enumerate(self.rs)]
+    rng = random.Random(MINHASH_SEED)
+    return [rng.randrange(0, 1 << 60) for _ in range(n_hashes)]
 
 
 def portable_band_hash(*cols: Column) -> Column:
@@ -243,61 +225,31 @@ def portable_band_hash(*cols: Column) -> Column:
     return portable_hash60(F.concat_ws("#", *[c.cast("string") for c in cols]))
 
 
-def minhash_signatures(base: DataFrame, *, n_hashes: int = 32,
-                       pair_family: PortableMinhashFamily | None = None
-                       ) -> DataFrame:
+def minhash_signatures(base: DataFrame, *, n_hashes: int = 32) -> DataFrame:
     """MinHash signatures as wide columns (_h0.._hN) over a
     :func:`shingle_base` frame: explode distinct shingles, hash each
-    with n seeds in one codegen'd projection, then min-aggregate per
-    document.
+    with the :func:`minhash_masks` family in one codegen'd projection,
+    then min-aggregate per document.
 
     The explode→min-agg shape beats per-row higher-order array
     expressions ~10×: projections and hash aggregates are whole-stage
     codegen'd, partial mins happen map-side, and only n_hashes longs
     per document cross the shuffle.
-
-    Default hashing is seeded xxhash64 (JVM-native); pass a
-    ``PortableMinhashFamily`` for engine-reproducible signatures (one
-    md5 per shingle, n derived universal hashes).
     """
     exploded = base.select("doc_id", F.explode_outer("shingles").alias("s"))
-    if pair_family is not None:
-        if pair_family.n != n_hashes:
-            raise ValueError(f"pair_family has {pair_family.n} hashes, "
-                             f"n_hashes={n_hashes}")
-        prep = exploded.select("doc_id", *pair_family.prepare(F.col("s")))
-        hashed = prep.select("doc_id", *pair_family.derive())
-    else:
-        # ONE xxhash64 per shingle, n hashes derived by xor with fixed
-        # random masks — the same min-wise family the portable path
-        # uses, on a JVM-native base hash. n separate xxhash64(s, i)
-        # calls would be n inlined copies of the full hash routine in
-        # one whole-stage-codegen unit: seconds of one-time janino
-        # compile AND n× the per-shingle hash arithmetic on the map side.
-        # Shift the signed base into the non-negative 63-bit domain
-        # first: XOR masks drawn from [0, 2^63) never flip bit 63, so
-        # with the raw signed hash every derived min was drawn from the
-        # same fixed subset of shingles (those with a negative base) —
-        # strongly correlated signatures, degraded LSH recall. After
-        # the unsigned shift all 63 remaining bits participate and the
-        # masks cover the full domain, mirroring the portable family's
-        # 60-bit design.
-        rng = random.Random(0x5EED)
-        prep = exploded.select(
-            "doc_id",
-            F.shiftrightunsigned(F.xxhash64("s"), 1).alias("_z"))
-        hashed = prep.select(
-            "doc_id",
-            *[F.col("_z").bitwiseXOR(F.lit(rng.randrange(0, 1 << 63)))
-               .alias(f"_h{i}") for i in range(n_hashes)])
+    prep = exploded.select("doc_id", portable_hash60(F.col("s")).alias("_z"))
+    hashed = prep.select("doc_id", *[
+        F.col("_z").bitwiseXOR(F.lit(r)).alias(f"_h{i}")
+        for i, r in enumerate(minhash_masks(n_hashes))])
     return hashed.groupBy("doc_id").agg(
         *[F.min(f"_h{i}").alias(f"_h{i}") for i in range(n_hashes)])
 
 
-def lsh_band_entries(sig: DataFrame, *, bands: int, rows_per_band: int,
-                     band_hash) -> DataFrame:
+def lsh_band_entries(sig: DataFrame, *, bands: int,
+                     rows_per_band: int) -> DataFrame:
     """(doc_id, band_id, band_hash) rows from a wide signature frame —
-    the LSH INDEX representation. A pure per-document projection: the
+    the LSH INDEX representation, band hashes from
+    :func:`portable_band_hash`. A pure per-document projection: the
     index over a grown corpus equals the old index UNION the new docs'
     entries (append ≡ rebuild — the property that makes the index an
     appendable artifact at ingest time, pinned by pytest)."""
@@ -305,8 +257,8 @@ def lsh_band_entries(sig: DataFrame, *, bands: int, rows_per_band: int,
         "doc_id",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band_id"),
-                     band_hash(*[F.col(f"_h{b * rows_per_band + r}")
-                                 for r in range(rows_per_band)])
+                     portable_band_hash(*[F.col(f"_h{b * rows_per_band + r}")
+                                          for r in range(rows_per_band)])
                      .alias("band_hash"))
             for b in range(bands)
         ])).alias("band"),
@@ -358,8 +310,6 @@ class LshDedupIndex:
 
 def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
                         k: int = 3, n_hashes: int = 32, bands: int = 8,
-                        pair_family: PortableMinhashFamily | None = None,
-                        band_hash=None,
                         with_postings: bool = True) -> LshDedupIndex:
     """Build the LSH dedup index tables for ``corpus`` (lazy plans —
     no jobs run until the index is written or probed). Call once over
@@ -369,11 +319,10 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
 
     The fit builds and registers one :func:`shingle_base_cached` pass,
     which the signatures, sizes and postings all read."""
-    rows_per_band, band_hash = _lsh_params(n_hashes, bands, band_hash)
+    rows_per_band = _lsh_params(n_hashes, bands)
     base = shingle_base_cached(corpus, id_col, text_col, k=k)
-    entries = lsh_band_entries(
-        minhash_signatures(base, n_hashes=n_hashes, pair_family=pair_family),
-        bands=bands, rows_per_band=rows_per_band, band_hash=band_hash)
+    entries = lsh_band_entries(minhash_signatures(base, n_hashes=n_hashes),
+                               bands=bands, rows_per_band=rows_per_band)
     sizes = base.select("doc_id", F.size("shingles").alias("n_shingles"))
     postings = (base.select("doc_id",
                             F.explode_outer("shingles").alias("s"))
@@ -583,8 +532,6 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
                           id_col: str, text_col: str, *,
                           k: int = 3, n_hashes: int = 32, bands: int = 8,
                           threshold: float = 0.5,
-                          pair_family: PortableMinhashFamily | None = None,
-                          band_hash=None,
                           index: LshDedupIndex | None = None) -> DataFrame:
     """Continuous-ingest near-dup dedup: probe a NEW batch of documents
     against the EXISTING corpus's LSH band index, verify candidates
@@ -615,7 +562,7 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
     job — admit the batch, and they are corpus duplicates for the next
     batch (or run minhash_lsh_pairs within the batch).
     """
-    rows_per_band, band_hash = _lsh_params(n_hashes, bands, band_hash)
+    rows_per_band = _lsh_params(n_hashes, bands)
     if index is not None and index.postings is None and corpus is None:
         raise ValueError(
             "index has no postings — pass corpus for the verify side")
@@ -624,17 +571,14 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
             raise ValueError("need corpus or index")
         index = fit_lsh_dedup_index(
             corpus, id_col, text_col, k=k, n_hashes=n_hashes, bands=bands,
-            pair_family=pair_family, band_hash=band_hash,
             with_postings=False)
     # one persisted shingle pass over the BATCH feeds the probe
     # signatures AND both verify-side consumers (inv_new / n_new) —
     # unshared, the batch text would be shingled three times per serve
     # call, and the batch is what scales per call
     batch_base = shingle_base_cached(batch, id_col, text_col, k=k)
-    probe = lsh_band_entries(
-        minhash_signatures(batch_base, n_hashes=n_hashes,
-                           pair_family=pair_family),
-        bands=bands, rows_per_band=rows_per_band, band_hash=band_hash)
+    probe = lsh_band_entries(minhash_signatures(batch_base, n_hashes=n_hashes),
+                             bands=bands, rows_per_band=rows_per_band)
     entries = index.entries
     if index.entries_partitions:
         # Partitioned-entries layout: restrict the probe join's corpus
@@ -731,8 +675,6 @@ def incremental_lsh_dedup(corpus: DataFrame | None, batch: DataFrame,
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, *,
                       k: int = 3, n_hashes: int = 32, bands: int = 8,
                       threshold: float = 0.5,
-                      pair_family: PortableMinhashFamily | None = None,
-                      band_hash=None,
                       anchor_ids: DataFrame | None = None,
                       base: DataFrame | None = None) -> DataFrame:
     """MinHash + banded LSH candidate generation, exact-Jaccard verify.
@@ -744,9 +686,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, *,
     the same inverted-index count used by blocked_jaccard_pairs,
     restricted to candidate pairs.
 
-    ``pair_family``/``band_hash`` default to xxhash64 (JVM-native);
-    pass ``PortableMinhashFamily``/``portable_band_hash`` for candidate
-    sets an external engine can reproduce bit-for-bit.
+    Signatures and band hashes are md5-derived, so an external engine
+    reproduces the candidate set bit-for-bit.
 
     ``anchor_ids`` (single-column id frame) restricts the output to
     pairs with AT LEAST ONE endpoint in the anchor set. Because both
@@ -764,19 +705,17 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, *,
     once per operator. None → the operator builds (and registers) its
     own.
     """
-    rows_per_band, band_hash = _lsh_params(n_hashes, bands, band_hash)
+    rows_per_band = _lsh_params(n_hashes, bands)
     if base is None:
         base = shingle_base_cached(df, id_col, text_col, k=k)
 
-    sig = minhash_signatures(base, n_hashes=n_hashes,
-                             pair_family=pair_family)
+    sig = minhash_signatures(base, n_hashes=n_hashes)
     # both sides of the band self-join reference this subtree — persist
     # it or the signature pipeline (shingle explode + n_hashes-wide
     # min-agg, the plan's biggest aggregate) runs twice per query.
     # Tiny frame: bands rows of (doc_id, band_id, hash).
     band_entries = register_cache(
-        lsh_band_entries(sig, bands=bands, rows_per_band=rows_per_band,
-                         band_hash=band_hash))
+        lsh_band_entries(sig, bands=bands, rows_per_band=rows_per_band))
 
     if anchor_ids is None:
         left = band_entries.select("band_id", "band_hash",
@@ -816,72 +755,41 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, *,
 def portable_hash60(col: Column) -> Column:
     """First 60 bits of md5 as a non-negative long — identical in every
     engine with md5 (DuckDB twin:
-    ``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)``). Slower than
-    xxhash64 (string md5 + hex conv) — use it where cross-engine
-    reproducibility matters more than raw hash throughput."""
+    ``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)``). The one hash
+    behind every near-dup signature (MinHash, band hashes, SimHash), so
+    each one is oracle-checkable bit for bit."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def simhash_table(df: DataFrame, id_col: str, text_col: str, *,
-                  hash_col=F.xxhash64, bits: int = 64) -> DataFrame:
-    """SimHash per document, computed the scalable way: explode tokens,
-    hash once per token (codegen projection), aggregate per-bit sign
-    votes as plain SUMs (partial map-side aggregation), then assemble
-    the bits in a final projection. Returns (id_col, simhash). ~10× the
-    expression-fold version: no interpreted higher-order functions
-    anywhere.
+SIMHASH_BITS = 60  # the portable_hash60 width
 
-    ``hash_col``/``bits`` pick the token hash: xxhash64/64 (default,
-    JVM-native, Spark-specific values) or portable_hash60/60
-    (engine-portable → DuckDB-oracle-checkable, same plan shape).
+
+def simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """SimHash per document, computed the scalable way: explode tokens,
+    hash once per token with :func:`portable_hash60` (codegen
+    projection), aggregate per-bit sign votes as plain SUMs (partial
+    map-side aggregation), then assemble the ``SIMHASH_BITS`` bits in a
+    final projection. Returns (id_col, simhash). No interpreted
+    higher-order functions anywhere.
     """
     toks = ensure_min_partitions(df).select(
         F.col(id_col),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("t"))
-    h = toks.select(id_col, hash_col(F.col("t")).alias("h"))
+    h = toks.select(id_col, portable_hash60(F.col("t")).alias("h"))
     # branchless votes: sum the raw bit per position (no when/otherwise
-    # in the 64-wide aggregate) and recover the sign at the end —
+    # in the 60-wide aggregate) and recover the sign at the end —
     # vote_b > 0  ⇔  2*ones_b > n_tokens. Same result, leaner codegen
     # on the per-token hot path.
     votes = h.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("_n"),
         *[F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)))
-          .alias(f"_s{b}") for b in range(bits)])
+          .alias(f"_s{b}") for b in range(SIMHASH_BITS)])
     out = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         out = out.bitwiseOR(
             F.when(F.col(f"_s{b}") * 2 > F.col("_n"),
                    F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long")))
     return votes.select(F.col(id_col), out.alias("simhash"))
-
-
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over whitespace tokens: per-bit vote of token
-    xxhash64 bits, sign-aggregated. Near-dups differ in few bits
-    (compare with hamming ≤ r via band trick). Pure higher-order
-    expressions; Spark-only semantics (xxhash64)."""
-    toks = F.split(F.trim(text), r"\s+")
-    # bit positions are unrolled as literals (shiftright/shiftleft take
-    # literal bit counts); the per-token loop stays a codegen'd fold
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(*[
-                F.when(F.shiftright(F.xxhash64(t), b).bitwiseAND(F.lit(1)) == 1,
-                       F.lit(1).cast("long")).otherwise(F.lit(-1).cast("long"))
-                for b in range(64)
-            ]),
-            lambda x, y: x + y,
-        ),
-    )
-    out = F.lit(0).cast("long")
-    for b in range(64):
-        out = out.bitwiseOR(
-            F.when(F.element_at(votes, b + 1) > 0,
-                   F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long")))
-    return out
 
 
 def hamming_banded_pairs(df: DataFrame, id_col: str, hash_col: str, *,
@@ -908,9 +816,9 @@ def hamming_banded_pairs(df: DataFrame, id_col: str, hash_col: str, *,
     width = bits // bands
     mask = (1 << width) - 1
     # both self-join sides reference this subtree; the caller's
-    # fingerprint build is usually an expensive aggregation (q21/q40:
-    # the 64-wide simhash vote; q191: a dHash decode) that would run
-    # twice unpersisted. Two longs per doc — tiny.
+    # fingerprint build is usually an expensive aggregation (a SimHash
+    # vote; q191: a dHash decode) that would run twice unpersisted.
+    # Two longs per doc — tiny.
     entries = register_cache(
         df.select(F.col(id_col).alias("fp_id"),
                   F.col(hash_col).cast("long").alias("_h")))

@@ -129,7 +129,11 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
 
 
 def signature_col(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature of a vector against fixed hyperplanes → long."""
+    """Sign-bit signature of a vector against fixed hyperplanes → long.
+    A non-null vector whose length differs from the planes' width
+    fails the query: ``dot`` would pad the shorter side with NULLs and
+    give every such vector signature 0."""
+    dim = len(planes[0])
     bits = []
     for i, plane in enumerate(planes):
         p = F.array(*[F.lit(v) for v in plane])
@@ -139,7 +143,9 @@ def signature_col(vec: Column, planes: list[list[float]]) -> Column:
     out = bits[0]
     for b in bits[1:]:
         out = out.bitwiseOR(b)
-    return out
+    return F.when(F.size(vec) != dim, F.raise_error(F.concat(
+        F.lit("signature_col: vector length "), F.size(vec).cast("string"),
+        F.lit(f" differs from the hyperplane width {dim}")))).otherwise(out)
 
 
 def lsh_ann(queries: DataFrame, candidates: DataFrame, k: int, *,

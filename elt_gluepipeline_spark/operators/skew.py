@@ -46,13 +46,15 @@ def salted_join(skewed: DataFrame, other: DataFrame, on: Sequence[str],
     Row-identical to ``skewed.join(other, on, how)`` for equi-joins of
     'inner'/'left' type.
     """
-    assert how in ("inner", "left"), "salted_join supports inner/left"
+    if how not in ("inner", "left"):
+        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     hashable = [f.name for f in skewed.schema.fields
                 if not isinstance(f.dataType, MapType)]
     # prefer non-join columns: they are what distinguishes a hot key's
     # rows from each other
     salt_on = [c for c in hashable if c not in on] or hashable
-    assert salt_on, "no hashable columns to derive a salt from"
+    if not salt_on:
+        raise ValueError("no hashable columns to derive a salt from")
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_on]), F.lit(n_salt))
     s = skewed.withColumn("_salt", salt)
     o = other.withColumn(

@@ -61,27 +61,19 @@ def langid_en_heuristic(col: Column) -> Column:
                   "en").otherwise("other")
 
 
+def fingerprint_tokens(col: Column) -> Column:
+    """Token-sequence fingerprint: md5 of the text trimmed and with
+    whitespace runs collapsed to one space — order- and case-sensitive,
+    blind to whitespace layout. Engine-portable (DuckDB:
+    ``md5(regexp_replace(trim(x), '\\s+', ' ', 'g'))``)."""
+    return F.md5(F.encode(F.regexp_replace(F.trim(col), r"\s+", " "),
+                          "UTF-8"))
+
+
 def fingerprint_md5(col: Column) -> Column:
-    """Canonical-text fingerprint: md5 of lowercased,
-    whitespace-collapsed text. Engine-portable (md5 is md5 everywhere),
-    used for exact near-canonical dedup."""
-    canon = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-    return F.md5(F.encode(canon, "UTF-8"))
-
-
-def fingerprint_rolling(col: Column) -> Column:
-    """Chained rolling hash over tokens — a 64-bit content fingerprint
-    that is order-sensitive (unlike a bag-of-words hash): acc_{i+1} =
-    xxhash64(acc_i, token_i). Hash chaining instead of polynomial
-    multiply keeps it overflow-free under ANSI mode. Sequential fold
-    via F.aggregate; Spark-only (no SQL oracle twin — xxhash64 is
-    Spark-specific)."""
-    toks = tokens(col)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: F.xxhash64(acc, t),
-    )
+    """Canonical-text fingerprint: :func:`fingerprint_tokens` of the
+    lowercased text, used for exact near-canonical dedup."""
+    return fingerprint_tokens(F.lower(col))
 
 
 def top_count(arr: Column) -> Column:
@@ -235,7 +227,10 @@ def chunk_documents(df, id_col: str, text_col: str, *, size: int,
     Output: (id, chunk_id, chunk_text, n_chunk_tokens).
     """
     from pyspark.sql import functions as F
-    assert 0 <= overlap < size, "need 0 <= overlap < chunk size"
+    if not 0 <= overlap < size:
+        raise ValueError(
+            f"need 0 <= overlap < chunk size, got overlap={overlap}, "
+            f"size={size}")
     stride = size - overlap
     toks = tokens(F.col(text_col))
     n = F.size(toks)

@@ -53,12 +53,16 @@ class QuerySpec:
 # and shingle-base callers (q17, q18, q41, q170, q171, q189, q199),
 # q63, q123 and q140, the vector-quantizer and cosine-search callers
 # (q19, q20, q31, q67, q76, q77, q81, q82, q141, q153, q184, q202),
-# q11 (calls drop_test_rows), q58 (cross_corpus_containment) and the
-# shared HLL estimator's q131 and q136, plus the rest of the previous
+# q11 (calls drop_test_rows), q58 (cross_corpus_containment), the
+# shared HLL estimator's q131 and q136, q21 and q38 (md5 SimHash and
+# token-sequence fingerprint), plus the rest of the previous
 # head. Each group below is a driver record of its queries, taken while
 # they were in the head; tail entries still run everywhere else
 # (pytest, bench, check_correctness).
 _DEPRIORITIZED = (
+    # --- rotated out for q21, q38 ---
+    "q152_repeated_spans",
+    "q162_tfidf_cosine",
     # --- rotated out for q11, q58, q131, q136 ---
     "q159_inverted_index",
     "q161_warc_roundtrip",
@@ -118,7 +122,6 @@ _DEPRIORITIZED = (
     "q14_text_stats",
     "q15_lang_id",
     "q16_iqr_outliers",
-    "q21_simhash",
     "q22_multimodal_meta",
     "q23_json_props",
     "q24_fingerprint_dedup",
@@ -134,7 +137,6 @@ _DEPRIORITIZED = (
     "q35_stream_sessions",
     "q36_top_locations_approx",
     "q37_calendar_join",
-    "q38_rolling_fingerprint",
     "q39_range_clicks",
     "q40_simhash_portable",
     "q42_vocab",

@@ -2,10 +2,10 @@
 (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity search,
 text analysis, multimodal plumbing.
 
-Oracle notes: exact/blocked operators carry DuckDB twins (md5, list
-functions, integer set sizes → engine-portable). LSH/SimHash operators
-are probabilistic-by-construction or depend on Spark's xxhash64 —
-rows-only checks, flagged with oracle=None.
+Oracle notes: every operator carries a DuckDB twin: md5, list
+functions and integer set sizes are engine-portable, and the MinHash,
+band and SimHash hashes are md5-derived (``portable_hash60``), so the
+probabilistic near-dup operators are replayed bit for bit too.
 """
 
 from __future__ import annotations
@@ -16,10 +16,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (PortableMinhashFamily, blocked_jaccard_pairs,
+from ..operators.dedup import (SIMHASH_BITS, blocked_jaccard_pairs,
                                exact_dedupe, minhash_lsh_pairs,
-                               portable_band_hash, portable_hash60,
-                               simhash_table)
+                               minhash_masks, simhash_table)
 from ..functions.deterministic import dsum, dsum_sql
 from ..operators.joins import asof_join, range_join
 from ..operators.multimodal import (ASSET_SCHEMA, attach_payload,
@@ -29,7 +28,7 @@ from ..operators.multimodal import (ASSET_SCHEMA, attach_payload,
 from ..operators.similarity import (_hyperplanes, cosine_neardup_pairs,
                                     ivf_ann, knn_bruteforce, lsh_ann)
 from ..operators.textstats import (EN_STOPWORDS, bpe_ish_tokens,
-                                   fingerprint_md5, fingerprint_rolling,
+                                   fingerprint_md5, fingerprint_tokens,
                                    langid_en_heuristic, n_tokens, tokens)
 from ..sources.readers import (ntz_micros, ntz_to_instant, read_table,
                                read_table_stream)
@@ -153,16 +152,6 @@ WITH p AS (
 )
 SELECT lang, lang_pred, COUNT(*) AS n_docs FROM p GROUP BY lang, lang_pred
 """
-
-
-# --------------------------------------------------------------------------
-# Q17 — MinHash+LSH near-dup candidates (probabilistic → rows-only)
-# --------------------------------------------------------------------------
-
-def q17_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, "doc_id", "text",
-                             k=3, n_hashes=32, bands=8, threshold=0.3)
 
 
 # --------------------------------------------------------------------------
@@ -294,32 +283,15 @@ WHERE rn <= 3
 
 
 # --------------------------------------------------------------------------
-# Q20 — LSH-bucketed approximate NN (probabilistic recall → rows-only)
+# Q20 — LSH-bucketed approximate NN (probabilistic recall; the seeded
+# hyperplanes are embedded in the oracle)
 # --------------------------------------------------------------------------
 
-def _embedding_dim() -> int:
-    """Vector width of the testdata embeddings (64 when none is found),
-    read from a parquet footer at import — q20's hyperplanes (and their
-    oracle literals) must match the data's dim, and regenerated
-    testdata has changed encodings before (the ts-encoding drift);
-    deriving the dim from the data keeps both sides in lockstep if it
-    drifts too."""
-    import glob
-    import os
-    try:
-        import pyarrow.parquet as pq
-        for p in sorted(glob.glob("/root/testdata/sf*/embeddings.parquet")):
-            if os.path.exists(p):
-                col = (pq.ParquetFile(p).read_row_group(0, columns=["embedding"])
-                         .column(0))
-                if len(col) > 0:
-                    return len(col[0])
-    except Exception:
-        pass
-    return 64
-
-
-EMB_DIM = _embedding_dim()
+# Vector width of the testdata embeddings (64 at sf0.001, sf0.01 and
+# sf0.1): q20's and q153's hyperplanes, and the oracle literals built
+# from them, have this width; signature_col fails a query whose vectors
+# differ.
+EMB_DIM = 64
 
 
 def q20_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,8 +338,8 @@ WHERE rn <= 3
 
 
 # --------------------------------------------------------------------------
-# Q31 — IVF approximate NN (coarse-quantizer cells; probabilistic recall
-# → rows-only)
+# Q31 — IVF approximate NN (coarse-quantizer cells; probabilistic recall;
+# the portable centroid sampling is replayed by the oracle)
 # --------------------------------------------------------------------------
 
 def q31_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,15 +407,6 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
       FROM scored)
 WHERE rn <= 3
 """
-
-
-# --------------------------------------------------------------------------
-# Q21 — SimHash fingerprints (Spark-hash-specific → rows-only)
-# --------------------------------------------------------------------------
-
-def q21_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents", spread=True)
-    return simhash_table(docs, "doc_id", "text")
 
 
 # --------------------------------------------------------------------------
@@ -1495,32 +1458,35 @@ FROM sized GROUP BY click_id, user_id
 
 
 # --------------------------------------------------------------------------
-# Q38 — order-sensitive rolling-hash fingerprint dedup (xxhash64 chain →
-# Spark-specific values → rows-only; the md5 canonical twin is q24)
+# Q38 — order- and case-sensitive token-sequence fingerprint dedup: q24
+# without the lowercasing
 # --------------------------------------------------------------------------
 
 def q38_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    return exact_dedupe(docs, "doc_id", fingerprint_rolling(F.col("text")))
+    return exact_dedupe(docs, "doc_id", fingerprint_tokens(F.col("text")))
+
+
+Q38_SQL = """
+SELECT md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS text_hash,
+       MIN(doc_id) AS canonical_id, COUNT(*) AS n_copies
+FROM documents
+GROUP BY 1
+"""
 
 
 # --------------------------------------------------------------------------
-# Q41 — portable MinHash+LSH: q17's exact pipeline (32 minhashes, 8
-# bands, candidate self-join, exact-Jaccard verify) with md5-derived
-# hashes, so DuckDB reproduces the CANDIDATE SET and the verified pairs
-# bit-for-bit — the LSH algorithm itself is oracle-checked, not just
-# row counts
+# Q41 — MinHash+LSH (32 minhashes, 8 bands, candidate self-join,
+# exact-Jaccard verify) with md5-derived hashes, so DuckDB reproduces
+# the CANDIDATE SET and the verified pairs bit-for-bit — the LSH
+# algorithm itself is oracle-checked, not just row counts
 # --------------------------------------------------------------------------
-
-_Q41_FAMILY = PortableMinhashFamily(32, seed=1)
 
 # q41's full LSH parameter set, shared BY CONSTRUCTION with the recall
 # certifications whose "found" side claims to mirror q41 (q171/q189) —
-# a drift in q41's family/banding/threshold must move all three
-# together or the certificates silently certify a different index.
-_Q41_LSH_KWARGS = dict(k=3, n_hashes=32, bands=8, threshold=0.3,
-                       pair_family=_Q41_FAMILY,
-                       band_hash=portable_band_hash)
+# a drift in q41's banding/threshold must move all three together or
+# the certificates silently certify a different index.
+_Q41_LSH_KWARGS = dict(k=3, n_hashes=32, bands=8, threshold=0.3)
 
 
 def q41_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1529,7 +1495,8 @@ def q41_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _H60 = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
-_Q41_MINS = ",\n         ".join(_Q41_FAMILY.sql_min_exprs())
+_Q41_MINS = ",\n         ".join(
+    f"MIN(xor(z, {r})) AS h{i}" for i, r in enumerate(minhash_masks(32)))
 _Q41_BANDS = "\n  UNION ALL\n".join(
     f"  SELECT doc_id, {b} AS band_id,\n         "
     + _H60.format(x="concat_ws('#', "
@@ -1605,14 +1572,10 @@ def q199_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     index = fit_lsh_dedup_index(corpus, "doc_id", "text",
-                                k=3, n_hashes=32, bands=8,
-                                pair_family=_Q41_FAMILY,
-                                band_hash=portable_band_hash)
+                                k=3, n_hashes=32, bands=8)
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
                                  threshold=0.3,
-                                 pair_family=_Q41_FAMILY,
-                                 band_hash=portable_band_hash,
                                  index=index)
 
 
@@ -1687,15 +1650,11 @@ def q200_lsh_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(path):
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text",
-                                k=3, n_hashes=32, bands=8,
-                                pair_family=_Q41_FAMILY,
-                                band_hash=portable_band_hash), path)
+                                k=3, n_hashes=32, bands=8), path)
     index = load_lsh_dedup_index(spark, path)
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
                                  threshold=0.3,
-                                 pair_family=_Q41_FAMILY,
-                                 band_hash=portable_band_hash,
                                  index=index)
 
 
@@ -1724,16 +1683,12 @@ def q204_lsh_pruned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(path):
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text",
-                                k=3, n_hashes=32, bands=8,
-                                pair_family=_Q41_FAMILY,
-                                band_hash=portable_band_hash), path,
+                                k=3, n_hashes=32, bands=8), path,
             partition_entries=16)
     index = load_lsh_dedup_index(spark, path)
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
                                  threshold=0.3,
-                                 pair_family=_Q41_FAMILY,
-                                 band_hash=portable_band_hash,
                                  index=index)
 
 
@@ -1765,9 +1720,7 @@ def q203_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(path):
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text",
-                                k=3, n_hashes=32, bands=8,
-                                pair_family=_Q41_FAMILY,
-                                band_hash=portable_band_hash), path)
+                                k=3, n_hashes=32, bands=8), path)
         delete_from_lsh_dedup_index(
             corpus.filter(F.col("doc_id") % 3 == 1).select("doc_id"),
             path)
@@ -1775,8 +1728,6 @@ def q203_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
                                  threshold=0.3,
-                                 pair_family=_Q41_FAMILY,
-                                 band_hash=portable_band_hash,
                                  index=index)
 
 
@@ -1852,23 +1803,22 @@ FROM latest WHERE rn = 1 AND op <> 'D'
 
 
 # --------------------------------------------------------------------------
-# Q40 — portable SimHash (md5-derived 60-bit token hash): the
-# oracle-checked twin of q21 — identical explode→vote-sum→assemble plan,
-# engine-portable hash, so every fingerprint bit is verified cross-engine
+# Q40 — SimHash (md5-derived 60-bit token hash): explode→vote-sum→
+# assemble plan, engine-portable hash, so every fingerprint bit is
+# verified cross-engine
 # --------------------------------------------------------------------------
 
 def q40_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    return simhash_table(docs, "doc_id", "text",
-                         hash_col=portable_hash60, bits=60)
+    return simhash_table(docs, "doc_id", "text")
 
 
 _Q40_VOTES = ",\n         ".join(
     f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-    for b in range(60))
+    for b in range(SIMHASH_BITS))
 _Q40_BITS = "\n       + ".join(
     f"(CASE WHEN v{b} > 0 THEN (CAST(1 AS BIGINT) << {b}) ELSE CAST(0 AS BIGINT) END)"
-    for b in range(60))
+    for b in range(SIMHASH_BITS))
 
 # distinct bit positions → the + chain is exactly the bitwise OR
 Q40_SQL = f"""
@@ -7798,8 +7748,8 @@ SPECS = [
     QuerySpec("q14_text_stats", q14_text_stats, Q14_SQL,
               "token counting + quality scoring"),
     QuerySpec("q15_lang_id", q15_lang_id, Q15_SQL, "language-ID heuristic"),
-    QuerySpec("q17_minhash_neardup", q17_minhash_neardup, None,
-              "MinHash+LSH near-dup (probabilistic; rows-only)"),
+    QuerySpec("q17_minhash_neardup", q41_minhash_portable, Q41_SQL,
+              "MinHash+LSH near-dup; q41's plan and oracle"),
     QuerySpec("q18_ngram_jaccard", q18_ngram_jaccard, Q18_SQL,
               "blocked exact n-gram Jaccard near-dup"),
     QuerySpec("q19_knn_cosine", q19_knn_cosine, Q19_SQL,
@@ -7807,8 +7757,8 @@ SPECS = [
     QuerySpec("q20_lsh_ann", q20_lsh_ann, Q20_SQL,
               "LSH approximate NN (deterministic seeded hyperplanes "
               "embedded in the oracle → bucket set + top-k checked)"),
-    QuerySpec("q21_simhash", q21_simhash, None,
-              "SimHash fingerprints (rows-only)"),
+    QuerySpec("q21_simhash", q40_simhash_portable, Q40_SQL,
+              "SimHash fingerprints; q40's plan and oracle"),
     QuerySpec("q22_multimodal_meta", q22_multimodal_meta, Q22_SQL,
               "binary payload + mapInPandas feature plumbing"),
     QuerySpec("q115_media_probe", q115_media_probe, Q115_SQL,
@@ -8069,8 +8019,8 @@ SPECS = [
               "cells, probes, and top-k all oracle-checked)"
               "; build loads or fits the IVF centroid artifact",
               runs_at_build="jobs"),
-    QuerySpec("q38_rolling_fingerprint", q38_rolling_fingerprint, None,
-              "order-sensitive rolling-hash fingerprint dedup (rows-only)"),
+    QuerySpec("q38_rolling_fingerprint", q38_rolling_fingerprint, Q38_SQL,
+              "order- and case-sensitive token-sequence fingerprint dedup"),
     QuerySpec("q39_range_clicks", q39_range_clicks, Q39_SQL,
               "banded range join: clicks in the hour before each purchase"),
     QuerySpec("q40_simhash_portable", q40_simhash_portable, Q40_SQL,

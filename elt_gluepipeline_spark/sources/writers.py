@@ -154,8 +154,11 @@ def zorder_key(*cols, bits: int = 16):
     Pure JVM bit arithmetic (shifts/ors folded by codegen) — no UDF.
     """
     n = len(cols)
-    assert n >= 2, "zorder needs >= 2 columns"
-    assert n * bits <= 63, "interleaved key must fit a signed long"
+    if n < 2:
+        raise ValueError(f"zorder needs >= 2 columns, got {n}")
+    if n * bits > 63:
+        raise ValueError(f"interleaved key must fit a signed long, got "
+                         f"{n} columns x {bits} bits")
     norm = [(F.col(c) if isinstance(c, str) else c).cast("long")
             for c in cols]
     key = F.lit(0).cast("long")

@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_connected_components_transitive_chain(spark):
@@ -297,9 +298,8 @@ def test_incremental_lsh_matches_full_and_index_appends(spark):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, incremental_lsh_dedup, lsh_band_entries,
-        minhash_lsh_pairs, minhash_signatures, portable_band_hash,
-        shingle_base)
+        incremental_lsh_dedup, lsh_band_entries, minhash_lsh_pairs,
+        minhash_signatures, shingle_base)
 
     rows = []
     for i in range(40):
@@ -308,18 +308,15 @@ def test_incremental_lsh_matches_full_and_index_appends(spark):
     rows.append((100, rows[7][1]))          # exact clone of doc 7
     rows.append((110, rows[12][1] + " zz"))  # near-dup of doc 12
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
 
     inc = {(r.id_new, r.id_existing, round(r.jaccard, 9))
            for r in incremental_lsh_dedup(
                corpus, batch, "doc_id", "text", k=3, n_hashes=32,
-               bands=8, threshold=0.3, pair_family=fam,
-               band_hash=portable_band_hash).collect()}
+               bands=8, threshold=0.3).collect()}
     full = minhash_lsh_pairs(docs, "doc_id", "text", k=3, n_hashes=32,
-                             bands=8, threshold=0.3, pair_family=fam,
-                             band_hash=portable_band_hash).collect()
+                             bands=8, threshold=0.3).collect()
     cross = {(max(r.id_a, r.id_b), min(r.id_a, r.id_b),
               round(r.jaccard, 9))
              for r in full
@@ -330,10 +327,9 @@ def test_incremental_lsh_matches_full_and_index_appends(spark):
     # UNION batch entries (band rows are a per-doc projection)
     def entries(df):
         sig = minhash_signatures(shingle_base(df, "doc_id", "text", [], k=3),
-                                 n_hashes=32, pair_family=fam)
+                                 n_hashes=32)
         return {tuple(r) for r in lsh_band_entries(
-            sig, bands=8, rows_per_band=4,
-            band_hash=portable_band_hash).collect()}
+            sig, bands=8, rows_per_band=4).collect()}
 
     assert entries(docs) == entries(corpus) | entries(batch)
 
@@ -355,15 +351,13 @@ def test_incremental_lsh_index_paths_agree(spark):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, fit_lsh_dedup_index, incremental_lsh_dedup,
-        load_lsh_dedup_index, portable_band_hash, save_lsh_dedup_index)
+        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
+        save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    kw = dict(k=3, n_hashes=32, bands=8, threshold=0.3,
-              pair_family=fam, band_hash=portable_band_hash)
+    kw = dict(k=3, n_hashes=32, bands=8, threshold=0.3)
 
     def rows(out):
         return {(r.id_new, r.id_existing, round(r.jaccard, 9))
@@ -373,8 +367,7 @@ def test_incremental_lsh_index_paths_agree(spark):
     assert len(base) >= 2  # the clone + the near-dup
 
     idx = fit_lsh_dedup_index(corpus, "doc_id", "text", k=3, n_hashes=32,
-                              bands=8, pair_family=fam,
-                              band_hash=portable_band_hash)
+                              bands=8)
     served = rows(incremental_lsh_dedup(None, batch, "doc_id", "text",
                                         index=idx, **kw))
     assert served == base
@@ -401,15 +394,13 @@ def test_incremental_lsh_artifact_append_equals_rebuild(spark,
     from pyspark.sql.readwriter import DataFrameWriter
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, append_lsh_dedup_index, fit_lsh_dedup_index,
-        load_lsh_dedup_index, portable_band_hash, save_lsh_dedup_index)
+        append_lsh_dedup_index, fit_lsh_dedup_index, load_lsh_dedup_index,
+        save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-              band_hash=portable_band_hash)
+    kw = dict(k=3, n_hashes=32, bands=8)
 
     import tempfile
     with tempfile.TemporaryDirectory() as d:
@@ -482,15 +473,13 @@ def test_incremental_lsh_verify_touches_only_candidate_docs(spark):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, fit_lsh_dedup_index, incremental_lsh_dedup,
-        load_lsh_dedup_index, portable_band_hash, save_lsh_dedup_index)
+        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
+        save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    kw = dict(k=3, n_hashes=32, bands=8, threshold=0.3,
-              pair_family=fam, band_hash=portable_band_hash)
+    kw = dict(k=3, n_hashes=32, bands=8, threshold=0.3)
 
     # mode 1: no postings -> verify re-shingles candidate docs only.
     # Since round 11 the BATCH side is also an explode_outer (the
@@ -529,8 +518,7 @@ def test_incremental_lsh_verify_touches_only_candidate_docs(spark):
     with tempfile.TemporaryDirectory() as d:
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text", k=3, n_hashes=32,
-                                bands=8, pair_family=fam,
-                                band_hash=portable_band_hash), f"{d}/lsh")
+                                bands=8), f"{d}/lsh")
         loaded = load_lsh_dedup_index(spark, f"{d}/lsh")
         served = incremental_lsh_dedup(None, batch, "doc_id", "text",
                                        index=loaded, **kw)
@@ -557,16 +545,13 @@ def test_lsh_index_delete_suppresses_and_is_broadcast(spark):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, delete_from_lsh_dedup_index,
-        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
-        portable_band_hash, save_lsh_dedup_index)
+        delete_from_lsh_dedup_index, fit_lsh_dedup_index,
+        incremental_lsh_dedup, load_lsh_dedup_index, save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    kw = dict(k=3, n_hashes=32, bands=8, threshold=0.3,
-              pair_family=fam, band_hash=portable_band_hash)
+    kw = dict(k=3, n_hashes=32, bands=8, threshold=0.3)
 
     def rows(out):
         return {(r.id_new, r.id_existing, round(r.jaccard, 9))
@@ -575,8 +560,7 @@ def test_lsh_index_delete_suppresses_and_is_broadcast(spark):
     with tempfile.TemporaryDirectory() as d:
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text", k=3, n_hashes=32,
-                                bands=8, pair_family=fam,
-                                band_hash=portable_band_hash), f"{d}/lsh")
+                                bands=8), f"{d}/lsh")
         base = rows(incremental_lsh_dedup(
             None, batch, "doc_id", "text",
             index=load_lsh_dedup_index(spark, f"{d}/lsh"), **kw))
@@ -607,17 +591,14 @@ def test_lsh_index_compact_equals_rebuild(spark):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, compact_lsh_dedup_index,
-        delete_from_lsh_dedup_index, fit_lsh_dedup_index,
-        incremental_lsh_dedup, load_lsh_dedup_index, portable_band_hash,
+        compact_lsh_dedup_index, delete_from_lsh_dedup_index,
+        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
         save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    fit_kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-                  band_hash=portable_band_hash)
+    fit_kw = dict(k=3, n_hashes=32, bands=8)
     kw = dict(threshold=0.3, **fit_kw)
 
     def rows(out):
@@ -660,17 +641,14 @@ def test_lsh_partitioned_entries_prunes_probe_scan(spark):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        ENTRIES_PBUCKET, PortableMinhashFamily, append_lsh_dedup_index,
-        compact_lsh_dedup_index, delete_from_lsh_dedup_index,
-        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
-        portable_band_hash, save_lsh_dedup_index)
+        ENTRIES_PBUCKET, append_lsh_dedup_index, compact_lsh_dedup_index,
+        delete_from_lsh_dedup_index, fit_lsh_dedup_index,
+        incremental_lsh_dedup, load_lsh_dedup_index, save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    fit_kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-                  band_hash=portable_band_hash)
+    fit_kw = dict(k=3, n_hashes=32, bands=8)
     kw = dict(threshold=0.3, **fit_kw)
 
     def rows(out):
@@ -732,16 +710,14 @@ def test_repartition_entries_migrates_layout(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        ENTRIES_PBUCKET, PortableMinhashFamily, append_lsh_dedup_index,
-        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
-        portable_band_hash, repartition_entries, save_lsh_dedup_index)
+        ENTRIES_PBUCKET, append_lsh_dedup_index, fit_lsh_dedup_index,
+        incremental_lsh_dedup, load_lsh_dedup_index, repartition_entries,
+        save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    fit_kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-                  band_hash=portable_band_hash)
+    fit_kw = dict(k=3, n_hashes=32, bands=8)
     kw = dict(threshold=0.3, **fit_kw)
 
     def rows(out):
@@ -801,15 +777,13 @@ def test_lsh_save_layout_contract_guards(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, fit_lsh_dedup_index, incremental_lsh_dedup,
-        load_lsh_dedup_index, portable_band_hash, save_lsh_dedup_index)
+        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
+        save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    fit_kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-                  band_hash=portable_band_hash)
+    fit_kw = dict(k=3, n_hashes=32, bands=8)
 
     d = str(tmp_path)
     idx = fit_lsh_dedup_index(corpus, "doc_id", "text", **fit_kw)
@@ -843,17 +817,14 @@ def test_lsh_compact_to_empty_partitioned_index(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, compact_lsh_dedup_index,
-        delete_from_lsh_dedup_index, fit_lsh_dedup_index,
-        incremental_lsh_dedup, load_lsh_dedup_index, portable_band_hash,
+        compact_lsh_dedup_index, delete_from_lsh_dedup_index,
+        fit_lsh_dedup_index, incremental_lsh_dedup, load_lsh_dedup_index,
         save_lsh_dedup_index)
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    fit_kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-                  band_hash=portable_band_hash)
+    fit_kw = dict(k=3, n_hashes=32, bands=8)
 
     d = str(tmp_path)
     save_lsh_dedup_index(
@@ -882,9 +853,8 @@ def test_lsh_auto_layout_selection(spark, tmp_path, monkeypatch):
 
     import elt_gluepipeline_spark.operators.dedup as dd
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, auto_entries_partitions, fit_lsh_dedup_index,
-        incremental_lsh_dedup, load_lsh_dedup_index, portable_band_hash,
-        save_lsh_dedup_index)
+        auto_entries_partitions, fit_lsh_dedup_index, incremental_lsh_dedup,
+        load_lsh_dedup_index, save_lsh_dedup_index)
 
     # formula: below crossover -> flat; measured points land on the
     # campaign's P; discovery cap holds
@@ -894,11 +864,9 @@ def test_lsh_auto_layout_selection(spark, tmp_path, monkeypatch):
     assert auto_entries_partitions(10**12) == dd.AUTO_PARTITION_MAX
 
     docs = _inc_docs(spark)
-    fam = PortableMinhashFamily(32, seed=1)
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter(F.col("doc_id") >= 100)
-    fit_kw = dict(k=3, n_hashes=32, bands=8, pair_family=fam,
-                  band_hash=portable_band_hash)
+    fit_kw = dict(k=3, n_hashes=32, bands=8)
     idx = fit_lsh_dedup_index(corpus, "doc_id", "text", **fit_kw)
     d = str(tmp_path)
 
@@ -940,8 +908,7 @@ def test_shared_shingle_base_matches_independent(spark):
     building its own base — and the base is actually persisted, so the
     shingling HOF evaluates once, not once per consumer."""
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, minhash_lsh_pairs, portable_band_hash,
-        prefix_filter_jaccard_pairs, shingle_base_cached)
+        minhash_lsh_pairs, prefix_filter_jaccard_pairs, shingle_base_cached)
     from elt_gluepipeline_spark.operators._cache import (
         release_operator_caches)
 
@@ -950,7 +917,6 @@ def test_shared_shingle_base_matches_independent(spark):
               f"epsilon zeta eta theta iota word{i}")
          for i in range(40)] + [(100, "a b")],  # <3 shingles edge case
         "doc_id long, text string")
-    fam = PortableMinhashFamily(32, seed=1)
 
     def pairset(df):
         return {(r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect()}
@@ -958,8 +924,7 @@ def test_shared_shingle_base_matches_independent(spark):
     indep_truth = pairset(prefix_filter_jaccard_pairs(
         docs, "doc_id", "text", k=3, threshold=0.3))
     indep_found = pairset(minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, n_hashes=32, bands=8, threshold=0.3,
-        pair_family=fam, band_hash=portable_band_hash))
+        docs, "doc_id", "text", k=3, n_hashes=32, bands=8, threshold=0.3))
     release_operator_caches()
 
     base = shingle_base_cached(docs, "doc_id", "text", k=3)
@@ -968,8 +933,7 @@ def test_shared_shingle_base_matches_independent(spark):
     shared_truth = pairset(prefix_filter_jaccard_pairs(
         docs, "doc_id", "text", k=3, threshold=0.3, base=base))
     shared_found = pairset(minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, n_hashes=32, bands=8, threshold=0.3,
-        pair_family=fam, band_hash=portable_band_hash, base=base))
+        docs, "doc_id", "text", k=3, n_hashes=32, bands=8, threshold=0.3, base=base))
     release_operator_caches()
 
     assert shared_truth == indep_truth
@@ -1019,16 +983,14 @@ def test_dedup_argument_checks_raise_value_error(spark):
     """Argument checks raise ValueError, which ``python -O`` keeps
     (it strips asserts): a band count that does not divide n_hashes on
     all three LSH entry points, a non-positive threshold on the
-    inverted-index join, a minhash family of the wrong width, a Hamming
-    band split that does not fit, a PQ subspace count that does not
+    inverted-index join, a Hamming band split that does not fit, a PQ subspace count that does not
     divide the dimension, and IVFADC serving without coarse cells."""
     import pytest
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, blocked_jaccard_pairs, fit_lsh_dedup_index,
-        hamming_banded_pairs, incremental_lsh_dedup, minhash_lsh_pairs,
-        minhash_signatures, shingle_base)
+        blocked_jaccard_pairs, fit_lsh_dedup_index, hamming_banded_pairs,
+        incremental_lsh_dedup, minhash_lsh_pairs)
     from elt_gluepipeline_spark.operators.similarity import (
         fit_pq_artifact, ivf_pq_topk_serve)
 
@@ -1048,10 +1010,6 @@ def test_dedup_argument_checks_raise_value_error(spark):
         with pytest.raises(ValueError, match="threshold > 0"):
             blocked_jaccard_pairs(docs, "doc_id", "text", [F.lit(1)],
                                   threshold=t)
-    base = shingle_base(docs, "doc_id", "text", [], k=3)
-    with pytest.raises(ValueError, match="pair_family"):
-        minhash_signatures(base, n_hashes=32,
-                           pair_family=PortableMinhashFamily(16, seed=1))
     fps = spark.createDataFrame([(1, 5), (2, 7)], "id long, h long")
     for bits, bands in ((56, 5), (64, 4), (0, 4)):
         with pytest.raises(ValueError, match="bands dividing bits"):
@@ -1063,3 +1021,36 @@ def test_dedup_argument_checks_raise_value_error(spark):
     flat = fit_pq_artifact(vecs, m=1, k=2)
     with pytest.raises(ValueError, match="n_cells"):
         ivf_pq_topk_serve(vecs, vecs, 1, flat)
+
+
+@pytest.mark.parametrize("case", [
+    "salted_join_right", "salted_join_no_hashable_column",
+    "zorder_one_column", "zorder_too_wide", "chunk_overlap_ge_size",
+    "chunk_negative_overlap", "bloom_partial_word"])
+def test_argument_checks_raise_value_error(spark, case):
+    """The skew, layout, chunking and Bloom operators check their
+    arguments with ValueError, which ``python -O`` keeps."""
+    from pyspark.sql import functions as F
+
+    from elt_gluepipeline_spark.operators.bloom import bloom_fit
+    from elt_gluepipeline_spark.operators.skew import salted_join
+    from elt_gluepipeline_spark.operators.textstats import chunk_documents
+    from elt_gluepipeline_spark.sources.writers import zorder_key
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    maps = spark.createDataFrame([({"a": 1},)], "k map<string,int>")
+    calls = {
+        "salted_join_right": lambda: salted_join(docs, docs, ["doc_id"],
+                                                 how="right"),
+        "salted_join_no_hashable_column": lambda: salted_join(maps, maps,
+                                                              ["k"]),
+        "zorder_one_column": lambda: zorder_key("doc_id"),
+        "zorder_too_wide": lambda: zorder_key(*[F.lit(1)] * 4, bits=16),
+        "chunk_overlap_ge_size": lambda: chunk_documents(
+            docs, "doc_id", "text", size=4, overlap=4),
+        "chunk_negative_overlap": lambda: chunk_documents(
+            docs, "doc_id", "text", size=4, overlap=-1),
+        "bloom_partial_word": lambda: bloom_fit(docs, "doc_id", m_bits=100),
+    }
+    with pytest.raises(ValueError):
+        calls[case]()

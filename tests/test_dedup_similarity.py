@@ -4,7 +4,7 @@ from elt_gluepipeline_spark.operators.dedup import (blocked_jaccard_pairs,
                                                     exact_dedupe,
                                                     minhash_lsh_pairs,
                                                     minhash_signatures,
-                                                    shingle_base, simhash64,
+                                                    shingle_base,
                                                     simhash_table,
                                                     word_shingles)
 from elt_gluepipeline_spark.operators.similarity import (cosine,
@@ -54,18 +54,6 @@ def test_blocked_jaccard_finds_planted_near_dup(spark):
     assert 0.3 <= pairs[0].jaccard <= 1.0
 
 
-def test_simhash_table_matches_expression_version(spark):
-    """The scalable explode+agg plan and the per-row expression fold
-    must produce identical hashes."""
-    docs = _docs(spark)
-    via_table = {r.doc_id: r.simhash
-                 for r in simhash_table(docs, "doc_id", "text").collect()}
-    via_expr = {r.doc_id: r.h
-                for r in docs.select("doc_id",
-                                     simhash64(F.col("text")).alias("h")).collect()}
-    assert via_table == via_expr
-
-
 def test_minhash_signatures_shape(spark):
     base = shingle_base(_docs(spark), "doc_id", "text", [], k=2)
     sig = minhash_signatures(base, n_hashes=8)
@@ -73,14 +61,14 @@ def test_minhash_signatures_shape(spark):
 
 
 def test_simhash_similar_texts_close(spark):
-    df = _docs(spark).select("doc_id", simhash64(F.col("text")).alias("h"))
-    h = {r.doc_id: r.h for r in df.collect()}
+    h = {r.doc_id: r.simhash
+         for r in simhash_table(_docs(spark), "doc_id", "text").collect()}
     def hamming(a, b):
-        return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
+        return bin(a ^ b).count("1")
     assert hamming(h[1], h[2]) < hamming(h[1], h[3])
     # identical text → identical hash
     df2 = spark.createDataFrame([(9, NEAR_A, "en")], "doc_id long, text string, lang string")
-    h9 = df2.select(simhash64(F.col("text")).alias("h")).collect()[0].h
+    h9 = simhash_table(df2, "doc_id", "text").collect()[0].simhash
     assert h9 == h[1]
 
 
@@ -104,6 +92,18 @@ def test_lsh_ann_subset_of_bruteforce_schema(spark):
     assert out.columns == ["query_id", "neighbor_id", "cosine"]
     for r in out.collect():  # only same-bucket candidates, never self
         assert r.neighbor_id != 1
+
+
+def test_lsh_ann_rejects_vectors_narrower_than_planes(spark):
+    from pyspark.errors import PySparkException
+    import pytest
+
+    rows = [(i, [float((i * j) % 7) - 3.0 for j in range(32)])
+            for i in range(4)]
+    v = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(PySparkException, match="hyperplane width 64"):
+        lsh_ann(v.filter(F.col("vec_id") == 1), v, k=2, dim=64,
+                n_planes=6).collect()
 
 
 def test_cosine_expression(spark):
@@ -151,8 +151,6 @@ def test_simhash_portable_matches_python_reference(spark):
     import hashlib
     import re
 
-    from elt_gluepipeline_spark.operators.dedup import portable_hash60
-
     texts = {1: "the quick brown fox jumps", 2: "hello world hello again"}
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
 
@@ -165,14 +163,11 @@ def test_simhash_portable_matches_python_reference(spark):
         return sum(1 << b for b in range(60) if votes[b] > 0)
 
     got = {r.doc_id: r.simhash
-           for r in simhash_table(df, "doc_id", "text",
-                                  hash_col=portable_hash60, bits=60).collect()}
+           for r in simhash_table(df, "doc_id", "text").collect()}
     assert got == {i: py_simhash(t) for i, t in texts.items()}
 
 
 def test_minhash_portable_finds_near_dups(spark):
-    from elt_gluepipeline_spark.operators.dedup import (
-        PortableMinhashFamily, portable_band_hash)
     # identical shingle sets → identical signatures → guaranteed band
     # collision (a 0.7-jaccard pair can legitimately miss all bands:
     # P(miss) ≈ (1 - 0.7^4)^8 ≈ 10%, deterministic per family seed)
@@ -182,9 +177,7 @@ def test_minhash_portable_finds_near_dups(spark):
          (3, "completely different words with no overlap here")],
         "doc_id long, text string")
     out = minhash_lsh_pairs(df, "doc_id", "text", k=3, n_hashes=32, bands=8,
-                            threshold=0.3,
-                            pair_family=PortableMinhashFamily(32, seed=1),
-                            band_hash=portable_band_hash).collect()
+                            threshold=0.3).collect()
     pairs = {(r.id_a, r.id_b): r.jaccard for r in out}
     assert set(pairs) == {(1, 2)}
     assert pairs[(1, 2)] == 1.0

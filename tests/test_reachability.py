@@ -59,7 +59,6 @@ KEPT = {
     "append_lsh_dedup_index": "LSH index append writer of the crash harness",
     "compact_lsh_dedup_index": "LSH index compaction writer of the crash "
                                "harness",
-    "simhash64": "reference fold the simhash table operator is tested against",
     "_row": "pure-Python row generator the seeded generator is tested against",
 }
 

@@ -31,9 +31,9 @@ from pyspark.sql.readwriter import DataFrameWriter
 import elt_gluepipeline_spark.streaming.upsert as upsert
 from elt_gluepipeline_spark.functions.deterministic import dec
 from elt_gluepipeline_spark.operators.dedup import (
-    PortableMinhashFamily, append_lsh_dedup_index, compact_lsh_dedup_index,
-    delete_from_lsh_dedup_index, fit_lsh_dedup_index, portable_band_hash,
-    repartition_entries, save_lsh_dedup_index)
+    append_lsh_dedup_index, compact_lsh_dedup_index,
+    delete_from_lsh_dedup_index, fit_lsh_dedup_index, repartition_entries,
+    save_lsh_dedup_index)
 from elt_gluepipeline_spark.sources.table import Table
 from elt_gluepipeline_spark.sources.writers import compact_parquet
 from elt_gluepipeline_spark.streaming.bucketed_upsert import (
@@ -110,9 +110,7 @@ def _docs(spark, lo=0, hi=40):
 
 def _fit(spark, lo, hi):
     return fit_lsh_dedup_index(
-        _docs(spark, lo, hi), "doc_id", "text", k=3, n_hashes=32, bands=8,
-        pair_family=PortableMinhashFamily(32, seed=1),
-        band_hash=portable_band_hash)
+        _docs(spark, lo, hi), "doc_id", "text", k=3, n_hashes=32, bands=8)
 
 
 def _index(spark, d):

@@ -2,7 +2,7 @@ from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.textstats import (bpe_ish_tokens,
                                                         fingerprint_md5,
-                                                        fingerprint_rolling,
+                                                        fingerprint_tokens,
                                                         langid_en_heuristic,
                                                         n_tokens,
                                                         stopword_ratio)
@@ -36,11 +36,11 @@ def test_fingerprint_md5_normalizes_whitespace(spark):
     assert a == b
 
 
-def test_fingerprint_rolling_order_sensitive(spark):
-    a = _one(spark, fingerprint_rolling(F.col("text")), "a b c")
-    b = _one(spark, fingerprint_rolling(F.col("text")), "c b a")
-    assert a != b
-    assert a == _one(spark, fingerprint_rolling(F.col("text")), "a b c")
+def test_fingerprint_tokens_order_and_case_sensitive(spark):
+    a = _one(spark, fingerprint_tokens(F.col("text")), "a b c")
+    assert a != _one(spark, fingerprint_tokens(F.col("text")), "c b a")
+    assert a != _one(spark, fingerprint_tokens(F.col("text")), "A b c")
+    assert a == _one(spark, fingerprint_tokens(F.col("text")), " a  b\tc ")
 
 
 def test_bpe_ish_tokens(spark):
