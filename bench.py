@@ -80,7 +80,7 @@ def main() -> None:
         release_operator_caches)
 
     # SPARK_GRAFT_BENCH_RUNS: best-of-N per query (default 2; set 1 for
-    # large one-off scale points like BENCH_SF1 where a second pass
+    # large one-off scale points like sf1, where a second pass
     # doubles hours for little signal)
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     cal_start = calibration_sec(spark)

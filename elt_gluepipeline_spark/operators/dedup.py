@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..sources.table import Table
 from ..sources.writers import bucket_of
-from . import ensure_min_partitions
 from ._cache import register_cache
 
 
@@ -99,8 +98,12 @@ def shingle_base(df: DataFrame, id_col: str, text_col: str,
       the arrays once computed. Operators that build their own base
       persist it; a caller passing ``base=`` manages its
       materialization (q100 checkpoints one base for three passes).
+
+    The shingling runs on the input's partitions; a narrow input is
+    fanned out at its read (``read_table(spread=True)``), and Catalyst
+    pushes filters and column pruning below that repartition, so the
+    scan reads the same either way.
     """
-    df = ensure_min_partitions(df)
     return df.filter(has_min_tokens(F.col(text_col), k)).select(
         F.col(id_col).alias("doc_id"),
         word_shingles(F.col(text_col), k).alias("shingles"),
@@ -770,9 +773,10 @@ def simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     projection), aggregate per-bit sign votes as plain SUMs (partial
     map-side aggregation), then assemble the ``SIMHASH_BITS`` bits in a
     final projection. Returns (id_col, simhash). No interpreted
-    higher-order functions anywhere.
+    higher-order functions anywhere. A narrow input is fanned out at its
+    read (``read_table(spread=True)``).
     """
-    toks = ensure_min_partitions(df).select(
+    toks = df.select(
         F.col(id_col),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("t"))
     h = toks.select(id_col, portable_hash60(F.col("t")).alias("h"))
@@ -955,6 +959,9 @@ def cross_corpus_containment(corpus: DataFrame, bench: DataFrame, *,
     set, containment undercounts pairs that share only ultra-common
     shingles — acceptable for decontamination (those aren't leaks), and
     it caps the join fan-out of a pathological hot shingle. None = exact.
+
+    Narrow inputs are fanned out at their read
+    (``read_table(spread=True)``), never here.
     """
     _check_threshold(threshold)
     # the bench side feeds TWO consumers (sizes + inverted index) and is
@@ -967,7 +974,7 @@ def cross_corpus_containment(corpus: DataFrame, bench: DataFrame, *,
     # so the corpus side also skips shingle_base's has_min_tokens
     # filter, a second regex split per corpus row (measured slower):
     # an empty array emits one null-s row that no join on "s" matches.
-    c = ensure_min_partitions(corpus).select(
+    c = corpus.select(
         F.col(corpus_id).alias("corpus_id"),
         word_shingles(F.col(corpus_text), k).alias("sh"))
     c_inv = c.select("corpus_id", F.explode_outer("sh").alias("s"))

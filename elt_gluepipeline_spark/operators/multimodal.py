@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, BooleanType, LongType, StringType,
                                StructField, StructType)
 
-from . import ensure_min_partitions
-
 # Contract for a multimodal asset table.
 ASSET_SCHEMA = StructType([
     StructField("asset_id", LongType(), False),
@@ -84,14 +82,12 @@ def _decode_stub(payload: bytes) -> int:
 def extract_features(assets: DataFrame) -> DataFrame:
     """Map-only feature extraction via mapInPandas (Arrow batches).
 
-    No shuffle at scale: each partition's assets are decoded in place
-    (ensure_min_partitions only fires on under-split local inputs).
+    No shuffle: each partition's assets are decoded in place; a narrow
+    input is fanned out at its read (``read_table(spread=True)``).
     Batch size is governed by spark.sql.execution.arrow.maxRecordsPerBatch;
     keep payload partitions ≲128 MB via the reader settings so a batch
     of decoded frames fits executor memory at 100 TB scale.
     """
-    assets = ensure_min_partitions(assets)
-
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pd.DataFrame({
@@ -1826,14 +1822,13 @@ def media_probe(assets: DataFrame) -> DataFrame:
     duration, mean amplitude); every other format degrades to the
     honest stub (decoded=false, byte stats only). Map-only
     mapInPandas, zero shuffle; per-asset work is bounded by payload
-    size.
+    size. A narrow input is fanned out at its read
+    (``read_table(spread=True)``).
 
     mean_signal: mean luminance (BMP) / mean amplitude (WAV) as a
     fixed 4-decimal string — engine-stable for oracle comparison.
     """
     import numpy as np
-
-    assets = ensure_min_partitions(assets)
 
     def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -2019,7 +2014,9 @@ def dhash_images(assets: DataFrame) -> DataFrame:
                 _, _, _, gray = decode_bmp(bytes(p))
                 bits = (gray[:, :-1] < gray[:, 1:]).astype(np.int64)
                 n = bits.size
-                assert n <= 63, f"dhash needs H*(W-1) <= 63 bits, got {n}"
+                if n > 63:
+                    raise ValueError(
+                        f"dhash needs H*(W-1) <= 63 bits, got {n}")
                 weights = np.left_shift(
                     np.int64(1), np.arange(n, dtype=np.int64))
                 ids.append(int(aid))

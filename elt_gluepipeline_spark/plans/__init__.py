@@ -52,14 +52,18 @@ class QuerySpec:
 # q134, q135, q141, q144, q151, q190, q200-q204), the near-dup LSH
 # and shingle-base callers (q17, q18, q41, q170, q171, q189, q199),
 # q63, q123 and q140, the vector-quantizer and cosine-search callers
-# (q19, q20, q31, q67, q76, q77, q81, q82, q141, q153, q184, q202),
+# (q20, q31, q67, q76, q77, q81, q82, q141, q153, q184, q202),
 # q11 (calls drop_test_rows), q58 (cross_corpus_containment), the
-# shared HLL estimator's q131 and q136, q21 and q38 (md5 SimHash and
-# token-sequence fingerprint), plus the rest of the previous
+# shared HLL estimator's q136, q21 and q38 (md5 SimHash and
+# token-sequence fingerprint), q155, q175 and q181 (the IRLS and ridge
+# fits, fanned out at their read), plus the rest of the previous
 # head. Each group below is a driver record of its queries, taken while
 # they were in the head; tail entries still run everywhere else
 # (pytest, bench, check_correctness).
 _DEPRIORITIZED = (
+    # --- rotated out for q175, q181 ---
+    "q19_knn_cosine",
+    "q131_hll_portable",
     # --- rotated out for q21, q38 ---
     "q152_repeated_spans",
     "q162_tfidf_cosine",
@@ -75,7 +79,6 @@ _DEPRIORITIZED = (
     "q168_audio_stats",
     "q173_crossdoc_dedup",
     "q174_pii_redact",
-    "q175_logistic_fit",
     "q176_embed_standardize",
     "q177_winnowing",
     # --- rotated out for q17, q189, q199 ---
@@ -86,7 +89,6 @@ _DEPRIORITIZED = (
     "q178_dsir_weights",
     "q179_js_drift",
     "q180_quantile_sketch",
-    "q181_quality_filter",
     # --- rotated out for q18, q41, q63 ---
     "q182_stream_quantiles",
     "q183_stream_decontaminate",

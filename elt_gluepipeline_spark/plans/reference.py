@@ -423,8 +423,7 @@ GROUP BY dim.year, dim.is_weekend
 # --------------------------------------------------------------------------
 
 def q09_discount_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import ensure_min_partitions
-    li = ensure_min_partitions(read_table(spark, sf_dir, "lineitem"))
+    li = read_table(spark, sf_dir, "lineitem", spread=True)
     net = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     # Two-level aggregation instead of COUNT(DISTINCT)-alongside-sums:
     # a mixed distinct/non-distinct agg plans as an Expand that doubles
@@ -793,11 +792,10 @@ def _det_bounds(prefix: str) -> list:
 
 
 def q32_threshold_severity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import ensure_min_partitions
     # decimal stat aggregates + severity when-chains are CPU-heavy per
     # row; a small single-row-group parquet input would serialize them
     # on one core (no-op at real scale, where splits >= parallelism)
-    li = ensure_min_partitions(read_table(spark, sf_dir, "lineitem"))
+    li = read_table(spark, sf_dir, "lineitem", spread=True)
     # ONE aggregation computes both metrics' stats (single scan+shuffle,
     # not one per metric column)
     thresholds = (li.groupBy("l_returnflag")

@@ -163,7 +163,7 @@ def _q18_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by q18 and its connected-components consumers q56, q59,
     q149, q172 and q196. ``blocked_jaccard_pairs`` persists its own
     shingle base through the operator-cache registry."""
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     blocks = [F.col("lang"),
               F.floor(n_tokens(F.col("text")) / 10).cast("long")]
     return blocked_jaccard_pairs(docs, "doc_id", "text", blocks,
@@ -415,7 +415,7 @@ WHERE rn <= 3
 # --------------------------------------------------------------------------
 
 def q22_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     assets = attach_payload(docs, "doc_id", "text")
     feats = extract_features(assets)
     return feats.select("asset_id", "modality", "byte_len")
@@ -471,7 +471,7 @@ def q115_media_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    docs = read_table(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents", spread=True).select("doc_id")
 
     def _synth(batches):
         for pdf in batches:
@@ -542,7 +542,7 @@ def q132_png_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every 3rd doc: 3 is coprime to the did%2 (color type) and
     # did%5 (filter type) cycles, so all combinations still appear at
     # a third of the per-row Python encode/decode cost
-    docs = (read_table(spark, sf_dir, "documents").select("doc_id")
+    docs = (read_table(spark, sf_dir, "documents", spread=True).select("doc_id")
             .filter(F.col("doc_id") % 3 == 0))
 
     def _synth(batches):
@@ -822,7 +822,7 @@ def q142_gif_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import (ASSET_SCHEMA, encode_gif,
                                         media_probe)
 
-    docs = (read_table(spark, sf_dir, "documents").select("doc_id")
+    docs = (read_table(spark, sf_dir, "documents", spread=True).select("doc_id")
             .filter(F.col("doc_id") % 3 == 2))
     pal = [(i, i, i) for i in range(256)]
 
@@ -902,9 +902,9 @@ def q145_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q145_sql() -> str:
     from ..operators.graph import pagerank_sql
-    # MATERIALIZED reused CTEs: inlined, DuckDB re-derived the basket
-    # self-join per unrolled pagerank iteration (GATE_SF1 oracle
-    # timeout at 6M lineitem; 7 s materialized)
+    # MATERIALIZED reused CTEs: inlined, DuckDB re-derives the basket
+    # self-join per unrolled pagerank iteration (past the oracle budget
+    # at 6M lineitem; 7 s materialized)
     return f"""
 WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
             WHERE l_shipdate >= DATE '1997-01-01'),
@@ -936,9 +936,10 @@ tok AS (
            AS n_tokens
   FROM documents),
 -- MATERIALIZED: the recursive greedy scan below joins `ordered` once
--- per row rank; inlined, DuckDB recomputed the md5 ordering keys for
--- all docs on every iteration (GATE_SF1 oracle timeout). Materializing
--- makes each iteration a cheap frontier-probe (18 s at 50k docs).
+-- per row rank; inlined, DuckDB recomputes the md5 ordering keys for
+-- all docs on every iteration (past the oracle budget at 50k docs).
+-- Materializing makes each iteration a cheap frontier-probe (18 s at
+-- 50k docs).
 hashes AS MATERIALIZED (
   SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)
@@ -1490,7 +1491,7 @@ _Q41_LSH_KWARGS = dict(k=3, n_hashes=32, bands=8, threshold=0.3)
 
 
 def q41_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     return minhash_lsh_pairs(docs, "doc_id", "text", **_Q41_LSH_KWARGS)
 
 
@@ -1568,7 +1569,7 @@ WHERE cm.n_common / (na.n + nb.n - cm.n_common) >= 0.3
 def q199_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import fit_lsh_dedup_index, incremental_lsh_dedup
 
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     index = fit_lsh_dedup_index(corpus, "doc_id", "text",
@@ -1643,7 +1644,7 @@ def q200_lsh_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    load_lsh_dedup_index,
                                    save_lsh_dedup_index)
 
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     path = scratch_dir(spark, sf_dir, "lsh200")
@@ -1676,7 +1677,7 @@ def q204_lsh_pruned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    load_lsh_dedup_index,
                                    save_lsh_dedup_index)
 
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     path = scratch_dir(spark, sf_dir, "lsh204")
@@ -1713,7 +1714,7 @@ def q203_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    load_lsh_dedup_index,
                                    save_lsh_dedup_index)
 
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     path = scratch_dir(spark, sf_dir, "lsh203")
@@ -1809,7 +1810,7 @@ FROM latest WHERE rn = 1 AND op <> 'D'
 # --------------------------------------------------------------------------
 
 def q40_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     return simhash_table(docs, "doc_id", "text")
 
 
@@ -2683,7 +2684,7 @@ FROM documents
 
 def q58_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import cross_corpus_containment
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     bench = docs.filter(F.col("doc_id") % 10 == 0)
     return cross_corpus_containment(corpus, bench, k=3, threshold=0.5)
@@ -3798,7 +3799,7 @@ def q103_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import token_budget_shards
     from ..operators.windows import dedupe_keep_latest
 
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     t = F.col("text")
     base = docs.select("doc_id", "text",
                        tokens(t).alias("_tok"),
@@ -4054,7 +4055,9 @@ def q100_incremental_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # new-docs side all reuse the same frame (previously the
     # composite shingled the corpus twice and the new batch once more
     # — the bench-ceiling constant).
-    base_all = (shingle_base(docs, "doc_id", "text", blocks, k=3)
+    base_all = (shingle_base(
+                    read_table(spark, sf_dir, "documents", spread=True),
+                    "doc_id", "text", blocks, k=3)
                 .withColumn("_new", F.col("doc_id") % 2 == 1)
                 .localCheckpoint(eager=False))
     base_evens = base_all.filter(~F.col("_new")).drop("_new")
@@ -4786,14 +4789,10 @@ WHERE d.doc_id % 10 = 0
 def q155_ridge_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.deterministic import rnd0
 
-    li = read_table(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem", spread=True)
     d = li.select(F.col("l_quantity").cast("double").alias("x1"),
                   F.col("l_discount").cast("double").alias("x2"),
                   F.col("l_extendedprice").cast("double").alias("y"))
-    # spread the per-row decimal work across cores even when the
-    # input is one parquet file = one partition (same rationale as
-    # _logistic_irls2; partition-order-safe decimal sums)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
     DEC = "decimal(38,10)"
 
     def ds(c):
@@ -4967,9 +4966,9 @@ def q157_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q157_SQL = """
--- MATERIALIZED reused CTEs: inlined, DuckDB re-derived the basket
--- edge set for every downstream reference (GATE_SF1 oracle timeout
--- at 6M lineitem; 5 s materialized).
+-- MATERIALIZED reused CTEs: inlined, DuckDB re-derives the basket
+-- edge set for every downstream reference (past the oracle budget at
+-- 6M lineitem; 5 s materialized).
 WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
             WHERE l_shipdate >= DATE '1997-01-01'),
 e AS MATERIALIZED (
@@ -5784,7 +5783,7 @@ FROM px GROUP BY asset_id, r // 2, c // 2
 def q170_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import prefix_filter_jaccard_pairs
 
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     pairs = prefix_filter_jaccard_pairs(docs, "doc_id", "text",
                                         k=3, threshold=0.3)
     return pairs.select("id_a", "id_b",
@@ -5819,9 +5818,9 @@ base AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM pfx a JOIN pfx b ON a.s = b.s AND a.doc_id < b.doc_id
 ), common AS (
-  -- candidate-RESTRICTED intersection count (GATE_SF1 fix): the
-  -- unrestricted postings self-join is sum df(s)^2 and blew the
-  -- oracle budget at 50k docs; fanning cand over side-A postings
+  -- candidate-RESTRICTED intersection count: the unrestricted
+  -- postings self-join is sum df(s)^2 and exceeds the oracle budget
+  -- at 50k docs; fanning cand over side-A postings
   -- bounds work by |cand| * avg-doc-shingles. ver already joined
   -- cand, so the output is unchanged.
   SELECT cd.id_a, cd.id_b, COUNT(*) AS c
@@ -5853,7 +5852,7 @@ def q171_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import (prefix_filter_jaccard_pairs,
                                    shingle_base_cached)
 
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     # ONE persisted shingle pass feeds both sides: the exact truth join
     # and the LSH candidate/verify pipeline consume identical k=3
     # shingle sets, and unshared they each re-ran the interpreted
@@ -5946,8 +5945,11 @@ def q189_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(_Q189_SAMPLE_N))
     # shared shingle pass across the truth and LSH sides (the q171
     # optimization; anchor restriction composes unchanged — it semi-
-    # joins candidate/prefix sides, never the base)
-    base = shingle_base_cached(docs, "doc_id", "text", k=3)
+    # joins candidate/prefix sides, never the base). Only the shingle
+    # pass reads the table spread; the anchor sample stays one stage.
+    base = shingle_base_cached(
+        read_table(spark, sf_dir, "documents", spread=True),
+        "doc_id", "text", k=3)
     truth = prefix_filter_jaccard_pairs(docs, "doc_id", "text",
                                         k=3, threshold=0.3,
                                         anchor_ids=anchors, base=base)
@@ -6448,16 +6450,12 @@ def _logistic_irls2(d: DataFrame) -> DataFrame:
     """Two declarative IRLS iterations over (x1, x2, y) — returns ONE
     row (n_rows, b0, b1, b2, mean_p); zero rows on empty input. Each
     iteration is one scan + one scalar broadcast, so iteration count
-    (not data) bounds plan depth at any corpus size."""
+    (not data) bounds plan depth at any corpus size. Callers read a
+    narrow input with ``spread=True``: the iteration-2 stage's per-row
+    round/exp chains measured 10.8 s on one partition vs ~1 s spread at
+    sf0.1. Partition-order-safe: every sum is rounded-then-DECIMAL."""
     from ..functions.deterministic import rnd0
 
-    # parallelize the per-row arithmetic (round/exp chains + decimal
-    # conversions) regardless of the input's FILE layout: a small-SF
-    # corpus arrives as one parquet file = one partition, and the
-    # heavy iteration-2 stage would run on one core (measured 10.8s
-    # single-partition vs ~1s spread at sf0.1). Partition-order-safe:
-    # every sum is rounded-then-DECIMAL by construction.
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
     ds = _irls_ds
     x1, x2, y = F.col("x1"), F.col("x2"), F.col("y")
     s = d.agg(F.count(F.lit(1)).cast("double").alias("n"),
@@ -6499,7 +6497,7 @@ def _logistic_irls2(d: DataFrame) -> DataFrame:
 
 
 def q175_logistic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem", spread=True)
     d = li.select(
         (F.col("l_quantity").cast("double") / 50.0).alias("x1"),
         (F.col("l_discount").cast("double") * 10.0).alias("x2"),
@@ -7348,7 +7346,7 @@ GROUP BY source
 # --------------------------------------------------------------------------
 
 def q181_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     t = F.col("text")
     base = docs.select("doc_id", "lang",
                        tokens(t).alias("_tok"),

@@ -1,9 +1,8 @@
 """The driver keeps only the LAST ~2 KB of bench stdout and parses the
-final line — BENCH_r05/r06 came back `parsed: null` because the single
-full-map line outgrew that window. The contract is now: chunked
-per-query lines first (complete record), then ONE compact summary line
-LAST that always fits in the tail window. Breaking either half silently
-voids the round's BENCH record, so pin both."""
+final line; a single full-map line outgrows that window and parses as
+null. The contract: chunked per-query lines first (complete record),
+then ONE compact summary line LAST that always fits in the tail window.
+Breaking either half silently voids the bench record, so pin both."""
 
 import json
 import os
@@ -12,7 +11,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# the driver's tail capture held ~1.9 KB in BENCH_r06; stay well under
+# the driver's tail capture holds ~1.9 KB; stay well under
 TAIL_WINDOW_BYTES = 1600
 
 
@@ -61,7 +60,7 @@ def test_bench_summary_line_last_and_tail_sized(spark):
     cal = rec["calibration_sec"]
     assert cal["start"] > 0 and cal["end"] > 0
 
-    # artifact warm/cold stamp (VERDICT r9): the four persisted
+    # artifact warm/cold stamp: the four persisted
     # families resolved at pre-warm, and zero cold fits inside the
     # timed loop (pre-warm + dataset-keyed memo make timed refits
     # impossible in a single-dataset bench run)

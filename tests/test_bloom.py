@@ -123,7 +123,7 @@ def test_hll_duplicates_do_not_inflate(spark):
 
 
 def test_bloom_and_cms_keep_null_key_probes(spark):
-    """ADVICE r4: the re-attach join must not drop NULL-key probe rows
+    """The re-attach join must not drop NULL-key probe rows
     (inner equi-join on key never matches NULL). NULL keys hash like a
     missing concat_ws element — same in DuckDB — and get a real flag."""
     from elt_gluepipeline_spark.operators.sketches import (cms_estimate,
@@ -148,7 +148,7 @@ def test_bloom_and_cms_keep_null_key_probes(spark):
 
 
 def test_hll_sql_twin_empty_input(spark):
-    """ADVICE r4: the DuckDB twin must return 0.0 (not NULL) on an
+    """The DuckDB twin must return 0.0 (not NULL) on an
     empty relation, mirroring hll_estimate's empty-sketch semantics."""
     import duckdb
 

@@ -1,4 +1,4 @@
-"""Tests for the round-6 additions: crossdoc survivor dedup (q173),
+"""Tests for crossdoc survivor dedup (q173),
 PII redaction invariants (q174), logistic IRLS fit (q175), and
 embedding standardization (q176).
 

@@ -467,9 +467,8 @@ def test_incremental_lsh_verify_touches_only_candidate_docs(spark):
     side of the exact-Jaccard verify must be candidate-restricted — a
     LeftSemi join on the candidate id set sits BELOW the corpus-side
     shingle explode (no-postings mode) / directly above the postings
-    relation (artifact mode). Before the round-9 fix the optimized
-    plan had no LeftSemi anywhere: the full corpus's shingles were
-    exploded and shuffled into the verify join."""
+    relation (artifact mode). Without it the full corpus's shingles
+    would be exploded and shuffled into the verify join."""
     from pyspark.sql import functions as F
 
     from elt_gluepipeline_spark.operators.dedup import (
@@ -482,15 +481,13 @@ def test_incremental_lsh_verify_touches_only_candidate_docs(spark):
     kw = dict(k=3, n_hashes=32, bands=8, threshold=0.3)
 
     # mode 1: no postings -> verify re-shingles candidate docs only.
-    # Since round 11 the BATCH side is also an explode_outer (the
-    # single-evaluation shingling idiom), so the plan has several
-    # outer=true Generates: the batch one has no join below it at all,
-    # while the corpus verify one must sit above the candidate-id
-    # LeftSemi. Pin: at least one outer-generate subtree carries the
-    # LeftSemi (before the round-9 fix there was NO LeftSemi anywhere
-    # — the full corpus's shingles were exploded into the verify join),
-    # and any outer generate WITHOUT one must be join-free (batch side)
-    # rather than an unrestricted corpus explode.
+    # The BATCH side is also an explode_outer (the single-evaluation
+    # shingling idiom), so the plan has several outer=true Generates:
+    # the batch one has no join below it at all, while the corpus
+    # verify one must sit above the candidate-id LeftSemi. Pin: at
+    # least one outer-generate subtree carries the LeftSemi, and any
+    # outer generate WITHOUT one must be join-free (batch side) rather
+    # than an unrestricted corpus explode.
     out = incremental_lsh_dedup(corpus, batch, "doc_id", "text", **kw)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     # an outer generate prints as "Generate explode(...), <qualifier>,
@@ -512,8 +509,8 @@ def test_incremental_lsh_verify_touches_only_candidate_docs(spark):
 
     # mode 2: stored artifact -> verify reads postings AND sizes, each
     # semi-joined to candidate ids; corpus text appears nowhere in the
-    # plan. (sizes is one row per CORPUS doc: before round 11 it was
-    # scanned unrestricted — the last per-batch linear-in-corpus term.)
+    # plan. (sizes is one row per CORPUS doc: scanned unrestricted it
+    # would be a per-batch linear-in-corpus term.)
     import tempfile
     with tempfile.TemporaryDirectory() as d:
         save_lsh_dedup_index(
@@ -843,7 +840,8 @@ def test_lsh_compact_to_empty_partitioned_index(spark, tmp_path):
 
 def test_lsh_auto_layout_selection(spark, tmp_path, monkeypatch):
     """partition_entries="auto" picks the layout from the written data
-    per the SCALE_r11 crossover: small tables stay FLAT (the partition
+    per the measured flat/partitioned crossover (1e7 rows, README
+    "Scale evidence (round 11)"): small tables stay FLAT (the partition
     overhead is all cost below the measured crossover), large ones are
     migrated in place to auto_entries_partitions()'s P through
     repartition_entries — and later appends reuse that stored P.

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.operators.dedup import (blocked_jaccard_pairs,
@@ -385,6 +386,22 @@ def test_dhash_brightness_invariant_and_exact(spark):
     got = {r.asset_id: r.dhash for r in dhash_images(assets).collect()}
     assert got[0] == expected(img)
     assert got[1] == got[0]  # brightness-shift invariance
+
+
+def test_dhash_rejects_rasters_wider_than_63_bits(spark):
+    """A 9x9 raster packs 9*8 = 72 comparison bits, which would wrap in
+    the int64 hash; the UDF raises instead of returning a wrong hash."""
+    import numpy as np
+    import pandas as pd
+
+    from elt_gluepipeline_spark.operators.multimodal import (dhash_images,
+                                                             encode_bmp)
+
+    img = np.arange(81, dtype=np.uint8).reshape(9, 9)
+    assets = spark.createDataFrame(
+        pd.DataFrame({"asset_id": [0], "payload": [encode_bmp(img)]}))
+    with pytest.raises(Exception, match=r"ValueError: dhash needs .*got 72"):
+        dhash_images(assets).collect()
 
 
 def test_sampled_recall_certifies_against_full(spark, sf_dir,

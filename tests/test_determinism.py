@@ -23,16 +23,16 @@ FLOAT_HEAVY = ["q02_clv", "q03_clv_tiered", "q07_loyalty_impact",
                # total-order window sort: per-row prefixes must not
                # depend on tie order among duplicate keys
                "q113_stock_balance",
-               # round-4 float-bearing additions: fixed-point credit
-               # sums, window share ratios, histogram interpolation,
-               # lift divisions — each must survive re-partitioning
+               # fixed-point credit sums, window share ratios,
+               # histogram interpolation, lift divisions — each must
+               # survive re-partitioning
                "q118_linear_attribution", "q120_histogram_quantiles",
                "q123_basket_affinity", "q125_share_shift",
                "q124_cohort_ltv",
-               # round-5-late float-bearing additions: Cramer-solve
-               # regressions, log-space PMI, idf-weighted dots, BM25
-               # term sums, entropy sums, within-cell cosines — all
-               # built on decimal-exact partial sums, pinned here
+               # Cramer-solve regressions, log-space PMI,
+               # idf-weighted dots, BM25 term sums, entropy sums,
+               # within-cell cosines — all built on decimal-exact
+               # partial sums, pinned here
                "q153_semdedup", "q155_ridge_fit", "q158_pmi_cooc",
                "q160_zipf_fit", "q162_tfidf_cosine", "q163_bm25",
                "q164_distinct_n"]

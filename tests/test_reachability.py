@@ -301,3 +301,14 @@ def test_every_default_is_set_by_a_caller():
                 unset.append(f"{key[0]}.{key[1]}({p})")
     assert not unset, (
         f"{len(unset)} defaulted parameters no caller or test sets: {unset}")
+
+
+def test_no_assert_statements_in_package():
+    """Argument and invariant checks raise: ``python -O`` strips an
+    ``assert``, and the input it guarded then runs on to a silently
+    wrong result."""
+    found = [f"{p.relative_to(ROOT)}:{n.lineno}"
+             for p in _files([PKG])
+             for n in ast.walk(ast.parse(p.read_text()))
+             if isinstance(n, ast.Assert)]
+    assert not found, f"assert statements in the package: {found}"

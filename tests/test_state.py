@@ -150,9 +150,9 @@ def test_compact_parquet_recovers_from_crashed_prior_swap(spark, sf_dir,
 
 
 def test_schema_cache_sees_in_place_partition_append(spark, tmp_path):
-    """ADVICE r4: appending a part file inside an existing partition
+    """Appending a part file inside an existing partition
     subdirectory does not bump the parent dir's mtime, so an mtime-only
-    cache key served a stale schema. The key now folds in a leaf-file
+    cache key would serve a stale schema. The key folds in a leaf-file
     signature, so a schema-evolving in-place append re-resolves."""
     from elt_gluepipeline_spark.sources.readers import _table_schema
 

@@ -49,7 +49,7 @@ def main() -> int:
             summary["queries"] = full
             return summary
         d = json.loads(text)
-        # the driver's BENCH_r{N}.json wraps bench.py's line in "parsed"
+        # a driver bench record wraps bench.py's line in "parsed"
         return d.get("parsed", d)
 
     old, new = load(sys.argv[1]), load(sys.argv[2])

@@ -1,10 +1,8 @@
-"""Summarize a check_correctness.py log into the GATE_SF1-style
-artifact fields: counts of hash-OK / rows-only / oracle-timeout /
-mismatch, plus the query lists.
+"""Summarize a check_correctness.py log: counts of hash-OK /
+rows-only / oracle-timeout / mismatch, plus the query lists.
 
 Usage: python tools/gate_summary.py GATE.log
-Prints one JSON object (indent=1) to stdout — paste/merge into
-GATE_SF1.json with the dataset/protocol notes.
+Prints one JSON object (indent=1) to stdout.
 
 The summarizer ASSERTS its totals against the live registry (a
 hand-written total can disagree with the registry): a per-query gate
@@ -48,7 +46,7 @@ def main() -> int:
         if m:
             timeouts.append(m.group(1))
             continue
-        m = re.match(r"(q\w+)\s+MISMATCH", ln)
+        m = re.match(r"(q\w+)\s+rows=\s*(\d+) FAIL", ln)
         if m:
             mism.append(m.group(1))
     from elt_gluepipeline_spark.plans import registry
