@@ -102,7 +102,9 @@ def shingle_base(df: DataFrame, id_col: str, text_col: str,
     The shingling runs on the input's partitions; a narrow input is
     fanned out at its read (``read_table(spread=True)``), and Catalyst
     pushes filters and column pruning below that repartition, so the
-    scan reads the same either way.
+    scan reads the same either way. A frame that comes out of a
+    shuffle or checkpoint is spread by its caller with
+    ``spread_if_narrow`` against the table it derives from (q103).
     """
     return df.filter(has_min_tokens(F.col(text_col), k)).select(
         F.col(id_col).alias("doc_id"),

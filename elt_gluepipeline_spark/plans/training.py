@@ -31,7 +31,7 @@ from ..operators.textstats import (EN_STOPWORDS, bpe_ish_tokens,
                                    fingerprint_md5, fingerprint_tokens,
                                    langid_en_heuristic, n_tokens, tokens)
 from ..sources.readers import (ntz_micros, ntz_to_instant, read_table,
-                               read_table_stream)
+                               read_table_stream, spread_if_narrow)
 from . import QuerySpec, scratch_dir
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
@@ -1722,9 +1722,12 @@ def q203_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         save_lsh_dedup_index(
             fit_lsh_dedup_index(corpus, "doc_id", "text",
                                 k=3, n_hashes=32, bands=8), path)
+        # the deleted ids are a projection with no per-row work: an
+        # unspread read keeps their delete a one-stage scan
         delete_from_lsh_dedup_index(
-            corpus.filter(F.col("doc_id") % 3 == 1).select("doc_id"),
-            path)
+            read_table(spark, sf_dir, "documents")
+            .filter((F.col("doc_id") % 10 != 0) & (F.col("doc_id") % 3 == 1))
+            .select("doc_id"), path)
     index = load_lsh_dedup_index(spark, path)
     return incremental_lsh_dedup(None, batch, "doc_id", "text",
                                  k=3, n_hashes=32, bands=8,
@@ -3799,7 +3802,7 @@ def q103_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import token_budget_shards
     from ..operators.windows import dedupe_keep_latest
 
-    docs = read_table(spark, sf_dir, "documents", spread=True)
+    docs = read_table(spark, sf_dir, "documents")
     t = F.col("text")
     base = docs.select("doc_id", "text",
                        tokens(t).alias("_tok"),
@@ -3828,9 +3831,14 @@ def q103_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = dedupe_keep_latest(
         good.withColumn("_h", F.md5(F.encode("text", "UTF-8"))),
         ["_h"], [F.col("doc_id").asc()]).drop("_h").localCheckpoint(eager=False)
-    # near-dup dedup among exact survivors (length-bucket blocking)
+    # near-dup dedup among exact survivors (length-bucket blocking).
+    # `exact` comes out of a shuffle and a checkpoint, which a read's
+    # fan-out does not reach; it is a subset of `documents`, so that
+    # table's size decides whether the shingle stage is spread.
     pairs = blocked_jaccard_pairs(
-        exact, "doc_id", "text",
+        spread_if_narrow(spark, exact,
+                         os.path.join(sf_dir, "documents.parquet")),
+        "doc_id", "text",
         [F.floor(F.col("n_tokens") / 10).cast("long")],
         k=3, threshold=0.2)
     surv = keep_canonical(exact, connected_components(pairs), "doc_id")

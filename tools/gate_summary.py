@@ -20,35 +20,48 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+_TIME = r"(?:([\d.]+)s|\(shared with \w+\))"
+
+
+def tally(lines: list[str]) -> dict:
+    """Sort a gate log's result lines into query lists. A repeat line
+    of a shared (build, oracle) pair carries "(shared with <first>)"
+    instead of a time, so each plan's Spark time is summed once."""
+    t = {"ok": [], "rows_only": [], "timeouts": [], "retries": [],
+         "mism": [], "spark_total": 0.0}
+    for ln in lines:
+        m = re.match(r"(q\w+)\s+rows=\s*(\d+) OK\s+" + _TIME, ln)
+        if m:
+            t["ok"].append(m.group(1))
+            t["spark_total"] += float(m.group(3) or 0)
+            continue
+        m = re.match(r"(q\w+)\s+rows=\s*(\d+) \(rows-only\)\s+" + _TIME, ln)
+        if m:
+            t["rows_only"].append(m.group(1))
+            t["spark_total"] += float(m.group(3) or 0)
+            continue
+        m = re.match(r"(q\w+)\s+fresh-connection oracle retry ok", ln)
+        if m:
+            t["retries"].append(m.group(1))
+            continue
+        m = re.match(r"(q\w+)\s+rows=\s*(\d+)\s+\(oracle-timeout", ln)
+        if m:
+            t["timeouts"].append(m.group(1))
+            continue
+        m = re.match(r"(q\w+)\s+rows=\s*(\d+) FAIL", ln)
+        if m:
+            t["mism"].append(m.group(1))
+    return t
+
+
 def main() -> int:
     raw = open(sys.argv[1]).read()
     # Spark progress bars ride on \r on the same line; split on both
     lines = [ln.strip() for chunk in raw.splitlines()
              for ln in chunk.split("\r") if ln.strip()]
-    ok, rows_only, timeouts, retries, mism = [], [], [], [], []
-    spark_total = 0.0
-    for ln in lines:
-        m = re.match(r"(q\w+)\s+rows=\s*(\d+) OK\s+([\d.]+)s", ln)
-        if m:
-            ok.append(m.group(1))
-            spark_total += float(m.group(3))
-            continue
-        m = re.match(r"(q\w+)\s+rows=\s*(\d+) \(rows-only\)\s+([\d.]+)s", ln)
-        if m:
-            rows_only.append(m.group(1))
-            spark_total += float(m.group(3))
-            continue
-        m = re.match(r"(q\w+)\s+fresh-connection oracle retry ok", ln)
-        if m:
-            retries.append(m.group(1))
-            continue
-        m = re.match(r"(q\w+)\s+rows=\s*(\d+)\s+\(oracle-timeout", ln)
-        if m:
-            timeouts.append(m.group(1))
-            continue
-        m = re.match(r"(q\w+)\s+rows=\s*(\d+) FAIL", ln)
-        if m:
-            mism.append(m.group(1))
+    t = tally(lines)
+    ok, rows_only, timeouts = t["ok"], t["rows_only"], t["timeouts"]
+    retries, mism, spark_total = t["retries"], t["mism"], t["spark_total"]
     from elt_gluepipeline_spark.plans import registry
     registered = set(registry())
     seen = ok + rows_only + timeouts + mism
